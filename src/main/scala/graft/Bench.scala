@@ -31,6 +31,16 @@ object Bench {
     samples.map(v => String.format(java.util.Locale.ROOT, "%.3f", v))
       .mkString("[", ",", "]")
 
+  /** `s` as a JSON string literal: quotes, backslashes and control
+    * characters escaped, so a query name can never break a record. */
+  private[graft] def jsonString(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   /** GRAFT_CLEARED_PASS=1 — the cleared-memo graded lane (round-16
     * brief #2, finishing round-15 advice #1): 63/294 graded warms are
     * memo/artifact READOUTS, so the full-run BENCH_r*.json increasingly
@@ -79,7 +89,7 @@ object Bench {
     calib += calibProbe(spark)
     def ms(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
     val detail = rows.map { case (k, (t, ok)) =>
-      "\"" + k + "\":{\"build\":" + (if (ok) ms(t) else "\"fail\"") + "}"
+      jsonString(k) + ":{\"build\":" + (if (ok) ms(t) else "\"fail\"") + "}"
     }.mkString("{", ",", "}")
     val nFailed = rows.count(!_._2._2)
     val total = rows.collect { case (_, (t, true)) => t }.sum
@@ -330,7 +340,7 @@ object Bench {
         "{\"cold\":" + one(c) + ",\"warm\":" + one(w) + memo + "}"
       }
       val detail = cold.toSeq.sortBy(_._1)
-        .map { case (k, c) => "\"" + k + "\":" + cw(k, c, warm(k)) }
+        .map { case (k, c) => jsonString(k) + ":" + cw(k, c, warm(k)) }
         .mkString("{", ",", "}")
       // the recording mode travels IN the record (round-11 advice: the
       // committed numbers get read without the commit message)
@@ -385,7 +395,7 @@ object Bench {
       // line serves full-stdout consumers). Queries with no successful
       // pass are absent, same rule as the headline total.
       val pqJson = best.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + ms(v) }
+        .map { case (k, v) => jsonString(k) + ":" + ms(v) }
         .mkString("{", ",", "}")
       println(s"""{"metric":"per_query","q":$pqJson,"cpus":$cpusJson,"unit":"sec","sf":"$sfDir"}""")
       // numOf is total: a name with no digits after the family char maps

@@ -3,8 +3,10 @@ package graft.load
 import java.sql.DriverManager
 import graft.ddl.Catalog
 import graft.gen.GeneratePipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType}
 
 /** One row of the load audit (g07's schema). */
 final case class TableLoadReport(table_name: String, n_loaded: Long,
@@ -93,8 +95,8 @@ object JdbcRoundTrip {
     *  - integral PK: MOD(pk, 4) = 0..3;
     *  - multi-column, non-strideable, or absent PK: one full stride
     *    (recorded as n_strides = 1 — no silent cap).
-    * Counts reduce through ONE unioned Spark job (auditReadback's
-    * job-overhead discipline). */
+    * Counts reduce through ONE unioned collect, not one action per
+    * table. */
   private def partitionedReadback(spark: SparkSession, url: String,
       target: JdbcSink.Target, catalog: Catalog, targets: Seq[String])
       : Seq[PartReadbackReport] = {
@@ -181,60 +183,104 @@ object JdbcRoundTrip {
       loaded(t) = rowCount
     })
     results.filterNot(_.ok).foreach(r => sys.error(s"generate ${r.table}: ${r.error}"))
+    rearmAndAudit(spark, catalog, target, targets, loaded.toMap)
+  }
 
-    // Re-arm constraints (K4 "enable" equivalent) — per-statement error
-    // tolerance like apply_mssql.py:94-102; Derby validates on ADD, so a
-    // failure here is a real integrity signal, recorded per table.
-    val pkOk: Map[String, Boolean] = targets.map { t =>
-      t -> DerbyDdl.addPkSql(catalog(t)).forall(sql =>
-        JdbcSink.execute(target, Seq(sql)).head.isEmpty)
-    }.toMap
-    val fkOk: Map[String, Int] = targets.map { t =>
-      t -> catalog(t).fks.count(fk =>
-        JdbcSink.execute(target, Seq(DerbyDdl.addFkSql(fk))).head.isEmpty)
-    }.toMap
+  /** Re-arm constraints on loaded tables (K4 "enable" equivalent), then
+    * read back and audit. Every PK, then every FK, goes through ONE
+    * connection, with per-statement error tolerance like
+    * apply_mssql.py:94-102; Derby validates on ADD, so a refused
+    * statement is a real integrity signal, recorded per table. */
+  private[load] def rearmAndAudit(spark: SparkSession, catalog: Catalog,
+      target: JdbcSink.Target, targets: Seq[String], loaded: Map[String, Long])
+      : Seq[TableLoadReport] = {
+    val pkSql = targets.flatMap(t => DerbyDdl.addPkSql(catalog(t)).map(t -> _))
+    val pkErr: Map[String, Option[String]] =
+      pkSql.map(_._1).zip(JdbcSink.execute(target, pkSql.map(_._2))).toMap
+    val fks = targets.flatMap(t => catalog(t).fks)
+    val fkRearmed: Map[String, Int] =
+      fks.zip(JdbcSink.execute(target, fks.map(DerbyDdl.addFkSql)))
+        .collect { case (fk, None) => fk.table }.groupMapReduce(identity)(_ => 1)(_ + _)
 
-    // Read back through the JDBC source and audit.
-    val (nReadback, fkBad) = auditReadback(spark, url, target, catalog, targets)
+    val (nReadback, fkBad) = auditReadback(spark, target.url, target, catalog, targets)
 
     targets.sorted.map { t =>
-      val td = catalog(t)
-      TableLoadReport(t, loaded.getOrElse(t, 0L), nReadback(t),
-        fkBad.getOrElse(t, 0L), pkOk(t), td.fks.size, fkOk(t))
+      TableLoadReport(t, loaded.getOrElse(t, 0L), nReadback(t), fkBad(t),
+        pkErr.get(t).forall(_.isEmpty), catalog(t).fks.size, fkRearmed.getOrElse(t, 0))
     }
   }
 
-  /** Per-table readback counts + per-table FK-violation counts, unioned
-    * into TWO Spark jobs (one collect each) instead of 77 + 131
-    * sequential actions — same numbers, a fraction of the job-scheduling
-    * overhead. */
-  private def auditReadback(spark: SparkSession, url: String,
+  // Entry kinds of the audit's tagged stream.
+  private val RowMark = 0
+  private val ChildValue = 1
+  private val ParentValue = 2
+
+  /** Row count of every table (0 for an empty one) and FK-violating
+    * child values per child table, for every FK edge whose parent is
+    * also a target. Each table is read over JDBC once, projected to its
+    * FK columns and its referenced columns, and each row becomes tagged
+    * entries: a row marker, one child value per FK column, one parent
+    * value per referenced column. The entries of all tables are unioned
+    * and cached, and ONE left-anti join on (parent table, parent column,
+    * value) finds the violations of every edge, so the number of Spark
+    * jobs does not grow with the number of edges: under AQE every shuffle
+    * stage runs as its own job, and one join per edge would add jobs per
+    * edge.
+    *
+    * Violations count per edge (a row breaking two FKs counts twice);
+    * NULL child values never violate. Values are compared in the common
+    * Catalyst type of the parent column and every child column referencing
+    * it (`findWiderTypeForTwo`, as an equi-join coerces its keys): the
+    * parent's own type when the children are narrower (INT onto BIGINT),
+    * the wider scale when DECIMAL scales differ — never a rounding cast.
+    * All values of one parent column share that type, so their
+    * string forms are equal exactly when the values are (floating-point
+    * keys aside, where -0.0 and 0.0 print differently). */
+  private[load] def auditReadback(spark: SparkSession, url: String,
       target: JdbcSink.Target, catalog: Catalog, targets: Seq[String])
       : (Map[String, Long], Map[String, Long]) = {
+    val targetSet = targets.toSet
     val frames = targets.map(t =>
       t -> spark.read.jdbc(url, DerbyDdl.q(t), JdbcSink.props(target))).toMap
-
-    def labeled(t: String, df: DataFrame, as: String): DataFrame =
-      df.agg(count(lit(1)).as(as)).select(lit(t).as("table_name"), col(as))
-
-    val nReadback: Map[String, Long] =
-      targets.map(t => labeled(t, frames(t), "n"))
-        .reduceOption(_ unionAll _).map(_.collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap).getOrElse(Map.empty)
-
-    val fkBadPerEdge: Seq[DataFrame] = targets.flatMap { t =>
-      catalog(t).fks.filter(f => frames.contains(f.refTable)).map { f =>
-        labeled(t, frames(t).select(col(f.column)).filter(col(f.column).isNotNull)
-          .join(frames(f.refTable).select(col(f.refColumn).as(f.column)),
-            Seq(f.column), "left_anti"), "bad")
+    val edges = targets.flatMap(t => catalog(t).fks.filter(f => targetSet(f.refTable)))
+    def typeOf(t: String, c: String): DataType = frames(t).schema(c).dataType
+    val keyType: Map[(String, String), DataType] =
+      edges.groupBy(f => (f.refTable, f.refColumn)).map { case (p @ (pt, pc), fs) =>
+        p -> fs.map(f => typeOf(f.table, f.column)).foldLeft(typeOf(pt, pc))((a, b) =>
+          TypeCoercion.findWiderTypeForTwo(a, b).getOrElse(StringType))
       }
+    def entry(kind: Int, parent: Option[(String, String)], value: Column): Column =
+      struct(lit(kind).as("kind"), lit(parent.map(_._1).orNull).cast(StringType).as("ptable"),
+        lit(parent.map(_._2).orNull).cast(StringType).as("pcol"),
+        value.cast(StringType).as("value"))
+
+    val tagged: Seq[DataFrame] = targets.map { t =>
+      val children = edges.filter(_.table == t).map(f => (f.column, (f.refTable, f.refColumn)))
+      val parents = keyType.keys.filter(_._1 == t).toSeq.sorted.map(p => (p._2, p))
+      def values(kind: Int, cols: Seq[(String, (String, String))]): Seq[Column] =
+        cols.map { case (c, p) => entry(kind, Some(p), col(c).cast(keyType(p))) }
+      val entries = entry(RowMark, None, lit(null)) +:
+        (values(ChildValue, children) ++ values(ParentValue, parents))
+      frames(t).select((children ++ parents).map(_._1).distinct.map(col): _*)
+        .select(lit(t).as("table"), inline(array(entries: _*)))
     }
-    // summed per table after the single collect (labels repeat per edge)
-    val fkBad: Map[String, Long] = fkBadPerEdge
-      .reduceOption(_ unionAll _).map(_.collect()
-        .groupBy(_.getString(0)).map { case (t, rs) => t -> rs.map(_.getLong(1)).sum })
-      .getOrElse(Map.empty)
-    (nReadback, fkBad)
+    val kind = col("kind")
+    // cached: three branches below read it, each table still once over JDBC
+    val all = tagged.reduceOption(_ unionAll _)
+      .map(_.filter(kind === RowMark || col("value").isNotNull).persist())
+    val counts: Map[(String, Int), Long] = all.map { entries =>
+      try {
+        val key = Seq("ptable", "pcol", "value")
+        val rows = entries.filter(kind === RowMark).groupBy("table", "kind").count()
+        val bad = entries.filter(kind === ChildValue)
+          .join(entries.filter(kind === ParentValue).select(key.map(col): _*), key, "left_anti")
+          .groupBy("table", "kind").count()
+        rows.unionAll(bad).collect()
+          .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+      } finally entries.unpersist()
+    }.getOrElse(Map.empty)
+    (targets.map(t => t -> counts.getOrElse((t, RowMark), 0L)).toMap,
+      targets.map(t => t -> counts.getOrElse((t, ChildValue), 0L)).toMap)
   }
 
   private def runArmedOn(spark: SparkSession, catalog: Catalog, url: String,
@@ -252,13 +298,12 @@ object JdbcRoundTrip {
       .zip(targets).foreach { case (err, t) =>
         err.foreach(e => sys.error(s"create $t failed: $e"))
       }
-    val pkArmed: Map[String, Boolean] = targets.map { t =>
-      t -> DerbyDdl.addPkSql(catalog(t)).map { sql =>
-        val r = JdbcSink.execute(target, Seq(sql)).head
-        r.foreach(e => sys.error(s"arm PK $t failed: $e"))
-        true
-      }.getOrElse(false)
-    }.toMap
+    val pkSql = targets.flatMap(t => DerbyDdl.addPkSql(catalog(t)).map(t -> _))
+    JdbcSink.execute(target, pkSql.map(_._2)).zip(pkSql).foreach { case (err, (t, _)) =>
+      err.foreach(e => sys.error(s"arm PK $t failed: $e"))
+    }
+    val pkArmed: Map[String, Boolean] =
+      targets.map(t => t -> DerbyDdl.addPkSql(catalog(t)).isDefined).toMap
     val waveOf: Map[String, Int] =
       graft.deps.Deps.waves(targets, catalog.allFks).zipWithIndex
         .flatMap { case (ts, i) => ts.map(_ -> i) }.toMap
@@ -281,10 +326,10 @@ object JdbcRoundTrip {
           pkArmed.getOrElse(fk.refTable, false) &&
           catalog(fk.refTable).pk == Seq(fk.refColumn) &&
           waveOf.get(fk.refTable).exists(pw => waveOf.get(t).exists(pw < _)))).toMap
-    targets.foreach(t => armable(t).foreach { fk =>
-      JdbcSink.execute(target, Seq(DerbyDdl.addFkSql(fk))).head
-        .foreach(e => sys.error(s"arm FK ${fk.table}->${fk.refTable} failed: $e"))
-    })
+    val armFks = targets.flatMap(armable)
+    JdbcSink.execute(target, armFks.map(DerbyDdl.addFkSql)).zip(armFks).foreach {
+      case (err, fk) => err.foreach(e => sys.error(s"arm FK ${fk.table}->${fk.refTable} failed: $e"))
+    }
     val fkArmed: Map[String, Int] = targets.map(t => t -> armable(t).size).toMap
 
     // In-target edges the wave order CANNOT promise (self-FKs and
@@ -334,8 +379,8 @@ object JdbcRoundTrip {
     // Independent Spark-side audit on top of the DB's own enforcement.
     val (nReadback, fkBad) = auditReadback(spark, url, target, catalog, targets)
     val loadReports = targets.sorted.map { t =>
-      ArmedLoadReport(t, waveOf(t), rowCount, nReadback(t),
-        fkBad.getOrElse(t, 0L), pkArmed(t), fkArmed(t))
+      ArmedLoadReport(t, waveOf(t), rowCount, nReadback(t), fkBad(t),
+        pkArmed(t), fkArmed(t))
     }
 
     // Deferred-FK linking epilogue (the "second UPDATE pass" the dropped

@@ -41,12 +41,13 @@ object JdbcSink {
     p
   }
 
-  /** Run raw statements on a fresh driver-side connection (K2/K4-style;
-    * per-statement error tolerance like apply_mssql.py:94-102). */
+  /** Run raw statements in order on one fresh connection, closing each
+    * statement (K2/K4-style; per-statement error tolerance like
+    * apply_mssql.py:94-102). */
   def execute(t: Target, statements: Seq[String]): Seq[Option[String]] = {
     val conn = DriverManager.getConnection(t.url, t.user, t.password)
     try statements.map { s =>
-      try { conn.createStatement().execute(s); None }
+      try { scala.util.Using.resource(conn.createStatement())(_.execute(s)); None }
       catch { case e: Throwable => Some(e.getMessage) }
     } finally conn.close()
   }

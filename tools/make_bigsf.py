@@ -4,8 +4,10 @@ verdict #5): each table replicated K times with disjoint key offsets;
 FK columns are offset by the REFERENCED table's stride so the replicas
 are K referentially-consistent copies of the sf0.1 universe. This is
 measurement-only data (never graded): /root/testdata stays read-only
-and the driver's SFs are untouched. Schema preserved byte-for-byte by
-pyarrow (events.ts stays whatever timestamp flavor the source carries).
+and the existing SFs are untouched. Schema preserved by pyarrow
+(events.ts stays whatever timestamp flavor the source carries), except
+that the offset key columns are widened to int64, so that no key wraps
+at large K.
 
 Usage: python3 tools/make_bigsf.py [K] [src] [dst]
 Defaults: K=5, src=/root/testdata/sf0.1, dst=/root/bigsf/sf0.5
@@ -51,9 +53,11 @@ def gen(name, keys):
         p = t
         for c in keys:
             idx = p.schema.get_field_index(c)
-            arr = pc.add(p.column(idx),
-                         pa.scalar(steps[c] * i, type=p.schema.field(idx).type))
-            p = p.set_column(idx, p.schema.field(idx), arr)
+            # int64 before the offset: narrower keys would wrap at large K
+            field = p.schema.field(idx).with_type(pa.int64())
+            arr = pc.add_checked(pc.cast(p.column(idx), pa.int64()),
+                                 pa.scalar(steps[c] * i, type=pa.int64()))
+            p = p.set_column(idx, field, arr)
         parts.append(p)
     out = pa.concat_tables(parts)
     pq.write_table(out, f"{DST}/{name}.parquet")
