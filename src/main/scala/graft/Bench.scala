@@ -47,11 +47,10 @@ object Bench {
     * measures scans; the per-family isolated cold column was the only
     * automated guard on those queries' BUILD paths. This pass grades
     * exactly the memo-served queries (SparkEntry.memoServed), calling
-    * Memos.clearAllKeepingSharedDeployments — the CacheHygieneSpec-
-    * enforced hook list, minus the g09/g10/g21 shared armed-deployment
-    * triple (round-19 brief #4: three readouts of ONE Derby lifetime;
-    * its build lands in g09, the first consumer in sorted order) —
-    * BEFORE each one, so every number is an uncached build (or, for
+    * Memos.clearAllKeepingSharedDeployments — every registered session
+    * memo except the g09/g10/g21 shared armed deployment (round-19
+    * brief #4: three readouts of ONE Derby lifetime; its build lands in
+    * g09, the first consumer in sorted order) — BEFORE each one, so every number is an uncached build (or, for
     * g10/g21, a readout of the pass's shared deployment) in ONE
     * full-run record. tools/bench_cleared.sh runs it with
     * GRAFT_ARTIFACT_DIR pointed at a scratch dir, so cross-run

@@ -7,6 +7,11 @@ import org.apache.spark.sql.SparkSession
   * — and for the cache-release teardown, so a new entry point or a new
   * module cache is one edit, not one per main. */
 object Harness {
+  /** Default size of Spark's compiled-codegen class cache (see the
+    * spark.sql.codegen.cache.maxEntries note below); GRAFT_CODEGEN_CACHE
+    * overrides it. CodegenCacheGuardSpec sizes the registry against it. */
+  val DefaultCodegenCache = 4096
+
   def withSession[T](cpus: String, logLevel: String = "WARN")(body: SparkSession => T): T = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -34,7 +39,7 @@ object Harness {
       // env-overridable for A/B (static conf: first session in the JVM
       // owns it, which Harness already requires).
       .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "4096"))
+        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", DefaultCodegenCache.toString))
       // AQE coalescing posture: MEASURED AND REJECTED (round 20) —
       // parallelismFirst=false + advisory 64m (Spark's doc-recommended
       // bytes-targeted coalescing, guide §2.2) read neutral on t+v in
@@ -68,9 +73,8 @@ object Harness {
     try body(spark)
     finally {
       // cleanup must run even on a mid-run throw, or stream-snapshot
-      // temp dirs and persisted plans leak for the JVM's lifetime
-      // (Memos.clearAll is the single maintained hook list —
-      // CacheHygieneSpec enforces its completeness)
+      // temp dirs and persisted plans leak for the JVM's lifetime;
+      // every session memo registers with Memos, so one clear reaches all
       Memos.clearAll()
       spark.stop()
     }

@@ -21,10 +21,10 @@ object SparkEntry {
     * the moment a build was memoized).
     *
     * Audit criterion (checked against each fn's top level): the body is
-    * a getOrElseUpdate readout of a result-frame TrieMap (q52/t03/t16/
-    * t22/t34/t58/t62/v02/v38/m10/p04/the s-family one-shot streams), an
-    * orderBy over such a memo (t02/t13/t42/m09), a liveMemo'd Derby
-    * load (g07–g10/g13–g15/g18/g19/g21), a memoized write-then-read
+    * a readout of a result-frame Memos.memo (q52/t03/t16/t22/t34/t58/
+    * t62/v02/v38/m10/p04/the s-family one-shot streams), an orderBy
+    * over such a memo (t02/t13/t42/m09), a memoized Derby load
+    * (Generated.liveCache/armedFullCache: g07–g10/g13–g15/g18/g19/g21), a memoized write-then-read
     * table op (q49/q55/q57), or a checkpointed score frame (p01/p07).
     * Queries that re-run real per-pass work over memoized INPUT state
     * (t36/t43/t48/t49/t57/t63/v01/v24/v25, s01–s05/s10/s17–s19) are

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Memos
 
 /** Multimodal-column plumbing: image/audio/video as opaque binary columns
   * with typed metadata (task-brief extension; nothing of the kind exists
@@ -255,12 +256,10 @@ object Multimodal {
 
   // pair results are deterministic per (session, dir) and the bench's
   // cold/warm split keeps the true cost visible — the t13 memo convention
-  private val simhashPairsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val simhashPairsCache = Memos.memo[String, DataFrame]()
 
   def chunkSimhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    simhashPairsCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    simhashPairsCache.getOrElseUpdate((spark, dir), {
+    simhashPairsCache(spark, dir) {
       // cross-RUN artifact (round-17 verdict #4): the verified pair set
       // is a pure function of documents.parquet and feeds m10's cluster
       // walk — a fresh JVM used to pay the chunk+SimHash+band pipeline
@@ -272,7 +271,7 @@ object Multimodal {
           "-" + SimhashPairsFoldTag) {
         chunkSimhashPairsUncached(spark, dir)
       }.orderBy("a_id", "b_id").localCheckpoint()
-    })
+    }
   }
 
   /** The banded build behind the m_simhash_pairs artifact — the
@@ -303,7 +302,7 @@ object Multimodal {
   /** m_simhash_pairs artifact fold-shape tag — sha256 (first 8 hex)
     * over the chunker + SimHash + banded-pair derivation source;
     * MediaArtifactSpec's tag-lock recomputes it. */
-  private[graft] val SimhashPairsFoldTag = "msp-3234c428"
+  private[graft] val SimhashPairsFoldTag = "msp-e3cda83c"
 
   /** Real (non-stub) metadata extraction over the binary column —
     * length, digest, sniffed prefix. Pure built-in expressions. */
@@ -483,29 +482,17 @@ object Multimodal {
     * each used to re-run the per-byte chunker over every payload; the
     * memo IS the "chunk table beside the lake" a real deployment keeps.
     * persist(), not localCheckpoint: MEMORY_AND_DISK spills instead of
-    * OOMing, and clearCaches() releases it at teardown (the wordGramIds
+    * OOMing, and its memo release unpersists it at teardown (the wordGramIds
     * convention). */
-  private val chunkCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val chunkCache = Memos.memo[String, DataFrame]()
 
   private def chunkFrame(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    chunkCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    chunkCache.getOrElseUpdate((spark, dir), {
+    chunkCache(spark, dir) {
       val f = chunkMedia(syntheticMedia(spark, dir).as[MediaRow]).toDF().persist()
       f.count() // materialize eagerly so every consumer reads the cache
       f
-    })
-  }
-
-  /** Teardown hook (Harness calls this before spark.stop()). */
-  def clearCaches(): Unit = {
-    (chunkCache.values ++ simhashPairsCache.values).foreach(df =>
-      try if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-      catch { case _: Throwable => () })
-    chunkCache.clear()
-    simhashPairsCache.clear()
-    nearDupPairsCache.clear() // checkpoint-backed — nothing to unpersist
+    }
   }
 
   /** Registered m07: the media near-dup pair table is a maintained
@@ -513,13 +500,11 @@ object Multimodal {
     * dir); cold carries the honest pair mine, the registration is
     * memo-flagged so benchcmp grades the build. */
   def chunkNearDup(spark: SparkSession, dir: String): DataFrame = {
-    nearDupPairsCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    nearDupPairsCache.getOrElseUpdate((spark, dir),
+    nearDupPairsCache(spark, dir)(
       chunkNearDupUncached(spark, dir).localCheckpoint())
   }
 
-  private val nearDupPairsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val nearDupPairsCache = Memos.memo[String, DataFrame]()
 
   private[graft] def chunkNearDupUncached(spark: SparkSession, dir: String): DataFrame = {
     val sets = chunkFrame(spark, dir)

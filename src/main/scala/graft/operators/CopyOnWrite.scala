@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
+import graft.Memos
 
 /** Copy-on-write partition-scoped upsert — the lakehouse MERGE
   * primitive under Delta/Iceberg: an update touching one partition
@@ -24,13 +25,10 @@ import graft.tables.Tables._
   */
 object CopyOnWrite {
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val cache = Memos.memo[String, DataFrame]()
   /** (untouched-files-unchanged, touched-files-changed) of the last
     * build — the physical claim, exposed for CowUpsertSpec. */
   @volatile private[operators] var lastAudit: Option[(Boolean, Boolean)] = None
-
-  def clearCaches(): Unit = cache.clear()
 
   private def listing(dir: Path): Map[String, (Long, Long)] = {
     val out = scala.collection.mutable.Map.empty[String, (Long, Long)]
@@ -47,8 +45,7 @@ object CopyOnWrite {
   }
 
   def cowUpsert(s: SparkSession, d: String): DataFrame = {
-    cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cache.getOrElseUpdate((s, d), {
+    cache(s, d) {
       val root = Files.createTempDirectory("graft_cow")
       try {
         val dir = root.resolve("orders_cow")
@@ -99,6 +96,6 @@ object CopyOnWrite {
         }
         rm(root)
       }
-    })
+    }
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
+import graft.Memos
 
 /** Merge-on-read time travel — the OTHER lakehouse mutation posture,
   * beside q49's copy-on-write: commits never rewrite data files. A
@@ -28,13 +29,10 @@ import graft.tables.Tables._
   */
 object MergeOnRead {
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val cache = Memos.memo[String, DataFrame]()
   /** (base-files-unchanged-across-commits, tombstone+append rows) of the
     * last build — the physical claim, exposed for MergeOnReadSpec. */
   @volatile private[operators] var lastAudit: Option[(Boolean, Long, Long)] = None
-
-  def clearCaches(): Unit = { cache.clear(); compactCache.clear() }
 
   private def listing(dir: Path): Map[String, (Long, Long)] = {
     val out = scala.collection.mutable.Map.empty[String, (Long, Long)]
@@ -51,8 +49,7 @@ object MergeOnRead {
   }
 
   def morTimeTravel(s: SparkSession, d: String): DataFrame = {
-    cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cache.getOrElseUpdate((s, d), {
+    cache(s, d) {
       val root = Files.createTempDirectory("graft_mor")
       try {
         val base = orders(s, d)
@@ -100,12 +97,11 @@ object MergeOnRead {
         }
         rm(root)
       }
-    })
+    }
   }
 
   @volatile private[operators] var lastCompactAudit: Option[(Long, Long, Long)] = None
-  private val compactCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val compactCache = Memos.memo[String, DataFrame]()
 
   /** q57 — COMPACTION, the maintenance pass that closes q55's loop: the
     * accumulated tombstone/append log is folded into a fresh base (one
@@ -123,8 +119,7 @@ object MergeOnRead {
     * and compaction resets it — scheduled off the same
     * tombstone/append byte accounting this operator emits. */
   def morCompaction(s: SparkSession, d: String): DataFrame = {
-    compactCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    compactCache.getOrElseUpdate((s, d), {
+    compactCache(s, d) {
       val root = Files.createTempDirectory("graft_morc")
       try {
         val base = orders(s, d)
@@ -168,7 +163,7 @@ object MergeOnRead {
         }
         rm(root)
       }
-    })
+    }
   }
 
   /** Read-amplification threshold for q59, in permille: a table whose

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
+import graft.Memos
 
 /** Time-series / sessionization operators over the `events` fixture.
   *
@@ -148,10 +149,9 @@ object EventOps {
     // ONE scan of the fact table: the calendar bounds and the type set
     // both derive from the persisted counts aggregate (|buckets|×|types|
     // rows — metadata-sized), not from re-reading events. Memoized per
-    // (session, dir) so repeated harness passes share it; clearCaches
-    // releases it at teardown.
-    countsCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    val counts = countsCache.getOrElseUpdate((s, d),
+    // (session, dir) so repeated harness passes share it; its memo release
+    // unpersists it at teardown.
+    val counts = countsCache(s, d)(
       ev.groupBy("hr_bucket", "event_type").agg(count(lit(1)).as("n")).persist())
     val buckets = counts.agg(min(col("hr_bucket")).as("lo"), max(col("hr_bucket")).as("hi"))
       .select(explode(expr("sequence(lo, hi)")).as("hr_bucket"))
@@ -179,8 +179,7 @@ object EventOps {
     * each stage exactly once — the frontiers are |users| rows, cheap to
     * pin. e09 consumes each stage once and keeps the declarative chain
     * (its PlanSpec asserts the type filters reach the parquet scan). */
-  private val frontierCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(String, String, DataFrame)]]
+  private val frontierCache = Memos.memo[String, Seq[(String, String, DataFrame)]]()
 
   private def funnelStages(s: SparkSession, d: String,
       pin: Boolean = false): Seq[(String, String, DataFrame)] = {
@@ -190,8 +189,7 @@ object EventOps {
     // whole warm cost; the declarative pin=false chain stays live so
     // e09's pushed-filter plan lock still sees the scan)
     if (pin) {
-      frontierCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      return frontierCache.getOrElseUpdate((s, d), funnelStagesBuild(s, d, pin = true))
+      return frontierCache(s, d)(funnelStagesBuild(s, d, pin = true))
     }
     funnelStagesBuild(s, d, pin)
   }
@@ -355,17 +353,7 @@ object EventOps {
       .orderBy("d0")
   }
 
-  private val countsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  /** Teardown hook (Bench/Verify call this before spark.stop()). */
-  def clearCaches(): Unit = {
-    countsCache.values.foreach(df =>
-      try if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-      catch { case _: Throwable => () })
-    countsCache.clear()
-    frontierCache.clear() // checkpointed frames — nothing to unpersist
-  }
+  private val countsCache = Memos.memo[String, DataFrame]()
 
   /** Inter-event gap percentiles: P50/P90/P99 of the seconds between a
     * user's consecutive events — the distribution whose knee JUSTIFIES

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
+import graft.Memos
 
 /** Graph-analytics operators over graphs DERIVED from the relational
   * fixtures — the iterative/combinatorial surface beside the t16/t34
@@ -39,11 +40,9 @@ object GraphOps {
   /** Undirected customer↔supplier bipartite graph: an edge per distinct
     * (customer, supplier) trading pair observed in orders ⋈ lineitem.
     * Node encoding 2k / 2k+1 keeps the two key spaces disjoint. */
-  private val bipartiteCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val bipartiteCache = Memos.memo[String, DataFrame]()
 
   private[queries] def bipartiteEdges(s: SparkSession, d: String): DataFrame = {
-    bipartiteCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
     // p01/p05/p07 all iterate over this frame — one materialization
     // per session, and (the partEdges/gram-index convention) a cross-RUN
     // parquet artifact: the trading graph is a deployed derived index,
@@ -51,7 +50,7 @@ object GraphOps {
     // of re-running the orders⋈lineitem distinct-pair build inside the
     // first timed query. The key folds BOTH source fixtures — either
     // regenerating invalidates it.
-    bipartiteCache.getOrElseUpdate((s, d), {
+    bipartiteCache(s, d) {
       graft.sources.ArtifactStore.loadOrBuild(s, "bipartite",
         graft.sources.ArtifactStore.key(d, "orders.parquet") + "-" +
           graft.sources.ArtifactStore.key(d, "lineitem.parquet")) {
@@ -63,7 +62,7 @@ object GraphOps {
         pairs.select(col("cn").as("src"), col("sn").as("dst"))
           .unionByName(pairs.select(col("sn").as("src"), col("cn").as("dst")))
       }.localCheckpoint()
-    })
+    }
   }
 
   /** Iterative-loop partitioning discipline (p01/p04/p05, measured at
@@ -81,12 +80,9 @@ object GraphOps {
     * executes each round exactly once). At 100 TB this is the
     * difference between shuffling the edge set once at deployment and
     * once per iteration. */
-  private val pagerankEdgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val bfsEdgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val lpEdgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val pagerankEdgeCache = Memos.memo[String, DataFrame]()
+  private val bfsEdgeCache = Memos.memo[String, DataFrame]()
+  private val lpEdgeCache = Memos.memo[String, DataFrame]()
 
   /** p01 — 5 PageRank iterations in exact integer fixed-point; top-20
     * nodes by final rank. One keyed join + one keyed partial-agg per
@@ -101,8 +97,7 @@ object GraphOps {
     * .memo) so bench_detail marks the warm as a readout and benchcmp
     * grades the BUILD (cold) for regressions, not the memo read. */
   def pagerank(s: SparkSession, d: String): DataFrame = {
-    rankResultCache.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
-    rankResultCache.getOrElseUpdate((s, d, "pr"),
+    rankResultCache(s, (d, "pr"))(
       pagerankBuild(s, d).localCheckpoint())
   }
 
@@ -114,12 +109,10 @@ object GraphOps {
     pagerankCore(pagerankEdgesCached(s, d))
 
   /** p01/p07 final score frames (≤20 rows each, checkpoint-backed). */
-  private val rankResultCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private val rankResultCache = Memos.memo[(String, String), DataFrame]()
 
   private[queries] def pagerankEdgesCached(s: SparkSession, d: String): DataFrame = {
-    pagerankEdgeCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    pagerankEdgeCache.getOrElseUpdate((s, d),
+    pagerankEdgeCache(s, d)(
       mkEdgesD(bipartiteEdges(s, d)).repartition(col("src")).persist())
   }
 
@@ -141,8 +134,7 @@ object GraphOps {
     * vector is the maintained index under a graph recommender; the
     * registration is memo-flagged so builds stay graded (see p01). */
   def personalizedPagerank(s: SparkSession, d: String): DataFrame = {
-    rankResultCache.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
-    rankResultCache.getOrElseUpdate((s, d, "ppr"),
+    rankResultCache(s, (d, "ppr"))(
       pprBuild(s, d).localCheckpoint())
   }
 
@@ -263,26 +255,7 @@ object GraphOps {
     * size, never by corpus size. 1.2M edges at sf0.1; materialized once
     * per (session, dir) — p02 and p03 share the frame (the t19
     * memoization convention). */
-  private val edgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Unpersist before dropping the map entries — clearing alone would
-    * leak the persisted edge frames' blocks in the block manager when a
-    * long-lived session (tests) clears and rebuilds. unpersist is a
-    * no-op on the localCheckpoint-backed frames and safe on a stopped
-    * context's leftovers (guarded). */
-  def clearCaches(): Unit = {
-    Seq(edgeCache, bipartiteCache, pagerankEdgeCache, bfsEdgeCache, lpEdgeCache,
-        ssspEdgeCache, partDegCache, cappedAdjCache)
-      .foreach { c =>
-        c.values.foreach { df =>
-          if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-        }
-        c.clear()
-      }
-    lpResultCache.clear()   // checkpointed frames — nothing to unpersist
-    rankResultCache.clear() // ditto (p01/p07 score frames)
-  }
+  private val edgeCache = Memos.memo[String, DataFrame]()
 
   /** Per-node degree of the part co-occurrence graph — |V| rows,
     * materialized once per (session, dir). Three consumers (p03's
@@ -290,17 +263,15 @@ object GraphOps {
     * same 2·|E| union independently; the degree table is exactly the
     * kind of derived frame the family memoizes (the bipartite/partEdges
     * convention). */
-  private val partDegCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val partDegCache = Memos.memo[String, DataFrame]()
 
   private[queries] def partDegrees(s: SparkSession, d: String): DataFrame = {
-    partDegCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    partDegCache.getOrElseUpdate((s, d), {
+    partDegCache(s, d) {
       val und = partEdges(s, d)
       und.select(col("a").as("n")).unionByName(und.select(col("b").as("n")))
         .groupBy("n").agg(count(lit(1)).as("dg"))
         .localCheckpoint()
-    })
+    }
   }
 
   /** The first-CapA-by-id adjacency cut of the part graph, memoized per
@@ -311,22 +282,19 @@ object GraphOps {
     * maintains the very same frame incrementally at ingest (p14 serves
     * from that artifact); the batch posture memoizes its in-query cut
     * the same way every other shared derived frame in this family is. */
-  private val cappedAdjCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val cappedAdjCache = Memos.memo[String, DataFrame]()
 
   private[queries] def cappedAdjCached(s: SparkSession, d: String): DataFrame = {
-    cappedAdjCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cappedAdjCache.getOrElseUpdate((s, d), {
+    cappedAdjCache(s, d) {
       val und = partEdges(s, d)
       val nbrs = und.select(col("a").as("c"), col("b").as("nb"))
         .unionByName(und.select(col("b").as("c"), col("a").as("nb")))
       cappedAdjacencyOn(nbrs).localCheckpoint()
-    })
+    }
   }
 
   private[queries] def partEdges(s: SparkSession, d: String): DataFrame = {
-    edgeCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    edgeCache.getOrElseUpdate((s, d), {
+    edgeCache(s, d) {
       // cross-RUN artifact (the gram-index convention): the co-occurrence
       // graph is a derived index a deployment persists — a fresh JVM
       // serves p02/p03 from the parquet artifact instead of re-running
@@ -340,7 +308,7 @@ object GraphOps {
           .select(col("pk").as("a"), col("pk2").as("b"))
           .distinct()
       }.localCheckpoint()
-    })
+    }
   }
 
   /** p02 — triangle count of the part co-occurrence graph, via
@@ -428,8 +396,7 @@ object GraphOps {
     * repartitioned once and persisted — factored so PFamilyProbe can
     * time the build as its own line. */
   private[queries] def bfsEdgesCached(s: SparkSession, d: String): DataFrame = {
-    bfsEdgeCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    bfsEdgeCache.getOrElseUpdate((s, d),
+    bfsEdgeCache(s, d)(
       mkBfsEdges(bipartiteEdges(s, d)).repartition(col("src")).persist())
   }
 
@@ -579,22 +546,19 @@ object GraphOps {
   /** p04/p12 share ONE delta execution per (session, dir): the
     * communities readout reads the final label frame, the accounting
     * reads the driver-collected per-round counters. */
-  private val lpResultCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val lpResultCache = Memos.memo[String, (DataFrame, DataFrame)]()
 
   private def lpDelta(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    lpResultCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    lpResultCache.getOrElseUpdate((s, d), lpDeltaCore(lpEdgesCached(s, d)))
+    lpResultCache(s, d)(lpDeltaCore(lpEdgesCached(s, d)))
   }
 
   private[queries] def lpEdgesCached(s: SparkSession, d: String): DataFrame = {
-    lpEdgeCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    lpEdgeCache.getOrElseUpdate((s, d), {
+    lpEdgeCache(s, d) {
       val und = partEdges(s, d)
       und.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
         .repartition(col("src")).persist()
-    })
+    }
   }
 
   /** ONE full re-evaluation round: all labels message once over the
@@ -1290,12 +1254,10 @@ object GraphOps {
     * Cross-run artifact like the unweighted frame; the loop caller
     * re-partitions on src and persists (the iterative-loop discipline
     * above pagerank). */
-  private val ssspEdgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val ssspEdgeCache = Memos.memo[String, DataFrame]()
 
   private[queries] def weightedEdgesCached(s: SparkSession, d: String): DataFrame = {
-    ssspEdgeCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    ssspEdgeCache.getOrElseUpdate((s, d), {
+    ssspEdgeCache(s, d) {
       graft.sources.ArtifactStore.loadOrBuild(s, "bipartite_w",
         graft.sources.ArtifactStore.key(d, "orders.parquet") + "-" +
           graft.sources.ArtifactStore.key(d, "lineitem.parquet")) {
@@ -1308,7 +1270,7 @@ object GraphOps {
         pairs.select(col("cn").as("src"), col("sn").as("dst"), col("w"))
           .unionByName(pairs.select(col("sn").as("src"), col("cn").as("dst"), col("w")))
       }.repartition(col("src")).persist()
-    })
+    }
   }
 
   private val SsspRounds = 4

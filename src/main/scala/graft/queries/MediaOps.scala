@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.multimodal.Multimodal
+import graft.Memos
 
 /** Multimodal operators on the graded surface (see graft.multimodal).
   * m01 is fully oracle-checked (metadata path is pure built-ins over the
@@ -22,8 +23,7 @@ object MediaOps {
     * chain — both engines walk the graph independently end to end. */
   def mediaDupClusters(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    mediaClustersCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    mediaClustersCache.getOrElseUpdate((s, d), {
+    mediaClustersCache(s, d) {
       // cross-RUN artifact (round-17 verdict #4): the cluster labeling
       // is a pure function of documents.parquet (pairs + CC walk, 8.9 s
       // in the cleared lane at sf0.1) — a deployment keeps the asset
@@ -36,7 +36,7 @@ object MediaOps {
           "-" + MediaClustersFoldTag) {
         mediaDupClustersUncached(s, d)
       }.orderBy("media_id").localCheckpoint()
-    })
+    }
   }
 
   /** The pair-graph CC build behind the media_clusters artifact (the
@@ -53,13 +53,9 @@ object MediaOps {
 
   /** media_clusters artifact fold-shape tag — sha256 (first 8 hex)
     * over the cross-file derivation (see mediaDupClusters). */
-  private[graft] val MediaClustersFoldTag = "mdc-63121122"
+  private[graft] val MediaClustersFoldTag = "mdc-8acd34e8"
 
-  private val mediaClustersCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
-
-  /** Teardown hook (Harness). */
-  def clearCaches(): Unit = mediaClustersCache.clear()
+  private val mediaClustersCache = Memos.memo[String, org.apache.spark.sql.DataFrame]()
 
   /** The CDC chunk restatement (boundaries + per-chunk md5 of the
     * uppercase-hex bytes) shared by the m06 census and m07 near-dup

@@ -20,15 +20,21 @@ object StateProbe {
       val acc = scala.collection.mutable.Buffer
         .empty[(String, String, Long, Long, Long, Long)]
       @volatile var current = ""
+      // progress is delivered asynchronously, so a late event from query
+      // N would land under query N+1 if read from `current`; the start
+      // event fires synchronously inside start(), so the run id it
+      // records is attributed to the query that is really running
+      val runOwner = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
       val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
         import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryStarted(e: QueryStartedEvent): Unit = runOwner.put(e.runId, current)
         override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
         override def onQueryProgress(e: QueryProgressEvent): Unit = {
           val p = e.progress
+          val owner = runOwner.getOrDefault(p.runId, "?")
           Option(p.stateOperators).foreach(_.foreach { so =>
             acc.synchronized {
-              acc += ((current, so.operatorName, p.batchId,
+              acc += ((owner, so.operatorName, p.batchId,
                 so.numRowsTotal, so.memoryUsedBytes,
                 so.numStateStoreInstances))
             }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
+import graft.Memos
 
 /** Similarity search over the `embeddings` fixture (`array<float>`, d=64).
   *
@@ -73,8 +74,7 @@ object VectorOps {
     * Memoized per (session, dir) — the t03/t11 convention — because
     * v02's own oracle row and v39's truth side share one execution. */
   def cosineNearDupPairs(s: SparkSession, d: String): DataFrame = {
-    cosinePairsCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cosinePairsCache.getOrElseUpdate((s, d), {
+    cosinePairsCache(s, d) {
       // cross-RUN artifact (round-16 brief #3): the exact truth-pair set
       // is a pure function of embeddings.parquet and the calibration
       // reference four graders key on (v39/v41/v42 + v02's own row) — a
@@ -85,7 +85,7 @@ object VectorOps {
         graft.sources.ArtifactStore.key(d, "embeddings.parquet") + "-" + CosPairsFoldTag) {
         cosineNearDupPairsUncached(s, d)
       }.orderBy("a_id", "b_id").localCheckpoint()
-    })
+    }
   }
 
   /** The exact all-pairs BUILD behind the cos_pairs artifact — the
@@ -108,8 +108,7 @@ object VectorOps {
     * without a bump is a test failure, never a stale truth set. */
   private[graft] val CosPairsFoldTag = "cos-a54aef08"
 
-  private val cosinePairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val cosinePairsCache = Memos.memo[String, DataFrame]()
 
   /** The centroid-affinity frame (vec_id, cid, ccos, crn): every
     * vector's rounded cosine + rank against all 16 coarse centroids.
@@ -132,8 +131,7 @@ object VectorOps {
   }
 
   private[queries] def centroidAffinity(s: SparkSession, d: String): DataFrame = {
-    affinityCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    affinityCache.getOrElseUpdate((s, d), {
+    affinityCache(s, d) {
       // cross-RUN artifact (the gram-index pattern): the routing table
       // IS the coarse half of a deployed ANN index — a fresh JVM loads
       // the parquet instead of re-scoring the corpus against centroids
@@ -142,11 +140,10 @@ object VectorOps {
         centroidAffinityUncached(s, d)).persist()
       f.count() // materialize eagerly so every consumer reads the cache
       f
-    })
+    }
   }
 
-  private val affinityCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val affinityCache = Memos.memo[String, DataFrame]()
 
   /** The PQ candidate frame (vec_id, m, j, d2, ip): every vector's
     * quantized sub-vectors against every seed codeword — the frame
@@ -211,11 +208,12 @@ object VectorOps {
         dot("sv", "cv").cast("long").as("ip"))
   }
 
+  // one memo for the three candidate frames, keyed by (artifact name, dir)
+  private val pqCandCache = Memos.memo[(String, String), DataFrame]()
+
   private def pqCandMemo(name: String,
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame],
-      build: (SparkSession, String) => DataFrame)(s: SparkSession, d: String): DataFrame = {
-    cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cache.getOrElseUpdate((s, d), {
+      build: (SparkSession, String) => DataFrame)(s: SparkSession, d: String): DataFrame =
+    pqCandCache(s, (name, d)) {
       // cross-RUN artifact: the candidate frame is the PQ half of the
       // deployed index (codes derive from it with one partial agg)
       val f = graft.sources.ArtifactStore.loadOrBuild(
@@ -223,54 +221,18 @@ object VectorOps {
         build(s, d)).persist()
       f.count() // materialize eagerly so every consumer reads the cache
       f
-    })
-  }
+    }
 
   private[queries] def pqCand(s: SparkSession, d: String): DataFrame =
-    pqCandMemo("pq_cand", pqCandCache, pqCandUncached)(s, d)
+    pqCandMemo("pq_cand", pqCandUncached)(s, d)
 
   private[queries] def pqCand64(s: SparkSession, d: String): DataFrame =
-    pqCandMemo("pq_cand64", pqCand64Cache, pqCand64Uncached(_, _))(s, d)
+    pqCandMemo("pq_cand64", pqCand64Uncached(_, _))(s, d)
 
   private[queries] def pqCandOpq(s: SparkSession, d: String): DataFrame =
-    pqCandMemo("pq_cand_opq", pqCandOpqCache, pqCandOpqUncached(_, _))(s, d)
+    pqCandMemo("pq_cand_opq", pqCandOpqUncached(_, _))(s, d)
 
-  private val pqCandCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val pqCand64Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val pqCandOpqCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Teardown hook (Harness calls this before spark.stop()). Unpersist
-    * before dropping the map entries (the GraphOps.clearCaches rule) —
-    * the affinity and pqCand* frames are .persist()ed, and clearing
-    * alone would leak their blocks in a long-lived session that clears
-    * and rebuilds; unpersist is a no-op on the checkpoint-backed pair
-    * frame and guarded against stopped contexts. */
-  def clearCaches(): Unit = {
-    Seq(cosinePairsCache, affinityCache, pqCandCache, pqCand64Cache, pqCandOpqCache)
-      .foreach { c =>
-        c.values.foreach { df =>
-          if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-        }
-        c.clear()
-      }
-    // checkpointed frames — nothing to unpersist
-    cellPairsCache.clear()
-    rebuildCache.clear()
-    rebuildAudit.clear()
-    resPqIndexCache.clear()
-    annTopKCache.clear()
-    annRollCache.clear()
-    annRolledServeCache.clear()
-    annRoll2Cache.clear()
-    annReapCache.clear()
-    annReapedServeCache.clear()
-  }
-
-  private val resPqIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val resPqIndexCache = Memos.memo[String, (DataFrame, DataFrame)]()
 
   /** Per-label quantized centroids.
     * Floats are quantized to 1e-6 grid BIGINTs before summation so the
@@ -375,8 +337,7 @@ object VectorOps {
     * later consumer. Plan-shape assertions run against
     * [[cellCosineNearDupPairsUncached]] (the t05 cached-plan lesson). */
   def cellCosineNearDupPairs(s: SparkSession, d: String): DataFrame = {
-    cellPairsCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    cellPairsCache.getOrElseUpdate((s, d),
+    cellPairsCache(s, d)(
       cellCosineNearDupPairsUncached(s, d).localCheckpoint())
   }
 
@@ -386,8 +347,7 @@ object VectorOps {
       .select("a_id", "b_id", "cos")
       .orderBy("a_id", "b_id")
 
-  private val cellPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val cellPairsCache = Memos.memo[String, DataFrame]()
 
   /** v39 — recall of the centroid-bucketed pair generation against the
     * v02 exact all-pairs truth set, at the shared τ = 0.45 on the shared
@@ -760,15 +720,14 @@ object VectorOps {
       .orderBy("cell")
   }
 
-  /** (rebuilt cells, rebuilt rows, untriggered overlay rows) per v38
-    * execution, keyed like [[rebuildCache]] — VectorRebuildSpec pins the
-    * physical half. (Round-12 advice: a single last-execution var would
-    * be silently overwritten by a concurrent/later v38 run on another
-    * (session, dir) between a test's run and its read.) */
-  private[queries] val rebuildAudit =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Long, Long, Long)]
-  private val rebuildCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  /** The v38 frame with its (rebuilt cells, rebuilt rows, untriggered
+    * overlay rows) audit — VectorRebuildSpec pins the physical half.
+    * The audit lives in the frame's own memo entry, so a v38 run on
+    * another (session, dir) can never overwrite the one a test reads. */
+  private val rebuildCache = Memos.memo[String, (DataFrame, (Long, Long, Long))]()
+
+  private[queries] def rebuildAudit(s: SparkSession, d: String): Option[(Long, Long, Long)] =
+    rebuildCache.get(s, d).map(_._2)
 
   /** v38 — ACTING on v36's trigger: the per-cell index REBUILD that
     * folds v34/v35's overlay frames back into the base cell, q57's
@@ -792,8 +751,7 @@ object VectorOps {
     * hot cells only — and the search plan sheds its overlay branches
     * exactly where the trigger said the rent was highest. */
   def ivfCompactionRebuild(s: SparkSession, d: String): DataFrame = {
-    rebuildCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    rebuildCache.getOrElseUpdate((s, d), {
+    rebuildCache(s, d) {
       val root = java.nio.file.Files.createTempDirectory("graft_ivfreb")
       try {
         val e = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
@@ -817,16 +775,17 @@ object VectorOps {
         val rebuilt = s.read.parquet(segDir)
           .select(col("vec_id"), col("cell"))
         val untrig = preCells.join(broadcast(trig), Seq("cell"), "left_anti")
-        rebuildAudit((s, d)) = (trig.count(), rebuilt.count(), untrig.count())
+        val audit = (trig.count(), rebuilt.count(), untrig.count())
         def search(cells: DataFrame, phase: String) =
           ivfSearchOn(e, aff, cells).withColumn("phase", lit(phase))
             .select("phase", "q_id", "rk", "hit_id", "cos")
-        search(preCells, "1_pre_rebuild")
+        (search(preCells, "1_pre_rebuild")
           .unionByName(search(rebuilt.unionByName(untrig), "2_post_rebuild"))
           .orderBy("phase", "q_id", "rk")
-          .localCheckpoint() // pin before the scratch segment is deleted
+          .localCheckpoint(), // pin before the scratch segment is deleted
+          audit)
       } finally StreamOps.rmrf(root)
-    })
+    }._1
   }
 
   /** v37 — the IVF PROBE-COUNT recall curve, the tuning knob v08 fixes
@@ -1476,13 +1435,11 @@ object VectorOps {
     * cost is one keyed join of codes against a 10-query × 2-probe
     * broadcast LUT (10,240 rows at ANY corpus size). */
   def annPersistedIndexTopK(s: SparkSession, d: String): DataFrame = {
-    annTopKCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    annTopKCache.getOrElseUpdate((s, d),
+    annTopKCache(s, d)(
       annPersistedTopKUncached(s, d).localCheckpoint())
   }
 
-  private val annTopKCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val annTopKCache = Memos.memo[String, DataFrame]()
 
   /** v43's serve plan over the persisted index — the uncached evidence
     * (PlanDump / VectorArtifactSpec run against this). */
@@ -1639,8 +1596,7 @@ object VectorOps {
       rolledAnnUncached(s, d)
     }
 
-  private val annRollCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val annRollCache = Memos.memo[String, DataFrame]()
 
   /** The graded per-CELL census every index-maintenance query reads
     * out: entries, distinct vectors, Σ vec_id, and a Σ(m+1)·code
@@ -1656,8 +1612,7 @@ object VectorOps {
       .orderBy("cell")
 
   def annIndexRoll(s: SparkSession, d: String): DataFrame = {
-    annRollCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    annRollCache.getOrElseUpdate((s, d),
+    annRollCache(s, d)(
       annCellCensus(rolledAnn(s, d)).localCheckpoint())
   }
 
@@ -1680,13 +1635,11 @@ object VectorOps {
     * immediately query-ready" into a cross-engine hash fact rather
     * than a claim. */
   def annRolledServeTopK(s: SparkSession, d: String): DataFrame = {
-    annRolledServeCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    annRolledServeCache.getOrElseUpdate((s, d),
+    annRolledServeCache(s, d)(
       annRolledServeUncached(s, d).localCheckpoint())
   }
 
-  private val annRolledServeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val annRolledServeCache = Memos.memo[String, DataFrame]()
 
   /** v45's serve plan over the rolled artifact — the uncached evidence
     * (PlanDump / VectorArtifactSpec run against this). */
@@ -1751,16 +1704,14 @@ object VectorOps {
       rolledAnnS2Uncached(s, d)
     }
 
-  private val annRoll2Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val annRoll2Cache = Memos.memo[String, DataFrame]()
 
   /** v46 — the graded readout: the per-cell census over the twice-
     * rolled artifact, against the SAME full-rebuild oracle as v44
     * (corpus₂ ∪ shard A ∪ shard B = all vectors, so the census must be
     * identical — one induction step more than v44 proves). */
   def annRollTwoStep(s: SparkSession, d: String): DataFrame = {
-    annRoll2Cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    annRoll2Cache.getOrElseUpdate((s, d),
+    annRoll2Cache(s, d)(
       annCellCensus(rolledAnnS2(s, d)).localCheckpoint())
   }
 
@@ -1802,8 +1753,7 @@ object VectorOps {
       reapedAnnUncached(s, d)
     }
 
-  private val annReapCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val annReapCache = Memos.memo[String, DataFrame]()
 
   /** v47 — the graded readout: the per-cell census over the reaped
     * artifact; the oracle is the v44 convention INVERTED — a full
@@ -1811,8 +1761,7 @@ object VectorOps {
     * deletion residue), so reap ≡ rebuild-without-the-deleted is a
     * cross-engine hash fact. */
   def annReapCensus(s: SparkSession, d: String): DataFrame = {
-    annReapCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    annReapCache.getOrElseUpdate((s, d),
+    annReapCache(s, d)(
       annCellCensus(reapedAnn(s, d)).localCheckpoint())
   }
 
@@ -1839,13 +1788,11 @@ object VectorOps {
     * MATERIALLY differs from v24's (the fixture must actually have
     * deleted vectors in pre-reap top-5s, or the grade is vacuous). */
   def annReapedServeTopK(s: SparkSession, d: String): DataFrame = {
-    annReapedServeCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    annReapedServeCache.getOrElseUpdate((s, d),
+    annReapedServeCache(s, d)(
       annReapedServeUncached(s, d).localCheckpoint())
   }
 
-  private val annReapedServeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val annReapedServeCache = Memos.memo[String, DataFrame]()
 
   /** v48's serve plan over the reaped artifact — the uncached evidence
     * (PlanDump / VectorArtifactSpec run against this). */
@@ -1896,8 +1843,7 @@ object VectorOps {
     // corpus, memoized per (session, dir) like pqCandMemo's candidate
     // frames: the residual build + Lloyd round is index TRAINING a
     // deployment runs once, not per query
-    resPqIndexCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    val (cb, enc) = resPqIndexCache.getOrElseUpdate((s, d), {
+    val (cb, enc) = resPqIndexCache(s, d) {
       // residual per corpus vector vs its OWN cell centroid (map-side:
       // cells is keyed on vec_id, the centroid frame broadcasts)
       val res = eq.join(cells, "vec_id")
@@ -1934,7 +1880,7 @@ object VectorOps {
         .agg(expr("transform(sort_array(collect_list(struct(pos, cwx))), t -> t.cwx)").as("cw"))
         .localCheckpoint() // ≤8×64 rows; consumed by the final assignment AND the LUT
       (cbB, assign(cbB).localCheckpoint()) // codes: |vectors|×8 rows
-    })
+    }
     // query side: RAW quantized query (IP metric never residualizes the
     // query) — LUT term <q_m, cw> plus the per-probed-cell <q, c>
     val q = eq.filter(col("vec_id") < 10).select(col("vec_id").as("q_id"), col("qv"))

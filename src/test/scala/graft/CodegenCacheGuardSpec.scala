@@ -12,13 +12,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * round it happens, with the re-size instruction in the message. */
 class CodegenCacheGuardSpec extends AnyFunSuite {
   test("codegen class cache covers the query registry with 2x headroom") {
-    val cache = sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "4096").toInt
+    // the shipped default, not this JVM's environment: the guard is about
+    // what Harness sessions get when GRAFT_CODEGEN_CACHE is unset
+    val cache = Harness.DefaultCodegenCache
     val unitsPerQuery = 5 // measured shape, round 20
     val need = SparkEntry.all.size * unitsPerQuery
     assert(need * 2 <= cache,
       s"query registry (${SparkEntry.all.size} queries x ~$unitsPerQuery codegen units " +
         s"= $need classes) is within 2x of the codegen cache ($cache): raise " +
-        "Harness's spark.sql.codegen.cache.maxEntries default (and the " +
+        "Harness.DefaultCodegenCache (and the " +
         "GRAFT_CODEGEN_CACHE note in SCALE.md) before warm passes thrash again")
   }
 }

@@ -45,7 +45,7 @@ class MediaArtifactSpec extends AnyFunSuite {
     val p1 = Multimodal.chunkSimhashPairs(spark, d).collect().map(_.toSeq).toSeq
     val c1 = MediaOps.mediaDupClusters(spark, d).collect().map(_.toSeq).toSeq
     assert(p1.nonEmpty && c1.nonEmpty, "fixture must yield pairs and clusters")
-    Multimodal.clearCaches(); MediaOps.clearCaches()
+    graft.Memos.clearAll()
     val builds0 = graft.sources.ArtifactStore.builds.get()
     val loads0 = graft.sources.ArtifactStore.loads.get()
     val p2 = Multimodal.chunkSimhashPairs(spark, d).collect().map(_.toSeq).toSeq

@@ -1,45 +1,58 @@
 package graft.queries
 
+import graft.Memos
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.concurrent.TrieMap
 
-/** Cache-hygiene contract: every per-(session, dir) TrieMap memo in the
-  * query/operator modules must be emptied by its module's clearCaches —
-  * Harness calls those hooks at teardown, and a forgotten entry pins
-  * DataFrames (and their checkpoint RDDs / persisted blocks) for the
-  * JVM's lifetime. Round 14 added five caches by hand (partDeg,
-  * cappedAdj, frontier, basketItems, resPqIndex, t27Model,
-  * trainedGateStream) — each needed its clear-hook line remembered;
-  * this spec makes the omission a test failure instead of a slow leak.
-  *
-  * The scan is reflective (all declared TrieMap fields, private
-  * included), so a NEW cache is covered the moment it is declared.
-  * Bucketing is exempt by design: its values are warehouse TABLE NAMES
-  * whose backing data outlives any session, not pinned frames. */
+/** Cache-hygiene contract: every session memo in the query, operator
+  * and multimodal modules is a [[graft.Memos.Memo]], so Memos.clearAll
+  * (Harness teardown) and Memos.clearAllKeepingSharedDeployments (Bench's
+  * cleared lane) reach it by construction — no per-module hook list to
+  * keep in step. What is left to guard is the escape hatch: a raw
+  * TrieMap field in one of those modules is a memo no clear can see. */
 class CacheHygieneSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.session
   val d = "/root/testdata/sf0.001"
 
-  /** Exempt registries that must OUTLIVE clearCaches by design:
-    * StreamOps.allScratch holds scratch-dir PATH STRINGS for the JVM
-    * shutdown hook (a second-chance delete — the per-cache clears
-    * already rmrf the dirs; dropping the strings would disarm the
-    * hook). It pins no frames. */
-  private val Exempt = Set("allScratch")
+  /** TrieMaps that must OUTLIVE a clear by design: Bucketing's values are
+    * warehouse TABLE NAMES whose backing data outlives any session, and
+    * StreamOps.allScratch holds scratch-dir paths for the JVM shutdown
+    * hook (a second-chance delete; dropping them would disarm it). */
+  private val Exempt = Set(
+    "graft.operators.Bucketing$.factCache",
+    "graft.operators.Bucketing$.partCache",
+    "graft.queries.StreamOps$.allScratch")
 
-  private def trieMapFields(module: AnyRef): Seq[(String, TrieMap[_, _])] =
-    module.getClass.getDeclaredFields.toSeq
-      .filter(f => classOf[TrieMap[_, _]].isAssignableFrom(f.getType))
-      .filterNot(f => Exempt(f.getName))
-      .map { f => f.setAccessible(true); f.getName -> f.get(module).asInstanceOf[TrieMap[_, _]] }
+  /** Every compiled class of `pkg` in the main output (not initialized). */
+  private def mainClasses(pkg: String): Seq[Class[_]] = {
+    val root = java.nio.file.Paths.get(
+      Memos.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val st = java.nio.file.Files.list(root.resolve(pkg.replace('.', '/')))
+    try st.toArray.toSeq.map(_.toString).filter(_.endsWith(".class")).map { p =>
+      val nm = java.nio.file.Paths.get(p).getFileName.toString.stripSuffix(".class")
+      Class.forName(s"$pkg.$nm", false, getClass.getClassLoader)
+    } finally st.close()
+  }
 
-  test("clearCaches empties every TrieMap memo in its module (reflective scan)") {
-    // populate at least one memo in EVERY module that declares one
-    // (round-14 advice: modules the populate phase skipped — StreamOps,
-    // Generated, CopyOnWrite, MergeOnRead — passed vacuously on empty
-    // maps, so a forgotten clear-hook line there was exactly the
-    // omission this spec exists to catch). Each call is the module's
-    // cheapest memoizing entry point at sf0.001.
+  test("no query/operator/multimodal module declares a raw TrieMap memo") {
+    val classes = Seq("graft.queries", "graft.operators", "graft.multimodal")
+      .flatMap(mainClasses)
+    val trieFields = for {
+      c <- classes
+      f <- c.getDeclaredFields.toSeq
+      if classOf[TrieMap[_, _]].isAssignableFrom(f.getType)
+    } yield s"${c.getName}.${f.getName}"
+    // non-vacuity: the scan must see the exempt maps it is told to allow
+    assert(Exempt.subsetOf(trieFields.toSet),
+      s"scan missed exempt fields: ${(Exempt -- trieFields).mkString(", ")}")
+    val raw = trieFields.filterNot(Exempt)
+    assert(raw.isEmpty,
+      s"raw TrieMap fields outside graft.Memos (declare them with Memos.memo): " +
+        raw.mkString(", "))
+  }
+
+  test("Memos.clearAll empties every registered memo (one populated per module)") {
+    // each call is the module's cheapest memoizing entry point at sf0.001
     GraphOps.degreeHistogram(spark, d).count()
     TextOps.charTrigramFamiliarity(spark, d).count()
     EventOps.robustSpikes(spark, d).count()
@@ -51,12 +64,6 @@ class CacheHygieneSpec extends AnyFunSuite {
     graft.operators.MergeOnRead.morTimeTravel(spark, d).count()
     MediaOps.mediaDupClusters(spark, d).count()
     graft.multimodal.Multimodal.chunkSimhashPairs(spark, d).count()
-    // round-15 memos (advice: the populate phase never touched them, so
-    // a forgotten clear-hook line passed the module-granular check)
-    Relational2.fuzzyBlockedMatch(spark, d).count()   // q52CandCache
-    TextOps.curationWaterfall(spark, d).count()       // t58Cache + swqCache
-    TextOps.tokenBudgetSelect(spark, d).count()       // t22SelCache
-    TextOps.bm25Topk(spark, d).count()                // postingsCache + dlCache
     val modules: Seq[(String, AnyRef)] = Seq(
       ("GraphOps", GraphOps),
       ("TextOps", TextOps),
@@ -69,114 +76,39 @@ class CacheHygieneSpec extends AnyFunSuite {
       ("CopyOnWrite", graft.operators.CopyOnWrite),
       ("MergeOnRead", graft.operators.MergeOnRead),
       ("Multimodal", graft.multimodal.Multimodal))
-    // PER-MODULE non-vacuity: every module that declares a memo must have
-    // at least one populated before the clear (a global count let whole
-    // modules slip through). Populating all ~70 FIELDS would re-run most
-    // of the board — field-granular coverage is the STATIC test below,
-    // which needs no populate at all.
-    val unexercised = modules.collect {
-      case (nm, m) if trieMapFields(m).nonEmpty &&
-        trieMapFields(m).forall(_._2.isEmpty) => nm
-    }
+    def memos(m: AnyRef): Seq[Memos.Memo[_, _]] =
+      m.getClass.getDeclaredFields.toSeq
+        .filter(f => classOf[Memos.Memo[_, _]].isAssignableFrom(f.getType))
+        .map { f => f.setAccessible(true); f.get(m).asInstanceOf[Memos.Memo[_, _]] }
+    // PER-MODULE non-vacuity: an all-empty module would pass the clear
+    // check below without the clear having done anything for it
+    val unexercised = modules.collect { case (nm, m) if memos(m).forall(_.isEmpty) => nm }
     assert(unexercised.isEmpty,
-      s"populate phase left these modules' memos all-empty (their clear " +
-        s"assertion would be vacuous): ${unexercised.mkString(", ")}")
-    // the SINGLE production hook list (Harness teardown AND Bench's
-    // cleared-memo pass call exactly this) — clearing per-module here
-    // instead would let Memos.clearAll silently miss a module while the
-    // spec stays green
-    graft.Memos.clearAll()
-    val leaked = for {
-      (nm, m) <- modules
-      (field, tm) <- trieMapFields(m)
-      if tm.nonEmpty
-    } yield s"$nm.$field (${tm.size} entries)"
-    assert(leaked.isEmpty,
-      s"caches not emptied by Memos.clearAll: ${leaked.mkString(", ")}")
-  }
-
-  test("every TrieMap field is referenced inside its module's clear hook (static, field-granular)") {
-    // Field-granular companion to the runtime test above (round-15
-    // advice: that test is only as granular as its populate phase, so a
-    // field nothing populates — the round-15 memos, most StreamOps
-    // scratch registries — would pass with its clear-hook line missing).
-    // Populating every field would re-run most of the board; instead this
-    // reads each module's SOURCE and asserts every reflected TrieMap
-    // field name occurs as a word inside the clear hook's body — the
-    // exact omission class (a forgotten `xCache.clear()` line) is a
-    // failure for ALL fields, including ones added after this spec.
-    val src = "src/main/scala/graft"
-    val modules: Seq[(String, AnyRef, String, String)] = Seq(
-      ("GraphOps", GraphOps, s"$src/queries/GraphOps.scala", "clearCaches"),
-      ("TextOps", TextOps, s"$src/queries/TextOps.scala", "clearCaches"),
-      ("EventOps", EventOps, s"$src/queries/EventOps.scala", "clearCaches"),
-      ("Relational2", Relational2, s"$src/queries/Relational2.scala", "clearObservedCache"),
-      ("VectorOps", VectorOps, s"$src/queries/VectorOps.scala", "clearCaches"),
-      ("StreamOps", StreamOps, s"$src/queries/StreamOps.scala", "clearCaches"),
-      ("Generated", Generated, s"$src/queries/Generated.scala", "clearCaches"),
-      ("MediaOps", MediaOps, s"$src/queries/MediaOps.scala", "clearCaches"),
-      ("CopyOnWrite", graft.operators.CopyOnWrite,
-        s"$src/operators/CopyOnWrite.scala", "clearCaches"),
-      ("MergeOnRead", graft.operators.MergeOnRead,
-        s"$src/operators/MergeOnRead.scala", "clearCaches"),
-      ("Multimodal", graft.multimodal.Multimodal,
-        s"$src/multimodal/Multimodal.scala", "clearCaches"))
-    val missing = modules.flatMap { case (nm, mod, path, hook) =>
-      val text = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-      val defIdx = text.indexOf(s"def $hook")
-      assert(defIdx >= 0, s"$nm: no `def $hook` in $path")
-      // hook body = from the def to the next module-level (2-space) def;
-      // handles both braced and expression-bodied one-liner hooks
-      val rest = text.substring(defIdx + 4)
-      val end = rest.indexOf("\n  def ")
-      val body0 = if (end >= 0) rest.substring(0, end) else rest
-      // follow ONE hop of local delegation (round 19: Generated's
-      // clearCaches = armedFullCache.clear() + the cleared-lane
-      // variant) — a field cleared inside a locally-defined
-      // `clearX()` the hook calls is still cleared by the hook
-      val delegated = "\\b(clear\\w+)\\(\\)".r.findAllMatchIn(body0)
-        .map(_.group(1)).filterNot(_ == hook).toSeq.distinct
-      val body = body0 + delegated.flatMap { dn =>
-        // exact-name match (round-19 advice): indexOf("def " + dn)
-        // prefix-matches a LONGER method name defined earlier (e.g.
-        // `def clearX` binding to `def clearXKeepingY`), appending the
-        // wrong body and potentially masking a missing clear line
-        s"(?m)def ${java.util.regex.Pattern.quote(dn)}\\s*[(:=]".r
-          .findFirstMatchIn(text).map { m =>
-            val r2 = text.substring(m.start + 4)
-            val e2 = r2.indexOf("\n  def ")
-            if (e2 >= 0) r2.substring(0, e2) else r2
-          }
-      }.mkString("\n", "\n", "")
-      trieMapFields(mod).collect {
-        case (field, _) if !s"\\b${java.util.regex.Pattern.quote(field)}\\b".r
-          .findFirstIn(body).isDefined => s"$nm.$field"
-      }
-    }
-    assert(missing.isEmpty,
-      s"TrieMap fields with no line in their module's clear hook: ${missing.mkString(", ")}")
+      s"populate phase left these modules' memos all-empty: ${unexercised.mkString(", ")}")
+    Memos.clearAll()
+    val leaked = Memos.registered.count(!_.isEmpty)
+    assert(leaked == 0, s"$leaked registered memos not emptied by Memos.clearAll")
   }
 
   test("cleared-lane clear keeps the shared armed deployment; the full clear drops it") {
-    // round-19 brief #4: g09/g10/g21 are three readouts of ONE armed
-    // Derby deployment — the cleared lane (which clears memos before
-    // EVERY query) must keep that triple across the pass so the build
-    // is graded once (in g09, first consumer in sorted order), while
-    // Harness teardown's clearAll still drops it. Dummy frames stand in
-    // for the deployment so this stays a metadata-only test.
+    // g09/g10/g21 are three readouts of ONE armed Derby deployment — the
+    // cleared lane (which clears memos before EVERY query) must keep that
+    // triple across the pass so the build is graded once (in g09, first
+    // consumer in sorted order), while Harness teardown's clearAll still
+    // drops it. Dummy frames stand in for the deployment so this stays a
+    // metadata-only test.
     import spark.implicits._
     val dummy = Seq(1).toDF("x")
-    Generated.armedFullCache.put(spark, (dummy, dummy, dummy))
-    Generated.liveCache.put((spark, "hygiene-dummy"), dummy)
-    graft.Memos.clearAllKeepingSharedDeployments()
-    assert(Generated.armedFullCache.contains(spark),
+    Generated.armedFullCache(spark, ())((dummy, dummy, dummy))
+    Generated.liveCache(spark, "hygiene-dummy")(dummy)
+    Memos.clearAllKeepingSharedDeployments()
+    assert(Generated.armedFullCache.get(spark, ()).isDefined,
       "the shared deployment triple must survive the cleared-lane clear " +
         "(g10/g21 read it; re-deploying would grade the same build thrice)")
     assert(Generated.liveCache.isEmpty,
       "single-query Derby lifetimes must still clear per query — their " +
         "isolation is the semantics under grade (OCC/rollback/idempotency)")
-    graft.Memos.clearAll()
+    Memos.clearAll()
     assert(Generated.armedFullCache.isEmpty,
       "the full clear (Harness teardown) must drop the deployment memo")
   }

@@ -319,7 +319,7 @@ class TextArtifactSpec extends AnyFunSuite {
   test("lsh_pairs: a cleared session is served from the artifact with identical rows") {
     val rows1 = TextOps.lshNearDupPairs(spark, d).collect().map(_.toSeq).toSeq
     assert(rows1.nonEmpty, "fixture must have near-dup pairs")
-    TextOps.clearCaches()
+    graft.Memos.clearAll()
     val loads0 = graft.sources.ArtifactStore.loads.get()
     val builds0 = graft.sources.ArtifactStore.builds.get()
     val rows2 = TextOps.lshNearDupPairs(spark, d).collect().map(_.toSeq).toSeq

@@ -81,7 +81,7 @@ class VectorArtifactSpec extends AnyFunSuite {
     val r43 = VectorOps.annPersistedIndexTopK(spark, d).collect().map(_.toSeq).toSeq
     assert(r43.nonEmpty && r43 == r24,
       "the persisted index must answer exactly what the in-session pipeline answers")
-    VectorOps.clearCaches()
+    graft.Memos.clearAll()
     val loads0 = graft.sources.ArtifactStore.loads.get()
     val builds0 = graft.sources.ArtifactStore.builds.get()
     val again = VectorOps.annPersistedIndexTopK(spark, d).collect().map(_.toSeq).toSeq
@@ -143,7 +143,7 @@ class VectorArtifactSpec extends AnyFunSuite {
       s"roll must scan the persisted corpus index: ${rollInputs.take(4).mkString(",")}")
     assert(rollInputs.exists(_.contains("embeddings.parquet")),
       "roll's fresh side reads the delta from the embeddings fixture")
-    VectorOps.clearCaches()
+    graft.Memos.clearAll()
     val builds0 = graft.sources.ArtifactStore.builds.get()
     val loads0 = graft.sources.ArtifactStore.loads.get()
     val r2 = VectorOps.annIndexRoll(spark, d).collect().map(_.toSeq).toSeq
@@ -168,7 +168,7 @@ class VectorArtifactSpec extends AnyFunSuite {
       s"v45 must scan the ROLLED artifact: ${serveInputs.take(4).mkString(",")}")
     assert(!serveInputs.exists(_.contains(java.io.File.separator + "ann_index")),
       "v45 must not fall back to the pre-roll index")
-    VectorOps.clearCaches()
+    graft.Memos.clearAll()
     val builds0 = graft.sources.ArtifactStore.builds.get()
     val loads0 = graft.sources.ArtifactStore.loads.get()
     val again = VectorOps.annRolledServeTopK(spark, d).collect().map(_.toSeq).toSeq
@@ -320,7 +320,7 @@ class VectorArtifactSpec extends AnyFunSuite {
   test("v02: a cleared session is served from the cos_pairs artifact with identical rows") {
     val rows1 = VectorOps.cosineNearDupPairs(spark, d).collect().map(_.toSeq).toSeq
     assert(rows1.nonEmpty, "fixture must have cosine near-dup pairs")
-    VectorOps.clearCaches()
+    graft.Memos.clearAll()
     val builds0 = graft.sources.ArtifactStore.builds.get()
     val rows2 = VectorOps.cosineNearDupPairs(spark, d).collect().map(_.toSeq).toSeq
     assert(graft.sources.ArtifactStore.builds.get() == builds0,

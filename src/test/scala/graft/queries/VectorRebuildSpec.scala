@@ -28,7 +28,7 @@ class VectorRebuildSpec extends AnyFunSuite {
     assert(pre == v34,
       "overlay serving state must equal the deletes-overlay logical index")
 
-    val (nCells, nRebuilt, nOverlay) = VectorOps.rebuildAudit.get((spark, d))
+    val (nCells, nRebuilt, nOverlay) = VectorOps.rebuildAudit(spark, d)
       .getOrElse(fail("rebuild audit missing — v38 did not execute"))
     val trig = graft.SparkEntry.all("v36_ivf_compaction_trigger").fn(spark, d)
       .collect()

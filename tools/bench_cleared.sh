@@ -5,10 +5,9 @@
 # per-family isolated cold column, and for cross-run-artifact and
 # Derby-lifetime queries even the cold is a read (round-16 advice).
 # This runs graft.Bench with GRAFT_CLEARED_PASS=1 —
-# Memos.clearAllKeepingSharedDeployments (the CacheHygieneSpec-enforced
-# hook list, minus the g09/g10/g21 shared armed-deployment triple,
-# which is pass-scoped like the scratch artifact dir) before EVERY
-# memo-served query — and GRAFT_ARTIFACT_DIR on a scratch dir so
+# Memos.clearAllKeepingSharedDeployments (every registered session memo
+# except the g09/g10/g21 shared armed deployment, which is pass-scoped
+# like the scratch artifact dir) before EVERY memo-served query — and GRAFT_ARTIFACT_DIR on a scratch dir so
 # artifact-backed builds actually rebuild. Every number in the record
 # is an uncached build, except g10/g21 which read the pass's shared
 # deployment (built in g09, the first consumer in sorted order);
