@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * committed plans/r20/<name>_{before,after}.txt — PLANS.md carries the
   * headline set, this carries the optimization-round diffs).
   * Usage: ExplainQ <outDir> <suffix> <name>[,<name>...] [sfDir]
-  * Memo-served names dump their UNCACHED build plan (PlanDump's t49
-  * vacuity rule: a checkpoint-scan plan carries no evidence). */
+  * Names in PlanDump.UncachedBuilds dump their UNCACHED build plan
+  * (PlanDump's t49 vacuity rule: a scan plan carries no evidence). */
 object ExplainQ {
   def main(args: Array[String]): Unit = {
     val outDir = java.nio.file.Paths.get(args(0))

@@ -69,26 +69,25 @@ object PlanDump {
     // their shape locks live in the PlanSpec t62 row, T62Spec, and the
     // hyperballRoundProbe PlanSpec row)
     "t63_trained_gate_apply", "v41_sampled_pair_recall",
-    // round 15 additions (t22/t58 now memoize their readout, so their
-    // registered plans are checkpoint scans; t22's bounded-window lock
-    // moved to the tokenBudgetSelectUncached PlanSpec row)
+    // round 15 additions (t22's bounded-window lock is its PlanSpec row)
     "m13_cross_modal_decontam",
     // round 16 additions
     "t64_bpe_encode_census", "t65_epoch_shuffle",
     "t66_tokenizer_fertility", "v42_hard_negative_mining",
     // s34 stays out (stream runs at build time; plan = checkpoint scan)
     "m14_frame_reuse",
-    // round 17 additions (v43/t67 are memo-served — their UNCACHED
-    // serve plans over the persisted artifacts are the evidence; t68
-    // stays out: the roll artifact writes at build time, so the
-    // registered plan is a 4-row census scan — its shape lock is the
-    // rolled ≡ rebuild equality in TextArtifactSpec)
+    // round 17 additions (v43 serves over the persisted index; t67's
+    // registered plan is a checkpoint scan, so its UNCACHED dedup plan
+    // over the persisted artifacts is the evidence; t68 stays out: the
+    // roll artifact writes at build time, so the registered plan is a
+    // 4-row census scan — its shape lock is the rolled ≡ rebuild
+    // equality in TextArtifactSpec)
     "v43_ann_persisted_index", "t67_delta_dedup",
     // round 18 additions (v44's registered plan is a census over the
     // rolled artifact written at build time — the load-bearing evidence
     // is the ROLL plan: corpus side artifact-scanned, delta-only fresh
-    // encode — dumped via UncachedBuilds; v45's is the rolled-artifact
-    // serve plan, also via UncachedBuilds)
+    // encode — dumped via UncachedBuilds; v45's registered plan is the
+    // rolled-artifact serve plan)
     "v44_ann_index_roll", "v45_ann_rolled_serve",
     // round 19 additions (all four are artifact-maintenance queries
     // whose registered plan is a census/readout over an artifact
@@ -102,32 +101,27 @@ object PlanDump {
     "t70_band_reap",
     // v48/t72 serve FROM the reaped artifacts (deletions immediately
     // invisible to queries) — their evidence is the serve/dedup plan
-    // over the reaped scan, dumped via UncachedBuilds
+    // over the reaped scan (t72's dumped via UncachedBuilds)
     "v48_ann_reaped_serve", "t72_reaped_delta_dedup")
 
-  /** Registered names whose fn now serves a memo (plan = checkpoint
-    * scan) but whose UNCACHED build plan is the load-bearing evidence —
+  /** Registered names whose plan is an artifact scan or a checkpoint
+    * scan but whose UNCACHED build plan is the load-bearing evidence —
     * dumped under "<name> (uncached build)" via the production build
-    * entry points (round 16: p01/p07 memoize their score frames). */
+    * entry points. */
   val UncachedBuilds: Seq[(String, (SparkSession, String) =>
       org.apache.spark.sql.DataFrame)] = Seq(
-    "p01_pagerank" -> (graft.queries.GraphOps.pagerankBuild _),
-    "p07_personalized_pagerank" -> (graft.queries.GraphOps.pprBuild _),
-    "m07_chunk_near_dup" -> (graft.multimodal.Multimodal.chunkNearDupUncached _),
-    // round 17: t03's pair frame is a cross-run artifact now — the
+    // round 17: t03's pair frame is a cross-run artifact — the
     // registered plan is a parquet scan of it; the LSH pipeline is the
-    // evidence. v43/t67 dump their artifact-SERVING plans (which is the
-    // claim: corpus/index side scans the artifact, fresh work is
-    // query/delta-sized).
+    // evidence. t67 dumps its artifact-SERVING dedup plan (which is the
+    // claim: the corpus side scans the artifact, fresh work is
+    // delta-sized; the registered fn checkpoints the result).
     "t03_lsh_near_dup_pairs" -> (graft.queries.TextOps.lshNearDupPairsUncached _),
-    "v43_ann_persisted_index" -> (graft.queries.VectorOps.annPersistedTopKUncached _),
     "t67_delta_dedup" -> (graft.queries.TextOps.deltaDedupUncached _),
     // round 18: v44's evidence is the roll plan — the corpus_ann
     // artifact scanned, only the delta slice routed + encoded fresh;
     // m09's pair frame became a cross-run artifact (verdict #4), so
     // its banded build pipeline is the evidence now
     "v44_ann_index_roll" -> (graft.queries.VectorOps.rolledAnnUncached _),
-    "v45_ann_rolled_serve" -> (graft.queries.VectorOps.annRolledServeUncached _),
     "m09_chunk_simhash_pairs" -> (graft.multimodal.Multimodal.chunkSimhashPairsUncached _),
     // round 19: the two-step rolls' evidence is roll #2's plan (corpus
     // side = the ROLLED artifact, fresh work = one shard); the reaps'
@@ -136,7 +130,6 @@ object PlanDump {
     "v47_ann_reap" -> (graft.queries.VectorOps.reapedAnnUncached _),
     "t69_band_roll_roll" -> (graft.queries.TextOps.rolledBandsS2Uncached _),
     "t70_band_reap" -> (graft.queries.TextOps.reapedBandsUncached _),
-    "v48_ann_reaped_serve" -> (graft.queries.VectorOps.annReapedServeUncached _),
     "t72_reaped_delta_dedup" -> (graft.queries.TextOps.reapedDeltaDedupUncached _))
 
   def main(args: Array[String]): Unit = {
@@ -161,16 +154,16 @@ object PlanDump {
         "Generated by `graft.PlanDump`; plan-shape assertions live in\n" +
         "`src/test/scala/graft/queries/PlanSpec.scala`, reasoning in `SCALE.md`.\n")
     Headline.foreach { name =>
-      // memo-served registrations dump their UNCACHED build instead —
-      // a checkpoint-scan plan carries no evidence (the t49 vacuity
-      // rule). Only the branch taken runs its build: the registered fn
-      // of a memoized query eagerly materializes the memo, so invoking
-      // it just to discard the plan would do the build work twice.
+      // artifact-served registrations dump their UNCACHED build instead
+      // — a scan plan carries no evidence (the t49 vacuity rule). Only
+      // the branch taken runs: a registered fn that writes an artifact
+      // or checkpoints its result does that work when called, so
+      // invoking it just to discard the plan would build twice.
       UncachedBuilds.find(_._1 == name) match {
         case Some((_, build)) =>
           val bp = build(spark, d)
             .queryExecution.explainString(ExplainMode.fromString("formatted"))
-          md.append(s"\n## $name (uncached build; registered plan is a memo scan)\n\n```\n$bp```\n")
+          md.append(s"\n## $name (uncached build; registered plan is a scan)\n\n```\n$bp```\n")
         case None =>
           val plan = SparkEntry.all(name).fn(spark, d)
             .queryExecution.explainString(ExplainMode.fromString("formatted"))

@@ -22,7 +22,16 @@ object GeneratePipeline {
   def skipTable(name: String): Boolean =
     SkipTables.exists(name.contains) || name.contains("AspNet")
 
+  /** One table's outcome; a failed table's `error` is
+    * "<exception class>: <first message line>". */
   final case class Result(table: String, rows: Long, ok: Boolean, error: Option[String])
+
+  /** The failure record: the class survives a message-less exception
+    * (an NPE, many Spark internals), and a multi-line message keeps its
+    * first line. */
+  private[graft] def describe(e: Throwable): String =
+    e.getClass.getName + ": " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("(no message)")
 
   /** Generate every (non-skipped) table of the catalog and sink it.
     *
@@ -76,7 +85,7 @@ object GeneratePipeline {
             (Result(t, rowCount, ok = true, None), keys.map(t -> _))
           } catch {
             case e: Throwable =>
-              (Result(t, 0, ok = false, Some(e.getMessage)), None)
+              (Result(t, 0, ok = false, Some(describe(e))), None)
           }
         }
       }), Duration.Inf)

@@ -182,7 +182,7 @@ object JdbcRoundTrip {
         quoteTable = DerbyDdl.q)
       loaded(t) = rowCount
     })
-    results.filterNot(_.ok).foreach(r => sys.error(s"generate ${r.table}: ${r.error}"))
+    results.filterNot(_.ok).foreach(r => sys.error(s"generate ${r.table}: ${r.error.mkString}"))
     rearmAndAudit(spark, catalog, target, targets, loaded.toMap)
   }
 
@@ -270,6 +270,10 @@ object JdbcRoundTrip {
       .map(_.filter(kind === RowMark || col("value").isNotNull).persist())
     val counts: Map[(String, Int), Long] = all.map { entries =>
       try {
+        // materialized first, so the anti-join is planned from the cached
+        // size; otherwise AQE races the cache build and the audit's job
+        // count depends on which stage finishes first
+        entries.count()
         val key = Seq("ptable", "pcol", "value")
         val rows = entries.filter(kind === RowMark).groupBy("table", "kind").count()
         val bad = entries.filter(kind === ChildValue)
@@ -374,7 +378,7 @@ object JdbcRoundTrip {
         quoteTable = DerbyDdl.q, exclude = deferredCols.getOrElse(t, Set.empty))
     })
     results.filterNot(_.ok).foreach(r =>
-      sys.error(s"armed load ${r.table}: ${r.error.getOrElse("?")}"))
+      sys.error(s"armed load ${r.table}: ${r.error.mkString}"))
 
     // Independent Spark-side audit on top of the DB's own enforcement.
     val (nReadback, fkBad) = auditReadback(spark, url, target, catalog, targets)

@@ -254,25 +254,18 @@ object Multimodal {
           .reduce(_ + _).as("phash60"))
   }
 
-  // pair results are deterministic per (session, dir) and the bench's
-  // cold/warm split keeps the true cost visible — the t13 memo convention
-  private val simhashPairsCache = Memos.memo[String, DataFrame]()
-
-  def chunkSimhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    simhashPairsCache(spark, dir) {
-      // cross-RUN artifact (round-17 verdict #4): the verified pair set
-      // is a pure function of documents.parquet and feeds m10's cluster
-      // walk — a fresh JVM used to pay the chunk+SimHash+band pipeline
-      // (7.5 s in the cleared lane at sf0.1) to rebuild it. Key =
-      // fixture digest + fold-shape tag (MediaArtifactSpec's tag-lock
-      // recomputes it over the chunker/SimHash/pair derivation).
-      graft.sources.ArtifactStore.loadOrBuild(spark, "m_simhash_pairs",
-        graft.sources.ArtifactStore.key(dir, "documents.parquet") +
-          "-" + SimhashPairsFoldTag) {
-        chunkSimhashPairsUncached(spark, dir)
-      }.orderBy("a_id", "b_id").localCheckpoint()
-    }
-  }
+  def chunkSimhashPairs(spark: SparkSession, dir: String): DataFrame =
+    // cross-RUN artifact (round-17 verdict #4): the verified pair set
+    // is a pure function of documents.parquet and feeds m10's cluster
+    // walk — a fresh JVM used to pay the chunk+SimHash+band pipeline
+    // (7.5 s in the cleared lane at sf0.1) to rebuild it. Key =
+    // fixture digest + fold-shape tag (MediaArtifactSpec's tag-lock
+    // recomputes it over the chunker/SimHash/pair derivation).
+    graft.sources.ArtifactStore.loadOrBuild(spark, "m_simhash_pairs",
+      graft.sources.ArtifactStore.key(dir, "documents.parquet") +
+        "-" + SimhashPairsFoldTag) {
+      chunkSimhashPairsUncached(spark, dir)
+    }.orderBy("a_id", "b_id")
 
   /** The banded build behind the m_simhash_pairs artifact — the
     * load-bearing plan (PlanDump / cleared-lane evidence). */
@@ -495,18 +488,8 @@ object Multimodal {
     }
   }
 
-  /** Registered m07: the media near-dup pair table is a maintained
-    * dedup index (the t03/m09 convention) — memoized per (session,
-    * dir); cold carries the honest pair mine, the registration is
-    * memo-flagged so benchcmp grades the build. */
+  /** Registered m07: the media near-dup pair table. */
   def chunkNearDup(spark: SparkSession, dir: String): DataFrame = {
-    nearDupPairsCache(spark, dir)(
-      chunkNearDupUncached(spark, dir).localCheckpoint())
-  }
-
-  private val nearDupPairsCache = Memos.memo[String, DataFrame]()
-
-  private[graft] def chunkNearDupUncached(spark: SparkSession, dir: String): DataFrame = {
     val sets = chunkFrame(spark, dir)
       .select("media_id", "chunk_md5").distinct()
     val rare = sets.groupBy("chunk_md5")

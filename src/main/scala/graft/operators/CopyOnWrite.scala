@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
-import graft.Memos
 
 /** Copy-on-write partition-scoped upsert — the lakehouse MERGE
   * primitive under Delta/Iceberg: an update touching one partition
@@ -25,7 +24,6 @@ import graft.Memos
   */
 object CopyOnWrite {
 
-  private val cache = Memos.memo[String, DataFrame]()
   /** (untouched-files-unchanged, touched-files-changed) of the last
     * build — the physical claim, exposed for CowUpsertSpec. */
   @volatile private[operators] var lastAudit: Option[(Boolean, Boolean)] = None
@@ -45,57 +43,55 @@ object CopyOnWrite {
   }
 
   def cowUpsert(s: SparkSession, d: String): DataFrame = {
-    cache(s, d) {
-      val root = Files.createTempDirectory("graft_cow")
-      try {
-        val dir = root.resolve("orders_cow")
-        val base = orders(s, d).select(col("o_orderkey"), col("o_custkey"),
-          col("o_totalprice"), col("o_orderpriority"))
-        base.write.partitionBy("o_orderpriority").parquet(dir.toString)
+    val root = Files.createTempDirectory("graft_cow")
+    try {
+      val dir = root.resolve("orders_cow")
+      val base = orders(s, d).select(col("o_orderkey"), col("o_custkey"),
+        col("o_totalprice"), col("o_orderpriority"))
+      base.write.partitionBy("o_orderpriority").parquet(dir.toString)
 
-        val before = listing(dir)
-        val touched = "o_orderpriority=1-URGENT"
-        // the delta: a deterministic ~10% of URGENT orders get +1000.00
-        // (k03's md5 gate — rerunnable in both engines)
-        val sel = pmod(conv(substring(md5(concat(col("o_orderkey").cast("string"),
-          lit(":cow"))), 1, 8), 16, 10).cast("long"), lit(10L)) === 0
-        // copy-on-write: read ONLY the touched partition (partition
-        // pruning serves the read), apply the update, dynamic-overwrite
-        // rewrites just that partition's directory
-        val urgent = s.read.parquet(dir.toString)
-          .filter(col("o_orderpriority") === "1-URGENT")
-        urgent
-          .withColumn("o_totalprice",
-            when(sel, asDbl(dec(col("o_totalprice")) + lit(1000).cast(Dec)))
-              .otherwise(col("o_totalprice")))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("o_orderpriority").parquet(dir.toString)
-        val after = listing(dir)
+      val before = listing(dir)
+      val touched = "o_orderpriority=1-URGENT"
+      // the delta: a deterministic ~10% of URGENT orders get +1000.00
+      // (k03's md5 gate — rerunnable in both engines)
+      val sel = pmod(conv(substring(md5(concat(col("o_orderkey").cast("string"),
+        lit(":cow"))), 1, 8), 16, 10).cast("long"), lit(10L)) === 0
+      // copy-on-write: read ONLY the touched partition (partition
+      // pruning serves the read), apply the update, dynamic-overwrite
+      // rewrites just that partition's directory
+      val urgent = s.read.parquet(dir.toString)
+        .filter(col("o_orderpriority") === "1-URGENT")
+      urgent
+        .withColumn("o_totalprice",
+          when(sel, asDbl(dec(col("o_totalprice")) + lit(1000).cast(Dec)))
+            .otherwise(col("o_totalprice")))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("o_orderpriority").parquet(dir.toString)
+      val after = listing(dir)
 
-        val untouchedSame = before.view.filterKeys(!_.startsWith(touched)).toMap ==
-          after.view.filterKeys(!_.startsWith(touched)).toMap
-        val touchedChanged = before.view.filterKeys(_.startsWith(touched)).toMap !=
-          after.view.filterKeys(_.startsWith(touched)).toMap
-        lastAudit = Some((untouchedSame, touchedChanged))
+      val untouchedSame = before.view.filterKeys(!_.startsWith(touched)).toMap ==
+        after.view.filterKeys(!_.startsWith(touched)).toMap
+      val touchedChanged = before.view.filterKeys(_.startsWith(touched)).toMap !=
+        after.view.filterKeys(_.startsWith(touched)).toMap
+      lastAudit = Some((untouchedSame, touchedChanged))
 
-        s.read.parquet(dir.toString)
-          .groupBy(col("o_orderpriority").as("grp"))
-          .agg(count(lit(1)).as("n_orders"),
-            asDbl(sum(dec("o_totalprice"))).as("sum_price"),
-            sum(when(sel.and(col("o_orderpriority") === "1-URGENT"), 1L)
-              .otherwise(0L)).as("n_updated"))
-          .orderBy("grp")
-          .localCheckpoint() // materialize before the scratch dir dies
-      } finally {
-        def rm(p: Path): Unit = {
-          if (Files.isDirectory(p)) {
-            val st = Files.list(p); try st.forEach(rm(_)) finally st.close()
-          }
-          Files.deleteIfExists(p); ()
+      s.read.parquet(dir.toString)
+        .groupBy(col("o_orderpriority").as("grp"))
+        .agg(count(lit(1)).as("n_orders"),
+          asDbl(sum(dec("o_totalprice"))).as("sum_price"),
+          sum(when(sel.and(col("o_orderpriority") === "1-URGENT"), 1L)
+            .otherwise(0L)).as("n_updated"))
+        .orderBy("grp")
+        .localCheckpoint() // materialize before the scratch dir dies
+    } finally {
+      def rm(p: Path): Unit = {
+        if (Files.isDirectory(p)) {
+          val st = Files.list(p); try st.forEach(rm(_)) finally st.close()
         }
-        rm(root)
+        Files.deleteIfExists(p); ()
       }
+      rm(root)
     }
   }
 }

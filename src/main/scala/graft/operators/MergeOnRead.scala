@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
-import graft.Memos
 
 /** Merge-on-read time travel — the OTHER lakehouse mutation posture,
   * beside q49's copy-on-write: commits never rewrite data files. A
@@ -29,7 +28,6 @@ import graft.Memos
   */
 object MergeOnRead {
 
-  private val cache = Memos.memo[String, DataFrame]()
   /** (base-files-unchanged-across-commits, tombstone+append rows) of the
     * last build — the physical claim, exposed for MergeOnReadSpec. */
   @volatile private[operators] var lastAudit: Option[(Boolean, Long, Long)] = None
@@ -49,59 +47,56 @@ object MergeOnRead {
   }
 
   def morTimeTravel(s: SparkSession, d: String): DataFrame = {
-    cache(s, d) {
-      val root = Files.createTempDirectory("graft_mor")
-      try {
-        val base = orders(s, d)
-          .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
-        val baseDir = root.resolve("base")
-        base.write.parquet(baseDir.toString)
-        val before = listing(baseDir)
+    val root = Files.createTempDirectory("graft_mor")
+    try {
+      val base = orders(s, d)
+        .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
+      val baseDir = root.resolve("base")
+      base.write.parquet(baseDir.toString)
+      val before = listing(baseDir)
 
-        // commit 2: tombstone file (delete keys ≡ 0 mod 101)
-        val tombDir = root.resolve("tombstones_v2")
-        base.filter(pmod(col("k"), lit(101)) === 0).select("k")
-          .write.parquet(tombDir.toString)
-        // commit 3: append file (negated keys ≡ 0 mod 103)
-        val apndDir = root.resolve("appends_v3")
-        base.filter(pmod(col("k"), lit(103)) === 0)
-          .select((-col("k")).as("k"), col("p"))
-          .write.parquet(apndDir.toString)
-        val after = listing(baseDir)
+      // commit 2: tombstone file (delete keys ≡ 0 mod 101)
+      val tombDir = root.resolve("tombstones_v2")
+      base.filter(pmod(col("k"), lit(101)) === 0).select("k")
+        .write.parquet(tombDir.toString)
+      // commit 3: append file (negated keys ≡ 0 mod 103)
+      val apndDir = root.resolve("appends_v3")
+      base.filter(pmod(col("k"), lit(103)) === 0)
+        .select((-col("k")).as("k"), col("p"))
+        .write.parquet(apndDir.toString)
+      val after = listing(baseDir)
 
-        val baseDf = s.read.parquet(baseDir.toString)
-        val tomb = s.read.parquet(tombDir.toString)
-        val apnd = s.read.parquet(apndDir.toString)
-        lastAudit = Some((before == after, tomb.count(), apnd.count()))
+      val baseDf = s.read.parquet(baseDir.toString)
+      val tomb = s.read.parquet(tombDir.toString)
+      val apnd = s.read.parquet(apndDir.toString)
+      lastAudit = Some((before == after, tomb.count(), apnd.count()))
 
-        def snapshot(v: Int): DataFrame = {
-          val afterDeletes =
-            if (v >= 2) baseDf.join(tomb, Seq("k"), "left_anti") else baseDf
-          if (v >= 3) afterDeletes.unionByName(apnd) else afterDeletes
-        }
-        (1 to 3).map { v =>
-          snapshot(v).agg(count(lit(1)).as("n_rows"),
-              asDbl(sum(col("p"))).as("sum_price"),
-              min(col("k")).as("min_key"), max(col("k")).as("max_key"))
-            .select(lit(v).as("version"), col("n_rows"), col("sum_price"),
-              col("min_key"), col("max_key"))
-        }.reduce(_ unionByName _)
-          .orderBy("version")
-          .localCheckpoint() // pin before the scratch dir is deleted
-      } finally {
-        def rm(p: Path): Unit = {
-          if (Files.isDirectory(p)) {
-            val st = Files.list(p); try st.forEach(rm(_)) finally st.close()
-          }
-          Files.deleteIfExists(p)
-        }
-        rm(root)
+      def snapshot(v: Int): DataFrame = {
+        val afterDeletes =
+          if (v >= 2) baseDf.join(tomb, Seq("k"), "left_anti") else baseDf
+        if (v >= 3) afterDeletes.unionByName(apnd) else afterDeletes
       }
+      (1 to 3).map { v =>
+        snapshot(v).agg(count(lit(1)).as("n_rows"),
+            asDbl(sum(col("p"))).as("sum_price"),
+            min(col("k")).as("min_key"), max(col("k")).as("max_key"))
+          .select(lit(v).as("version"), col("n_rows"), col("sum_price"),
+            col("min_key"), col("max_key"))
+      }.reduce(_ unionByName _)
+        .orderBy("version")
+        .localCheckpoint() // pin before the scratch dir is deleted
+    } finally {
+      def rm(p: Path): Unit = {
+        if (Files.isDirectory(p)) {
+          val st = Files.list(p); try st.forEach(rm(_)) finally st.close()
+        }
+        Files.deleteIfExists(p)
+      }
+      rm(root)
     }
   }
 
   @volatile private[operators] var lastCompactAudit: Option[(Long, Long, Long)] = None
-  private val compactCache = Memos.memo[String, DataFrame]()
 
   /** q57 — COMPACTION, the maintenance pass that closes q55's loop: the
     * accumulated tombstone/append log is folded into a fresh base (one
@@ -119,50 +114,48 @@ object MergeOnRead {
     * and compaction resets it — scheduled off the same
     * tombstone/append byte accounting this operator emits. */
   def morCompaction(s: SparkSession, d: String): DataFrame = {
-    compactCache(s, d) {
-      val root = Files.createTempDirectory("graft_morc")
-      try {
-        val base = orders(s, d)
-          .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
-        val baseDir = root.resolve("base")
-        base.write.parquet(baseDir.toString)
-        val tombDir = root.resolve("tombstones")
-        base.filter(pmod(col("k"), lit(101)) === 0).select("k")
-          .write.parquet(tombDir.toString)
-        val apndDir = root.resolve("appends")
-        base.filter(pmod(col("k"), lit(103)) === 0)
-          .select((-col("k")).as("k"), col("p"))
-          .write.parquet(apndDir.toString)
+    val root = Files.createTempDirectory("graft_morc")
+    try {
+      val base = orders(s, d)
+        .select(col("o_orderkey").as("k"), dec(col("o_totalprice")).as("p"))
+      val baseDir = root.resolve("base")
+      base.write.parquet(baseDir.toString)
+      val tombDir = root.resolve("tombstones")
+      base.filter(pmod(col("k"), lit(101)) === 0).select("k")
+        .write.parquet(tombDir.toString)
+      val apndDir = root.resolve("appends")
+      base.filter(pmod(col("k"), lit(103)) === 0)
+        .select((-col("k")).as("k"), col("p"))
+        .write.parquet(apndDir.toString)
 
-        val baseDf = s.read.parquet(baseDir.toString)
-        val tomb = s.read.parquet(tombDir.toString)
-        val apnd = s.read.parquet(apndDir.toString)
-        val logRead = baseDf.join(tomb, Seq("k"), "left_anti").unionByName(apnd)
+      val baseDf = s.read.parquet(baseDir.toString)
+      val tomb = s.read.parquet(tombDir.toString)
+      val apnd = s.read.parquet(apndDir.toString)
+      val logRead = baseDf.join(tomb, Seq("k"), "left_anti").unionByName(apnd)
 
-        // the compaction pass: fold the log into a fresh base, once
-        val newBaseDir = root.resolve("base_compacted")
-        logRead.write.parquet(newBaseDir.toString)
-        val compacted = s.read.parquet(newBaseDir.toString)
-        lastCompactAudit = Some((compacted.count(), tomb.count(), apnd.count()))
+      // the compaction pass: fold the log into a fresh base, once
+      val newBaseDir = root.resolve("base_compacted")
+      logRead.write.parquet(newBaseDir.toString)
+      val compacted = s.read.parquet(newBaseDir.toString)
+      lastCompactAudit = Some((compacted.count(), tomb.count(), apnd.count()))
 
-        def census(df: DataFrame, phase: String) =
-          df.agg(count(lit(1)).as("n_rows"), asDbl(sum(col("p"))).as("sum_price"),
-              min(col("k")).as("min_key"), max(col("k")).as("max_key"))
-            .select(lit(phase).as("phase"), col("n_rows"), col("sum_price"),
-              col("min_key"), col("max_key"))
-        census(logRead, "1_pre_compaction")
-          .unionByName(census(compacted, "2_post_compaction"))
-          .orderBy("phase")
-          .localCheckpoint() // pin before the scratch dir is deleted
-      } finally {
-        def rm(p: Path): Unit = {
-          if (Files.isDirectory(p)) {
-            val st = Files.list(p); try st.forEach(rm(_)) finally st.close()
-          }
-          Files.deleteIfExists(p)
+      def census(df: DataFrame, phase: String) =
+        df.agg(count(lit(1)).as("n_rows"), asDbl(sum(col("p"))).as("sum_price"),
+            min(col("k")).as("min_key"), max(col("k")).as("max_key"))
+          .select(lit(phase).as("phase"), col("n_rows"), col("sum_price"),
+            col("min_key"), col("max_key"))
+      census(logRead, "1_pre_compaction")
+        .unionByName(census(compacted, "2_post_compaction"))
+        .orderBy("phase")
+        .localCheckpoint() // pin before the scratch dir is deleted
+    } finally {
+      def rm(p: Path): Unit = {
+        if (Files.isDirectory(p)) {
+          val st = Files.list(p); try st.forEach(rm(_)) finally st.close()
         }
-        rm(root)
+        Files.deleteIfExists(p)
       }
+      rm(root)
     }
   }
 

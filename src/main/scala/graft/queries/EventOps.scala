@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
-import graft.Memos
 
 /** Time-series / sessionization operators over the `events` fixture.
   *
@@ -147,12 +146,11 @@ object EventOps {
     val ev = events(s, d)
       .withColumn("hr_bucket", floor(unix_micros(col("ts")) / lit(3600000000L)))
     // ONE scan of the fact table: the calendar bounds and the type set
-    // both derive from the persisted counts aggregate (|buckets|×|types|
-    // rows — metadata-sized), not from re-reading events. Memoized per
-    // (session, dir) so repeated harness passes share it; its memo release
-    // unpersists it at teardown.
-    val counts = countsCache(s, d)(
-      ev.groupBy("hr_bucket", "event_type").agg(count(lit(1)).as("n")).persist())
+    // both derive from the checkpointed counts aggregate
+    // (|buckets|×|types| rows — metadata-sized), not from re-reading
+    // events
+    val counts = ev.groupBy("hr_bucket", "event_type").agg(count(lit(1)).as("n"))
+      .localCheckpoint()
     val buckets = counts.agg(min(col("hr_bucket")).as("lo"), max(col("hr_bucket")).as("hi"))
       .select(explode(expr("sequence(lo, hi)")).as("hr_bucket"))
     val types = counts.select("event_type").distinct()
@@ -179,23 +177,8 @@ object EventOps {
     * each stage exactly once — the frontiers are |users| rows, cheap to
     * pin. e09 consumes each stage once and keeps the declarative chain
     * (its PlanSpec asserts the type filters reach the parquet scan). */
-  private val frontierCache = Memos.memo[String, Seq[(String, String, DataFrame)]]()
-
   private def funnelStages(s: SparkSession, d: String,
       pin: Boolean = false): Seq[(String, String, DataFrame)] = {
-    // the PINNED frontier set is per-user funnel state — a derived
-    // frame a deployment maintains, memoized per (session, dir) like
-    // the counts aggregate above (e12's four stage builds were its
-    // whole warm cost; the declarative pin=false chain stays live so
-    // e09's pushed-filter plan lock still sees the scan)
-    if (pin) {
-      return frontierCache(s, d)(funnelStagesBuild(s, d, pin = true))
-    }
-    funnelStagesBuild(s, d, pin)
-  }
-
-  private def funnelStagesBuild(s: SparkSession, d: String,
-      pin: Boolean): Seq[(String, String, DataFrame)] = {
     def p(df: DataFrame): DataFrame = if (pin) df.localCheckpoint() else df
     val ev = events(s, d)
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
@@ -352,8 +335,6 @@ object EventOps {
           .as("day7_rate"))
       .orderBy("d0")
   }
-
-  private val countsCache = Memos.memo[String, DataFrame]()
 
   /** Inter-event gap percentiles: P50/P90/P99 of the seconds between a
     * user's consecutive events — the distribution whose knee JUSTIFIES

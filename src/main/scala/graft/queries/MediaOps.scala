@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.multimodal.Multimodal
-import graft.Memos
 
 /** Multimodal operators on the graded surface (see graft.multimodal).
   * m01 is fully oracle-checked (metadata path is pure built-ins over the
@@ -21,23 +20,19 @@ object MediaOps {
     * the media pair graph; the oracle re-derives the labeling with a
     * recursive-CTE transitive closure over the same chunk-SimHash
     * chain — both engines walk the graph independently end to end. */
-  def mediaDupClusters(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    mediaClustersCache(s, d) {
-      // cross-RUN artifact (round-17 verdict #4): the cluster labeling
-      // is a pure function of documents.parquet (pairs + CC walk, 8.9 s
-      // in the cleared lane at sf0.1) — a deployment keeps the asset
-      // catalog's cluster table, it doesn't re-walk the graph per JVM.
-      // The tag covers the CROSS-FILE derivation (chunk pairs in
-      // Multimodal + ccPointerJumping in TextOps + this composition) —
-      // MediaArtifactSpec's multi-file tag-lock recomputes it.
-      graft.sources.ArtifactStore.loadOrBuild(s, "media_clusters",
-        graft.sources.ArtifactStore.key(d, "documents.parquet") +
-          "-" + MediaClustersFoldTag) {
-        mediaDupClustersUncached(s, d)
-      }.orderBy("media_id").localCheckpoint()
-    }
-  }
+  def mediaDupClusters(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
+    // cross-RUN artifact (round-17 verdict #4): the cluster labeling
+    // is a pure function of documents.parquet (pairs + CC walk, 8.9 s
+    // in the cleared lane at sf0.1) — a deployment keeps the asset
+    // catalog's cluster table, it doesn't re-walk the graph per JVM.
+    // The tag covers the CROSS-FILE derivation (chunk pairs in
+    // Multimodal + ccPointerJumping in TextOps + this composition) —
+    // MediaArtifactSpec's multi-file tag-lock recomputes it.
+    graft.sources.ArtifactStore.loadOrBuild(s, "media_clusters",
+      graft.sources.ArtifactStore.key(d, "documents.parquet") +
+        "-" + MediaClustersFoldTag) {
+      mediaDupClustersUncached(s, d)
+    }.orderBy("media_id")
 
   /** The pair-graph CC build behind the media_clusters artifact (the
     * cleared-lane evidence; reads m09's pair artifact for candidates). */
@@ -54,8 +49,6 @@ object MediaOps {
   /** media_clusters artifact fold-shape tag — sha256 (first 8 hex)
     * over the cross-file derivation (see mediaDupClusters). */
   private[graft] val MediaClustersFoldTag = "mdc-8acd34e8"
-
-  private val mediaClustersCache = Memos.memo[String, org.apache.spark.sql.DataFrame]()
 
   /** The CDC chunk restatement (boundaries + per-chunk md5 of the
     * uppercase-hex bytes) shared by the m06 census and m07 near-dup

@@ -34,7 +34,6 @@ object PFamilyProbe {
       t("shared", "part_edges_artifact")(GraphOps.partEdges(spark, sfDir).count())
       t("shared", "part_degrees")(GraphOps.partDegrees(spark, sfDir).count())
       t("shared", "bfs_edges_persist")(GraphOps.bfsEdgesCached(spark, sfDir).count())
-      t("shared", "capped_adj")(GraphOps.cappedAdjCached(spark, sfDir).count())
       t("shared", "lp_edges_persist")(GraphOps.lpEdgesCached(spark, sfDir).count())
       t("shared", "sssp_edges_persist")(GraphOps.weightedEdgesCached(spark, sfDir).count())
       val pq = graft.SparkEntry.all.toSeq.filter(_._1.startsWith("p")).sortBy(_._1)

@@ -8,10 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * @param oracle equivalent DuckDB SQL over the same parquet tables
   *               (None for ops not expressible in portable SQL — those get
   *               the driver's weaker rows-only check plus ScalaTest specs).
-  * @param memo   true when repeat invocations serve a per-(session, dir)
-  *               memoized / cross-run-artifact RESULT (or equivalently a
-  *               one-shot stream execution) — i.e. the query's WARM bench
-  *               number measures a readout, not the pipeline. Bench emits
+  * @param memo   true when a repeat invocation skips the query's build
+  *               because it reads state that outlives the call (family
+  *               g's Derby deployments, a cross-run artifact) — i.e. the
+  *               query's WARM bench number measures a readout, not the
+  *               pipeline (see SparkEntry.memoServed). Bench emits
   *               the flag into bench_detail.json and tools/benchcmp.py
   *               grades the flagged queries' COLD (= honest build) for
   *               regressions, so a memoized build path can never hide

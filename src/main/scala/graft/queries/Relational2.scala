@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tables.Tables._
-import graft.Memos
 
 /** Second relational batch: operators beyond the reference's own surface
   * that a complete engine needs (as-of join, range join, grouping sets,
@@ -478,34 +477,24 @@ object Relational2 {
     * the p02 shape — a keyed self-join whose fan-out is bounded by
     * basket size, never corpus size; pair/item supports are partial
     * counts; the top-20 cut is TakeOrderedAndProject. */
-  private val basketItemsCache = Memos.memo[String, DataFrame]()
-
-  /** Registered q51: the mined rule table is a pure function of the
-    * basket snapshot — a derived index a deployment refreshes on
-    * ingest, not per read (the q52/p01 convention) — so the 20-row
-    * result memoizes per (session, dir). Cold carries the honest mine;
-    * the registration is memo-flagged so benchcmp grades the build. */
   def basketRules(s: SparkSession, d: String): DataFrame = {
-    q51ResultCache(s, (d, "q51"))(
-      basketRulesBuild(s, d).localCheckpoint())
-  }
-
-  private val q51ResultCache = Memos.memo[(String, String), DataFrame]()
-
-  private[queries] def basketRulesBuild(s: SparkSession, d: String): DataFrame = {
     // ONE explicit ok-shuffle serves the dedup AND the pair self-join
     // (the p04 agg-pair rule: HashPartitioning on a SUBSET of the dedup
     // keys clusters every (ok, pk) group, and the self-join keys on ok)
-    // — the old localCheckpoint dropped partitioning (Scan ExistingRDD)
-    // and the join re-shuffled BOTH sides. persist keeps the
-    // partitioning; memoized per (session, dir) so repeated passes
-    // don't stack persisted copies.
-    val items = basketItemsCache(s, d)(
-      lineitem(s, d)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .repartition(col("ok"))
-        .dropDuplicates("ok", "pk") // feeds baskets, item + pair supports
-        .persist())
+    // — a localCheckpoint would drop partitioning (Scan ExistingRDD)
+    // and the join would re-shuffle BOTH sides. persist keeps the
+    // partitioning; the 20-row result is checkpointed so the persisted
+    // baskets release before the call returns.
+    val items = lineitem(s, d)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .repartition(col("ok"))
+      .dropDuplicates("ok", "pk") // feeds baskets, item + pair supports
+      .persist()
+    try basketRulesOn(items).localCheckpoint() finally items.unpersist()
+  }
+
+  /** The rule table over the deduplicated (ok, pk) baskets. */
+  private def basketRulesOn(items: DataFrame): DataFrame = {
     val nBaskets = items.select("ok").distinct().count()
     val itemCnt = items.groupBy(col("pk").as("item")).agg(count(lit(1)).as("cnt"))
     val pairs = items.join(items.withColumnRenamed("pk", "pk2"), "ok")
@@ -545,21 +534,12 @@ object Relational2 {
     * size the delete-1 keyspace bounds; the exact verify runs only on
     * candidates. This is t03's shingle-LSH discipline applied to EDIT
     * distance. */
-  def fuzzyBlockedMatch(s: SparkSession, d: String): DataFrame = {
-    // the VERIFIED candidate frame (id, id2, dist) is the SymSpell
-    // index a dedup deployment maintains — a pure function of the
-    // fixture, memoized per (session, dir) like every other derived
-    // index (round-15; each pass used to re-run the 19×-explode +
-    // self-join build). The cold pass pays the build; the stage-time
-    // table in SCALE.md and Q52Probe carry the honest cost, and
-    // DqDiffSpec/PlanSpec drive the UNCACHED path below.
-    fuzzyReadout(q52CandCache(s, d)(
-      fuzzyCandUncached(
+  def fuzzyBlockedMatch(s: SparkSession, d: String): DataFrame =
+    // the VERIFIED candidate frame (id, id2, dist) is checkpointed: the
+    // readout's census and top-20 both read it
+    fuzzyReadout(fuzzyCandUncached(
         customer(s, d).select(col("c_custkey").as("id"), col("c_name").as("nm")))
-        .localCheckpoint()))
-  }
-
-  private val q52CandCache = Memos.memo[String, DataFrame]()
+      .localCheckpoint())
 
   /** Core over an explicit (id, nm) frame — factored so DqDiffSpec can
     * plant unequal-length names and prove recall 1 against a true
@@ -818,8 +798,6 @@ object Relational2 {
 
   // --- q58: observed metrics (CollectMetrics on the result's own scan) --
 
-  private val observedCache = Memos.memo[String, DataFrame]()
-
   /** q58 — pipeline observability through Spark's Observation API: the
     * q01-shaped pricing aggregate runs with `observe()` metrics riding
     * its OWN scan (a CollectMetrics node feeding accumulators — ZERO
@@ -831,15 +809,11 @@ object Relational2 {
     * that audit at zero marginal cost — at 100 TB the difference
     * between auditing and re-reading. Exact decimals make the
     * reconciliation a hard equality, graded by the oracle stating both
-    * sides from the same table.
-    *
-    * Memoized per (session, dir): an Observation binds to one action
-    * (the metrics are a RUN artifact), so repeated harness calls reuse
-    * the first run's frozen frame — the g07 live-round-trip
-    * convention. */
+    * sides from the same table. An Observation binds to one action, so
+    * every call builds its own. */
   /** The observed plan SHAPE, pre-action — PlanSpec's hook for the
-    * zero-extra-pass claim (the memoized graded frame is post-action
-    * and carries no plan). */
+    * zero-extra-pass claim (the graded frame is post-action and
+    * carries no plan). */
   private[queries] def observedShape(s: SparkSession, d: String): DataFrame = {
     val obs = org.apache.spark.sql.Observation(s"q58_shape_${System.nanoTime()}")
     lineitem(s, d)
@@ -852,27 +826,25 @@ object Relational2 {
   }
 
   def observedMetrics(s: SparkSession, d: String): DataFrame = {
-    observedCache(s, d) {
-      val obs = org.apache.spark.sql.Observation(
-        s"q58_${System.nanoTime()}") // names are once-per-run
-      val grouped = lineitem(s, d)
-        .filter(col("l_quantity") >= 10)
-        .observe(obs,
-          count(lit(1)).as("n_scanned"),
-          sum(dec("l_quantity")).as("qty_mass"))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_rows"), sum(dec("l_quantity")).as("qty"))
-      val res = grouped.agg(count(lit(1)).as("n_groups"),
-          sum(col("n_rows")).as("n_in_groups"), asDbl(sum(col("qty"))).as("qty_grouped"))
-        .collect()(0) // the action the observation rides
-      val m = obs.get
-      import s.implicits._
-      Seq((res.getLong(0), res.getLong(1), res.getDouble(2),
-        m("n_scanned").asInstanceOf[Long],
-        m("qty_mass").asInstanceOf[java.math.BigDecimal].doubleValue()))
-        .toDF("n_groups", "n_in_groups", "qty_grouped", "n_scanned_observed",
-          "qty_mass_observed")
-    }
+    val obs = org.apache.spark.sql.Observation(
+      s"q58_${System.nanoTime()}") // names are once-per-run
+    val grouped = lineitem(s, d)
+      .filter(col("l_quantity") >= 10)
+      .observe(obs,
+        count(lit(1)).as("n_scanned"),
+        sum(dec("l_quantity")).as("qty_mass"))
+      .groupBy("l_returnflag")
+      .agg(count(lit(1)).as("n_rows"), sum(dec("l_quantity")).as("qty"))
+    val res = grouped.agg(count(lit(1)).as("n_groups"),
+        sum(col("n_rows")).as("n_in_groups"), asDbl(sum(col("qty"))).as("qty_grouped"))
+      .collect()(0) // the action the observation rides
+    val m = obs.get
+    import s.implicits._
+    Seq((res.getLong(0), res.getLong(1), res.getDouble(2),
+      m("n_scanned").asInstanceOf[Long],
+      m("qty_mass").asInstanceOf[java.math.BigDecimal].doubleValue()))
+      .toDF("n_groups", "n_in_groups", "qty_grouped", "n_scanned_observed",
+        "qty_mass_observed")
   }
 
   private val ObservedMetricsDuck: String =

@@ -16,11 +16,6 @@ import graft.Memos
   */
 object StreamOps {
 
-  // One fixture snapshot per (session, dir): s01 and s02 each run twice
-  // per bench pass, and re-writing the full events table for every
-  // invocation both doubles the streaming query cost and leaks temp dirs.
-  private val sourceCache = Memos.memo[String, String](scratchRelease)
-
   // JVM-exit backstop for snapshot dirs: Harness teardown clears the
   // memos (deleting their dirs), but ScalaTest suites build these plans
   // without ever tearing the memos down, and each leaked snapshot is a
@@ -34,25 +29,34 @@ object StreamOps {
     allScratch.keys.foreach(d =>
       try rmrf(java.nio.file.Paths.get(d)) catch { case _: Throwable => () })))
 
-  /** Release for the snapshot-source memos: delete the dir — dropping
+  /** Release for the snapshot-source memo: delete the dir — dropping
     * the entry without deleting would orphan it until JVM exit. */
   private def scratchRelease(dir: String): Unit = rmrf(java.nio.file.Paths.get(dir))
 
-  /** Replay the events fixture as a µs-timestamped stream source. */
-  private[graft] def streamSource(s: SparkSession, d: String): String = {
-    sourceCache(s, d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream")
-      try {
-        Tables.events(s, d)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-          .write.mode("overwrite").parquet(dir.toString)
-      } catch { case e: Throwable =>
-        // failed snapshot never reaches the cache — reclaim the dir now
-        rmrf(dir); throw e
-      }
+  /** The replay sources, one snapshot dir per (session, fixture dir,
+    * tag): several stream queries replay the same source, and
+    * re-writing the fixture for every invocation both doubles the
+    * streaming cost and leaks temp dirs. */
+  private val sourceCache = Memos.memo[(String, String), String](scratchRelease)
+
+  /** A scratch replay source: a fresh `<tag>*` temp dir filled by
+    * `write` on first use per (session, dir). A failed write never
+    * reaches the memo — its dir is reclaimed at once. */
+  private def scratchSource(s: SparkSession, d: String, tag: String)(
+      write: java.nio.file.Path => Unit): String =
+    sourceCache(s, (d, tag)) {
+      val dir = java.nio.file.Files.createTempDirectory(tag)
+      try write(dir) catch { case e: Throwable => rmrf(dir); throw e }
       trackScratch(dir.toString)
     }
-  }
+
+  /** Replay the events fixture as a µs-timestamped stream source. */
+  private[graft] def streamSource(s: SparkSession, d: String): String =
+    scratchSource(s, d, "graft_stream") { dir =>
+      Tables.events(s, d)
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite").parquet(dir.toString)
+    }
 
   /** A 4-file copy of the fixture for ORDER-INSENSITIVE streaming
     * consumers (s06's stateless ETL): with maxFilesPerTrigger=1 it
@@ -60,19 +64,13 @@ object StreamOps {
     * deliberately stays a single batch — the stateful session query's
     * batch-twin parity depends on each user's events arriving together,
     * which an arbitrary file split would break. */
-  private val multiFileSourceCache = Memos.memo[String, String](scratchRelease)
-  private def multiFileStreamSource(s: SparkSession, d: String): String = {
-    multiFileSourceCache(s, d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_mf")
-      try {
-        Tables.events(s, d)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-          .repartition(4)
-          .write.mode("overwrite").parquet(dir.toString)
-      } catch { case e: Throwable => rmrf(dir); throw e }
-      trackScratch(dir.toString)
+  private def multiFileStreamSource(s: SparkSession, d: String): String =
+    scratchSource(s, d, "graft_stream_mf") { dir =>
+      Tables.events(s, d)
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+        .repartition(4)
+        .write.mode("overwrite").parquet(dir.toString)
     }
-  }
 
   /** A 4-file (l_orderkey, l_suppkey) snapshot of LINEITEM — the shared
     * replay source for the trade-ingest family (s29 edge maintenance,
@@ -81,18 +79,12 @@ object StreamOps {
     * dirs — the fixture write is now a shared fixed cost paid once per
     * harness run; per-query checkpoints and state stay separate. Any
     * split works — both consumers dedup/fold per arriving row. */
-  private val liPairSourceCache = Memos.memo[String, String](scratchRelease)
-  private def liPairStreamSource(s: SparkSession, d: String): String = {
-    liPairSourceCache(s, d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_li")
-      try {
-        Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
-          .repartition(4) // ≥2 files → ≥2 micro-batches
-          .write.mode("overwrite").parquet(dir.toString)
-      } catch { case e: Throwable => rmrf(dir); throw e }
-      trackScratch(dir.toString)
+  private def liPairStreamSource(s: SparkSession, d: String): String =
+    scratchSource(s, d, "graft_stream_li") { dir =>
+      Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
+        .repartition(4) // ≥2 files → ≥2 micro-batches
+        .write.mode("overwrite").parquet(dir.toString)
     }
-  }
 
   /** An ORDERKEY-SLICED 4-file (l_orderkey, l_partkey) snapshot of
     * lineitem — the replay source for s32's capped-adjacency ingest.
@@ -102,59 +94,41 @@ object StreamOps {
     * per file (the id-sliced documents source's pattern, keyed on the
     * order space). Batch ARRIVAL order is irrelevant — the min-CapA
     * merge is commutative — only order-completeness matters. */
-  private val okSliceLiSourceCache = Memos.memo[String, String](scratchRelease)
-  private def okSlicedLiPartSource(s: SparkSession, d: String): String = {
-    okSliceLiSourceCache(s, d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_liok")
-      try {
-        val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
-        val mm = li.agg(min("l_orderkey").as("lo"), max("l_orderkey").as("hi")).collect()(0)
-        val (lo, hi) = (mm.getLong(0), mm.getLong(1) + 1)
-        writeOrderedSlices(dir, (0 until 4).map { i =>
-          val from = lo + (hi - lo) * i / 4
-          val to = lo + (hi - lo) * (i + 1) / 4
-          li.filter(col("l_orderkey") >= from && col("l_orderkey") < to)
-        })
-      } catch { case e: Throwable => rmrf(dir); throw e }
-      trackScratch(dir.toString)
+  private def okSlicedLiPartSource(s: SparkSession, d: String): String =
+    scratchSource(s, d, "graft_stream_liok") { dir =>
+      val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
+      val mm = li.agg(min("l_orderkey").as("lo"), max("l_orderkey").as("hi")).collect()(0)
+      val (lo, hi) = (mm.getLong(0), mm.getLong(1) + 1)
+      writeOrderedSlices(dir, (0 until 4).map { i =>
+        val from = lo + (hi - lo) * i / 4
+        val to = lo + (hi - lo) * (i + 1) / 4
+        li.filter(col("l_orderkey") >= from && col("l_orderkey") < to)
+      })
     }
-  }
 
   /** A 4-file snapshot of the DOCUMENTS table for the streaming
     * near-dup index (s08): with maxFilesPerTrigger=1 it replays as 4
     * real micro-batches of arriving documents. Any split works — the
     * emitted pair set is order-independent by construction. */
-  private val docSourceCache = Memos.memo[String, String](scratchRelease)
-  private def docStreamSource(s: SparkSession, d: String): String = {
-    docSourceCache(s, d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_docs")
-      try {
-        Tables.documents(s, d)
-          .select("doc_id", "text", "lang", "source", "n_chars")
-          .repartition(4)
-          .write.mode("overwrite").parquet(dir.toString)
-      } catch { case e: Throwable => rmrf(dir); throw e }
-      trackScratch(dir.toString)
+  private def docStreamSource(s: SparkSession, d: String): String =
+    scratchSource(s, d, "graft_stream_docs") { dir =>
+      Tables.documents(s, d)
+        .select("doc_id", "text", "lang", "source", "n_chars")
+        .repartition(4)
+        .write.mode("overwrite").parquet(dir.toString)
     }
-  }
 
   /** A 4-file snapshot of the EMBEDDINGS table — the vector-modality
     * stream (s15): with maxFilesPerTrigger=1 it replays as 4 real
     * micro-batches of arriving vectors. Any split works — per-vector
     * scores are complete within the batch that delivers the vector. */
-  private val embSourceCache = Memos.memo[String, String](scratchRelease)
-  private def embStreamSource(s: SparkSession, d: String): String = {
-    embSourceCache(s, d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_emb")
-      try {
-        Tables.embeddings(s, d)
-          .select("vec_id", "embedding", "label")
-          .repartition(4)
-          .write.mode("overwrite").parquet(dir.toString)
-      } catch { case e: Throwable => rmrf(dir); throw e }
-      trackScratch(dir.toString)
+  private def embStreamSource(s: SparkSession, d: String): String =
+    scratchSource(s, d, "graft_stream_emb") { dir =>
+      Tables.embeddings(s, d)
+        .select("vec_id", "embedding", "label")
+        .repartition(4)
+        .write.mode("overwrite").parquet(dir.toString)
     }
-  }
 
   /** Write `slices` as slice<i>.parquet under `dir` with ASCENDING
     * mtimes, so FileStreamSource (oldest-first) replays them in slice
@@ -190,24 +164,18 @@ object StreamOps {
     * stateful consumers need (s30's packing: a doc's sequence id depends
     * on every doc packed before it). The time-sliced events source's
     * pattern, keyed on the id space instead of event time. */
-  private val idSliceDocSourceCache = Memos.memo[String, String](scratchRelease)
-  private def idSlicedDocStreamSource(s: SparkSession, d: String): String = {
-    idSliceDocSourceCache(s, d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_docid")
-      try {
-        val docs = Tables.documents(s, d)
-          .select("doc_id", "text", "lang", "source", "n_chars")
-        val mm = docs.agg(min("doc_id").as("lo"), max("doc_id").as("hi")).collect()(0)
-        val (lo, hi) = (mm.getLong(0), mm.getLong(1) + 1)
-        writeOrderedSlices(dir, (0 until 4).map { i =>
-          val from = lo + (hi - lo) * i / 4
-          val to = lo + (hi - lo) * (i + 1) / 4
-          docs.filter(col("doc_id") >= from && col("doc_id") < to)
-        })
-      } catch { case e: Throwable => rmrf(dir); throw e }
-      trackScratch(dir.toString)
+  private def idSlicedDocStreamSource(s: SparkSession, d: String): String =
+    scratchSource(s, d, "graft_stream_docid") { dir =>
+      val docs = Tables.documents(s, d)
+        .select("doc_id", "text", "lang", "source", "n_chars")
+      val mm = docs.agg(min("doc_id").as("lo"), max("doc_id").as("hi")).collect()(0)
+      val (lo, hi) = (mm.getLong(0), mm.getLong(1) + 1)
+      writeOrderedSlices(dir, (0 until 4).map { i =>
+        val from = lo + (hi - lo) * i / 4
+        val to = lo + (hi - lo) * (i + 1) / 4
+        docs.filter(col("doc_id") >= from && col("doc_id") < to)
+      })
     }
-  }
 
   /** s30 — STREAMING sequence packing, t60's online twin: documents
     * arrive in doc_id order (the id-sliced source — a real ingest
@@ -221,46 +189,41 @@ object StreamOps {
     *
     * Scale: state per shard is two longs — thousands of shards cost
     * kilobytes; the per-batch sort is per shard per micro-batch (a
-    * day's arrivals), never the corpus. Result memoized per
-    * (session, dir) — one drain per harness run is the honest cost. */
+    * day's arrivals), never the corpus. */
   def streamSequencePacking(s: SparkSession, d: String): DataFrame = {
-    packCache(s, d) {
-      import graft.streaming.DocStream
-      val (rows, nBatches, scratch) = DocStream.runDocOnce(
-        s, idSlicedDocStreamSource(s, d), "graft_stream_pack") { srcDf =>
-        import s.implicits._
-        srcDf.select(col("doc_id"),
-            TextOps.saltedBucket(col("doc_id"), ":shard", TextOps.NumShards.toLong)
-              .as("shard"),
-            (size(split(TextOps.norm(col("text")), " ")) + 1).cast("long").as("n_tok"))
-          .as[DocStream.PackIn]
-          .groupByKey(_.shard)
-          .flatMapGroupsWithState(
-            org.apache.spark.sql.streaming.OutputMode.Append,
-            org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-            DocStream.packFn(TextOps.PackCtx))
-          .toDF()
-      }
-      try {
-        // a single-batch drain would never exercise the carried state
-        require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-        val totals = rows.groupBy("shard")
-          .agg(max("cum_after").as("shard_total"))
-        rows.groupBy("shard", "seq_id")
-          .agg(count(lit(1)).as("n_docs_started"),
-            sum("straddle").as("n_straddlers"))
-          .join(totals, "shard")
-          .withColumn("fill_tokens",
-            least(lit(TextOps.PackCtx),
-              col("shard_total") - col("seq_id") * TextOps.PackCtx))
-          .select("shard", "seq_id", "n_docs_started", "n_straddlers", "fill_tokens")
-          .orderBy("shard", "seq_id")
-          .localCheckpoint() // pin BEFORE the sink scratch dir is deleted
-      } finally rmrf(java.nio.file.Paths.get(scratch))
+    import graft.streaming.DocStream
+    val (rows, nBatches, scratch) = DocStream.runDocOnce(
+      s, idSlicedDocStreamSource(s, d), "graft_stream_pack") { srcDf =>
+      import s.implicits._
+      srcDf.select(col("doc_id"),
+          TextOps.saltedBucket(col("doc_id"), ":shard", TextOps.NumShards.toLong)
+            .as("shard"),
+          (size(split(TextOps.norm(col("text")), " ")) + 1).cast("long").as("n_tok"))
+        .as[DocStream.PackIn]
+        .groupByKey(_.shard)
+        .flatMapGroupsWithState(
+          org.apache.spark.sql.streaming.OutputMode.Append,
+          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
+          DocStream.packFn(TextOps.PackCtx))
+        .toDF()
     }
+    try {
+      // a single-batch drain would never exercise the carried state
+      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+      val totals = rows.groupBy("shard")
+        .agg(max("cum_after").as("shard_total"))
+      rows.groupBy("shard", "seq_id")
+        .agg(count(lit(1)).as("n_docs_started"),
+          sum("straddle").as("n_straddlers"))
+        .join(totals, "shard")
+        .withColumn("fill_tokens",
+          least(lit(TextOps.PackCtx),
+            col("shard_total") - col("seq_id") * TextOps.PackCtx))
+        .select("shard", "seq_id", "n_docs_started", "n_straddlers", "fill_tokens")
+        .orderBy("shard", "seq_id")
+        .localCheckpoint() // pin BEFORE the sink scratch dir is deleted
+    } finally rmrf(java.nio.file.Paths.get(scratch))
   }
-
-  private val packCache = Memos.memo[String, DataFrame]()
 
   /** A TIME-SLICED 4-file snapshot of the events table: file i holds
     * the i-th quarter of the event-time range, and file mtimes ascend
@@ -270,33 +233,25 @@ object StreamOps {
     * consumers whose state must CARRY across batches in time order
     * (s17's attribution: a touch in slice k attributes a purchase in
     * slice k+1). */
-  private val timeSliceSourceCache = Memos.memo[String, String](scratchRelease)
-  private def timeSlicedStreamSource(s: SparkSession, d: String): String = {
-    timeSliceSourceCache(s, d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_ts")
-      try {
-        val ev = Tables.events(s, d)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-          max(unix_micros(col("ts"))).as("hi")).collect()(0)
-        val (lo, hi) = (mm.getLong(0), mm.getLong(1) + 1)
-        writeOrderedSlices(dir, (0 until 4).map { i =>
-          val from = lo + (hi - lo) * i / 4
-          val to = lo + (hi - lo) * (i + 1) / 4
-          ev.filter(unix_micros(col("ts")) >= from && unix_micros(col("ts")) < to)
-        })
-      } catch { case e: Throwable => rmrf(dir); throw e }
-      trackScratch(dir.toString)
+  private def timeSlicedStreamSource(s: SparkSession, d: String): String =
+    scratchSource(s, d, "graft_stream_ts") { dir =>
+      val ev = Tables.events(s, d)
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
+        max(unix_micros(col("ts"))).as("hi")).collect()(0)
+      val (lo, hi) = (mm.getLong(0), mm.getLong(1) + 1)
+      writeOrderedSlices(dir, (0 until 4).map { i =>
+        val from = lo + (hi - lo) * i / 4
+        val to = lo + (hi - lo) * (i + 1) / 4
+        ev.filter(unix_micros(col("ts")) >= from && unix_micros(col("ts")) < to)
+      })
     }
-  }
 
   /** A deliberately OUT-OF-ORDER replay: slice 0 carries everything
     * except a deterministic ~5% of first-half events; slice 1 delivers
     * those months-old events AFTER the watermark has advanced to the
     * stream's end — the shape a recovered upstream or a backfill
     * produces, which s21's watermark must drop and ACCOUNT for. */
-  private val lateSourceCache = Memos.memo[String, String](scratchRelease)
-
   private[queries] def lateSel = {
     // md5 gate on event_id + first-half-of-timeline restriction: the
     // late set is rerunnable in both engines (k03's discipline)
@@ -305,32 +260,27 @@ object StreamOps {
         .cast("long"), lit(20L)) === 0 && unix_micros(col("ts")) < mid
   }
 
-  private def lateSlicedStreamSource(s: SparkSession, d: String): String = {
-    lateSourceCache(s, d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_late")
-      try {
-        val ev = Tables.events(s, d)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-          max(unix_micros(col("ts"))).as("hi")).collect()(0)
-        val mid = lit((mm.getLong(0) + mm.getLong(1)) / 2)
-        val tail = lit(mm.getLong(1) - 5L * 60 * 1000000) // last 5 min
-        // THREE slices, because state eviction needs a batch boundary
-        // after the watermark advances: slice 0 (bulk) sets the
-        // watermark, slice 1 (recent tail) triggers the eviction pass
-        // that EMITS and removes the old windows, slice 2 (the late
-        // set) then arrives after its windows are gone — the only
-        // arrival order in which Spark's aggregation actually DROPS
-        // late rows (a late row whose window is still in state merges
-        // fine; measured round 7)
-        writeOrderedSlices(dir, Seq(
-          ev.filter(!lateSel(mid) && unix_micros(col("ts")) < tail),
-          ev.filter(!lateSel(mid) && unix_micros(col("ts")) >= tail),
-          ev.filter(lateSel(mid))))
-      } catch { case e: Throwable => rmrf(dir); throw e }
-      trackScratch(dir.toString)
+  private def lateSlicedStreamSource(s: SparkSession, d: String): String =
+    scratchSource(s, d, "graft_stream_late") { dir =>
+      val ev = Tables.events(s, d)
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
+        max(unix_micros(col("ts"))).as("hi")).collect()(0)
+      val mid = lit((mm.getLong(0) + mm.getLong(1)) / 2)
+      val tail = lit(mm.getLong(1) - 5L * 60 * 1000000) // last 5 min
+      // THREE slices, because state eviction needs a batch boundary
+      // after the watermark advances: slice 0 (bulk) sets the
+      // watermark, slice 1 (recent tail) triggers the eviction pass
+      // that EMITS and removes the old windows, slice 2 (the late
+      // set) then arrives after its windows are gone — the only
+      // arrival order in which Spark's aggregation actually DROPS
+      // late rows (a late row whose window is still in state merges
+      // fine; measured round 7)
+      writeOrderedSlices(dir, Seq(
+        ev.filter(!lateSel(mid) && unix_micros(col("ts")) < tail),
+        ev.filter(!lateSel(mid) && unix_micros(col("ts")) >= tail),
+        ev.filter(lateSel(mid))))
     }
-  }
 
   private[queries] def debugLateSource(s: SparkSession, d: String): String =
     lateSlicedStreamSource(s, d)
@@ -353,36 +303,26 @@ object StreamOps {
     * losing a backfill is the classic streaming correctness bug, and
     * this query makes the loss an observable, graded number. */
   def streamLateAccounting(s: SparkSession, d: String): DataFrame = {
-    lateResultCache(s, d) {
-      val (t, dropped) = EventStream.runAppendWithProgress(s, ev =>
-        ev.withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour").as("w"))
-          .agg(count(lit(1)).as("n"))
-          .select(unix_micros(col("w.start")).as("w_start_us"), col("n")),
-        lateSlicedStreamSource(s, d), "graft_stream_late_acct")
-      lastLateDrop = Some(dropped)
-      t.orderBy("w_start_us").localCheckpoint()
-    }
+    val (t, dropped) = EventStream.runAppendWithProgress(s, ev =>
+      ev.withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "1 hour").as("w"))
+        .agg(count(lit(1)).as("n"))
+        .select(unix_micros(col("w.start")).as("w_start_us"), col("n")),
+      lateSlicedStreamSource(s, d), "graft_stream_late_acct")
+    lastLateDrop = Some(dropped)
+    t.orderBy("w_start_us")
   }
-
-  private val lateResultCache = Memos.memo[String, DataFrame]()
 
   /** A deliberately at-least-once copy of the fixture: every event
     * delivered twice (two identical parquet files) — the input shape a
     * replayed/retried ingest produces, which s03's dedup must collapse. */
-  private val dupSourceCache = Memos.memo[String, String](scratchRelease)
-  private def dupStreamSource(s: SparkSession, d: String): String = {
-    dupSourceCache(s, d) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_dup")
-      try {
-        val ev = Tables.events(s, d)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        ev.write.mode("overwrite").parquet(dir.toString)
-        ev.write.mode("append").parquet(dir.toString)
-      } catch { case e: Throwable => rmrf(dir); throw e }
-      trackScratch(dir.toString)
+  private def dupStreamSource(s: SparkSession, d: String): String =
+    scratchSource(s, d, "graft_stream_dup") { dir =>
+      val ev = Tables.events(s, d)
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      ev.write.mode("overwrite").parquet(dir.toString)
+      ev.write.mode("append").parquet(dir.toString)
     }
-  }
 
   /** Recursive delete of a scratch dir (snapshot sources, sink dirs). */
   private[queries] def rmrf(p: java.nio.file.Path): Unit = {
@@ -516,20 +456,14 @@ object StreamOps {
     * |user-space|/32 words. The drained registers feed k10's shared
     * estimator body, so the oracle IS k10's oracle — the streaming
     * sketch must land on the exactly-once batch estimate bit for bit. */
-  def streamHllDistinct(s: SparkSession, d: String): DataFrame = {
-    hllStreamCache(s, d)(
-      SketchOps.hllEstimate(s, Tables.events(s, d),
-        EventStream.runOnce(s, ev => SketchOps.hllRho(ev)
-            .groupBy("grp", "idx").agg(max("rho").as("reg")),
-          dupStreamSource(s, d), "graft_stream_hll")
-          // pin: the estimator references the register frame twice, and two
-          // readings of the same memory-sink view self-conflict at resolve
-          .localCheckpoint())
-        .localCheckpoint()) // memoized like leftOuterCache: the doubled
-        // replay drain runs once per (session, fixture), not per call
-  }
-
-  private val hllStreamCache = Memos.memo[String, DataFrame]()
+  def streamHllDistinct(s: SparkSession, d: String): DataFrame =
+    SketchOps.hllEstimate(s, Tables.events(s, d),
+      EventStream.runOnce(s, ev => SketchOps.hllRho(ev)
+          .groupBy("grp", "idx").agg(max("rho").as("reg")),
+        dupStreamSource(s, d), "graft_stream_hll")
+        // pin: the estimator references the register frame twice, and two
+        // readings of the same memory-sink view self-conflict at resolve
+        .localCheckpoint())
 
   /** s25 — streaming CUSUM maintenance: e27's daily cent totals kept by
     * a KEYED streaming aggregation (Complete mode; state = |days|×|types|
@@ -542,19 +476,14 @@ object StreamOps {
     * recursion needs the FINAL μ, which only exists once the window
     * closes — in production this is the end-of-day monitoring job
     * reading the continuously-maintained daily frame. */
-  def streamCusumDrift(s: SparkSession, d: String): DataFrame = {
-    cusumStreamCache(s, d)(
-      EventOps.cusumOn(
-        EventStream.runOnce(s, ev => ev
-            .withColumn("day", expr("unix_micros(ts) div 86400000000"))
-            .withColumn("cents", (Tables.dec(col("value")) * 100).cast("long"))
-            .groupBy("event_type", "day").agg(sum("cents").as("x")),
-          streamSource(s, d), "graft_stream_cusum")
-          .localCheckpoint()) // pin the drained sink before the fold re-reads it
-        .localCheckpoint())  // cusumOn already orders by event_type
-  }
-
-  private val cusumStreamCache = Memos.memo[String, DataFrame]()
+  def streamCusumDrift(s: SparkSession, d: String): DataFrame =
+    EventOps.cusumOn( // cusumOn already orders by event_type
+      EventStream.runOnce(s, ev => ev
+          .withColumn("day", expr("unix_micros(ts) div 86400000000"))
+          .withColumn("cents", (Tables.dec(col("value")) * 100).cast("long"))
+          .groupBy("event_type", "day").agg(sum("cents").as("x")),
+        streamSource(s, d), "graft_stream_cusum")
+        .localCheckpoint()) // pin the drained sink before the fold re-reads it
 
   /** Stream-stream self-join with an event-time interval: each click
     * joined to the same user's purchases within the following 30 minutes
@@ -602,44 +531,39 @@ object StreamOps {
     * per key; the watermark is what EVICTS it — an outer join without
     * the time bound would hold every unmatched click forever. */
   def streamLeftOuterJoin(s: SparkSession, d: String): DataFrame = {
-    leftOuterCache(s, d) {
-      val (raw, _) = EventStream.runAppendWithProgress(s, ev => {
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts").as("c_ts"), col("event_id").as("c_id"))
-          .withWatermark("c_ts", "30 minutes")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-            col("event_id").as("p_id"))
-          .withWatermark("p_ts", "30 minutes")
-        clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("c_ts") &&
-            col("p_ts") <= col("c_ts") + expr("interval 30 minutes"),
-          "left_outer")
-      }, timeSlicedStreamSource(s, d), "graft_stream_lo")
-      // the GLOBAL watermark is the MIN over both streams' watermarks
-      // (each side tracks its own max event time − 30 min), so the
-      // provably-final region derives from the EARLIER of the two side
-      // maxima — cutting on the global max alone left boundary clicks
-      // whose null row the min-watermark had not yet released (measured:
-      // one click short on the fixture)
-      val cutoff = Tables.events(s, d)
-        .agg((least(
-          max(when(col("event_type") === "click", unix_micros(col("ts")))),
-          max(when(col("event_type") === "purchase", unix_micros(col("ts")))))
-          - lit(7200000000L)).as("cut"))
-        .collect()(0).getLong(0)
-      raw.filter(unix_micros(col("c_ts")) <= cutoff)
-        .groupBy("user_id")
-        .agg(countDistinct(col("c_id")).as("n_clicks"),
-          countDistinct(when(col("p_id").isNull, col("c_id"))).as("n_unmatched"),
-          sum(when(col("p_id").isNull, 0L).otherwise(1L)).as("n_pairs"))
-        .orderBy("user_id")
-        .localCheckpoint() // pin before any scratch reuse
-    }
+    val (raw, _) = EventStream.runAppendWithProgress(s, ev => {
+      val clicks = ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("ts").as("c_ts"), col("event_id").as("c_id"))
+        .withWatermark("c_ts", "30 minutes")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+          col("event_id").as("p_id"))
+        .withWatermark("p_ts", "30 minutes")
+      clicks.join(purchases,
+        col("user_id") === col("p_user") &&
+          col("p_ts") >= col("c_ts") &&
+          col("p_ts") <= col("c_ts") + expr("interval 30 minutes"),
+        "left_outer")
+    }, timeSlicedStreamSource(s, d), "graft_stream_lo")
+    // the GLOBAL watermark is the MIN over both streams' watermarks
+    // (each side tracks its own max event time − 30 min), so the
+    // provably-final region derives from the EARLIER of the two side
+    // maxima — cutting on the global max alone left boundary clicks
+    // whose null row the min-watermark had not yet released (measured:
+    // one click short on the fixture)
+    val cutoff = Tables.events(s, d)
+      .agg((least(
+        max(when(col("event_type") === "click", unix_micros(col("ts")))),
+        max(when(col("event_type") === "purchase", unix_micros(col("ts")))))
+        - lit(7200000000L)).as("cut"))
+      .collect()(0).getLong(0)
+    raw.filter(unix_micros(col("c_ts")) <= cutoff)
+      .groupBy("user_id")
+      .agg(countDistinct(col("c_id")).as("n_clicks"),
+        countDistinct(when(col("p_id").isNull, col("c_id"))).as("n_unmatched"),
+        sum(when(col("p_id").isNull, 0L).otherwise(1L)).as("n_pairs"))
+      .orderBy("user_id")
   }
-
-  private val leftOuterCache = Memos.memo[String, DataFrame]()
 
   /** Sessionization through Spark's NATIVE session_window aggregation —
     * the built-in operator counterpart to s01's hand-rolled
@@ -678,30 +602,23 @@ object StreamOps {
     * second finds the first in their shared band), so the drained
     * result hash-matches batch t13's all-pairs oracle exactly. Each
     * pair is claimed by its lowest shared band inside the emitter, so
-    * no post-drain dedup shuffle exists. Result memoized per
-    * (session, dir) — the s06/t16 convention: one drain per harness
-    * run is the honest cost (Bench reports it as the cold pass). The
-    * 60-bit signature keeps every band bucket (and so per-key state
+    * no post-drain dedup shuffle exists. The 60-bit signature keeps every band bucket (and so per-key state
     * and per-arrival comparisons) proportional to genuine near-dup
     * density — the 16-bit predecessor saturated its 32/32/64 buckets
     * and compared each arrival against O(n/32) prior docs. */
   def streamNearDup(s: SparkSession, d: String): DataFrame = {
-    nearDupCache(s, d) {
-      val (pairs, nBatches, scratch) = graft.streaming.DocStream.runNearDupOnce(
-        s, docStreamSource(s, d), "graft_stream_neardup")
-      try {
-        // the incremental claim is asserted, not assumed: a single-batch
-        // drain would never exercise the state-vs-arrivals comparison
-        // path (inside the try so a failure still reclaims the scratch)
-        require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-        pairs.select("a_id", "b_id", "hamming")
-          .orderBy("a_id", "b_id")
-          .localCheckpoint() // pin BEFORE the sink scratch dir is deleted
-      } finally rmrf(java.nio.file.Paths.get(scratch))
-    }
+    val (pairs, nBatches, scratch) = graft.streaming.DocStream.runNearDupOnce(
+      s, docStreamSource(s, d), "graft_stream_neardup")
+    try {
+      // the incremental claim is asserted, not assumed: a single-batch
+      // drain would never exercise the state-vs-arrivals comparison
+      // path (inside the try so a failure still reclaims the scratch)
+      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+      pairs.select("a_id", "b_id", "hamming")
+        .orderBy("a_id", "b_id")
+        .localCheckpoint() // pin BEFORE the sink scratch dir is deleted
+    } finally rmrf(java.nio.file.Paths.get(scratch))
   }
-
-  private val nearDupCache = Memos.memo[String, DataFrame]()
 
   /** Streaming benchmark decontamination — t19 run the way a
     * continuously-ingesting pipeline runs it: each micro-batch of
@@ -716,36 +633,30 @@ object StreamOps {
     * evidence — so the oracle IS t19's oracle. No state accumulates:
     * the benchmark side is fixed (an eval suite), the join is
     * stateless, and each arriving doc is scored once on arrival — each
-    * day's crawl is decontaminated WITHOUT rescanning the corpus.
-    * Result memoized per (session, dir) — the s06/s08 convention: one
-    * drain per harness run is the honest cost. */
+    * day's crawl is decontaminated WITHOUT rescanning the corpus. */
   def streamDecontaminate(s: SparkSession, d: String): DataFrame = {
-    decontamCache(s, d) {
-      val bench = TextOps.wordGramIds(s, d, 8)
-        .filter(col("doc_id") < 50)
-        .select(col("gid"), col("doc_id").as("b_id"))
-      val (matches, nBatches, scratch) = graft.streaming.DocStream.runDocOnce(
-        s, docStreamSource(s, d), "graft_stream_decontam") { src =>
-          TextOps.explodeGramIds(src.filter(col("doc_id") >= 50), 8)
-            .join(broadcast(bench), "gid")
-            .select(col("doc_id"), col("gid"), col("b_id"))
-        }
-      try {
-        // per-doc grams are NOT pre-deduplicated in the stream (a
-        // stateful distinct would need a watermark for nothing): the
-        // countDistinct aggregates collapse repeats, so the result
-        // still equals t19's distinct-gram join exactly
-        require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-        matches.groupBy("doc_id")
-          .agg(countDistinct(col("gid")).as("n_hits"),
-            countDistinct(col("b_id")).as("n_bench_docs"))
-          .orderBy("doc_id")
-          .localCheckpoint() // pin BEFORE the sink scratch dir is deleted
-      } finally rmrf(java.nio.file.Paths.get(scratch))
-    }
+    val bench = TextOps.wordGramIds(s, d, 8)
+      .filter(col("doc_id") < 50)
+      .select(col("gid"), col("doc_id").as("b_id"))
+    val (matches, nBatches, scratch) = graft.streaming.DocStream.runDocOnce(
+      s, docStreamSource(s, d), "graft_stream_decontam") { src =>
+        TextOps.explodeGramIds(src.filter(col("doc_id") >= 50), 8)
+          .join(broadcast(bench), "gid")
+          .select(col("doc_id"), col("gid"), col("b_id"))
+      }
+    try {
+      // per-doc grams are NOT pre-deduplicated in the stream (a
+      // stateful distinct would need a watermark for nothing): the
+      // countDistinct aggregates collapse repeats, so the result
+      // still equals t19's distinct-gram join exactly
+      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+      matches.groupBy("doc_id")
+        .agg(countDistinct(col("gid")).as("n_hits"),
+          countDistinct(col("b_id")).as("n_bench_docs"))
+        .orderBy("doc_id")
+        .localCheckpoint() // pin BEFORE the sink scratch dir is deleted
+    } finally rmrf(java.nio.file.Paths.get(scratch))
   }
-
-  private val decontamCache = Memos.memo[String, DataFrame]()
 
   /** In-stream quality gate — t42's Gopher stop-word rule applied at
     * INGEST, where a real pipeline gates (rejecting at the door is a
@@ -758,32 +669,28 @@ object StreamOps {
     * the drained output; threshold 1 matches t43 (the synthetic corpus
     * tops out at one distinct check word — t42 reports the real flag). */
   def streamQualityGate(s: SparkSession, d: String): DataFrame = {
-    qualityGateCache(s, d) {
-      val gopherArr = array(TextOps.GopherWords.map(lit): _*)
-      val (flags, nBatches, scratch) = graft.streaming.DocStream.runDocOnce(
-        s, docStreamSource(s, d), "graft_stream_qgate") { src =>
-          src.select(col("doc_id"), col("source"),
-            size(array_intersect(
-              array_distinct(split(TextOps.norm(col("text")), " ")), gopherArr))
-              .as("n_gopher"))
-        }
-      try {
-        require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-        flags
-          .groupBy("source")
-          .agg(
-            sum(when(col("n_gopher") >= 1, 1L).otherwise(0L)).as("n_admitted"),
-            sum(when(col("n_gopher") >= 1, 0L).otherwise(1L)).as("n_rejected"))
-          .withColumn("admit_rate",
-            round(col("n_admitted").cast("double") /
-              (col("n_admitted") + col("n_rejected")).cast("double"), 6))
-          .orderBy("source")
-          .localCheckpoint()
-      } finally rmrf(java.nio.file.Paths.get(scratch))
-    }
+    val gopherArr = array(TextOps.GopherWords.map(lit): _*)
+    val (flags, nBatches, scratch) = graft.streaming.DocStream.runDocOnce(
+      s, docStreamSource(s, d), "graft_stream_qgate") { src =>
+        src.select(col("doc_id"), col("source"),
+          size(array_intersect(
+            array_distinct(split(TextOps.norm(col("text")), " ")), gopherArr))
+            .as("n_gopher"))
+      }
+    try {
+      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+      flags
+        .groupBy("source")
+        .agg(
+          sum(when(col("n_gopher") >= 1, 1L).otherwise(0L)).as("n_admitted"),
+          sum(when(col("n_gopher") >= 1, 0L).otherwise(1L)).as("n_rejected"))
+        .withColumn("admit_rate",
+          round(col("n_admitted").cast("double") /
+            (col("n_admitted") + col("n_rejected")).cast("double"), 6))
+        .orderBy("source")
+        .localCheckpoint()
+    } finally rmrf(java.nio.file.Paths.get(scratch))
   }
-
-  private val qualityGateCache = Memos.memo[String, DataFrame]()
 
   /** Streaming CDC chunk census — m06's storage-dedup view computed AT
     * INGEST: each arriving micro-batch of payloads runs the typed
@@ -799,41 +706,37 @@ object StreamOps {
     * never re-scanned, and only digests land in the lake's chunk
     * table. */
   def streamChunkCensus(s: SparkSession, d: String): DataFrame = {
-    chunkStreamCache(s, d) {
-      import graft.multimodal.Multimodal
-      import s.implicits._
-      val (chunks, nBatches, scratch) = graft.streaming.DocStream.runDocOnce(
-        s, docStreamSource(s, d), "graft_stream_chunk") { src =>
-          Multimodal.chunkMedia(src.select(
-              col("doc_id").as("media_id"),
-              when(pmod(col("doc_id"), lit(3)) === 0, "image")
-                .when(pmod(col("doc_id"), lit(3)) === 1, "audio")
-                .otherwise("video").as("kind"),
-              lit("application/octet-stream").as("mime"),
-              encode(col("text"), "UTF-8").as("content"))
-            .as[Multimodal.MediaRow]).toDF()
-            .select("kind", "chunk_len", "chunk_md5")
-        }
-      try {
-        require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-        chunks.groupBy("kind", "chunk_md5", "chunk_len")
-          .agg(count(lit(1)).as("n_copies"))
-          .groupBy("kind")
-          .agg(sum(col("n_copies")).as("n_chunks"),
-            count(lit(1)).as("n_unique"),
-            sum(col("n_copies") * col("chunk_len")).as("sum_bytes"),
-            sum(col("chunk_len")).as("unique_bytes"))
-          .select(col("kind"), col("n_chunks"), col("n_unique"),
-            col("sum_bytes"), col("unique_bytes"),
-            round(col("unique_bytes").cast("double") /
-              col("sum_bytes").cast("double"), 6).as("dedup_ratio"))
-          .orderBy("kind")
-          .localCheckpoint()
-      } finally rmrf(java.nio.file.Paths.get(scratch))
-    }
+    import graft.multimodal.Multimodal
+    import s.implicits._
+    val (chunks, nBatches, scratch) = graft.streaming.DocStream.runDocOnce(
+      s, docStreamSource(s, d), "graft_stream_chunk") { src =>
+        Multimodal.chunkMedia(src.select(
+            col("doc_id").as("media_id"),
+            when(pmod(col("doc_id"), lit(3)) === 0, "image")
+              .when(pmod(col("doc_id"), lit(3)) === 1, "audio")
+              .otherwise("video").as("kind"),
+            lit("application/octet-stream").as("mime"),
+            encode(col("text"), "UTF-8").as("content"))
+          .as[Multimodal.MediaRow]).toDF()
+          .select("kind", "chunk_len", "chunk_md5")
+      }
+    try {
+      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+      chunks.groupBy("kind", "chunk_md5", "chunk_len")
+        .agg(count(lit(1)).as("n_copies"))
+        .groupBy("kind")
+        .agg(sum(col("n_copies")).as("n_chunks"),
+          count(lit(1)).as("n_unique"),
+          sum(col("n_copies") * col("chunk_len")).as("sum_bytes"),
+          sum(col("chunk_len")).as("unique_bytes"))
+        .select(col("kind"), col("n_chunks"), col("n_unique"),
+          col("sum_bytes"), col("unique_bytes"),
+          round(col("unique_bytes").cast("double") /
+            col("sum_bytes").cast("double"), 6).as("dedup_ratio"))
+        .orderBy("kind")
+        .localCheckpoint()
+    } finally rmrf(java.nio.file.Paths.get(scratch))
   }
-
-  private val chunkStreamCache = Memos.memo[String, DataFrame]()
 
   /** Streaming semantic decontamination — v16 run AT INGEST: the
     * benchmark suite (bounded by SUITE size, the broadcast v16 already
@@ -848,29 +751,25 @@ object StreamOps {
     * TB/day each arriving embedding is scored once on arrival; the
     * corpus is never rescanned when the eval suite is fixed. */
   def streamSemanticDecontam(s: SparkSession, d: String): DataFrame = {
-    semStreamCache(s, d) {
-      // the frozen suite: localCheckpoint so four micro-batches read a
-      // materialized 30-row frame, not four re-derivations
-      val bench = VectorOps.benchVectors(s, d).localCheckpoint()
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_sem")
-      try {
-        val partials = scratch.resolve("scores").toString
-        val nBatches = graft.streaming.DocStream.runSourceForeachBatch(
-          s, embStreamSource(s, d), graft.streaming.DocStream.embSchema,
-          (batch, _) =>
-            VectorOps.semanticScoreAgainst(
-              VectorOps.withVecNorm(batch).filter(col("vec_id") % 17 =!= 0), bench)
-              .write.mode("append").parquet(partials))
-        require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-        s.read.parquet(partials)
-          .select("vec_id", "max_cos", "n_hits", "contaminated")
-          .orderBy("vec_id")
-          .localCheckpoint() // pin before the scratch dir is deleted
-      } finally rmrf(scratch)
-    }
+    // the frozen suite: localCheckpoint so four micro-batches read a
+    // materialized 30-row frame, not four re-derivations
+    val bench = VectorOps.benchVectors(s, d).localCheckpoint()
+    val scratch = java.nio.file.Files.createTempDirectory("graft_stream_sem")
+    try {
+      val partials = scratch.resolve("scores").toString
+      val nBatches = graft.streaming.DocStream.runSourceForeachBatch(
+        s, embStreamSource(s, d), graft.streaming.DocStream.embSchema,
+        (batch, _) =>
+          VectorOps.semanticScoreAgainst(
+            VectorOps.withVecNorm(batch).filter(col("vec_id") % 17 =!= 0), bench)
+            .write.mode("append").parquet(partials))
+      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+      s.read.parquet(partials)
+        .select("vec_id", "max_cos", "n_hits", "contaminated")
+        .orderBy("vec_id")
+        .localCheckpoint() // pin before the scratch dir is deleted
+    } finally rmrf(scratch)
   }
-
-  private val semStreamCache = Memos.memo[String, DataFrame]()
 
   /** Streaming gram-index maintenance — the EXACT-index twin of s12's
     * sketch maintenance, and the ingest-side half of the ArtifactStore
@@ -885,26 +784,22 @@ object StreamOps {
     * per-doc index summary (distinct-gram count + gid range) against
     * the batch gram chain's oracle. */
   def streamIndexMaintenance(s: SparkSession, d: String): DataFrame = {
-    gramIndexStreamCache(s, d) {
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_gidx")
-      try {
-        val partials = scratch.resolve("index").toString
-        val nBatches = graft.streaming.DocStream.runDocForeachBatch(
-          s, docStreamSource(s, d), (batch, _) =>
-            TextOps.explodeGramIds(batch, 8).distinct()
-              .write.mode("append").parquet(partials))
-        require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-        s.read.parquet(partials)
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_grams"),
-            min(col("gid")).as("min_gid"), max(col("gid")).as("max_gid"))
-          .orderBy("doc_id")
-          .localCheckpoint() // pin before the scratch dir is deleted
-      } finally rmrf(scratch)
-    }
+    val scratch = java.nio.file.Files.createTempDirectory("graft_stream_gidx")
+    try {
+      val partials = scratch.resolve("index").toString
+      val nBatches = graft.streaming.DocStream.runDocForeachBatch(
+        s, docStreamSource(s, d), (batch, _) =>
+          TextOps.explodeGramIds(batch, 8).distinct()
+            .write.mode("append").parquet(partials))
+      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+      s.read.parquet(partials)
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_grams"),
+          min(col("gid")).as("min_gid"), max(col("gid")).as("max_gid"))
+        .orderBy("doc_id")
+        .localCheckpoint() // pin before the scratch dir is deleted
+    } finally rmrf(scratch)
   }
-
-  private val gramIndexStreamCache = Memos.memo[String, DataFrame]()
 
   /** Streaming per-source quota — t56's domain cap maintained as
     * bounded state over the arriving document stream: each source's
@@ -920,22 +815,18 @@ object StreamOps {
     * the last-snapshot pick is a max(seq) window over the
     * |batches|×|sources|×K drained rows, metadata scale. */
   def streamSourceQuota(s: SparkSession, d: String): DataFrame = {
-    sourceQuotaCache(s, d) {
-      val (rows, nBatches, scratch) = graft.streaming.DocStream.runSourceQuotaOnce(
-        s, docStreamSource(s, d), TextOps.SourceCap, "graft_stream_quota")
-      try {
-        require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("source")
-        rows.withColumn("mx", max(col("seq")).over(w))
-          .filter(col("seq") === col("mx"))
-          .select("source", "rk", "doc_id", "n_chars")
-          .orderBy("source", "rk")
-          .localCheckpoint() // pin BEFORE the sink scratch dir is deleted
-      } finally rmrf(java.nio.file.Paths.get(scratch))
-    }
+    val (rows, nBatches, scratch) = graft.streaming.DocStream.runSourceQuotaOnce(
+      s, docStreamSource(s, d), TextOps.SourceCap, "graft_stream_quota")
+    try {
+      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("source")
+      rows.withColumn("mx", max(col("seq")).over(w))
+        .filter(col("seq") === col("mx"))
+        .select("source", "rk", "doc_id", "n_chars")
+        .orderBy("source", "rk")
+        .localCheckpoint() // pin BEFORE the sink scratch dir is deleted
+    } finally rmrf(java.nio.file.Paths.get(scratch))
   }
-
-  private val sourceQuotaCache = Memos.memo[String, DataFrame]()
 
   /** Streaming last-touch attribution — e19's stateful twin, and the
     * one streaming query whose state must CARRY ACROSS MICRO-BATCHES in
@@ -971,26 +862,22 @@ object StreamOps {
     * exactly the parity a search tier relies on: index-time scores ==
     * reindex-from-snapshot scores. */
   def streamRetrievalScore(s: SparkSession, d: String): DataFrame = {
-    retrievalStreamCache(s, d) {
-      val idf = TextOps.tfidfIdf(s, d).localCheckpoint()
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_retr")
-      try {
-        val partials = scratch.resolve("scores").toString
-        val nBatches = graft.streaming.DocStream.runDocForeachBatch(
-          s, docStreamSource(s, d), (batch, _) =>
-            TextOps.tfidfScore(batch, idf)
-              .write.mode("append").parquet(partials))
-        require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-        s.read.parquet(partials)
-          .select(col("doc_id"), col("n_terms"),
-            round(col("scoreq").cast("double") / 1e6, 6).as("score"))
-          .orderBy("doc_id")
-          .localCheckpoint() // pin before the scratch dir is deleted
-      } finally rmrf(scratch)
-    }
+    val idf = TextOps.tfidfIdf(s, d).localCheckpoint()
+    val scratch = java.nio.file.Files.createTempDirectory("graft_stream_retr")
+    try {
+      val partials = scratch.resolve("scores").toString
+      val nBatches = graft.streaming.DocStream.runDocForeachBatch(
+        s, docStreamSource(s, d), (batch, _) =>
+          TextOps.tfidfScore(batch, idf)
+            .write.mode("append").parquet(partials))
+      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+      s.read.parquet(partials)
+        .select(col("doc_id"), col("n_terms"),
+          round(col("scoreq").cast("double") / 1e6, 6).as("score"))
+        .orderBy("doc_id")
+        .localCheckpoint() // pin before the scratch dir is deleted
+    } finally rmrf(scratch)
   }
-
-  private val retrievalStreamCache = Memos.memo[String, DataFrame]()
 
   /** Streaming sketch maintenance — t46's mergeability property run
     * LIVE: each micro-batch computes its own partial per-source MinHash
@@ -1002,29 +889,25 @@ object StreamOps {
     * distinct-gram state, state per source = 16 longs per batch row.
     * SketchMergeSpec proves the algebra; this proves the pipeline. */
   def streamSketchMaintenance(s: SparkSession, d: String): DataFrame = {
-    sketchStreamCache(s, d) {
-      val scratch = java.nio.file.Files.createTempDirectory("graft_stream_sketch")
-      try {
-        val partials = scratch.resolve("partials").toString
-        val nBatches = graft.streaming.DocStream.runDocForeachBatch(
-          s, docStreamSource(s, d), (batch, id) => {
-            val sg = TextOps.explodeGramIds(batch, 8)
-              .join(batch.select("doc_id", "source"), "doc_id")
-              .select("source", "gid")
-            TextOps.gramSketch(sg).withColumn("batch_id", lit(id))
-              .write.mode("append").parquet(partials)
-          })
-        require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-        val mins = (0 until TextOps.NumHashes).map(j => min(col(s"mh$j")).as(s"mh$j"))
-        s.read.parquet(partials)
-          .groupBy("source").agg(mins.head, mins.tail: _*)
-          .orderBy("source")
-          .localCheckpoint() // pin before the scratch dir is deleted
-      } finally rmrf(scratch)
-    }
+    val scratch = java.nio.file.Files.createTempDirectory("graft_stream_sketch")
+    try {
+      val partials = scratch.resolve("partials").toString
+      val nBatches = graft.streaming.DocStream.runDocForeachBatch(
+        s, docStreamSource(s, d), (batch, id) => {
+          val sg = TextOps.explodeGramIds(batch, 8)
+            .join(batch.select("doc_id", "source"), "doc_id")
+            .select("source", "gid")
+          TextOps.gramSketch(sg).withColumn("batch_id", lit(id))
+            .write.mode("append").parquet(partials)
+        })
+      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+      val mins = (0 until TextOps.NumHashes).map(j => min(col(s"mh$j")).as(s"mh$j"))
+      s.read.parquet(partials)
+        .groupBy("source").agg(mins.head, mins.tail: _*)
+        .orderBy("source")
+        .localCheckpoint() // pin before the scratch dir is deleted
+    } finally rmrf(scratch)
   }
-
-  private val sketchStreamCache = Memos.memo[String, DataFrame]()
 
   /** Streaming ETL into a LIVE relational database — the reference's
     * flagship sink (JDBC bulk append) fed by a stream: each micro-batch
@@ -1035,18 +918,9 @@ object StreamOps {
     * is the standard exactly-once-ish relational sink shape: idempotent
     * batched appends, one connection per partition per micro-batch, and
     * the URL swap is the only difference on a real cluster.
-    * Result memoized per (session, dir) — the t03/t11/t16 convention:
-    * one pipeline execution per harness run, so Bench's min-of-2
-    * reports the warm-cache cost (the cold cost shows in Verify's wall
-    * time). The audit frame is localCheckpoint'ed so it survives the
-    * scratch database teardown. */
+    * The audit frame is localCheckpoint'ed so it survives the scratch
+    * database teardown. */
   def streamJdbcSink(s: SparkSession, d: String): DataFrame = {
-    jdbcSinkCache(s, d)(streamJdbcSinkUncached(s, d))
-  }
-
-  private val jdbcSinkCache = Memos.memo[String, DataFrame]()
-
-  private def streamJdbcSinkUncached(s: SparkSession, d: String): DataFrame = {
     import graft.load.{JdbcRoundTrip, JdbcSink}
     val url = s"jdbc:derby:memory:graft_ss_${System.nanoTime()}"
     val target = JdbcSink.Target(url, "", "")
@@ -1086,23 +960,19 @@ object StreamOps {
     * cost |batch| + |view| per batch, snapshot never rescanned, a retry
     * safely refused by the marker. */
   def streamViewMaintenance(s: SparkSession, d: String): DataFrame = {
-    viewMaintCache(s, d) {
-      val root = java.nio.file.Files.createTempDirectory("graft_view_maint")
-      try {
-        val nBatches = EventStream.runForeachBatch(s, multiFileStreamSource(s, d),
-          EventStream.schema, (batch, id) => applyViewDelta(s, root, batch, id),
-          checkpointDir = Some(root.resolve("cp").toString))
-        require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-        s.read.parquet(root.resolve("view").toString)
-          .orderBy(col("sum_value").desc, col("user_id").asc).limit(10)
-          .select(col("user_id"), col("n_events"),
-            Tables.asDbl(col("sum_value")).as("sum_value"))
-          .localCheckpoint() // materialize before the scratch dir dies
-      } finally rmrf(root)
-    }
+    val root = java.nio.file.Files.createTempDirectory("graft_view_maint")
+    try {
+      val nBatches = EventStream.runForeachBatch(s, multiFileStreamSource(s, d),
+        EventStream.schema, (batch, id) => applyViewDelta(s, root, batch, id),
+        checkpointDir = Some(root.resolve("cp").toString))
+      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+      s.read.parquet(root.resolve("view").toString)
+        .orderBy(col("sum_value").desc, col("user_id").asc).limit(10)
+        .select(col("user_id"), col("n_events"),
+          Tables.asDbl(col("sum_value")).as("sum_value"))
+        .localCheckpoint() // materialize before the scratch dir dies
+    } finally rmrf(root)
   }
-
-  private val viewMaintCache = Memos.memo[String, DataFrame]()
 
   /** One exactly-once view refresh: skip if this batch's marker exists
     * (the g15 refusal), else merge the batch's partial aggregate into
@@ -1163,46 +1033,42 @@ object StreamOps {
     * O(|delta|), replay-safe under driver restart, compaction deferred
     * to q57/q59's schedule. */
   def streamCdcIngest(s: SparkSession, d: String): DataFrame = {
-    cdcIngestCache(s, d) {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_cdc")
-      try {
-        val cur = Tables.orders(s, d)
-          .select(col("o_orderkey").as("k"), Tables.dec(col("o_totalprice")).as("p"))
-        val baseDir = root.resolve("base")
-        cur.write.parquet(baseDir.toString)
-        // q54's rules as an op-typed change feed
-        val feed = cur.filter(pmod(col("k"), lit(101)) === 0)
-            .select(lit("D").as("op"), col("k"), lit(null).cast(Tables.Dec).as("p"))
-          .unionByName(cur
-            .filter(pmod(col("k"), lit(97)) === 0 && pmod(col("k"), lit(101)) =!= 0)
-            .select(lit("U").as("op"), col("k"),
-              (col("p") + Tables.dec(lit(10.00))).cast(Tables.Dec).as("p")))
-          .unionByName(cur.filter(pmod(col("k"), lit(103)) === 0)
-            .select(lit("I").as("op"), (-col("k")).as("k"), col("p")))
-        val srcDir = root.resolve("src").toString
-        feed.repartition(4).write.parquet(srcDir) // ≥2 files → ≥2 micro-batches
-        val nBatches = EventStream.runForeachBatch(s, srcDir, feed.schema,
-          (batch, id) => applyCdcBatch(s, root, batch, id),
-          checkpointDir = Some(root.resolve("cp").toString))
-        require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
-        val base = s.read.parquet(baseDir.toString)
-        val ingested = base
-          .join(cdcTombstones(s, root), Seq("k"), "left_anti")
-          .unionByName(cdcAppends(s, root))
-        def census(v: Int, df: DataFrame) =
-          df.agg(count(lit(1)).as("n_rows"),
-              Tables.asDbl(sum(col("p"))).as("sum_price"),
-              min(col("k")).as("min_key"), max(col("k")).as("max_key"))
-            .select(lit(v).as("version"), col("n_rows"), col("sum_price"),
-              col("min_key"), col("max_key"))
-        census(1, base).unionByName(census(2, ingested))
-          .orderBy("version")
-          .localCheckpoint() // materialize before the scratch dir dies
-      } finally rmrf(root)
-    }
+    val root = java.nio.file.Files.createTempDirectory("graft_stream_cdc")
+    try {
+      val cur = Tables.orders(s, d)
+        .select(col("o_orderkey").as("k"), Tables.dec(col("o_totalprice")).as("p"))
+      val baseDir = root.resolve("base")
+      cur.write.parquet(baseDir.toString)
+      // q54's rules as an op-typed change feed
+      val feed = cur.filter(pmod(col("k"), lit(101)) === 0)
+          .select(lit("D").as("op"), col("k"), lit(null).cast(Tables.Dec).as("p"))
+        .unionByName(cur
+          .filter(pmod(col("k"), lit(97)) === 0 && pmod(col("k"), lit(101)) =!= 0)
+          .select(lit("U").as("op"), col("k"),
+            (col("p") + Tables.dec(lit(10.00))).cast(Tables.Dec).as("p")))
+        .unionByName(cur.filter(pmod(col("k"), lit(103)) === 0)
+          .select(lit("I").as("op"), (-col("k")).as("k"), col("p")))
+      val srcDir = root.resolve("src").toString
+      feed.repartition(4).write.parquet(srcDir) // ≥2 files → ≥2 micro-batches
+      val nBatches = EventStream.runForeachBatch(s, srcDir, feed.schema,
+        (batch, id) => applyCdcBatch(s, root, batch, id),
+        checkpointDir = Some(root.resolve("cp").toString))
+      require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
+      val base = s.read.parquet(baseDir.toString)
+      val ingested = base
+        .join(cdcTombstones(s, root), Seq("k"), "left_anti")
+        .unionByName(cdcAppends(s, root))
+      def census(v: Int, df: DataFrame) =
+        df.agg(count(lit(1)).as("n_rows"),
+            Tables.asDbl(sum(col("p"))).as("sum_price"),
+            min(col("k")).as("min_key"), max(col("k")).as("max_key"))
+          .select(lit(v).as("version"), col("n_rows"), col("sum_price"),
+            col("min_key"), col("max_key"))
+      census(1, base).unionByName(census(2, ingested))
+        .orderBy("version")
+        .localCheckpoint() // materialize before the scratch dir dies
+    } finally rmrf(root)
   }
-
-  private val cdcIngestCache = Memos.memo[String, DataFrame]()
 
   /** s27 — the compaction TRIGGER's accounting maintained IN-STREAM:
     * q59's read-amplification decision (orders row) with its three
@@ -1216,32 +1082,28 @@ object StreamOps {
     * q59's orders accounting restated over raw parquet, threshold and
     * decision bit included (exact integer arithmetic throughout). */
   def streamCompactionTrigger(s: SparkSession, d: String): DataFrame = {
-    compactTrigCache(s, d) {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_ct")
-      try {
-        val keys = Tables.orders(s, d).select(col("o_orderkey").as("k"))
-        val srcDir = root.resolve("src").toString
-        keys.repartition(4).write.parquet(srcDir) // ≥2 files → ≥2 batches
-        val (acct, nBatches) = EventStream.runCompleteAgg(s, srcDir, keys.schema,
-          df => df.agg(count(lit(1)).as("base_rows"),
-            sum(when(pmod(col("k"), lit(101)) === 0, 1L).otherwise(0L)).as("tomb_rows"),
-            sum(when(pmod(col("k"), lit(103)) === 0, 1L).otherwise(0L)).as("apnd_rows")),
-          "graft_s27_acct")
-        require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
-        acct
-          .withColumn("amp_permille",
-            expr("(tomb_rows + apnd_rows) * 1000 div base_rows"))
-          .withColumn("compact",
-            (col("amp_permille") >=
-              graft.operators.MergeOnRead.AmpThresholdPermille).cast("int"))
-          .select(lit("orders").as("tbl"), col("base_rows"), col("tomb_rows"),
-            col("apnd_rows"), col("amp_permille"), col("compact"))
-          .localCheckpoint() // pin before the scratch dir dies
-      } finally rmrf(root)
-    }
+    val root = java.nio.file.Files.createTempDirectory("graft_stream_ct")
+    try {
+      val keys = Tables.orders(s, d).select(col("o_orderkey").as("k"))
+      val srcDir = root.resolve("src").toString
+      keys.repartition(4).write.parquet(srcDir) // ≥2 files → ≥2 batches
+      val (acct, nBatches) = EventStream.runCompleteAgg(s, srcDir, keys.schema,
+        df => df.agg(count(lit(1)).as("base_rows"),
+          sum(when(pmod(col("k"), lit(101)) === 0, 1L).otherwise(0L)).as("tomb_rows"),
+          sum(when(pmod(col("k"), lit(103)) === 0, 1L).otherwise(0L)).as("apnd_rows")),
+        "graft_s27_acct")
+      require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
+      acct
+        .withColumn("amp_permille",
+          expr("(tomb_rows + apnd_rows) * 1000 div base_rows"))
+        .withColumn("compact",
+          (col("amp_permille") >=
+            graft.operators.MergeOnRead.AmpThresholdPermille).cast("int"))
+        .select(lit("orders").as("tbl"), col("base_rows"), col("tomb_rows"),
+          col("apnd_rows"), col("amp_permille"), col("compact"))
+        .localCheckpoint() // pin before the scratch dir dies
+    } finally rmrf(root)
   }
-
-  private val compactTrigCache = Memos.memo[String, DataFrame]()
 
   /** s28 — streaming HISTOGRAM-QUANTILE maintenance: k04's
     * per-(priority, bin) price histogram carried as a Complete-mode
@@ -1256,25 +1118,20 @@ object StreamOps {
     * incremental maintenance must land on the batch histogram bit for
     * bit. */
   def streamHistQuantiles(s: SparkSession, d: String): DataFrame = {
-    histQuantCache(s, d) {
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_hq")
-      try {
-        val src = Tables.orders(s, d).select("o_orderpriority", "o_totalprice")
-        val srcDir = root.resolve("src").toString
-        src.repartition(4).write.parquet(srcDir) // ≥2 files → ≥2 batches
-        val (hist, nBatches) = EventStream.runCompleteAgg(s, srcDir, src.schema,
-          df => SketchOps.ordersHist(df), "graft_s28_hist")
-        require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
-        // localCheckpoint before the readout multi-references the
-        // memory-sink table (the self-conflict resolve trap) AND before
-        // the scratch dir dies
-        SketchOps.histQuantileRead(hist.localCheckpoint())
-          .localCheckpoint()
-      } finally rmrf(root)
-    }
+    val root = java.nio.file.Files.createTempDirectory("graft_stream_hq")
+    try {
+      val src = Tables.orders(s, d).select("o_orderpriority", "o_totalprice")
+      val srcDir = root.resolve("src").toString
+      src.repartition(4).write.parquet(srcDir) // ≥2 files → ≥2 batches
+      val (hist, nBatches) = EventStream.runCompleteAgg(s, srcDir, src.schema,
+        df => SketchOps.ordersHist(df), "graft_s28_hist")
+      require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
+      // localCheckpoint before the readout multi-references the
+      // memory-sink table (the self-conflict resolve trap) AND before
+      // the scratch dir dies
+      SketchOps.histQuantileRead(hist.localCheckpoint())
+    } finally rmrf(root)
   }
-
-  private val histQuantCache = Memos.memo[String, DataFrame]()
 
   /** s29 — the GRAPH ARTIFACT maintained at INGEST: the p-family's
     * bipartite trading-pair index (ArtifactStore's `bipartite`, the
@@ -1296,37 +1153,34 @@ object StreamOps {
     * loops (p01/p05/p07/p11) read the same artifact they would have
     * gotten from a full rebuild, without the rebuild. */
   def streamEdgeMaintenance(s: SparkSession, d: String): DataFrame = {
-    edgeMaintCache(s, d) {
-      // cross-RUN artifact (round-15 brief #8 — the inc_cc/capped_adj2
-      // convention applied to the s family's next-largest pure fold,
-      // 5.4 s of replay): the maintained EDGE SET is first-seen dedup —
-      // set union, order-independent under any micro-batch split — and
-      // a deployment's edge index does not re-ingest history per
-      // session. The key folds both source fixtures plus a fold-shape
-      // tag derived from the fold's source (EdgeMaintStreamSpec's
-      // tag-lock recomputes it — the IncCcFoldTag rule), so editing the
-      // plan or the replay cannot silently serve stale edges. The fold
-      // itself stays executed by EdgeMaintStreamSpec's at-least-once
-      // redelivery drive plus every fresh-fixture build.
-      val edges = graft.sources.ArtifactStore.loadOrBuild(s, "edge_maint",
-        graft.sources.ArtifactStore.key(d, "lineitem.parquet") + "-" +
-          graft.sources.ArtifactStore.key(d, "orders.parquet") + "-" + EdgeMaintFoldTag) {
-        val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
-        val srcDir = liPairStreamSource(s, d) // shared replay source (s31 too)
-        val ordersStatic = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-        val (e, nBatches) = EventStream.runAppend(s, srcDir, li.schema,
-          edgeMaintPlan(ordersStatic), "graft_s29_edges")
-        require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
-        e
-      }.localCheckpoint() // multi-referenced below
-      val deg = edges.select(col("cn").as("n")).unionByName(edges.select(col("sn").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("dg"))
-      deg.groupBy((length(bin(col("dg"))) - 1).cast("long").as("log2_bin"))
-        .agg(count(lit(1)).as("n_nodes"),
-          min("dg").as("min_deg"), max("dg").as("max_deg"))
-        .orderBy("log2_bin")
-        .localCheckpoint()
-    }
+    // cross-RUN artifact (round-15 brief #8 — the inc_cc/capped_adj2
+    // convention applied to the s family's next-largest pure fold,
+    // 5.4 s of replay): the maintained EDGE SET is first-seen dedup —
+    // set union, order-independent under any micro-batch split — and
+    // a deployment's edge index does not re-ingest history per
+    // session. The key folds both source fixtures plus a fold-shape
+    // tag derived from the fold's source (EdgeMaintStreamSpec's
+    // tag-lock recomputes it — the IncCcFoldTag rule), so editing the
+    // plan or the replay cannot silently serve stale edges. The fold
+    // itself stays executed by EdgeMaintStreamSpec's at-least-once
+    // redelivery drive plus every fresh-fixture build.
+    val edges = graft.sources.ArtifactStore.loadOrBuild(s, "edge_maint",
+      graft.sources.ArtifactStore.key(d, "lineitem.parquet") + "-" +
+        graft.sources.ArtifactStore.key(d, "orders.parquet") + "-" + EdgeMaintFoldTag) {
+      val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
+      val srcDir = liPairStreamSource(s, d) // shared replay source (s31 too)
+      val ordersStatic = Tables.orders(s, d).select("o_orderkey", "o_custkey")
+      val (e, nBatches) = EventStream.runAppend(s, srcDir, li.schema,
+        edgeMaintPlan(ordersStatic), "graft_s29_edges")
+      require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
+      e
+    }.localCheckpoint() // multi-referenced below
+    val deg = edges.select(col("cn").as("n")).unionByName(edges.select(col("sn").as("n")))
+      .groupBy("n").agg(count(lit(1)).as("dg"))
+    deg.groupBy((length(bin(col("dg"))) - 1).cast("long").as("log2_bin"))
+      .agg(count(lit(1)).as("n_nodes"),
+        min("dg").as("min_deg"), max("dg").as("max_deg"))
+      .orderBy("log2_bin")
   }
 
   /** s29 artifact fold-shape tag — the IncCcFoldTag rule applied to the
@@ -1335,7 +1189,7 @@ object StreamOps {
     * [[edgeMaintPlan]], [[streamEdgeMaintenance]]);
     * EdgeMaintStreamSpec's tag-lock recomputes it, so a derivation edit
     * without a bump is a test failure, never a stale artifact. */
-  private[graft] val EdgeMaintFoldTag = "emf-be5d54e3"
+  private[graft] val EdgeMaintFoldTag = "emf-24942935"
 
   /** s31 — INCREMENTAL connected components maintained as trades
     * arrive: s29 keeps the edge artifact fresh at ingest; this keeps the
@@ -1356,60 +1210,54 @@ object StreamOps {
     * and quiesce in a round or two; the accumulated pair frame is the
     * same |E|-bounded state s29's dedup carries (at 100 TB both live
     * partitioned on the key; the fixture rebuilds the lazy edge view
-    * per batch). Result memoized per (session, dir) — one ingest per
-    * harness run is the honest cost. */
+    * per batch). */
   def streamIncrementalCc(s: SparkSession, d: String): DataFrame = {
-    incCcCache(s, d) {
-      // cross-RUN artifact (round-14 brief #3 — the capped_adj/partedges
-      // convention applied to the board's worst cold, 11.8 s): the
-      // maintained (node, lbl) frame is a pure fold of the replay, and
-      // a deployment's CC index does NOT re-ingest history per session —
-      // the first JVM runs the multi-micro-batch ingest and persists
-      // its final label state; later JVMs scan it. The name folds in
-      // BOTH source fixtures (edges come from lineitem⋈orders) so
-      // regenerating either invalidates it, plus a fold-shape tag
-      // ("cc1") so a derivation change can never serve a stale state
-      // (the capped_adj rule). The fold itself stays executed by
-      // IncCcStreamSpec's planted cross-batch component merge plus
-      // every fresh-fixture build; the oracle recomputes the census
-      // from scratch over the batch graph, so "incrementally
-      // maintained ≡ recomputed" stays the grade either way.
-      graft.sources.ArtifactStore.loadOrBuild(s, "inc_cc",
-        graft.sources.ArtifactStore.key(d, "lineitem.parquet") + "-" +
-          graft.sources.ArtifactStore.key(d, "orders.parquet") + "-" + IncCcFoldTag) {
-        val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
-        val srcDir = liPairStreamSource(s, d) // shared replay source (s29 too)
-        val ordersStatic = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-        import s.implicits._
-        var pairsAcc = Seq.empty[(Long, Long)].toDF("cn", "sn").localCheckpoint()
-        var labels = Seq.empty[(Long, Long)].toDF("node", "lbl").localCheckpoint()
-        val nBatches = graft.streaming.DocStream.runSourceForeachBatch(
-          s, srcDir, li.schema, (batch, _) => {
-            // first-seen dedup against the accumulated index (s29's
-            // bounded-state argument, expressed as one keyed anti-join)
-            val newPairs = batch.join(ordersStatic,
-                col("l_orderkey") === col("o_orderkey"))
-              .select((col("o_custkey") * 2).as("cn"),
-                (col("l_suppkey") * 2 + 1).as("sn"))
-              .distinct()
-              .join(pairsAcc, Seq("cn", "sn"), "left_anti")
-              .localCheckpoint()
-            if (newPairs.limit(1).count() > 0) {
-              val (l2, p2) = incCcFold(labels, pairsAcc, newPairs)
-              labels = l2; pairsAcc = p2
-            }
-          })
-        require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
-        labels
-      }
-        .groupBy(col("lbl").as("component"))
-        .agg(count(lit(1)).as("n_members"))
-        .orderBy(col("n_members").desc, col("component").asc).limit(20)
-        .localCheckpoint()
+    // cross-RUN artifact (round-14 brief #3 — the capped_adj/partedges
+    // convention applied to the board's worst cold, 11.8 s): the
+    // maintained (node, lbl) frame is a pure fold of the replay, and
+    // a deployment's CC index does NOT re-ingest history per session —
+    // the first JVM runs the multi-micro-batch ingest and persists
+    // its final label state; later JVMs scan it. The name folds in
+    // BOTH source fixtures (edges come from lineitem⋈orders) so
+    // regenerating either invalidates it, plus a fold-shape tag
+    // ("cc1") so a derivation change can never serve a stale state
+    // (the capped_adj rule). The fold itself stays executed by
+    // IncCcStreamSpec's planted cross-batch component merge plus
+    // every fresh-fixture build; the oracle recomputes the census
+    // from scratch over the batch graph, so "incrementally
+    // maintained ≡ recomputed" stays the grade either way.
+    graft.sources.ArtifactStore.loadOrBuild(s, "inc_cc",
+      graft.sources.ArtifactStore.key(d, "lineitem.parquet") + "-" +
+        graft.sources.ArtifactStore.key(d, "orders.parquet") + "-" + IncCcFoldTag) {
+      val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
+      val srcDir = liPairStreamSource(s, d) // shared replay source (s29 too)
+      val ordersStatic = Tables.orders(s, d).select("o_orderkey", "o_custkey")
+      import s.implicits._
+      var pairsAcc = Seq.empty[(Long, Long)].toDF("cn", "sn").localCheckpoint()
+      var labels = Seq.empty[(Long, Long)].toDF("node", "lbl").localCheckpoint()
+      val nBatches = graft.streaming.DocStream.runSourceForeachBatch(
+        s, srcDir, li.schema, (batch, _) => {
+          // first-seen dedup against the accumulated index (s29's
+          // bounded-state argument, expressed as one keyed anti-join)
+          val newPairs = batch.join(ordersStatic,
+              col("l_orderkey") === col("o_orderkey"))
+            .select((col("o_custkey") * 2).as("cn"),
+              (col("l_suppkey") * 2 + 1).as("sn"))
+            .distinct()
+            .join(pairsAcc, Seq("cn", "sn"), "left_anti")
+            .localCheckpoint()
+          if (newPairs.limit(1).count() > 0) {
+            val (l2, p2) = incCcFold(labels, pairsAcc, newPairs)
+            labels = l2; pairsAcc = p2
+          }
+        })
+      require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
+      labels
     }
+      .groupBy(col("lbl").as("component"))
+      .agg(count(lit(1)).as("n_members"))
+      .orderBy(col("n_members").desc, col("component").asc).limit(20)
   }
-
-  private val incCcCache = Memos.memo[String, DataFrame]()
 
   /** The INGEST-MAINTAINED capped adjacency (c, nb): p06's per-center
     * first-CapA-by-id neighbor cut, kept fresh as orders ARRIVE instead
@@ -1497,26 +1345,21 @@ object StreamOps {
     * rederive the training, so "stream-gated ≡ batch-gated ≡ trained"
     * is one hash check end to end. */
   def streamTrainedGate(s: SparkSession, d: String): DataFrame = {
-    trainedGateStreamCache(s, d) {
-      import s.implicits._
-      val w = TextOps.t62FinalWeights(s, d)
-      var acc = Seq.empty[(Long, Long, Long, Long)]
-        .toDF("pred_keep", "actual_keep", "n_docs", "n_tokens")
-        .localCheckpoint()
-      val nBatches = graft.streaming.DocStream.runDocForeachBatch(
-        s, docStreamSource(s, d), (batch, _) => {
-          val part = TextOps.t63CensusOf(TextOps.t62FeaturesOf(batch), w)
-          acc = acc.unionByName(part).localCheckpoint() // per-batch lineage cut
-        })
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-      acc.groupBy("pred_keep", "actual_keep")
-        .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"))
-        .orderBy("pred_keep", "actual_keep")
-        .localCheckpoint()
-    }
+    import s.implicits._
+    val w = TextOps.t62FinalWeights(s, d)
+    var acc = Seq.empty[(Long, Long, Long, Long)]
+      .toDF("pred_keep", "actual_keep", "n_docs", "n_tokens")
+      .localCheckpoint()
+    val nBatches = graft.streaming.DocStream.runDocForeachBatch(
+      s, docStreamSource(s, d), (batch, _) => {
+        val part = TextOps.t63CensusOf(TextOps.t62FeaturesOf(batch), w)
+        acc = acc.unionByName(part).localCheckpoint() // per-batch lineage cut
+      })
+    require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+    acc.groupBy("pred_keep", "actual_keep")
+      .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"))
+      .orderBy("pred_keep", "actual_keep")
   }
-
-  private val trainedGateStreamCache = Memos.memo[String, DataFrame]()
 
   /** s34 — the TRAINED TOKENIZER at INGEST (t64's streaming twin,
     * closing the trainer→encoder loop into the modality matrix the way
@@ -1534,35 +1377,30 @@ object StreamOps {
     * no state store, no shuffle before the partial agg — a token
     * census that is always current as the corpus lands. */
   def streamBpeCensus(s: SparkSession, d: String): DataFrame = {
-    bpeStreamCache(s, d) {
-      import s.implicits._
-      val merges = TextOps.trainedBpeMerges(s, d)
-      var acc = Seq.empty[(String, Long, Long, Long, Long, Long)]
-        .toDF("source", "n_docs", "n_words", "n_tokens",
-          "doc_tok_checksum", "max_doc_tokens")
-        .localCheckpoint()
-      val nBatches = graft.streaming.DocStream.runDocForeachBatch(
-        s, docStreamSource(s, d), (batch, _) => {
-          val part = TextOps.bpeEncodeOn(batch, merges)
-            .groupBy("source")
-            .agg(count(lit(1)).as("n_docs"), sum("n_words").as("n_words"),
-              sum("n_tok").as("n_tokens"),
-              sum(col("doc_id") * col("n_tok")).as("doc_tok_checksum"),
-              max("n_tok").as("max_doc_tokens"))
-          acc = acc.unionByName(part).localCheckpoint() // per-batch lineage cut
-        })
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-      acc.groupBy("source")
-        .agg(sum("n_docs").as("n_docs"), sum("n_words").as("n_words"),
-          sum("n_tokens").as("n_tokens"),
-          sum("doc_tok_checksum").as("doc_tok_checksum"),
-          max("max_doc_tokens").as("max_doc_tokens"))
-        .orderBy("source")
-        .localCheckpoint()
-    }
+    import s.implicits._
+    val merges = TextOps.trainedBpeMerges(s, d)
+    var acc = Seq.empty[(String, Long, Long, Long, Long, Long)]
+      .toDF("source", "n_docs", "n_words", "n_tokens",
+        "doc_tok_checksum", "max_doc_tokens")
+      .localCheckpoint()
+    val nBatches = graft.streaming.DocStream.runDocForeachBatch(
+      s, docStreamSource(s, d), (batch, _) => {
+        val part = TextOps.bpeEncodeOn(batch, merges)
+          .groupBy("source")
+          .agg(count(lit(1)).as("n_docs"), sum("n_words").as("n_words"),
+            sum("n_tok").as("n_tokens"),
+            sum(col("doc_id") * col("n_tok")).as("doc_tok_checksum"),
+            max("n_tok").as("max_doc_tokens"))
+        acc = acc.unionByName(part).localCheckpoint() // per-batch lineage cut
+      })
+    require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+    acc.groupBy("source")
+      .agg(sum("n_docs").as("n_docs"), sum("n_words").as("n_words"),
+        sum("n_tokens").as("n_tokens"),
+        sum("doc_tok_checksum").as("doc_tok_checksum"),
+        max("max_doc_tokens").as("max_doc_tokens"))
+      .orderBy("source")
   }
-
-  private val bpeStreamCache = Memos.memo[String, DataFrame]()
 
   /** s31 artifact fold-shape tag, LOCKED to the fold's implementation
     * (round-15 advice: the old hand-maintained "cc1" could go stale —
@@ -1576,7 +1414,7 @@ object StreamOps {
     * changes without this constant being bumped to the value the
     * failing test prints — a derivation edit can no longer silently
     * reuse the old artifact. */
-  private[graft] val IncCcFoldTag = "ccf-721bcca2"
+  private[graft] val IncCcFoldTag = "ccf-7b486da8"
 
   /** One incremental fold: new first-seen pairs join the accumulated
     * set, arrivals register under their own label, and the min-label
@@ -1627,8 +1465,6 @@ object StreamOps {
     st.join(ordersStatic, col("l_orderkey") === col("o_orderkey"))
       .select((col("o_custkey") * 2).as("cn"), (col("l_suppkey") * 2 + 1).as("sn"))
       .dropDuplicates("cn", "sn")
-
-  private val edgeMaintCache = Memos.memo[String, DataFrame]()
 
   /** One exactly-once CDC commit: skip if this batch's committed dir
     * exists (the g15 refusal), else land the batch's tombstones (D + U
@@ -1681,15 +1517,8 @@ object StreamOps {
     * boundary must be stitched from the recovered state store (a lost
     * checkpoint would restart sess_ids at 1 and double-emit) — so
     * matching s01's closed-session oracle IS the state-recovery proof.
-    * Memoized per (session, dir) like s06; the result is checkpointed
-    * and the scratch dirs deleted eagerly. */
+    * The result is checkpointed and the scratch dirs deleted eagerly. */
   def streamRestartSessions(s: SparkSession, d: String): DataFrame = {
-    restartCache(s, d)(streamRestartSessionsUncached(s, d))
-  }
-
-  private val restartCache = Memos.memo[String, DataFrame]()
-
-  private def streamRestartSessionsUncached(s: SparkSession, d: String): DataFrame = {
     val stage = java.nio.file.Files.createTempDirectory("graft_stream_rs")
     try {
       val src = stage.resolve("src").toString

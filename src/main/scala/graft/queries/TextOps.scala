@@ -191,30 +191,22 @@ object TextOps {
     min(pmod(lit(a) * col("sid") + lit(b), lit(P31))).as(s"mh$j")
   }
 
-  /** The signature table, materialized once per (session, dir) — the
-    * persisted artifact an LSH index maintains next to itself, shared
-    * by t02 (the projection) and t44 (the calibration joins) so
-    * neither rebuilds it from raw text. */
-  private val sigCache = Memos.memo[String, DataFrame]()
-
-  private def signatureFrame(s: SparkSession, d: String): DataFrame = {
-    sigCache(s, d) {
-      // cross-RUN artifact (round-16 brief #3): the signature table is a
-      // pure function of documents.parquet and IS the index a deployed
-      // LSH system persists next to itself — a fresh JVM used to pay the
-      // full shingle explosion (3.7 s at sf0.1) to rebuild it. Key =
-      // fixture digest + fold-shape tag over the derivation defs
-      // (TextArtifactSpec's tag-lock recomputes it — the IncCcFoldTag
-      // rule), so a regenerated corpus or an edited derivation can never
-      // serve a stale table.
-      val g = graft.sources.ArtifactStore.loadOrBuild(s, "minhash_sig",
-        graft.sources.ArtifactStore.key(d, "documents.parquet") + "-" + SigFoldTag) {
-        signatureFrameUncached(s, d)
-      }.persist()
-      g.count()
-      g
+  /** The signature table — the persisted artifact an LSH index
+    * maintains next to itself, shared by t02 (the projection) and t44
+    * (the calibration joins) so neither rebuilds it from raw text. */
+  private def signatureFrame(s: SparkSession, d: String): DataFrame =
+    // cross-RUN artifact (round-16 brief #3): the signature table is a
+    // pure function of documents.parquet and IS the index a deployed
+    // LSH system persists next to itself — a fresh JVM used to pay the
+    // full shingle explosion (3.7 s at sf0.1) to rebuild it. Key =
+    // fixture digest + fold-shape tag over the derivation defs
+    // (TextArtifactSpec's tag-lock recomputes it — the IncCcFoldTag
+    // rule), so a regenerated corpus or an edited derivation can never
+    // serve a stale table.
+    graft.sources.ArtifactStore.loadOrBuild(s, "minhash_sig",
+      graft.sources.ArtifactStore.key(d, "documents.parquet") + "-" + SigFoldTag) {
+      signatureFrameUncached(s, d)
     }
-  }
 
   /** The signature BUILD (16 min-hash aggregates over the persisted
     * postings table) — the load-bearing plan behind the minhash_sig
@@ -246,33 +238,22 @@ object TextOps {
     * each candidate pair is then verified with the exact shingle-set
     * Jaccard. Only candidates are ever joined — no quadratic blowup; the
     * band join shuffles (band, h1..h4) keys only. */
-  // Near-dup pairs are consumed by both t03 (directly) and t11 (as the
-  // dupe list) — memoize the materialized result per (session, dir) so
-  // the LSH pipeline runs once per bench/verify pass, not twice.
-  private val pairsCache = Memos.memo[String, DataFrame]()
-
   def lshNearDupPairs(s: SparkSession, d: String): DataFrame = {
-    // entries bound to a stopped SparkContext are dead plans — drop them
-    // so a recreated session recomputes instead of failing confusingly
-    pairsCache(s, d) {
-      // cross-RUN artifact (round-16 brief #3): the verified pair frame
-      // is a pure function of documents.parquet and the single most
-      // reused derived index on the text board (t03/t11/t14/t16/t30/
-      // t32/t34/t44/... all key on it) — a fresh JVM used to pay the
-      // full LSH pipeline (6.6 s at sf0.1) to rebuild it. Same key
-      // discipline as minhash_sig; the build plan itself stays graded
-      // by the cleared-memo lane and dumped by PlanDump.
-      var built: DataFrame = null
-      val scan = graft.sources.ArtifactStore.loadOrBuild(s, "lsh_pairs",
-        graft.sources.ArtifactStore.key(d, "documents.parquet") + "-" + LshPairsFoldTag) {
-        built = lshNearDupPairsUncached(s, d); built
-      }
-      // the build's internal persist served only the artifact write
-      if (built != null) built.unpersist()
-      val a = scan.orderBy("a_id", "b_id").persist()
-      a.count()
-      a
+    // cross-RUN artifact (round-16 brief #3): the verified pair frame
+    // is a pure function of documents.parquet and the single most
+    // reused derived index on the text board (t03/t11/t14/t16/t30/
+    // t32/t34/t44/... all key on it) — a fresh JVM used to pay the
+    // full LSH pipeline (6.6 s at sf0.1) to rebuild it. Same key
+    // discipline as minhash_sig; the build plan itself stays graded
+    // by the cleared-memo lane and dumped by PlanDump.
+    var built: DataFrame = null
+    val scan = graft.sources.ArtifactStore.loadOrBuild(s, "lsh_pairs",
+      graft.sources.ArtifactStore.key(d, "documents.parquet") + "-" + LshPairsFoldTag) {
+      built = lshNearDupPairsUncached(s, d); built
     }
+    // the build's internal persist served only the artifact write
+    if (built != null) built.unpersist()
+    scan.orderBy("a_id", "b_id")
   }
 
   /** Explode a 16-column signature frame into (doc_id, band, h0..h3)
@@ -297,8 +278,6 @@ object TextOps {
     * recomputes it, so a derivation edit without a bump is a test
     * failure, never a stale persisted pair set. */
   private[graft] val LshPairsFoldTag = "lsh-a2216959"
-
-  private val t27ModelCache = Memos.memo[String, DataFrame]()
 
   /** Per-language per-mille sampling rates for the training-mixture
     * rebalancing step (English dominates the corpus; downsample it, keep
@@ -341,8 +320,11 @@ object TextOps {
     * declaration; AQE converts it to a broadcast join at runtime when
     * the labels side measures small (PlanSpec asserts the conversion on
     * the executed plan at fixture scale). */
-  def leakageSafeSplit(s: SparkSession, d: String): DataFrame = {
-    val roots = dupClusters(s, d).select(col("doc_id"), col("cluster_id"))
+  def leakageSafeSplit(s: SparkSession, d: String): DataFrame =
+    splitOn(s, d, dupClusters(s, d))
+
+  private def splitOn(s: SparkSession, d: String, clusters: DataFrame): DataFrame = {
+    val roots = clusters.select(col("doc_id"), col("cluster_id"))
     val h = saltedBucket(col("split_key"), ":split", 1000L)
     documents(s, d).select("doc_id")
       .join(roots, Seq("doc_id"), "left")
@@ -361,14 +343,15 @@ object TextOps {
     * root), but an audit that derives it from the DATA catches the
     * regression where someone re-keys the split on doc_id; it is the
     * difference between "the code looks right" and "this exact corpus
-    * cannot leak". Every input is a memoized/bounded frame; the
-    * crossing check aggregates |near-dup docs| rows keyed on
+    * cannot leak". One cluster labeling feeds both the split and the
+    * crossing check, which aggregates |near-dup docs| rows keyed on
     * cluster_id. */
   def splitIntegrity(s: SparkSession, d: String): DataFrame = {
-    val sp = leakageSafeSplit(s, d)
+    val clusters = dupClusters(s, d)
+    val sp = splitOn(s, d, clusters)
     val toks = tokenStats(s, d).select("doc_id", "n_tokens")
     val crossing = sp
-      .join(dupClusters(s, d).select("doc_id", "cluster_id"), "doc_id")
+      .join(clusters.select("doc_id", "cluster_id"), "doc_id")
       .groupBy("cluster_id").agg(countDistinct(col("split")).as("n_splits"))
       .agg(coalesce(sum(when(col("n_splits") > 1, 1L).otherwise(0L)), lit(0L))
         .as("n_crossing"))
@@ -459,22 +442,15 @@ object TextOps {
     * |edges| ≪ |docs| — with checkpointing per round; the large-star/
     * small-star variant halves rounds on adversarially long chains. */
   def dupClusters(s: SparkSession, d: String): DataFrame = {
-    clustersCache(s, d)(dupClustersUncached(s, d))
-  }
-
-  private val clustersCache = Memos.memo[String, DataFrame]()
-
-  private def dupClustersUncached(s: SparkSession, d: String): DataFrame = {
     val pairs = lshNearDupPairs(s, d).filter(col("jaccard") >= 0.9)
       .select(col("a_id"), col("b_id"))
-    val (labels, _) = ccPointerJumping(s, pairs)
-    // the returned frame is itself checkpointed: consumers scan the
+    // the labeling comes back checkpointed: consumers scan the
     // materialized partitions, never re-running the iteration
+    val (labels, _) = ccPointerJumping(s, pairs)
     labels
       .join(labels.groupBy("lbl").agg(count(lit(1)).as("cluster_sz")), "lbl")
       .select(col("id").as("doc_id"), col("lbl").as("cluster_id"), col("cluster_sz"))
       .orderBy("doc_id")
-      .localCheckpoint()
   }
 
   /** t16's clustering computed through the OTHER round body — the
@@ -488,29 +464,24 @@ object TextOps {
     * switches bodies on graph depth/skew needs both proven on live
     * data, not one proven and one trusted. */
   def dupClustersStar(s: SparkSession, d: String): DataFrame = {
-    starClustersCache(s, d) {
-      val pairs = lshNearDupPairs(s, d).filter(col("jaccard") >= 0.9)
-        .select(col("a_id"), col("b_id"))
-      val (labels, _) = ccLargeSmallStar(s, pairs)
-      labels
-        .join(labels.groupBy("lbl").agg(count(lit(1)).as("cluster_sz")), "lbl")
-        .select(col("id").as("doc_id"), col("lbl").as("cluster_id"), col("cluster_sz"))
-        .orderBy("doc_id")
-        .localCheckpoint()
-    }
+    val pairs = lshNearDupPairs(s, d).filter(col("jaccard") >= 0.9)
+      .select(col("a_id"), col("b_id"))
+    val (labels, _) = ccLargeSmallStar(s, pairs)
+    labels
+      .join(labels.groupBy("lbl").agg(count(lit(1)).as("cluster_sz")), "lbl")
+      .select(col("id").as("doc_id"), col("lbl").as("cluster_id"), col("cluster_sz"))
+      .orderBy("doc_id")
   }
-
-  private val starClustersCache = Memos.memo[String, DataFrame]()
 
   /** t52: the near-dup clustering with the CC body AUTO-DISPATCHED by
     * [[ccChoose]] on the live pair graph's average degree, and the
     * choice recorded as an audit column — the "pipeline that switches
     * bodies on graph depth" t34's scaladoc anticipated, now graded. The
-    * heuristic inputs are two metadata-scale aggregates over the
-    * memoized t03 pair frame; the labeling itself reuses the memoized
-    * t16/t34 cluster table for the chosen body (identical labels by the
-    * fixpoint-uniqueness argument, pinned by their shared oracle), so
-    * dispatching costs two tiny jobs, never a second CC loop. The
+    * heuristic inputs are two metadata-scale aggregates over the t03
+    * pair artifact; the labeling itself is the t16/t34 cluster build
+    * for the chosen body (identical labels by the fixpoint-uniqueness
+    * argument, pinned by their shared oracle), so dispatching costs two
+    * tiny jobs, never a second CC loop. The
     * ORACLE recomputes the same CASE from the same counts — the
     * dispatch rule is hash-checked, not just the labels. */
   def dupClustersAuto(s: SparkSession, d: String): DataFrame = {
@@ -892,18 +863,17 @@ object TextOps {
     (out, Seq(dsh, cand, sidsAll))
   }
 
-  private val deltaDedupCache = Memos.memo[String, DataFrame]()
+  def deltaDedup(s: SparkSession, d: String): DataFrame =
+    pinnedResult(deltaDedupBuild(s, d))
 
-  def deltaDedup(s: SparkSession, d: String): DataFrame = {
-    deltaDedupCache(s, d) {
-      val (plan, scratch) = deltaDedupBuild(s, d)
-      // ONE materializing action fills the lazy persists and reuses them
-      // across the plan's consumers; then they release — the session
-      // keeps only the checkpointed |pairs|-row result
-      val out = plan.localCheckpoint()
-      scratch.foreach(_.unpersist())
-      out
-    }
+  /** ONE materializing action fills a (plan, scratch) build's lazy
+    * persists and reuses them across the plan's consumers; then they
+    * release — only the checkpointed |pairs|-row result remains. */
+  private def pinnedResult(build: (DataFrame, Seq[DataFrame])): DataFrame = {
+    val (plan, scratch) = build
+    val out = plan.localCheckpoint()
+    scratch.foreach(_.unpersist())
+    out
   }
 
   /** t68 — INDEX ROLL-FORWARD: fold today's delta into the persisted
@@ -930,8 +900,6 @@ object TextOps {
       rolledBandsUncached(s, d)
     }
 
-  private val indexRollCache = Memos.memo[String, DataFrame]()
-
   /** The graded per-BAND census every band-index-maintenance query
     * reads out: postings, distinct docs, Σ doc_id, and a key checksum
     * that flips if ANY posting's band keys drift — shared by t68 (one
@@ -945,10 +913,8 @@ object TextOps {
         sum(col("h0") + col("h1") + col("h2") + col("h3")).cast("long").as("h_checksum"))
       .orderBy("band")
 
-  def indexRoll(s: SparkSession, d: String): DataFrame = {
-    indexRollCache(s, d)(
-      bandCensus(rolledBands(s, d)).localCheckpoint())
-  }
+  def indexRoll(s: SparkSession, d: String): DataFrame =
+    bandCensus(rolledBands(s, d))
 
   /** corpus_sids/corpus_bands/rolled_bands artifact fold-shape tag —
     * sha256 (first 8 hex) over the shared signature-derivation region
@@ -1011,14 +977,10 @@ object TextOps {
       rolledBandsS2Uncached(s, d)
     }
 
-  private val bandRoll2Cache = Memos.memo[String, DataFrame]()
-
   /** t69 — the graded readout: the per-band census over the twice-
     * rolled artifact, against the SAME full-rebuild oracle as t68. */
-  def bandRollTwoStep(s: SparkSession, d: String): DataFrame = {
-    bandRoll2Cache(s, d)(
-      bandCensus(rolledBandsS2(s, d)).localCheckpoint())
-  }
+  def bandRollTwoStep(s: SparkSession, d: String): DataFrame =
+    bandCensus(rolledBandsS2(s, d))
 
   /** corpus_bands2/rolled_bands_s1/rolled_bands_s2 artifact fold-shape
     * tag; TextArtifactSpec's tag-lock recomputes it. */
@@ -1054,16 +1016,12 @@ object TextOps {
       reapedBandsUncached(s, d)
     }
 
-  private val bandReapCache = Memos.memo[String, DataFrame]()
-
   /** t70 — the graded readout: the per-band census over the reaped
     * artifact; oracle = t68's census inverted to the FILTERED corpus
     * (every doc except the deletion residue), so reap ≡
     * rebuild-without-the-deleted is a cross-engine hash fact. */
-  def bandReapCensus(s: SparkSession, d: String): DataFrame = {
-    bandReapCache(s, d)(
-      bandCensus(reapedBands(s, d)).localCheckpoint())
-  }
+  def bandReapCensus(s: SparkSession, d: String): DataFrame =
+    bandCensus(reapedBands(s, d))
 
   /** reaped_bands artifact fold-shape tag; TextArtifactSpec's tag-lock
     * recomputes it. */
@@ -1072,8 +1030,6 @@ object TextOps {
   // ——— t71: the NIGHTLY-MAINTENANCE composition (round-18 verdict #7)
   // — the runbook a 100 TB deployment would cron, demonstrated as one
   // graded query rather than implied by its parts ———
-
-  private val nightlyCache = Memos.memo[String, DataFrame]()
 
   /** t71 — one steady-state maintenance day, end to end: (a) dedup
     * today's ingest against the persisted corpus index (t67), (b) roll
@@ -1091,48 +1047,43 @@ object TextOps {
     * REGISTERED implementation — this adds no new pipeline, it proves
     * the existing ones compose into the day-2 cron job. */
   def nightlyMaintenance(s: SparkSession, d: String): DataFrame = {
-    nightlyCache(s, d) {
-      val cols = Seq("stage", "key", "n_rows", "n_keys", "id_sum", "checksum")
-        .map(col)
-      val dd = deltaDedup(s, d)
-        .groupBy(col("a_id").cast("long").as("key"))
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("b_id")).as("n_keys"),
-          sum(col("b_id")).cast("long").as("id_sum"),
-          sum(col("inter")).cast("long").as("checksum"))
-        .withColumn("stage", lit("a_delta_dedup"))
-        .select(cols: _*)
-      val br = indexRoll(s, d).select(lit("b_band_roll").as("stage"),
-        col("band").cast("long").as("key"), col("n_postings").as("n_rows"),
-        col("n_docs").as("n_keys"), col("id_sum"),
-        col("h_checksum").as("checksum"))
-      val ar = VectorOps.annIndexRoll(s, d).select(lit("c_ann_roll").as("stage"),
-        col("cell").cast("long").as("key"), col("n_entries").as("n_rows"),
-        col("n_vecs").as("n_keys"), col("id_sum"),
-        col("code_checksum").as("checksum"))
-      // the disk-hygiene step: reap superseded artifact generations
-      // before serving — conservative (only provably-stale dirs), and
-      // the rolls above have already persisted this cycle's artifacts
-      graft.sources.ArtifactStore.gc()
-      val sv = VectorOps.annRolledServeTopK(s, d)
-        .groupBy(col("q_id").cast("long").as("key"))
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("hit_id")).as("n_keys"),
-          sum(col("hit_id")).cast("long").as("id_sum"),
-          sum(col("rk") * col("hit_id") + col("ascore")).cast("long").as("checksum"))
-        .withColumn("stage", lit("d_ann_serve"))
-        .select(cols: _*)
-      dd.unionByName(br).unionByName(ar).unionByName(sv)
-        .orderBy("stage", "key")
-        .localCheckpoint()
-    }
+    val cols = Seq("stage", "key", "n_rows", "n_keys", "id_sum", "checksum")
+      .map(col)
+    val dd = deltaDedup(s, d)
+      .groupBy(col("a_id").cast("long").as("key"))
+      .agg(count(lit(1)).as("n_rows"),
+        countDistinct(col("b_id")).as("n_keys"),
+        sum(col("b_id")).cast("long").as("id_sum"),
+        sum(col("inter")).cast("long").as("checksum"))
+      .withColumn("stage", lit("a_delta_dedup"))
+      .select(cols: _*)
+    val br = indexRoll(s, d).select(lit("b_band_roll").as("stage"),
+      col("band").cast("long").as("key"), col("n_postings").as("n_rows"),
+      col("n_docs").as("n_keys"), col("id_sum"),
+      col("h_checksum").as("checksum"))
+    val ar = VectorOps.annIndexRoll(s, d).select(lit("c_ann_roll").as("stage"),
+      col("cell").cast("long").as("key"), col("n_entries").as("n_rows"),
+      col("n_vecs").as("n_keys"), col("id_sum"),
+      col("code_checksum").as("checksum"))
+    // the disk-hygiene step: reap superseded artifact generations
+    // before serving — conservative (only provably-stale dirs), and
+    // the rolls above have already persisted this cycle's artifacts
+    graft.sources.ArtifactStore.gc()
+    val sv = VectorOps.annRolledServeTopK(s, d)
+      .groupBy(col("q_id").cast("long").as("key"))
+      .agg(count(lit(1)).as("n_rows"),
+        countDistinct(col("hit_id")).as("n_keys"),
+        sum(col("hit_id")).cast("long").as("id_sum"),
+        sum(col("rk") * col("hit_id") + col("ascore")).cast("long").as("checksum"))
+      .withColumn("stage", lit("d_ann_serve"))
+      .select(cols: _*)
+    dd.unionByName(br).unionByName(ar).unionByName(sv)
+      .orderBy("stage", "key")
   }
 
   // ——— t72: delta-dedup SERVED FROM THE REAPED INDEX — the takedown-
   // compliance fact the reap exists for: a tombstoned corpus doc must
   // stop producing duplicate matches the moment the reap lands ———
-
-  private val reapedDedupCache = Memos.memo[String, DataFrame]()
 
   /** t72 — t67's incremental dedup pointed at the REAPED candidate
     * index: identical plan ([[deltaDedupBuildOver]] — one shared def),
@@ -1146,14 +1097,8 @@ object TextOps {
     * delta↔delta pairs are untouched — only delta↔deleted-corpus
     * matches disappear, which TextArtifactSpec pins with a planted
     * delta↔deleted duplicate. */
-  def reapedDeltaDedup(s: SparkSession, d: String): DataFrame = {
-    reapedDedupCache(s, d) {
-      val (plan, scratch) = reapedDeltaDedupBuild(s, d)
-      val out = plan.localCheckpoint()
-      scratch.foreach(_.unpersist())
-      out
-    }
-  }
+  def reapedDeltaDedup(s: SparkSession, d: String): DataFrame =
+    pinnedResult(reapedDeltaDedupBuild(s, d))
 
   private def reapedDeltaDedupBuild(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) =
     deltaDedupBuildOver(s, d, reapedBands(s, d))
@@ -1265,9 +1210,9 @@ object TextOps {
     * v-series twin is VectorRecallSpec's ANN recall; this makes the
     * text sketch's fidelity a graded, oracle-checked number too.
     *
-    * Scale: pairs come from the memoized t03 frame (|pairs| rows);
-    * signatures join KEYED on doc_id and read the memoized signature
-    * table (shared with t02 — the persisted artifact a real LSH index
+    * Scale: pairs come from the t03 artifact (|pairs| rows);
+    * signatures join KEYED on doc_id and read the signature artifact
+    * (shared with t02 — the persisted table a real LSH index
     * maintains). est = k/16 is dyadic-exact; the exact jaccard is one
     * IEEE division — both bit-identical across engines. */
   def minhashCalibration(s: SparkSession, d: String): DataFrame = {
@@ -1323,18 +1268,9 @@ object TextOps {
     * content diversity instead of saturating at a constant fan-in (the
     * 16-bit predecessor had 32/32/64 buckets total: ~3n²/43 candidates).
     * Exact hamming over the full signature verifies each candidate. */
-  private val simhashPairsCache = Memos.memo[String, DataFrame]()
-
   def simhashNearDupPairs(s: SparkSession, d: String): DataFrame = {
-    simhashPairsCache(s, d)(simhashNearDupPairsUncached(s, d))
-  }
-
-  /** 4 sub-bands × 15 bits (shared with the banding SQL + DocStream). */
-  private[queries] val SimhashBands = 4
-  private[queries] val SimhashBandBits = 15
-
-  private def simhashNearDupPairsUncached(s: SparkSession, d: String): DataFrame = {
-    val sh = simhash(s, d).select(col("doc_id"), col("simhash60")).persist()
+    // checkpointed: both sides of all four band joins read the signatures
+    val sh = simhash(s, d).select(col("doc_id"), col("simhash60")).localCheckpoint()
     val bandCols = (0 until SimhashBands).map { k =>
       expr(s"shiftright(simhash60, ${k * SimhashBandBits}) & CAST(32767 AS BIGINT)")
         .as(s"band$k")
@@ -1348,15 +1284,16 @@ object TextOps {
       a.join(b, col(s"a$k") === col(s"c$k") && col("a_id") < col("b_id"))
         .select("a_id", "b_id", "ha", "hb")
     }.reduce(_ unionByName _).distinct()
-    val pairs = cand
+    cand
       .withColumn("hamming", expr("bit_count(ha ^ hb)").cast("int"))
       .filter(col("hamming") <= 2)
       .select("a_id", "b_id", "hamming")
       .orderBy("a_id", "b_id")
-    pairs.persist().count() // materialize, then drop the signature cache
-    sh.unpersist()
-    pairs
   }
+
+  /** 4 sub-bands × 15 bits (shared with the banding SQL + DocStream). */
+  private[queries] val SimhashBands = 4
+  private[queries] val SimhashBandBits = 15
 
   /** End-to-end dedup materialization: the corpus minus near-duplicates.
     * Canonical-keep policy: within each ≥0.9-Jaccard pair the lower
@@ -1380,13 +1317,16 @@ object TextOps {
     * tie-break; `upgraded` flags clusters where this differs from t11's
     * keep-first rule (the rows a policy migration would actually flip).
     *
-    * Scale: the cluster frame is |near-dup docs| ≪ corpus and memoized
-    * (dupClusters); quality joins in KEYED on doc_id; the argmax window
+    * Scale: the cluster frame is |near-dup docs| ≪ corpus (dupClusters);
+    * quality joins in KEYED on doc_id; the argmax window
     * partitions per cluster_id — frames bounded by cluster size, never
     * corpus-wide. alpha_ratio is integer counts + one IEEE division, so
     * the ordering (and thus the winner) is bit-identical across engines. */
-  def qualityCanonicalKeep(s: SparkSession, d: String): DataFrame = {
-    val cl = dupClusters(s, d).filter(col("cluster_sz") >= 2)
+  def qualityCanonicalKeep(s: SparkSession, d: String): DataFrame =
+    canonicalKeepOn(s, d, dupClusters(s, d))
+
+  private def canonicalKeepOn(s: SparkSession, d: String, clusters: DataFrame): DataFrame = {
+    val cl = clusters.filter(col("cluster_sz") >= 2)
     val q = qualityScore(s, d).select("doc_id", "alpha_ratio")
     val wk = Window.partitionBy("cluster_id")
     val w = wk.orderBy(col("alpha_ratio").desc, col("doc_id").asc)
@@ -1449,9 +1389,10 @@ object TextOps {
     * doc_id (sizes are data-dependent — t32's no-forced-broadcast
     * rule); the only corpus-scale work is t42's single token scan. */
   def curationV2(s: SparkSession, d: String): DataFrame = {
-    val members = dupClusters(s, d).filter(col("cluster_sz") >= 2)
+    val clusters = dupClusters(s, d)
+    val members = clusters.filter(col("cluster_sz") >= 2)
       .select("doc_id")
-    val keepers = qualityCanonicalKeep(s, d)
+    val keepers = canonicalKeepOn(s, d, clusters)
       .select(col("keep_id").as("doc_id")).withColumn("k", lit(1))
     // threshold 1, not the published 2: the synthetic corpus is keyword
     // soup whose docs top out at ONE distinct check word (t42 reports
@@ -1487,7 +1428,9 @@ object TextOps {
     * semi/anti joins over metadata-sized key sets, so the full text is
     * scanned exactly once. */
   def corpusCuration(s: SparkSession, d: String): DataFrame = {
-    val en = langId(s, d).filter(col("pred_lang") === "en").select("doc_id")
+    // checkpointed: the filter must hit the scored column (see langId)
+    val en = langId(s, d).localCheckpoint()
+      .filter(col("pred_lang") === "en").select("doc_id")
     val keepq = qualityScore(s, d)
       .filter(col("alpha_ratio") >= 0.82 && col("n_chars") >= 100)
       .select("doc_id")
@@ -1606,27 +1549,12 @@ object TextOps {
     * interpreted. The oracle keeps the replace-diff SQL — the
     * cross-engine check that both count the same occurrences.
     *
-    * Memoized per (session, dir) — the wordGramIds convention. Predicate
-    * pushdown would otherwise substitute the scoring aliases into the
-    * t14/t43 `pred_lang = 'en'` filters, duplicating the marker_counts
-    * call per CASE-branch reference (~60 evaluations/row, measured 10×
-    * slower than evaluating once); the persisted 3-column frame is the
-    * per-doc language table a real pipeline keeps beside the corpus,
-    * and every consumer filter hits the materialized column. */
-  private val langCache = Memos.memo[String, DataFrame]()
-
+    * A consumer that FILTERS on pred_lang (t14/t43) reads a checkpoint
+    * of this frame: predicate pushdown would otherwise substitute the
+    * scoring aliases into the `pred_lang = 'en'` filter, duplicating
+    * the marker_counts call per CASE-branch reference (~60
+    * evaluations/row, measured 10× slower than evaluating once). */
   def langId(s: SparkSession, d: String): DataFrame = {
-    langCache(s, d) {
-      val f = langIdUncached(s, d).persist()
-      f.count() // materialize eagerly so every consumer reads the cache
-      f
-    }.orderBy("doc_id")
-  }
-
-  // private[queries] so PlanSpec can assert the BUILD plan of the cached
-  // frame (the memoized plan is all InMemoryTableScan, which made the
-  // marker_counts/no-regex lock vacuous — round-6 advice)
-  private[queries] def langIdUncached(s: SparkSession, d: String): DataFrame = {
     graft.functions.StringExpressions.register(s)
     import graft.functions.StringExpressions.marker_counts
     val latin = Seq(" the ", " and ", " of ", " is ",
@@ -1655,6 +1583,7 @@ object TextOps {
           .when(col("s_fr") >= col("s_es"), "fr")
           .otherwise("es"))
       .select("doc_id", "lang", "pred_lang")
+      .orderBy("doc_id")
   }
 
   /** Language-ID confusion matrix: actual × predicted counts — the
@@ -1779,36 +1708,28 @@ object TextOps {
   def stopwordQuality(s: SparkSession, d: String): DataFrame =
     stopwordQualityBase(s, d).orderBy("doc_id")
 
-  /** The unordered, CHECKPOINT-BACKED stop-word frame, memoized per
-    * (session, dir): three consumers (t42's graded readout, t43's gate,
-    * t58's waterfall — which reads it for three stage filters AND two
-    * censuses) used to re-run the corpus tokenize per INVOCATION
-    * (round-14's rebuild-per-invocation seam; t58's warm build was
-    * ~1.3 s of exactly this). The frame is 6 numeric columns per doc —
-    * cacheable at any corpus scale — and its memo release unpersists it
-    * with the other memos. */
+  /** The unordered, CHECKPOINT-BACKED stop-word frame shared by t42's
+    * graded readout, t43's gate and t58's waterfall — which reads it
+    * for three stage filters AND two censuses, so one call tokenizes
+    * the corpus once. The frame is 6 numeric columns per doc. */
   private[queries] def stopwordQualityBase(s: SparkSession, d: String): DataFrame = {
-    swqCache(s, d) {
-      val toks = documents(s, d)
-        .select(col("doc_id"), norm(col("text")).as("nrm"))
-        .filter(length(col("nrm")) >= 1)
-        .select(col("doc_id"), explode(split(col("nrm"), " ")).as("tok"))
-      toks.groupBy("doc_id")
-        .agg(
-          count(lit(1)).as("n_tokens"),
-          sum(when(col("tok").isin(StopWords: _*), 1L).otherwise(0L)).as("n_stop"),
-          countDistinct(when(col("tok").isin(GopherWords: _*), col("tok")))
-            .as("n_gopher"))
-        .select(col("doc_id"), col("n_tokens"), col("n_stop"),
-          round(col("n_stop").cast("double") / col("n_tokens").cast("double"), 6)
-            .as("stop_ratio"),
-          col("n_gopher"),
-          (col("n_gopher") >= 2).cast("int").as("gopher_pass"))
-        .localCheckpoint()
-    }
+    val toks = documents(s, d)
+      .select(col("doc_id"), norm(col("text")).as("nrm"))
+      .filter(length(col("nrm")) >= 1)
+      .select(col("doc_id"), explode(split(col("nrm"), " ")).as("tok"))
+    toks.groupBy("doc_id")
+      .agg(
+        count(lit(1)).as("n_tokens"),
+        sum(when(col("tok").isin(StopWords: _*), 1L).otherwise(0L)).as("n_stop"),
+        countDistinct(when(col("tok").isin(GopherWords: _*), col("tok")))
+          .as("n_gopher"))
+      .select(col("doc_id"), col("n_tokens"), col("n_stop"),
+        round(col("n_stop").cast("double") / col("n_tokens").cast("double"), 6)
+          .as("stop_ratio"),
+        col("n_gopher"),
+        (col("n_gopher") >= 2).cast("int").as("gopher_pass"))
+      .localCheckpoint()
   }
-
-  private val swqCache = Memos.memo[String, DataFrame]()
 
   /** t58 — the curation WATERFALL: t43's pipeline re-read as the funnel
     * curators actually monitor — doc and token mass surviving each gate
@@ -1824,22 +1745,13 @@ object TextOps {
     * frame (metadata after the one corpus tokenize); the censuses are
     * five scalar aggregates. */
   def curationWaterfall(s: SparkSession, d: String): DataFrame = {
-    // the 5-row funnel is a pure function of the fixture and every
-    // stage reads memoized component frames — memoize the readout too
-    // (round-15; warm used to re-materialize two checkpoints per pass)
-    t58Cache(s, d)(curationWaterfallUncached(s, d)
-      .localCheckpoint()).orderBy("stage")
-  }
-
-  private val t58Cache = Memos.memo[String, DataFrame]()
-
-  private def curationWaterfallUncached(s: SparkSession, d: String): DataFrame = {
-    // checkpoint-backed memo — the three stage filters + two censuses
-    // re-read it without re-tokenizing per invocation
+    // checkpoint-backed — the three stage filters + two censuses
+    // re-read it without re-tokenizing
     val swq = stopwordQualityBase(s, d).select("doc_id", "n_tokens", "n_gopher")
-    val members = dupClusters(s, d).filter(col("cluster_sz") >= 2)
+    val clusters = dupClusters(s, d)
+    val members = clusters.filter(col("cluster_sz") >= 2)
       .select("doc_id").withColumn("m", lit(1))
-    val keepers = qualityCanonicalKeep(s, d)
+    val keepers = canonicalKeepOn(s, d, clusters)
       .select(col("keep_id").as("doc_id")).withColumn("k", lit(1))
     val scrub = contaminationExtents(s, d).groupBy("doc_id")
       .agg(sum(col("span_len")).as("n_scrubbed"))
@@ -2224,54 +2136,51 @@ object TextOps {
     * document stream with the same weights, both graded against the
     * same weight-CTE oracle. */
   def trainedQualityScorer(s: SparkSession, d: String): DataFrame = {
-    t62Cache(s, d) {
-      val f = t62Features(s, d)
-      val n = f.count()
-      var w = Array.fill(4)(0L)
-      def z(ws: Array[Long]) =
-        s"(${ws(0)} * x0 + ${ws(1)} * x1 + ${ws(2)} * x2 + ${ws(3)} * x3)"
-      val epochs = (1 to T62Epochs).map { ep =>
-        val g = f.selectExpr(
-          (0 until 4).map(j => s"sum((${z(w)} - y) * x$j) as g$j") ++
-            // overflow guard (round-13 advice): non-ANSI LongType sum
-            // WRAPS silently where DuckDB raises — bound the worst-case
-            // |Σ(e·x)| ≤ n·max|e|·max(x) in BigInt and fail LOUDLY on
-            // this side too; rides the same scan, so the guard is free
-            Seq(s"max(abs(${z(w)} - y)) as me", "max(greatest(x0, x1, x2, x3)) as mx"): _*)
-          .head()
-        // guard the guard first (review finding: me is computed from the
-        // same wrapping arithmetic it polices): mx is a plain max over
-        // raw features — no products, cannot wrap — so bound the per-row
-        // dot product |z| ≤ 4·max|w|·mx with the PRE-update weights; only
-        // then is max|z−y| itself trustworthy as the gradient bound
-        val maxW = w.map(math.abs).max
-        require(BigInt(4) * BigInt(maxW) * BigInt(g.getLong(5)) +
-            BigInt(1000000000L) <= BigInt(Long.MaxValue),
-          s"t62 epoch-$ep per-row score z can exceed int64 — pre-scale the " +
-            "weights/features before trusting any aggregate this epoch")
-        require(BigInt(g.getLong(4)) * BigInt(g.getLong(5)) * BigInt(n)
-            <= BigInt(Long.MaxValue),
-          s"t62 epoch-$ep gradient can exceed int64 — pre-scale the error " +
-            "(shard-level e/k before the product; see scaladoc)")
-        // plain Long division: TRUNCATING, exactly DuckDB's `//`
-        // (probed: -7 // 2 = -3 there — floorDiv would drift by 1 on
-        // negative gradients and did, late-epoch, before this pin)
-        w = Array.tabulate(4)(j => w(j) - g.getLong(j) / (n * T62LrK))
-        val zz = z(w)
-        val em = s"(($zz - y) div 1000)" // Spark div truncates ≡ DuckDB //
-        f.selectExpr(
-            s"cast(sum($em * $em) as bigint) as sse_u",
-            s"cast(sum(case when $zz >= $T62Thresh then 1 else 0 end) as bigint) as n_pass",
-            s"cast(sum(case when ($zz >= $T62Thresh) = (y > 0) then 1 else 0 end) as bigint) as n_agree")
-          .select(lit(ep.toLong).as("epoch"),
-            lit(w(0)).as("w_bias"), lit(w(1)).as("w_len"),
-            lit(w(2)).as("w_the"), lit(w(3)).as("w_a"),
-            col("sse_u"), col("n_pass"), col("n_agree"))
-      }
-      epochs.reduce(_ unionByName _).orderBy("epoch").localCheckpoint()
+    val f = t62Features(s, d)
+    val n = f.count()
+    var w = Array.fill(4)(0L)
+    def z(ws: Array[Long]) =
+      s"(${ws(0)} * x0 + ${ws(1)} * x1 + ${ws(2)} * x2 + ${ws(3)} * x3)"
+    val epochs = (1 to T62Epochs).map { ep =>
+      val g = f.selectExpr(
+        (0 until 4).map(j => s"sum((${z(w)} - y) * x$j) as g$j") ++
+          // overflow guard (round-13 advice): non-ANSI LongType sum
+          // WRAPS silently where DuckDB raises — bound the worst-case
+          // |Σ(e·x)| ≤ n·max|e|·max(x) in BigInt and fail LOUDLY on
+          // this side too; rides the same scan, so the guard is free
+          Seq(s"max(abs(${z(w)} - y)) as me", "max(greatest(x0, x1, x2, x3)) as mx"): _*)
+        .head()
+      // guard the guard first (review finding: me is computed from the
+      // same wrapping arithmetic it polices): mx is a plain max over
+      // raw features — no products, cannot wrap — so bound the per-row
+      // dot product |z| ≤ 4·max|w|·mx with the PRE-update weights; only
+      // then is max|z−y| itself trustworthy as the gradient bound
+      val maxW = w.map(math.abs).max
+      require(BigInt(4) * BigInt(maxW) * BigInt(g.getLong(5)) +
+          BigInt(1000000000L) <= BigInt(Long.MaxValue),
+        s"t62 epoch-$ep per-row score z can exceed int64 — pre-scale the " +
+          "weights/features before trusting any aggregate this epoch")
+      require(BigInt(g.getLong(4)) * BigInt(g.getLong(5)) * BigInt(n)
+          <= BigInt(Long.MaxValue),
+        s"t62 epoch-$ep gradient can exceed int64 — pre-scale the error " +
+          "(shard-level e/k before the product; see scaladoc)")
+      // plain Long division: TRUNCATING, exactly DuckDB's `//`
+      // (probed: -7 // 2 = -3 there — floorDiv would drift by 1 on
+      // negative gradients and did, late-epoch, before this pin)
+      w = Array.tabulate(4)(j => w(j) - g.getLong(j) / (n * T62LrK))
+      val zz = z(w)
+      val em = s"(($zz - y) div 1000)" // Spark div truncates ≡ DuckDB //
+      f.selectExpr(
+          s"cast(sum($em * $em) as bigint) as sse_u",
+          s"cast(sum(case when $zz >= $T62Thresh then 1 else 0 end) as bigint) as n_pass",
+          s"cast(sum(case when ($zz >= $T62Thresh) = (y > 0) then 1 else 0 end) as bigint) as n_agree")
+        .select(lit(ep.toLong).as("epoch"),
+          lit(w(0)).as("w_bias"), lit(w(1)).as("w_len"),
+          lit(w(2)).as("w_the"), lit(w(3)).as("w_a"),
+          col("sse_u"), col("n_pass"), col("n_agree"))
     }
+    epochs.reduce(_ unionByName _).orderBy("epoch")
   }
-  private val t62Cache = Memos.memo[String, DataFrame]()
 
   /** The oracle unrolls the SAME fixed-point updates as closed-form SQL:
     * epoch CTE chain g_e (gradient sums) → w_e (floor-div update) →
@@ -2333,9 +2242,9 @@ object TextOps {
 
   // --- t63: the trained gate APPLIED -------------------------------------
 
-  /** The epoch-[[T62Epochs]] weights — the deployed model artifact.
-    * Reading them is a 1-row metadata collect off the (memoized)
-    * trajectory frame; training itself stays E·O(n). */
+  /** The epoch-[[T62Epochs]] weights — the deployed model artifact:
+    * a 1-row metadata collect off the trajectory frame, whose training
+    * stays E·O(n). */
   private[queries] def t62FinalWeights(s: SparkSession, d: String): Array[Long] = {
     val r = trainedQualityScorer(s, d).filter(col("epoch") === T62Epochs)
       .select("w_bias", "w_len", "w_the", "w_a").head()
@@ -2414,30 +2323,9 @@ object TextOps {
   private[queries] val BudgetDen = 2L
   private[queries] val RangeWidth = 64L
   def tokenBudgetSelect(s: SparkSession, d: String): DataFrame = {
-    // Round-15: the SELECTED frame is memoized (the rebuild-per-
-    // invocation seam — each warm pass used to pay ~1.3 s of corpus
-    // re-tokenize PLUS ~1 s of drill-down driver actions on a
-    // selection that is a pure function of the fixture). The cold pass
-    // pays the full tokenize + drill-down; the drill-down's
-    // bounded-window plan shape stays locked on
-    // [[tokenBudgetSelectUncached]] (PlanSpec's t22 row), and
-    // TokenBudgetSpec drives [[budgetPrefix]] itself with adversarial
-    // frames.
-    t22SelCache(s, d)(
-      // the drill-down's log_RangeWidth(span) levels each run a driver
-      // action (span probe) + a level checkpoint — ~1 s of job overhead
-      // per INVOCATION on a selection that is a pure function of the
-      // fixture, so the selected frame (3 ints per kept doc) is what
-      // the memo holds; the cold pass pays the full tokenize + drill.
-      tokenBudgetSelectUncached(s, d).localCheckpoint()
-    ).orderBy("doc_id")
-  }
-
-  /** The live build (tokenize + drill-down) the memo materializes —
-    * exposed so PlanSpec's bounded-window lock asserts on the plan that
-    * actually runs, not the checkpoint scan (the t05/langIdUncached
-    * rule). */
-  private[queries] def tokenBudgetSelectUncached(s: SparkSession, d: String): DataFrame = {
+    // the drill-down's bounded-window plan shape is locked by PlanSpec's
+    // t22 row; TokenBudgetSpec drives [[budgetPrefix]] itself with
+    // adversarial frames
     val docs = documents(s, d)
       // single-file fixture input: spread the tokenize across the
       // cluster before the heavy map (no-op at real scale where the
@@ -2450,11 +2338,8 @@ object TextOps {
       .withColumn("score", expr("n_distinct * 1000 div n_tok"))
       .select("doc_id", "score", "n_tok")
       .localCheckpoint()
-    budgetPrefix(docs)
+    budgetPrefix(docs).orderBy("doc_id")
   }
-
-  private val t22SelCache = Memos.memo[String, DataFrame]()
-
 
   /** The drill-down prefix selection over a (doc_id, score, n_tok)
     * frame — split out so TokenBudgetSpec can drive it with adversarial
@@ -2752,13 +2637,9 @@ object TextOps {
       .select(col("doc_id"), col("nrm"),
         explode(expr("sequence(1, length(nrm) - 2)")).as("i"))
       .select(col("doc_id"), expr("substring(nrm, i, 3)").as("g"))
-    // the trigram MODEL is charset³-bounded (≤ ~47k rows) and a pure
-    // function of the corpus — memoized per (session, dir) like t36's
-    // word-bigram LM (the convention its scaladoc documents: a real
-    // deployment keeps the count table persisted), so only the probe
-    // side pays the ~|chars| gram explosion per invocation
-    val model = t27ModelCache(s, d)(
-      tri.groupBy("g").agg(count(lit(1)).as("c")).localCheckpoint())
+    // the trigram MODEL is charset³-bounded (≤ ~47k rows), so it
+    // broadcasts against the probe side
+    val model = tri.groupBy("g").agg(count(lit(1)).as("c"))
     tri.join(broadcast(model), "g")
       .groupBy("doc_id")
       .agg(sum("c").as("sum_c"), count(lit(1)).as("n_grams"))
@@ -3476,7 +3357,7 @@ object TextOps {
 
   /** The postings BUILD plan (one corpus explode) — private[queries]
     * so PlanSpec locks the index-build shapes the memos materialize
-    * (the t05/langIdUncached rule). */
+    * (a checkpoint scan carries no build evidence). */
   private[queries] def buildProbePostings(s: SparkSession, d: String): DataFrame =
     documents(s, d)
       .select(col("doc_id"), explode(split(norm(col("text")), " ")).as("tok"))
@@ -3486,22 +3367,14 @@ object TextOps {
   private val postingsCache = Memos.memo[String, DataFrame]()
 
   /** Per-doc token counts (the BM25 length-normalization index side) —
-    * memoized with the postings; MAP-ONLY to build (see the bm25Topk
-    * scaladoc), 2 longs per doc to hold. */
-  private def docLengths(s: SparkSession, d: String): DataFrame = {
-    dlCache(s, d)(
-      buildDocLengths(s, d).localCheckpoint())
-  }
-
-  private[queries] def buildDocLengths(s: SparkSession, d: String): DataFrame =
+    * MAP-ONLY to build (see the bm25Topk scaladoc), 2 longs per doc. */
+  private[queries] def docLengths(s: SparkSession, d: String): DataFrame =
     // empty-normalized docs have no tokens (split of "" yields [""]):
     // filter them from dl exactly as the explode+nonempty-filter did
     documents(s, d)
       .select(col("doc_id"), norm(col("text")).as("nrm"))
       .filter(length(col("nrm")) > 0)
       .select(col("doc_id"), size(split(col("nrm"), " ")).cast("long").as("dl"))
-
-  private val dlCache = Memos.memo[String, DataFrame]()
 
   def bm25Topk(s: SparkSession, d: String): DataFrame =
     bm25Score(s, d, probePostings(s, d), docLengths(s, d))
@@ -3686,8 +3559,8 @@ object TextOps {
     * permille. Composes two existing truths — the t16 clustering and
     * the t06 tokenization — rather than re-deriving either.
     *
-    * Scale: the cluster frame is |near-dup docs| ≪ corpus (memoized,
-    * checkpointed); representatives derive from it with one keyed agg;
+    * Scale: the cluster frame is |near-dup docs| ≪ corpus (over the
+    * checkpointed labeling); representatives derive from it with one keyed agg;
     * both joins onto the token frame are keyed left joins (the cluster
     * side grows with dup density — never forced broadcast); the final
     * rollup is one partial agg over |sources| groups. */

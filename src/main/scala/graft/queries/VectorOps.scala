@@ -70,23 +70,18 @@ object VectorOps {
     * At 100 TB the audit runs on a deterministic hash-sample instead —
     * [[sampledTruthPairs]] is that path IN CODE (the filter precedes
     * the pair join, so the quadratic shrinks by k²) and v41 grades the
-    * sampled estimate's fidelity against this exact frame.
-    * Memoized per (session, dir) — the t03/t11 convention — because
-    * v02's own oracle row and v39's truth side share one execution. */
-  def cosineNearDupPairs(s: SparkSession, d: String): DataFrame = {
-    cosinePairsCache(s, d) {
-      // cross-RUN artifact (round-16 brief #3): the exact truth-pair set
-      // is a pure function of embeddings.parquet and the calibration
-      // reference four graders key on (v39/v41/v42 + v02's own row) — a
-      // fresh JVM used to pay the O(n²) baseline (5.0 s at sf0.1) to
-      // rebuild it. Key = fixture digest + fold-shape tag over the
-      // derivation defs (VectorArtifactSpec's tag-lock recomputes it).
-      graft.sources.ArtifactStore.loadOrBuild(s, "cos_pairs",
-        graft.sources.ArtifactStore.key(d, "embeddings.parquet") + "-" + CosPairsFoldTag) {
-        cosineNearDupPairsUncached(s, d)
-      }.orderBy("a_id", "b_id").localCheckpoint()
-    }
-  }
+    * sampled estimate's fidelity against this exact frame. */
+  def cosineNearDupPairs(s: SparkSession, d: String): DataFrame =
+    // cross-RUN artifact (round-16 brief #3): the exact truth-pair set
+    // is a pure function of embeddings.parquet and the calibration
+    // reference four graders key on (v39/v41/v42 + v02's own row) — a
+    // fresh JVM used to pay the O(n²) baseline (5.0 s at sf0.1) to
+    // rebuild it. Key = fixture digest + fold-shape tag over the
+    // derivation defs (VectorArtifactSpec's tag-lock recomputes it).
+    graft.sources.ArtifactStore.loadOrBuild(s, "cos_pairs",
+      graft.sources.ArtifactStore.key(d, "embeddings.parquet") + "-" + CosPairsFoldTag) {
+      cosineNearDupPairsUncached(s, d)
+    }.orderBy("a_id", "b_id")
 
   /** The exact all-pairs BUILD behind the cos_pairs artifact — the
     * load-bearing plan (PlanDump/cleared-lane evidence), deliberately
@@ -107,8 +102,6 @@ object VectorOps {
     * VectorArtifactSpec's tag-lock recomputes it, so a derivation edit
     * without a bump is a test failure, never a stale truth set. */
   private[graft] val CosPairsFoldTag = "cos-a54aef08"
-
-  private val cosinePairsCache = Memos.memo[String, DataFrame]()
 
   /** The centroid-affinity frame (vec_id, cid, ccos, crn): every
     * vector's rounded cosine + rank against all 16 coarse centroids.
@@ -231,8 +224,6 @@ object VectorOps {
 
   private[queries] def pqCandOpq(s: SparkSession, d: String): DataFrame =
     pqCandMemo("pq_cand_opq", pqCandOpqUncached(_, _))(s, d)
-
-  private val resPqIndexCache = Memos.memo[String, (DataFrame, DataFrame)]()
 
   /** Per-label quantized centroids.
     * Floats are quantized to 1e-6 grid BIGINTs before summation so the
@@ -407,7 +398,7 @@ object VectorOps {
     * v39's recall audit re-run on deterministic hash-samples of the
     * truth space, k ∈ {1, 2, 4} (keep-1-in-k vectors, pairs need both
     * endpoints). The k = 1 row IS the exact audit — it rides the
-    * memoized v02 frame and must equal v39's row (VectorRecallSpec
+    * v02 artifact and must equal v39's row (VectorRecallSpec
     * cross-locks it); k = 2/4 run the [[sampledTruthPairs]] path whose
     * pair join only ever sees the sampled corpus. At 100 TB a recall
     * audit runs ONLY the k ≫ 1 rows; this table grades how far the
@@ -720,15 +711,6 @@ object VectorOps {
       .orderBy("cell")
   }
 
-  /** The v38 frame with its (rebuilt cells, rebuilt rows, untriggered
-    * overlay rows) audit — VectorRebuildSpec pins the physical half.
-    * The audit lives in the frame's own memo entry, so a v38 run on
-    * another (session, dir) can never overwrite the one a test reads. */
-  private val rebuildCache = Memos.memo[String, (DataFrame, (Long, Long, Long))]()
-
-  private[queries] def rebuildAudit(s: SparkSession, d: String): Option[(Long, Long, Long)] =
-    rebuildCache.get(s, d).map(_._2)
-
   /** v38 — ACTING on v36's trigger: the per-cell index REBUILD that
     * folds v34/v35's overlay frames back into the base cell, q57's
     * compaction shape transplanted to the ANN index. For every cell
@@ -750,42 +732,46 @@ object VectorOps {
     * rebuild cost is |triggered cells' rows| — data-proportional to the
     * hot cells only — and the search plan sheds its overlay branches
     * exactly where the trigger said the rent was highest. */
-  def ivfCompactionRebuild(s: SparkSession, d: String): DataFrame = {
-    rebuildCache(s, d) {
-      val root = java.nio.file.Files.createTempDirectory("graft_ivfreb")
-      try {
-        val e = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
-        val aff = centroidAffinity(s, d)
-        val cut = insertCut(e)
-        val tomb = e.filter(pmod(col("vec_id"), lit(7)) === 0).select("vec_id")
-        // the overlay serving state: deployed artifact rows below the
-        // build cutoff tombstone-filtered at read, arrivals live-routed
-        val baseCells = aff.filter(col("crn") === 1).crossJoin(cut)
-          .filter(col("vec_id") <= col("cut"))
-          .select(col("vec_id"), col("cid").as("cell"))
-        val preCells = baseCells.unionByName(deltaAssignments(e, cut))
-          .join(tomb, Seq("vec_id"), "left_anti")
-        val trig = ivfCompactionTrigger(s, d)
-          .filter(col("compact") === 1).select("cell")
-        // the rebuild: triggered cells' folded rows become a fresh
-        // materialized segment — written once, then a plain scan
-        val segDir = root.resolve("segments").toString
-        preCells.join(broadcast(trig), Seq("cell"))
-          .write.parquet(segDir)
-        val rebuilt = s.read.parquet(segDir)
-          .select(col("vec_id"), col("cell"))
-        val untrig = preCells.join(broadcast(trig), Seq("cell"), "left_anti")
-        val audit = (trig.count(), rebuilt.count(), untrig.count())
-        def search(cells: DataFrame, phase: String) =
-          ivfSearchOn(e, aff, cells).withColumn("phase", lit(phase))
-            .select("phase", "q_id", "rk", "hit_id", "cos")
-        (search(preCells, "1_pre_rebuild")
-          .unionByName(search(rebuilt.unionByName(untrig), "2_post_rebuild"))
-          .orderBy("phase", "q_id", "rk")
-          .localCheckpoint(), // pin before the scratch segment is deleted
-          audit)
-      } finally StreamOps.rmrf(root)
-    }._1
+  def ivfCompactionRebuild(s: SparkSession, d: String): DataFrame =
+    ivfCompactionRebuildAudited(s, d)._1
+
+  /** The v38 frame with its (rebuilt cells, rebuilt rows, untriggered
+    * overlay rows) audit — VectorRebuildSpec pins the physical half. */
+  private[queries] def ivfCompactionRebuildAudited(s: SparkSession,
+      d: String): (DataFrame, (Long, Long, Long)) = {
+    val root = java.nio.file.Files.createTempDirectory("graft_ivfreb")
+    try {
+      val e = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
+      val aff = centroidAffinity(s, d)
+      val cut = insertCut(e)
+      val tomb = e.filter(pmod(col("vec_id"), lit(7)) === 0).select("vec_id")
+      // the overlay serving state: deployed artifact rows below the
+      // build cutoff tombstone-filtered at read, arrivals live-routed
+      val baseCells = aff.filter(col("crn") === 1).crossJoin(cut)
+        .filter(col("vec_id") <= col("cut"))
+        .select(col("vec_id"), col("cid").as("cell"))
+      val preCells = baseCells.unionByName(deltaAssignments(e, cut))
+        .join(tomb, Seq("vec_id"), "left_anti")
+      val trig = ivfCompactionTrigger(s, d)
+        .filter(col("compact") === 1).select("cell")
+      // the rebuild: triggered cells' folded rows become a fresh
+      // materialized segment — written once, then a plain scan
+      val segDir = root.resolve("segments").toString
+      preCells.join(broadcast(trig), Seq("cell"))
+        .write.parquet(segDir)
+      val rebuilt = s.read.parquet(segDir)
+        .select(col("vec_id"), col("cell"))
+      val untrig = preCells.join(broadcast(trig), Seq("cell"), "left_anti")
+      val audit = (trig.count(), rebuilt.count(), untrig.count())
+      def search(cells: DataFrame, phase: String) =
+        ivfSearchOn(e, aff, cells).withColumn("phase", lit(phase))
+          .select("phase", "q_id", "rk", "hit_id", "cos")
+      (search(preCells, "1_pre_rebuild")
+        .unionByName(search(rebuilt.unionByName(untrig), "2_post_rebuild"))
+        .orderBy("phase", "q_id", "rk")
+        .localCheckpoint(), // pin before the scratch segment is deleted
+        audit)
+    } finally StreamOps.rmrf(root)
   }
 
   /** v37 — the IVF PROBE-COUNT recall curve, the tuning knob v08 fixes
@@ -1434,16 +1420,7 @@ object VectorOps {
     * slim integer rows per vector — the ADC layout FAISS ships; serve
     * cost is one keyed join of codes against a 10-query × 2-probe
     * broadcast LUT (10,240 rows at ANY corpus size). */
-  def annPersistedIndexTopK(s: SparkSession, d: String): DataFrame = {
-    annTopKCache(s, d)(
-      annPersistedTopKUncached(s, d).localCheckpoint())
-  }
-
-  private val annTopKCache = Memos.memo[String, DataFrame]()
-
-  /** v43's serve plan over the persisted index — the uncached evidence
-    * (PlanDump / VectorArtifactSpec run against this). */
-  private[graft] def annPersistedTopKUncached(s: SparkSession, d: String): DataFrame =
+  def annPersistedIndexTopK(s: SparkSession, d: String): DataFrame =
     annServeOverIndex(s, d,
       graft.sources.ArtifactStore.loadOrBuild(s, "ann_index",
         graft.sources.ArtifactStore.key(d, "embeddings.parquet") + "-" + AnnIndexFoldTag) {
@@ -1596,8 +1573,6 @@ object VectorOps {
       rolledAnnUncached(s, d)
     }
 
-  private val annRollCache = Memos.memo[String, DataFrame]()
-
   /** The graded per-CELL census every index-maintenance query reads
     * out: entries, distinct vectors, Σ vec_id, and a Σ(m+1)·code
     * checksum that flips if ANY posting's code or subspace drifts —
@@ -1611,10 +1586,8 @@ object VectorOps {
         sum((col("m") + 1) * col("code")).cast("long").as("code_checksum"))
       .orderBy("cell")
 
-  def annIndexRoll(s: SparkSession, d: String): DataFrame = {
-    annRollCache(s, d)(
-      annCellCensus(rolledAnn(s, d)).localCheckpoint())
-  }
+  def annIndexRoll(s: SparkSession, d: String): DataFrame =
+    annCellCensus(rolledAnn(s, d))
 
   /** corpus_ann/rolled_ann artifact fold-shape tag — sha256 (first 8
     * hex) over the slice-encoder and roll defs plus the delta-split
@@ -1634,16 +1607,7 @@ object VectorOps {
     * VERBATIM (the q61/v43 convention), turning "the rolled index is
     * immediately query-ready" into a cross-engine hash fact rather
     * than a claim. */
-  def annRolledServeTopK(s: SparkSession, d: String): DataFrame = {
-    annRolledServeCache(s, d)(
-      annRolledServeUncached(s, d).localCheckpoint())
-  }
-
-  private val annRolledServeCache = Memos.memo[String, DataFrame]()
-
-  /** v45's serve plan over the rolled artifact — the uncached evidence
-    * (PlanDump / VectorArtifactSpec run against this). */
-  private[graft] def annRolledServeUncached(s: SparkSession, d: String): DataFrame =
+  def annRolledServeTopK(s: SparkSession, d: String): DataFrame =
     annServeOverIndex(s, d, rolledAnn(s, d))
 
   // ——— v46: TWO-STEP roll-forward — the roll is closed under itself
@@ -1704,16 +1668,12 @@ object VectorOps {
       rolledAnnS2Uncached(s, d)
     }
 
-  private val annRoll2Cache = Memos.memo[String, DataFrame]()
-
   /** v46 — the graded readout: the per-cell census over the twice-
     * rolled artifact, against the SAME full-rebuild oracle as v44
     * (corpus₂ ∪ shard A ∪ shard B = all vectors, so the census must be
     * identical — one induction step more than v44 proves). */
-  def annRollTwoStep(s: SparkSession, d: String): DataFrame = {
-    annRoll2Cache(s, d)(
-      annCellCensus(rolledAnnS2(s, d)).localCheckpoint())
-  }
+  def annRollTwoStep(s: SparkSession, d: String): DataFrame =
+    annCellCensus(rolledAnnS2(s, d))
 
   /** corpus_ann2/rolled_ann_s1/rolled_ann_s2 artifact fold-shape tag —
     * sha256 (first 8 hex) over the slice-encoder, the two-step roll
@@ -1753,17 +1713,13 @@ object VectorOps {
       reapedAnnUncached(s, d)
     }
 
-  private val annReapCache = Memos.memo[String, DataFrame]()
-
   /** v47 — the graded readout: the per-cell census over the reaped
     * artifact; the oracle is the v44 convention INVERTED — a full
     * rebuild census over the FILTERED corpus (every vector except the
     * deletion residue), so reap ≡ rebuild-without-the-deleted is a
     * cross-engine hash fact. */
-  def annReapCensus(s: SparkSession, d: String): DataFrame = {
-    annReapCache(s, d)(
-      annCellCensus(reapedAnn(s, d)).localCheckpoint())
-  }
+  def annReapCensus(s: SparkSession, d: String): DataFrame =
+    annCellCensus(reapedAnn(s, d))
 
   /** reaped_ann artifact fold-shape tag — sha256 (first 8 hex) over
     * the deletion-set and reap defs plus the roll tag's derivation
@@ -1787,16 +1743,7 @@ object VectorOps {
     * no deleted id appears among the hits, and that the result
     * MATERIALLY differs from v24's (the fixture must actually have
     * deleted vectors in pre-reap top-5s, or the grade is vacuous). */
-  def annReapedServeTopK(s: SparkSession, d: String): DataFrame = {
-    annReapedServeCache(s, d)(
-      annReapedServeUncached(s, d).localCheckpoint())
-  }
-
-  private val annReapedServeCache = Memos.memo[String, DataFrame]()
-
-  /** v48's serve plan over the reaped artifact — the uncached evidence
-    * (PlanDump / VectorArtifactSpec run against this). */
-  private[graft] def annReapedServeUncached(s: SparkSession, d: String): DataFrame =
+  def annReapedServeTopK(s: SparkSession, d: String): DataFrame =
     annServeOverIndex(s, d, reapedAnn(s, d))
 
   /** Residual IVF-PQ top-5 — v24 upgraded to the full FAISS recipe:
@@ -1839,11 +1786,9 @@ object VectorOps {
       expr("transform(embedding, x -> cast(floor(cast(x AS double) * 200.0D) AS double))"))
     val cq = eq.filter(col("vec_id") < 16)
       .select(col("vec_id").as("cid"), col("qv").as("cqv"))
-    // trained INDEX state (codebook + codes) — a pure function of the
-    // corpus, memoized per (session, dir) like pqCandMemo's candidate
-    // frames: the residual build + Lloyd round is index TRAINING a
-    // deployment runs once, not per query
-    val (cb, enc) = resPqIndexCache(s, d) {
+    // trained INDEX state (codebook + codes): the residual build + one
+    // Lloyd round
+    val (cb, enc) = {
       // residual per corpus vector vs its OWN cell centroid (map-side:
       // cells is keyed on vec_id, the centroid frame broadcasts)
       val res = eq.join(cells, "vec_id")

@@ -149,10 +149,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("t22: every window runs over a bounded frame — the corpus is selected by broadcast semi-joins") {
-    // assert on the UNCACHED build plan (the t05/langIdUncached rule):
-    // the graded t22 entry memoizes the selected frame, so its plan is
-    // a checkpoint scan and the bounded-window lock would be vacuous
-    val df = TextOps.tokenBudgetSelectUncached(spark, d)
+    val df = TextOps.tokenBudgetSelect(spark, d)
     val p = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(p.contains("LeftSemi"), "bucket/range selection must be semi-joins")
@@ -409,9 +406,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("m07: chunk near-dup joins on digests only — candidates from rare chunks, no cartesian") {
-    // the registered m07 serves a result memo since round 16 — the lock
-    // asserts on the UNCACHED build (the t49/p01 vacuity rule)
-    val df = graft.multimodal.Multimodal.chunkNearDupUncached(spark, d)
+    val df = graft.multimodal.Multimodal.chunkNearDup(spark, d)
     val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct"), "candidate generation must be digest-keyed")
     assert(p.contains("partial_count"), "chunk-frequency and intersection counts must partial-agg")
@@ -553,11 +548,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("t05: language scoring is ONE codegen marker_counts pass, no regex in the plan") {
-    // assert on the UNCACHED build plan: the graded t05 entry is
-    // memoized, so its plan is all InMemoryTableScan and any assertion
-    // about what FEEDS the cache is vacuous there (round-6 advice) —
-    // langIdUncached is the build plan the cache materializes
-    val p = TextOps.langIdUncached(spark, d)
+    val p = TextOps.langId(spark, d)
       .queryExecution.executedPlan.toString
     assert(p.contains("marker_counts"),
       s"scores must come from the fused expression:\n$p")
@@ -566,17 +557,17 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("length(replace"),
       s"the replace-diff restatement must not survive into the scoring plan:\n$p")
     // and the fused call must not have been duplicated per CASE branch
-    // by projection collapse (the 10×-slower shape the memo prevents)
+    // by projection collapse (the 10×-slower shape consumers avoid by
+    // filtering a checkpoint of this frame)
     val nCalls = "marker_counts".r.findAllIn(p).length
     assert(nCalls <= 4, s"marker_counts duplicated $nCalls times in the build plan:\n$p")
   }
 
   test("t49: BM25 doc length is map-only, idf broadcasts, top-20 is TakeOrderedAndProject") {
-    // the registered t49 reads the memoized postings/doc-length
-    // checkpoints (whose plan shows zero Generate nodes), so the
-    // re-explode locks assert on the index BUILD plans the memos
-    // materialize (the t05/langIdUncached rule)
-    val dlP = TextOps.buildDocLengths(spark, d).queryExecution
+    // the registered t49 reads the memoized postings checkpoint (whose
+    // plan shows zero Generate nodes), so the re-explode locks assert
+    // on the index BUILD plans
+    val dlP = TextOps.docLengths(spark, d).queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     assert(!"""\(\d+\) Generate""".r.findAllIn(dlP).hasNext,
       s"doc length must be map-only size(split(...)), never an explode:\n$dlP")
@@ -695,10 +686,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("p01/p07: rank/degree frames join keyed (never forced broadcast); no cartesian") {
-    // lock on the UNCACHED builds: the registered p01/p07 serve a
-    // per-session result memo, so their plans are checkpoint scans once
-    // populated — asserting there would be vacuous (the t49 lesson)
-    for (df <- Seq(GraphOps.pagerankBuild(spark, d), GraphOps.pprBuild(spark, d))) {
+    for (df <- Seq(GraphOps.pagerank(spark, d), GraphOps.personalizedPagerank(spark, d))) {
       val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"message passing must ride equi-joins:\n$p")

@@ -163,7 +163,7 @@ class VectorArtifactSpec extends AnyFunSuite {
     val r45 = VectorOps.annRolledServeTopK(spark, d).collect().map(_.toSeq).toSeq
     assert(r45.nonEmpty && r45 == r24,
       "the rolled index must be immediately query-ready with v24's exact answers")
-    val serveInputs = VectorOps.annRolledServeUncached(spark, d).inputFiles
+    val serveInputs = VectorOps.annRolledServeTopK(spark, d).inputFiles
     assert(serveInputs.exists(_.contains("rolled_ann")),
       s"v45 must scan the ROLLED artifact: ${serveInputs.take(4).mkString(",")}")
     assert(!serveInputs.exists(_.contains(java.io.File.separator + "ann_index")),
@@ -309,7 +309,7 @@ class VectorArtifactSpec extends AnyFunSuite {
       "reaped-index serve must equal the serve over a filtered rebuild")
     // (d) the plan scans the REAPED artifact — never the rolled or
     // pre-roll index
-    val inputs = freshInputs(VectorOps.annReapedServeUncached(spark, d))
+    val inputs = freshInputs(VectorOps.annReapedServeTopK(spark, d))
     assert(inputs.exists(_.contains("reaped_ann")),
       s"v48 must scan the reaped artifact: ${inputs.take(4).mkString(",")}")
     assert(!inputs.exists(_.contains("rolled_ann")) &&

@@ -13,8 +13,8 @@ class VectorRebuildSpec extends AnyFunSuite {
   val d = "/root/testdata/sf0.001"
 
   test("rebuild is result-invisible and actually folds the triggered cells") {
-    val out = graft.SparkEntry.all("v38_ivf_compaction_rebuild").fn(spark, d)
-      .collect()
+    val (frame, (nCells, nRebuilt, nOverlay)) = VectorOps.ivfCompactionRebuildAudited(spark, d)
+    val out = frame.collect()
     def phase(p: String) = out.filter(_.getString(0) == p)
       .map(r => (r.getLong(1), r.getInt(2), r.getLong(3), r.getDouble(4))).toSeq
     val pre = phase("1_pre_rebuild")
@@ -28,8 +28,6 @@ class VectorRebuildSpec extends AnyFunSuite {
     assert(pre == v34,
       "overlay serving state must equal the deletes-overlay logical index")
 
-    val (nCells, nRebuilt, nOverlay) = VectorOps.rebuildAudit(spark, d)
-      .getOrElse(fail("rebuild audit missing — v38 did not execute"))
     val trig = graft.SparkEntry.all("v36_ivf_compaction_trigger").fn(spark, d)
       .collect()
     assert(nCells == trig.count(_.getInt(5) == 1),
