@@ -10,22 +10,15 @@ object Bench {
     * floor). It runs at bench start, middle, and end; benchcmp divides
     * family totals by median(probe)/CALIB_REF_S (clamped ≥ 1) before
     * thresholding, so host inflation normalizes out and a RED that
-    * survives is a real regression. Both the full-run and cleared
-    * passes emit the samples ("calib" in the JSON records, a
-    * {"metric":"calib"} stdout line before the final total). */
+    * survives is a real regression. Every run emits the samples
+    * ("calib" in the detail record, a {"metric":"calib"} stdout line
+    * before the final total). */
   private val CalibRows = 1200L * 1000 * 1000
   private def calibProbe(spark: org.apache.spark.sql.SparkSession): Double = {
     val t0 = System.nanoTime()
     spark.range(0L, CalibRows, 1L, 32)
       .selectExpr("sum(id % 7 + (id >> 2))").collect()
     (System.nanoTime() - t0) / 1e9
-  }
-  /** One untimed probe first — the probe's own codegen/JIT compiles on
-    * first execution and would otherwise inflate the start sample. */
-  private def calibStart(spark: org.apache.spark.sql.SparkSession)
-      : scala.collection.mutable.Buffer[Double] = {
-    calibProbe(spark)
-    scala.collection.mutable.Buffer(calibProbe(spark))
   }
   private def calibJson(samples: Seq[Double]): String =
     samples.map(v => String.format(java.util.Locale.ROOT, "%.3f", v))
@@ -40,67 +33,6 @@ object Bench {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-
-  /** GRAFT_CLEARED_PASS=1 — the cleared-memo graded lane (round-16
-    * brief #2, finishing round-15 advice #1): 63/294 graded warms are
-    * memo/artifact READOUTS, so the full-run BENCH_r*.json increasingly
-    * measures scans; the per-family isolated cold column was the only
-    * automated guard on those queries' BUILD paths. This pass grades
-    * exactly the memo-served queries (SparkEntry.memoServed), calling
-    * Memos.clearAllKeepingSharedDeployments — every registered session
-    * memo except the g09/g10/g21 shared armed deployment (round-19
-    * brief #4: three readouts of ONE Derby lifetime; its build lands in
-    * g09, the first consumer in sorted order) — BEFORE each one, so every number is an uncached build (or, for
-    * g10/g21, a readout of the pass's shared deployment) in ONE
-    * full-run record. tools/bench_cleared.sh runs it with
-    * GRAFT_ARTIFACT_DIR pointed at a scratch dir, so cross-run
-    * artifact-backed builds (s29/s31/s32, t67's postings, v43's index)
-    * rebuild too — the forced-rebuild lane round-16 advice asked for
-    * (the --cold memo gate only sees their artifact-READ cold).
-    * Attribution note: within one pass the scratch artifact dir is NOT
-    * wiped between queries, so a shared artifact's build cost lands in
-    * its first consumer in sorted order — deterministic, hence
-    * comparable round over round. tools/benchcmp.py --cleared compares
-    * the committed bench_cleared.json builds against HEAD's and goes
-    * RED on the same thresholds as the memo-build gate. */
-  private def clearedPass(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, cpusJson: String): Unit = {
-    val qs = SparkEntry.all.toSeq
-      .filter { case (k, _) => SparkEntry.memoServed(k) }
-      .sortBy(_._1)
-    // untimed warmup (JIT/codegen/first-scan), then cleared so the
-    // first graded query still pays its own build
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    val calib = calibStart(spark)
-    val rows = qs.zipWithIndex.map { case ((name, q), i) =>
-      if (i == qs.size / 2) calib += calibProbe(spark)
-      // keep the SHARED armed deployment across the pass (round-19
-      // brief #4): g09/g10/g21 read one Derby lifetime — its build
-      // cost lands in g09 (first consumer in sorted order), the same
-      // attribution rule the un-wiped scratch artifact dir follows
-      Memos.clearAllKeepingSharedDeployments()
-      val t0 = System.nanoTime()
-      val ok = try { q.fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
-      val t = (System.nanoTime() - t0) / 1e9
-      name -> (t, ok)
-    }
-    calib += calibProbe(spark)
-    def ms(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
-    val detail = rows.map { case (k, (t, ok)) =>
-      jsonString(k) + ":{\"build\":" + (if (ok) ms(t) else "\"fail\"") + "}"
-    }.mkString("{", ",", "}")
-    val nFailed = rows.count(!_._2._2)
-    val total = rows.collect { case (_, (t, true)) => t }.sum
-    val line = s"""{"metric":"cleared","unit":"sec","mode":"cleared-memo-fullrun","queries":$detail,"calib":${calibJson(calib.toSeq)},"cpus":$cpusJson,"sf":"$sfDir"}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse("GRAFT_DETAIL_OUT",
-        s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_bench_cleared.json")),
-      line + "\n")
-    catch { case _: Throwable => println(line) }
-    println(s"""{"metric":"calib","s":${calibJson(calib.toSeq)},"cpus":$cpusJson,"unit":"sec"}""")
-    println(s"""{"metric":"cleared_total","value":${ms(total)},"unit":"sec","n_queries":${rows.size},"n_failed":$nFailed,"sf":"$sfDir"}""")
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -177,14 +109,14 @@ object Bench {
         .find(_.nonEmpty).getOrElse(Map.empty)
     } catch { case _: Throwable => Map.empty[String, Double] }
     Harness.withSession(cpus) { spark =>
-      if (sys.env.get("GRAFT_CLEARED_PASS").contains("1")) {
-        clearedPass(spark, sfDir, cpusJson); return
-      }
       // untimed warmup: absorbs JIT/codegen/first-scan costs so per-query
       // numbers measure the plan, not JVM cold start; sorted order keeps
       // runs comparable as the query set grows
       try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-      val calib = calibStart(spark)
+      // one untimed probe first: the probe's own codegen/JIT compiles on
+      // first execution and would otherwise inflate the start sample
+      calibProbe(spark)
+      val calib = scala.collection.mutable.Buffer(calibProbe(spark))
       // two passes PER FAMILY, families in sorted order: pass 1 is the
       // COLD cost (first materialization of any memoized subtree —
       // t03/t11/t16/v02/s06/e08 share cached frames), pass 2 the warm
@@ -332,7 +264,9 @@ object Bench {
       // headline. Failed passes report "fail" instead of a number.
       // "memo":true marks queries whose warm is a memo/artifact READOUT
       // (SparkEntry.memoServed) — benchcmp grades their COLD (the honest
-      // build) for regressions; a consumer comparing warms must skip them
+      // build: tools/bench_detail.sh gives each family JVM an empty
+      // artifact dir) for regressions; a consumer comparing warms must
+      // skip them
       def cw(k: String, c: (Double, Boolean), w: (Double, Boolean)): String = {
         def one(t: (Double, Boolean)) = if (t._2) ms(t._1) else "\"fail\""
         val memo = if (SparkEntry.memoServed(k)) ",\"memo\":true" else ""

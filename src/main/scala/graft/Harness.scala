@@ -40,21 +40,7 @@ object Harness {
       // owns it, which Harness already requires).
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("GRAFT_CODEGEN_CACHE", DefaultCodegenCache.toString))
-      // AQE coalescing posture: MEASURED AND REJECTED (round 20) —
-      // parallelismFirst=false + advisory 64m (Spark's doc-recommended
-      // bytes-targeted coalescing, guide §2.2) read neutral on t+v in
-      // isolation but regressed the full run 98.2 → 113.9 s at matched
-      // quiet probes: CPU-dense small-byte shuffles (p06/p14 common-
-      // neighbors tripled, 0.9 → 3.0 s) coalesce to ONE 64 MB-target
-      // partition and serialize onto one core. At fixture scale
-      // compute-per-byte dominates, exactly the case parallelismFirst
-      // exists for; the default (true) stands. Env knobs kept so a
-      // 100 TB deployment — where shuffles are IO-bound and the
-      // advisory size is the right dial — can flip it without a build.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_AQE_ADVISORY_BYTES", "64m"))
+      // AQE coalescing keeps Spark's defaults: see SCALE.md, round 20
       .config("spark.sql.session.timeZone", "UTC")
       // events fixture carries TIMESTAMP(NANOS) parquet timestamps; read
       // as raw longs and normalize in graft.tables.Tables.events

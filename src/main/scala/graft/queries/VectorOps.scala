@@ -84,7 +84,7 @@ object VectorOps {
     }.orderBy("a_id", "b_id")
 
   /** The exact all-pairs BUILD behind the cos_pairs artifact — the
-    * load-bearing plan (PlanDump/cleared-lane evidence), deliberately
+    * load-bearing plan (dumped by PlanDump, timed as v02's cold), deliberately
     * quadratic: it is the truth set, not the production path. */
   private[graft] def cosineNearDupPairsUncached(s: SparkSession, d: String): DataFrame = {
     val a = vecs(s, d).select(col("vec_id").as("a_id"), col("v").as("av"), col("nrm").as("an"))
@@ -1465,8 +1465,8 @@ object VectorOps {
 
   /** The index BUILD behind the ann_index artifact — v24's enc ⋈ cells
     * materialized once per corpus (composes the pq_cand64 and
-    * ivf_affinity artifacts, so a scratch-dir cleared pass rebuilds the
-    * whole chain). */
+    * ivf_affinity artifacts, so a cold call on an empty artifact dir
+    * rebuilds the whole chain). */
   private[graft] def annIndexUncached(s: SparkSession, d: String): DataFrame = {
     val enc = pqCand64(s, d)
       .groupBy("vec_id", "m").agg(min(struct(col("d2"), col("j"))).as("best"))

@@ -6,8 +6,8 @@ import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The session-memo facility (graft.Memos): release on clear, release
-  * of stopped sessions' entries on access, the two-phase clear, and the
-  * cleared lane's one kept memo. Tiny inline frames, plus one sf0.001
+  * of stopped sessions' entries on access, and the two-phase clear.
+  * Tiny inline frames, plus one sf0.001
   * stream source for a real scratch-dir memo (read from the repository's
   * copy of the fixture; tests run from the repository root). */
 class MemoSpec extends AnyFunSuite {
@@ -58,20 +58,5 @@ class MemoSpec extends AnyFunSuite {
     Memos.clearAll()
     assert(seenAllEmpty == Seq(true, true, true),
       "each release must run after every memo is already detached")
-  }
-
-  test("clearAllKeepingSharedDeployments keeps only the armed-deployment entry") {
-    val spark = TestSpark.session
-    import spark.implicits._
-    val f = Seq(1).toDF("x")
-    val own = Memos.memo[String, DataFrame]()
-    queries.Generated.armedFullCache(spark, ())((f, f, f))
-    own(spark, "k")(f)
-    Memos.clearAllKeepingSharedDeployments()
-    assert(queries.Generated.armedFullCache.get(spark, ()).isDefined)
-    val others = Memos.registered.filterNot(_ eq queries.Generated.armedFullCache)
-    assert(others.forall(_.isEmpty), "every other memo must be cleared")
-    Memos.clearAll()
-    assert(queries.Generated.armedFullCache.isEmpty)
   }
 }

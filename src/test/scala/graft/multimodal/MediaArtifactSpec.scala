@@ -5,7 +5,7 @@ import graft.queries.{FoldTagLock, MediaOps}
 
 /** Round-18 (round-17 verdict #4): m09's verified SimHash pair set and
   * m10's cluster labeling persist as cross-run artifacts — they were
-  * the two heaviest remaining cleared-lane builds (7.5 s / 8.9 s at
+  * the two heaviest remaining uncached builds (7.5 s / 8.9 s at
   * sf0.1), both pure functions of documents.parquet. Locks the fold
   * tags (m10's across ALL THREE contributing modules), the
   * served-from-disk contract, and m10 ≡ its uncached CC walk. */

@@ -6,9 +6,8 @@ import scala.collection.concurrent.TrieMap
 
 /** Cache-hygiene contract: every session memo in the query, operator
   * and multimodal modules is a [[graft.Memos.Memo]], so Memos.clearAll
-  * (Harness teardown) and Memos.clearAllKeepingSharedDeployments (Bench's
-  * cleared lane) reach it by construction — no per-module hook list to
-  * keep in step. What is left to guard is the escape hatch: a raw
+  * (Harness teardown) reaches it by construction — no per-module hook
+  * list to keep in step. What is left to guard is the escape hatch: a raw
   * TrieMap field in one of those modules is a memo no clear can see. */
 class CacheHygieneSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.session
@@ -80,28 +79,5 @@ class CacheHygieneSpec extends AnyFunSuite {
     Memos.clearAll()
     val leaked = Memos.registered.count(!_.isEmpty)
     assert(leaked == 0, s"$leaked registered memos not emptied by Memos.clearAll")
-  }
-
-  test("cleared-lane clear keeps the shared armed deployment; the full clear drops it") {
-    // g09/g10/g21 are three readouts of ONE armed Derby deployment — the
-    // cleared lane (which clears memos before EVERY query) must keep that
-    // triple across the pass so the build is graded once (in g09, first
-    // consumer in sorted order), while Harness teardown's clearAll still
-    // drops it. Dummy frames stand in for the deployment so this stays a
-    // metadata-only test.
-    import spark.implicits._
-    val dummy = Seq(1).toDF("x")
-    Generated.armedFullCache(spark, ())((dummy, dummy, dummy))
-    Generated.liveCache(spark, "hygiene-dummy")(dummy)
-    Memos.clearAllKeepingSharedDeployments()
-    assert(Generated.armedFullCache.get(spark, ()).isDefined,
-      "the shared deployment triple must survive the cleared-lane clear " +
-        "(g10/g21 read it; re-deploying would grade the same build thrice)")
-    assert(Generated.liveCache.isEmpty,
-      "single-query Derby lifetimes must still clear per query — their " +
-        "isolation is the semantics under grade (OCC/rollback/idempotency)")
-    Memos.clearAll()
-    assert(Generated.armedFullCache.isEmpty,
-      "the full clear (Harness teardown) must drop the deployment memo")
   }
 }

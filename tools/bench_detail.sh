@@ -18,6 +18,14 @@
 # adopted sums and refuses a record whose adopted block does not equal
 # its named sample or is not the median.
 #
+# FORCED REBUILDS: each family JVM gets its own empty GRAFT_ARTIFACT_DIR
+# (removed when it exits), so a query served from a cross-run artifact
+# pays the artifact's build in its cold pass and reads it in its warm
+# pass — every memo-flagged query's cold IS its build, and
+# tools/benchcmp.py --cold grades it per query. A shared artifact (or
+# family g's shared Derby deployment) is charged to its first consumer
+# in sorted order. ./artifacts is never read or written.
+#
 # Runs the families SEQUENTIALLY (two sbt servers collide on the
 # socket); ~10 min per sample at sf0.1, so ~30 min total at N=3.
 set -euo pipefail
@@ -33,13 +41,17 @@ FAMS="e g k m p q s t v"
 # queries) must not merge stale numbers into a record stamped with the
 # CURRENT src_hash — the merge globs detail_*.json below
 rm -f "$OUT"/detail_*.json
+ART=""
+trap 'rm -rf "$ART"' EXIT
 for s in $(seq 1 "$N"); do
   for f in $FAMS; do
     echo "== bench family $f sample $s/$N (sf=$SF) =="
-    SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_FAMILIES="$f" \
+    ART=$(mktemp -d "${TMPDIR:-/tmp}/graft_detail_art.XXXXXX")
+    SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_FAMILIES="$f" GRAFT_ARTIFACT_DIR="$ART" \
       GRAFT_DETAIL_OUT="$OUT/detail_${f}_s${s}.json" \
       sbt -batch "runMain graft.Bench" > "$OUT/bench_${f}_s${s}.log" 2>&1 \
       || { tail -20 "$OUT/bench_${f}_s${s}.log"; echo "family $f sample $s FAILED"; exit 1; }
+    rm -rf "$ART"
     grep -o '{"metric":"total".*' "$OUT/bench_${f}_s${s}.log" | tail -1
   done
 done
@@ -86,7 +98,9 @@ rec = {"metric": "detail", "unit": "sec",
        "mode": "isolated-family-jvm (tools/bench_detail.sh): one JVM per "
                "query family, so no cross-family cache pressure inflates "
                "warm numbers; the driver's BENCH_r*.json remains the "
-               "full-run record. Per family the MEDIAN-by-cold+warm-sum of "
+               "full-run record. Each family JVM starts on an empty "
+               "artifact dir, so an artifact-served query's cold is its "
+               "build. Per family the MEDIAN-by-cold+warm-sum of "
                f"{n} samples is adopted whole (never per-query mins); "
                "'samples' holds every sample's [cold_sum, warm_sum].",
        "src_hash": src_hash,

@@ -6,31 +6,22 @@ same automation that protects compile/test.
 
 Usage: python3 tools/benchcmp.py <gate_bench_log> [repo_root] [--retry <log>]
        python3 tools/benchcmp.py --cold <bench_detail.json> [repo_root]
-       python3 tools/benchcmp.py --cleared <bench_cleared.json> [repo_root]
 
 --cold: per-family COLD-sum compare of a fresh isolated bench_detail
 record against the one committed at HEAD (round-14 brief #6) — makes
 fresh-JVM cost regressions visible round over round. Family sums stay
 WARN-only (cold carries ingest/replay noise); per-QUERY memo-BUILD
-regressions go RED (round-15 verdict #2 / advice #1): for SESSION-memo
+regressions go RED (round-15 verdict #2 / advice #1): for memo-flagged
 queries the warm is a readout, so the COLD number IS the build — a
 build that doubles (>2x and >= +2.0s vs HEAD, on builds >= 0.5s)
 exits 1 and the gate refuses the snapshot; >1.5x and >= +1.0s warns.
 A deliberate build change re-records and commits both sides together,
 which is exactly the audit trail we want.
-SCOPE (round-16 advice): the "cold IS the build" premise holds only
-for session-memo queries. For cross-run-ARTIFACT and database-lifetime
-queries (s29/s31/s32, g07–g21, t02/t03/v02/v38/v43/...), the isolated
-cold is an artifact/Derby READ — a build regression in their replay
-pipelines never re-triggers here. Those build paths are gated by the
---cleared lane below, whose recording forces rebuilds.
-
---cleared: per-query BUILD compare of a fresh cleared-memo record
-(tools/bench_cleared.sh: Memos.clearAll() before every memo-served
-query, GRAFT_ARTIFACT_DIR on a scratch dir so artifact-backed builds
-actually rebuild) against the bench_cleared.json committed at HEAD —
-the forced-rebuild lane that closes the --cold scope gap. Same RED /
-WARN thresholds as the memo-build gate.
+SCOPE: tools/bench_detail.sh gives each family JVM an empty
+GRAFT_ARTIFACT_DIR, so a cross-run-ARTIFACT query (s29/s31/s32,
+t02/t03/v02/v43/...) builds its artifact in its cold pass, and family
+g's Derby deployments are built per JVM. A shared artifact or
+deployment is charged to its first consumer in sorted order.
 
 --retry: a second bench log (gate re-ran the offending families in a
 quieter window); each query takes the MIN of the two samples and the
@@ -78,12 +69,6 @@ MEMO_BUILD_FLOOR_S = 0.5
 # because only memo-flagged queries earned the WARN) — WARN-only,
 # floor 1.0 s: every flagged query owes a SCALE.md attribution line
 COLDQ_WARN_RATIO, COLDQ_WARN_ABS_S, COLDQ_FLOOR_S = 2.0, 1.0, 1.0
-# cleared-lane per-FAMILY build sums (round-17 advice #1: cost that
-# moves between queries within a family — attribution shifts when the
-# memo-served set changes — must stay visible round over round)
-CFAM_WARN_RATIO, CFAM_WARN_ABS_S = 1.5, 2.0
-CFAM_RED_RATIO, CFAM_RED_ABS_S = 2.0, 5.0
-CFAM_FLOOR_S = 2.0
 
 # Calibration probe (round-17 verdict #1): Bench times a deterministic
 # plan-trivial workload (1.2G-row integer range-sum, CPU-bound, no IO)
@@ -418,92 +403,6 @@ def cold_drift(detail_path, root):
     return 0
 
 
-def cleared_drift(detail_path, root):
-    """RED-gating compare of uncached-BUILD times (bench_cleared.json,
-    the cleared-memo lane) against the record committed at HEAD. Every
-    number on both sides is a from-scratch build — session memos cleared
-    before each query, cross-run artifacts on a scratch dir — so this is
-    the ONE place a regression in an artifact-backed or Derby-lifetime
-    build pipeline shows up in a graded, src_hash-bound record (the
-    --cold memo gate only ever sees those queries' artifact-read cold).
-    Thresholds match the memo-build gate; a deliberate build change
-    re-records and commits both sides together."""
-    try:
-        cur = json.load(open(detail_path))
-    except Exception as e:
-        print(f"cleared-drift: cannot read {detail_path}: {e}")
-        return 0
-    try:
-        head = json.loads(subprocess.run(
-            ["git", "-C", root, "show", "HEAD:bench_cleared.json"],
-            capture_output=True, text=True, check=True).stdout)
-    except Exception as e:
-        print(f"cleared-drift: no committed bench_cleared.json reference ({e}) — skipping")
-        return 0
-    if head.get("sf") != cur.get("sf"):
-        print(f"cleared-drift: SF mismatch ({cur.get('sf')} vs HEAD {head.get('sf')}) — skipping")
-        return 0
-    fac_cur, fac_head = record_factors(cur, head, "cleared-drift")
-    both = [n for n in sorted(set(head.get("queries", {})) & set(cur.get("queries", {})))
-            if isinstance(head["queries"][n].get("build"), (int, float))
-            and isinstance(cur["queries"][n].get("build"), (int, float))]
-    sums = {}
-    for n in both:
-        f = n[:1]
-        r, c = head["queries"][n]["build"], cur["queries"][n]["build"]
-        a, b = sums.get(f, (0.0, 0.0))
-        sums[f] = (a + r, b + c)
-    print(f"cleared-drift vs HEAD bench_cleared.json (sf {cur.get('sf')}, "
-          f"{len(both)} common builds): " +
-          ", ".join(f"{f}:{a:.1f}->{b:.1f}" for f, (a, b) in sorted(sums.items())))
-    reds = []
-    # per-FAMILY build sums (round-17 advice #1): a build regression in
-    # a shared pipeline can move between queries when the memo-served
-    # set changes and attribution shifts — per-query gates on common
-    # names never see cost that lands in a query with no HEAD
-    # reference, so the family SUM over common builds is gated too
-    for f, (a, b) in sorted(sums.items()):
-        an, bn = a / fac_head, b / fac_cur
-        if an < CFAM_FLOOR_S:
-            continue
-        if bn > CFAM_RED_RATIO * an and bn - an >= CFAM_RED_ABS_S:
-            reds.append(f"family {f} builds {a:.1f}s -> {b:.1f}s "
-                        f"(norm {an:.1f} -> {bn:.1f}, common builds; "
-                        f"family thresholds > {CFAM_RED_RATIO}x and >= "
-                        f"+{CFAM_RED_ABS_S}s)")
-        elif bn > CFAM_WARN_RATIO * an and bn - an >= CFAM_WARN_ABS_S:
-            print(f"cleared-family WARN: family {f} build sum {a:.1f}s -> "
-                  f"{b:.1f}s (norm {an:.1f} -> {bn:.1f}) — cost moved or grew "
-                  "within the family; attribute it in SCALE.md")
-    for n in both:
-        r = head["queries"][n]["build"] / fac_head
-        c = cur["queries"][n]["build"] / fac_cur
-        if r < MEMO_BUILD_FLOOR_S:
-            continue
-        if c > MEMO_RED_RATIO * r and c - r >= MEMO_RED_ABS_S:
-            reds.append(f"{n} build {r:.2f}s -> {c:.2f}s (calib-normalized)")
-        elif c > MEMO_WARN_RATIO * r and c - r >= MEMO_WARN_ABS_S:
-            print(f"cleared-build WARN: {n} build {r:.2f}s -> {c:.2f}s "
-                  f"(calib-normalized, > {MEMO_WARN_RATIO}x) — an uncached "
-                  "build path grew; check the pipeline (or re-record if host noise)")
-    new = [n for n in cur.get("queries", {}) if n not in head.get("queries", {})]
-    if new:
-        print(f"cleared-drift: {len(new)} builds with no HEAD reference "
-              f"(new this round): {', '.join(sorted(new))}")
-    for n in sorted(cur.get("queries", {})):
-        if cur["queries"][n].get("build") == "fail":
-            reds.append(f"{n} build FAILED in the cleared pass")
-    if reds:
-        for m in reds:
-            print(f"cleared-build RED: {m} (> {MEMO_RED_RATIO}x and >= "
-                  f"+{MEMO_RED_ABS_S}s) — an uncached build regressed; fix it, "
-                  "or re-record and commit both sides with the explaining change")
-        return 1
-    print("cleared-drift OK (threshold {}x and +{}s on builds >= {}s)".format(
-        MEMO_RED_RATIO, MEMO_RED_ABS_S, MEMO_BUILD_FLOOR_S))
-    return 0
-
-
 def parse_lines(text):
     """(total, sf, {family: ds list}) from bench stdout text."""
     total, sf, fams = None, None, {}
@@ -528,13 +427,13 @@ def common_subtotals(ref_ds, cur_ds):
 
 def main():
     args = list(sys.argv[1:])
-    if args and args[0] in ("--cold", "--cleared"):
+    if args and args[0] == "--cold":
         if len(args) < 2:
-            print(f"usage: benchcmp.py {args[0]} <record.json> [repo_root]")
+            print("usage: benchcmp.py --cold <bench_detail.json> [repo_root]")
             return 2
         root = args[2] if len(args) > 2 else os.path.dirname(
             os.path.dirname(os.path.abspath(__file__)))
-        return (cold_drift if args[0] == "--cold" else cleared_drift)(args[1], root)
+        return cold_drift(args[1], root)
     retry_path = None
     if "--retry" in args:
         i = args.index("--retry")

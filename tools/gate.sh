@@ -171,48 +171,11 @@ EOF
   # tripwire above. Family sums WARN only; a per-query MEMO-BUILD
   # regression (round-15 verdict #2: the warm readout hides the build)
   # flips the gate — a deliberate build change lands with its own
-  # explanation, an accidental one gets caught here.
+  # explanation, an accidental one gets caught here. bench_detail.sh
+  # gives each family JVM an empty artifact dir, so an artifact-backed
+  # query's cold is its forced rebuild.
   python3 tools/benchcmp.py --cold bench_detail.json \
     || { echo "GATE RED: memo-build regression (benchcmp --cold)"; exit 1; }
-
-  echo "== gate: cleared-memo lane (bench_cleared.json vs this tree) =="
-  # Round-16 brief #2: the cleared-memo record grades every memo-served
-  # query's UNCACHED build (session memos cleared, artifacts on scratch).
-  # The gate refuses a snapshot whose record (a) was captured on another
-  # source tree, (b) is at the wrong SF, or (c) misses a query the
-  # CURRENT bench_detail flags memo-served — then compares its builds
-  # against HEAD's (RED on the memo-build thresholds).
-  stale_cleared=$(python3 - "$SRC_HASH" "$DETAIL_SF" <<'EOF'
-import json, sys
-src_hash, want_sf = sys.argv[1], sys.argv[2]
-try:
-    rec = json.load(open("bench_cleared.json"))
-except Exception as e:
-    print(f"<unreadable: {e}>"); raise SystemExit
-bad = []
-if rec.get("src_hash") != src_hash:
-    bad.append(f"<src_hash {rec.get('src_hash')} != tree {src_hash}>")
-if rec.get("sf") != want_sf:
-    bad.append(f"<sf {rec.get('sf')} != {want_sf}>")
-if not rec.get("mode", "").startswith("cleared-memo-fullrun"):
-    bad.append("<mode-not-cleared>")
-# memo-flag source: the (already staleness-checked) bench_detail.json —
-# it reflects this tree's SparkEntry.memoServed
-det = json.load(open("bench_detail.json"))
-memos = [n for n, q in det.get("queries", {}).items() if q.get("memo")]
-bad += [f"<missing:{n}>" for n in memos if n not in rec.get("queries", {})]
-print(",".join(bad))
-EOF
-)
-  if [ -n "$stale_cleared" ]; then
-    echo "GATE RED: committed bench_cleared.json is STALE: [$stale_cleared]"
-    echo "  Re-record on this tree with tools/bench_cleared.sh and commit it in"
-    echo "  the same snapshot."
-    exit 1
-  fi
-  echo "bench_cleared.json matches this tree (all memo-served queries present)"
-  python3 tools/benchcmp.py --cleared bench_cleared.json \
-    || { echo "GATE RED: cleared-build regression (benchcmp --cleared)"; exit 1; }
 fi
 
 echo "GATE GREEN"
