@@ -1,19 +1,20 @@
 package graft.gen
 
-import graft.ddl.{Catalog, DdlParser}
+import graft.ddl.Catalog
 import graft.deps.Deps
-import graft.rules.Rule
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Whole-catalog generation pipeline — the Spark twin of
   * `run_engine.main()` (SURVEY.md §3.1).
   *
   * Differences by design (§7.1.3): instead of the sequential
-  * self-feeding ID_CACHE (run_engine.py:266), parents generate before
-  * children in FK-topo waves and each parent's keys are sampled from its
-  * *generated* frame — so within a wave every table is independent and
-  * order-free. At cluster scale each wave fans out across executors; the
-  * reference's one-table-at-a-time loop disappears.
+  * self-feeding ID_CACHE (run_engine.py:266), an FK value is the parent's
+  * own key expression evaluated inside the child's plan (generation is
+  * pure in (seed, table, id)), so no key is collected and nothing is
+  * carried from one table to the next. Tables still sink in FK-topo
+  * waves, parents before children — a constrained target needs its
+  * parents loaded first — and within a wave every table is independent
+  * and order-free.
   */
 object GeneratePipeline {
 
@@ -33,75 +34,57 @@ object GeneratePipeline {
     e.getClass.getName + ": " +
       Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("(no message)")
 
+  private def waves(catalog: Catalog): Seq[Seq[String]] =
+    Deps.waves(catalog.order.filterNot(skipTable), catalog.allFks)
+
+  /** Wave index of every generated (non-skipped) table. */
+  def waveOf(catalog: Catalog): Map[String, Int] =
+    waves(catalog).zipWithIndex.flatMap { case (ts, i) => ts.map(_ -> i) }.toMap
+
+  /** The wave rule: `parent` feeds `child`'s FK values only when both are
+    * generated and the parent's wave is STRICTLY earlier. A self-FK or a
+    * cycle-fallback edge shares a wave and gets the no-parent fallback. */
+  def precedes(waveOf: Map[String, Int], parent: String, child: String): Boolean =
+    waveOf.get(parent).exists(pw => waveOf.get(child).exists(pw < _))
+
   /** Generate every (non-skipped) table of the catalog and sink it.
     *
     * @param sink        called once per generated table (parquet writer,
     *                    JDBC appender, …). Invoked CONCURRENTLY for
     *                    tables of the same wave — must be thread-safe.
-    * @param sampleCap   FK parent-key sample size (TOP 1000 equivalent)
     * @return per-table results; failures are isolated per table exactly
     *         like the reference's per-table try/except (run_engine.py:268)
     */
   def run(spark: SparkSession, catalog: Catalog, rowCount: Long, seed: Long,
-      sink: (String, DataFrame) => Unit,
-      configRules: Map[String, Map[String, Rule]] = Map.empty,
-      sampleCap: Int = 1000): Seq[Result] = {
-
-    val targets = catalog.order.filterNot(skipTable)
-    val waves = Deps.waves(targets, catalog.allFks)
-    val parentKeys = scala.collection.mutable.Map.empty[String, Seq[Any]]
-    val results = scala.collection.mutable.ArrayBuffer.empty[Result]
+      sink: (String, DataFrame) => Unit): Seq[Result] = {
+    val wave = waveOf(catalog)
+    val parents: Generator.Parents = (child, parent) =>
+      Option.when(precedes(wave, parent, child))(catalog(parent))
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
 
-    waves.foreach { wave =>
-      // Tables within a wave are independent by construction (parents all
-      // live in EARLIER waves), so their generate+sink actions run
-      // concurrently — the driver submits parallel Spark jobs instead of
-      // a 77-step sequential loop (each job here is metadata-sized; the
-      // win is scheduling latency, and on a real cluster it is the
-      // difference between wave-depth and table-count round trips).
-      // parentKeys is snapshotted before the wave and mutated only after
-      // the barrier, so the futures never see a concurrent write.
-      val snapshot = parentKeys.toMap
-      val waveOut = Await.result(Future.sequence(wave.map { t =>
+    // Tables within a wave are independent (parents all live in EARLIER
+    // waves), so their generate+sink actions run concurrently — the
+    // driver submits parallel Spark jobs instead of a 77-step sequential
+    // loop; the barrier between waves keeps the sink order parent-first.
+    waves(catalog).flatMap { ts =>
+      Await.result(Future.sequence(ts.map { t =>
         Future {
           try {
-            val td = catalog(t)
-            val df = Generator.tableDf(spark, td, rowCount, seed,
-              snapshot, configRules.get(t))
-            sink(t, df)
-            // sample this table's PK for later waves (ID_CACHE equivalent,
-            // run_engine.py:142-153) from the SAME deterministic frame —
-            // generation is pure in (seed, table, id), so the sample plan
-            // shares the sinked plan's subtree
-            val keys = td.pk.headOption
-              .filter(td.schema.fieldNames.contains)
-              .map { pk =>
-                df.select(pk).limit(sampleCap).collect()
-                  .map(_.get(0)).toSeq.filter(_ != null)
-              }
-            (Result(t, rowCount, ok = true, None), keys.map(t -> _))
+            sink(t, Generator.tableDf(spark, catalog(t), rowCount, seed, parents))
+            Result(t, rowCount, ok = true, None)
           } catch {
-            case e: Throwable =>
-              (Result(t, 0, ok = false, Some(describe(e))), None)
+            case e: Throwable => Result(t, 0, ok = false, Some(describe(e)))
           }
         }
       }), Duration.Inf)
-      waveOut.foreach { case (res, keysOpt) =>
-        results += res
-        keysOpt.foreach { case (t, k) => parentKeys(t) = k }
-      }
     }
-    results.toSeq
   }
 
   /** Convenience: parquet sink under `outDir/<table>.parquet`. */
   def runToParquet(spark: SparkSession, catalog: Catalog, outDir: String,
-      rowCount: Long = 15, seed: Long = 42,
-      configRules: Map[String, Map[String, Rule]] = Map.empty): Seq[Result] =
+      rowCount: Long = 15, seed: Long = 42): Seq[Result] =
     run(spark, catalog, rowCount, seed,
-      (t, df) => df.write.mode("overwrite").parquet(s"$outDir/$t.parquet"),
-      configRules)
+      (t, df) => df.write.mode("overwrite").parquet(s"$outDir/$t.parquet"))
 }

@@ -29,40 +29,27 @@ object Generator {
   val SkipCols: Set[String] =
     Set("LogId", "CreateDate", "CreatedBy", "UpdateDate", "UpdatedBy")
 
+  /** FK values draw from a parent's first KeyCap ids — the reference's
+    * `SELECT TOP 1000` ID_CACHE (run_engine.py:142-153). */
+  val KeyCap = 1000
+
+  /** `(child, parent)` → the parent's TableDef when it supplies `child`'s
+    * FK values. Must be acyclic: a parent's own FKs resolve through it. */
+  type Parents = (String, String) => Option[TableDef]
+
   /** Generate `rowCount` deterministic rows for `td`.
     *
-    * @param parentKeys   FK parent → sampled key values (≤1000, broadcast
-    *                     as an array literal — the ID_CACHE equivalent)
-    * @param configRules  optional data_rules.json-style rules; when absent
-    *                     rules are inferred (KEYWORD_MAP + type defaults)
+    * @param parents  an FK onto a parent it yields takes the parent's
+    *                 first PK column, evaluated by this same generator at
+    *                 a hashed id below `min(rowCount, KeyCap)`; every other
+    *                 FK gets the type-driven fallback. Generation is pure
+    *                 in (seed, table, id), so that is exactly the value the
+    *                 parent's frame holds at that id.
     */
   def tableDf(spark: SparkSession, td: TableDef, rowCount: Long, seed: Long,
-      parentKeys: Map[String, Seq[Any]] = Map.empty,
-      configRules: Option[Map[String, Rule]] = None): DataFrame = {
-
-    val fkByCol: Map[String, String] = td.fks.map(f => f.column -> f.refTable).toMap
-
-    val cols: Seq[Column] = td.schema.fields.toIndexedSeq.map { f =>
-      val md = f.metadata
-      val identity = md.getBoolean(DdlParser.MetaIdentity)
-      val safe = md.getBoolean(DdlParser.MetaSafe)
-      val out: Column =
-        if (identity) (col("id") + 1).cast(f.dataType)
-        else if (!safe || SkipCols.contains(f.name)) lit(null).cast(f.dataType)
-        else {
-          val rule = configRules.flatMap(_.get(f.name)) match {
-            case Some(Rule.ForeignKey(p)) => Rule.ForeignKey(p)
-            case Some(r) if !fkByCol.contains(f.name) => r
-            // FK constraint always wins over a config rule (precedence
-            // run_engine.py:155-159)
-            case Some(_) => Rule.ForeignKey(fkByCol(f.name))
-            case None => RuleInference.infer(f, fkByCol.get(f.name))
-          }
-          val ctx = RuleCompiler.Ctx(seed, td.name, f.name, f, parentKeys)
-          finalize(RuleCompiler.compile(rule, ctx), ctx, rule)
-        }
-      out.as(f.name)
-    }
+      parents: Parents = (_, _) => None): DataFrame = {
+    val cols = td.schema.fields.toIndexedSeq.map(f =>
+      column(td, f, col("id"), rowCount, seed, parents).as(f.name))
     // right-size the id-space partitioning: ~100k rows per partition,
     // capped at the cluster parallelism — metadata-sized tables get one
     // task instead of defaultParallelism near-empty ones
@@ -71,6 +58,31 @@ object Generator {
       (rowCount + 99999) / 100000).toInt)
     spark.range(0, rowCount, 1, parts).select(cols: _*)
   }
+
+  private def alwaysNull(f: StructField): Boolean =
+    !f.metadata.getBoolean(DdlParser.MetaIdentity) &&
+      (!f.metadata.getBoolean(DdlParser.MetaSafe) || SkipCols.contains(f.name))
+
+  /** `td`'s first PK column, when it exists and is not always NULL. */
+  private def keyField(td: TableDef): Option[StructField] =
+    td.pk.headOption.flatMap(pk => td.schema.fields.find(_.name == pk)).filterNot(alwaysNull)
+
+  /** Column `f` of `td` at row `id`. */
+  private def column(td: TableDef, f: StructField, id: Column, rowCount: Long,
+      seed: Long, parents: Parents): Column =
+    if (f.metadata.getBoolean(DdlParser.MetaIdentity)) (id + 1).cast(f.dataType)
+    else if (alwaysNull(f)) lit(null).cast(f.dataType)
+    else {
+      val rule = RuleInference.infer(f, td.fks.findLast(_.column == f.name).map(_.refTable))
+      val ctx = RuleCompiler.Ctx(seed, td.name, f.name, f, id)
+      val parentKey = rule match {
+        case Rule.ForeignKey(p) =>
+          val at = RuleCompiler.keyIndex(ctx, math.min(rowCount, KeyCap.toLong))
+          parents(td.name, p).flatMap(pt => keyField(pt).map(column(pt, _, at, rowCount, seed, parents)))
+        case _ => None
+      }
+      finalize(parentKey.getOrElse(RuleCompiler.compile(rule, ctx)), ctx, rule)
+    }
 
   /** Does the rule emit a numeric value or all-digit string — i.e. can it
     * be coerced into a numeric column the way the reference coerces via

@@ -19,21 +19,24 @@ import org.apache.spark.sql.types._
   *
   * Scale: generation is embarrassingly parallel — `spark.range`
   * partitions the id space, every column is a codegen'd expression, no
-  * shuffle anywhere. FK sampling uses a broadcast array literal
-  * (≤1000 parent keys, = the reference's TOP 1000 ID_CACHE cap).
+  * shuffle anywhere. An FK value is the parent's own key expression at
+  * [[keyIndex]] (Generator fuses it into the child's plan), so no parent
+  * key is ever collected or shipped.
   */
 object RuleCompiler {
 
   /** Fixed epoch replacing `datetime.now()` for reproducibility. */
   val FixedEpochDay = "2026-01-01"
 
+  /** @param id the row id the column is evaluated at: `spark.range`'s
+    *           `id`, or a child's hashed index into a parent's ids */
   final case class Ctx(seed: Long, table: String, colName: String,
-      field: StructField, parentKeys: Map[String, Seq[Any]])
+      field: StructField, id: Column)
 
   // --- deterministic uniform primitives ---------------------------------
 
   private def h(c: Ctx, salt: Int): Column =
-    xxhash64(lit(c.seed), lit(c.table), lit(c.colName), lit(salt), col("id"))
+    xxhash64(lit(c.seed), lit(c.table), lit(c.colName), lit(salt), c.id)
 
   private val M = 1000000007L
   /** uniform double in [0,1) */
@@ -78,7 +81,7 @@ object RuleCompiler {
   /** md5-derived UUID-v4-format string (deterministic `uuid4`;
     * SURVEY.md §7.3 decision: built-in composition, no custom Expression). */
   def uuid4(c: Ctx): Column = {
-    val m = md5(concat_ws("|", lit(c.seed), lit(c.table), lit(c.colName), col("id")))
+    val m = md5(concat_ws("|", lit(c.seed), lit(c.table), lit(c.colName), c.id))
     concat(
       substring(m, 1, 8), lit("-"), substring(m, 9, 4), lit("-4"),
       substring(m, 14, 3), lit("-"), substring(m, 17, 4), lit("-"),
@@ -109,19 +112,18 @@ object RuleCompiler {
       lpad(randLong(c, 5, 0, 59).cast(StringType), 2, "0"), lit(":"),
       lpad(randLong(c, 6, 0, 59).cast(StringType), 2, "0"))
 
+  /** The parent id an FK column of `c` draws from: uniform over the
+    * parent's first `n` ids. */
+  def keyIndex(c: Ctx, n: Long): Column = pmod(h(c, 7), lit(n))
+
   /** Compile `rule` for the column described by `c`. Returns the raw
-    * generated value; Generator applies coercion/truncation/final cast. */
+    * generated value; Generator applies coercion/truncation/final cast.
+    * `ForeignKey` compiles to the no-parent fallback (run_engine.py:161-162);
+    * Generator substitutes the parent's key when one supplies it. */
   def compile(rule: Rule, c: Ctx): Column = rule match {
-    case ForeignKey(parent) =>
-      c.parentKeys.get(parent).filter(_.nonEmpty) match {
-        case Some(keys) =>
-          val arr = array(keys.map(lit): _*)
-          element_at(arr, (pmod(h(c, 7), lit(keys.size.toLong)) + 1).cast(IntegerType))
-        case None =>
-          // parent empty: type-driven fallback (run_engine.py:161-162)
-          if (c.field.metadata.getString(graft.ddl.DdlParser.MetaSqlType) == "uniqueidentifier") uuid4(c)
-          else randLong(c, 7, 1, 10)
-      }
+    case ForeignKey(_) =>
+      if (c.field.metadata.getString(graft.ddl.DdlParser.MetaSqlType) == "uniqueidentifier") uuid4(c)
+      else randLong(c, 7, 1, 10)
     case RandomInt(lo, hi) => randLong(c, 2, lo, hi)
     case PyFloat(rd, _, minV, maxV) =>
       val lo = minV.getOrElse(0d); val hi = maxV.getOrElse(10000d)

@@ -173,8 +173,7 @@ object JdbcRoundTrip {
       }
 
     // Generate + bulk-append (K1). Constraints are not armed, so the
-    // writes need no toggling and no ordering beyond the generator's own
-    // parent-key waves.
+    // writes need no toggling; the pipeline sinks in its FK waves anyway.
     // TrieMap: the sink runs concurrently for tables of the same wave
     val loaded = scala.collection.concurrent.TrieMap.empty[String, Long]
     val results = GeneratePipeline.run(spark, catalog, rowCount, seed, (t, df) => {
@@ -308,38 +307,32 @@ object JdbcRoundTrip {
     }
     val pkArmed: Map[String, Boolean] =
       targets.map(t => t -> DerbyDdl.addPkSql(catalog(t)).isDefined).toMap
-    val waveOf: Map[String, Int] =
-      graft.deps.Deps.waves(targets, catalog.allFks).zipWithIndex
-        .flatMap { case (ts, i) => ts.map(_ -> i) }.toMap
+    val waveOf = GeneratePipeline.waveOf(catalog)
     // all-or-crash, not tolerant: a refused FK on an empty schema is a
     // deploy bug. ARMABLE = the edges this posture can actually promise:
-    //  - parent deployed (a skipped/absent parent would make Derby reject
-    //    the ADD CONSTRAINT outright; auditReadback filters the same way)
+    //  - the generator's wave rule (`GeneratePipeline.precedes`): the
+    //    parent is deployed (Derby rejects an FK onto an absent table) in a
+    //    STRICTLY earlier wave (the child of a self-FK or cycle-fallback
+    //    edge gets synthetic values, and arming the edge would reject them)
     //  - parent's single-column PK armed AND it IS the referenced column
     //    (Derby validates FKs against a PK/unique constraint; the
-    //    generator samples child values from the parent's PK, so an FK
-    //    onto any other column has no value contract to enforce)
-    //  - parent in a STRICTLY earlier wave (a cycle-fallback or self-FK
-    //    parent lands in the same wave, where the generator has no parent
-    //    sample yet — arming such an edge would reject valid loads).
+    //    generator draws child values from the parent's first PK column,
+    //    so an FK onto any other column has no value contract to enforce).
     // Everything filtered here still gets the Spark-side left-anti audit.
-    val targetSet = targets.toSet
     val armable: Map[String, Seq[graft.ddl.Fk]] = targets.map(t =>
       t -> catalog(t).fks.filter(fk =>
-        targetSet.contains(fk.refTable) &&
-          pkArmed.getOrElse(fk.refTable, false) &&
-          catalog(fk.refTable).pk == Seq(fk.refColumn) &&
-          waveOf.get(fk.refTable).exists(pw => waveOf.get(t).exists(pw < _)))).toMap
+        GeneratePipeline.precedes(waveOf, fk.refTable, t) &&
+          pkArmed(fk.refTable) && catalog(fk.refTable).pk == Seq(fk.refColumn))).toMap
     val armFks = targets.flatMap(armable)
     JdbcSink.execute(target, armFks.map(DerbyDdl.addFkSql)).zip(armFks).foreach {
       case (err, fk) => err.foreach(e => sys.error(s"arm FK ${fk.table}->${fk.refTable} failed: $e"))
     }
     val fkArmed: Map[String, Int] = targets.map(t => t -> armable(t).size).toMap
 
-    // In-target edges the wave order CANNOT promise (self-FKs and
+    // In-target edges the wave rule CANNOT promise (self-FKs and
     // cycle-fallback same-wave edges — e.g. CariHesap.FaturaHesapId →
-    // CariHesap.Id): no parent sample exists when the child generates, so
-    // the generated value is synthetic garbage. The armed posture drops
+    // CariHesap.Id): the generator draws no parent key for them, so the
+    // generated value is synthetic garbage. The armed posture drops
     // those columns from the INSERT so they land as the DB default NULL —
     // the classic deferred-self-reference bulk pattern (a second UPDATE
     // pass would link them once all rows exist). Dropped from the
@@ -347,6 +340,7 @@ object JdbcRoundTrip {
     // binds a NULL StringType as CLOB, which Derby rejects on a VARCHAR
     // column (ERROR 22005). Non-nullable columns are left untouched (they
     // would fail the insert) and surface in the audit instead.
+    val targetSet = targets.toSet
     val deferredFks: Map[String, Seq[graft.ddl.Fk]] = targets.map { t =>
       val armed = armable(t).toSet
       t -> catalog(t).fks

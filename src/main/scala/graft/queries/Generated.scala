@@ -138,9 +138,8 @@ object Generated {
     * GeneratorSpec. */
   def generatedBanka(s: SparkSession, d: String): DataFrame = {
     val cat = catalog
-    val ulkeKeys = Generator.tableDf(s, cat("Ulke"), 15, 42)
-      .select("NumKod").limit(1000).collect().map(_.getString(0)).toSeq
-    Generator.tableDf(s, cat("Banka"), 15, 42, Map("Ulke" -> ulkeKeys))
+    Generator.tableDf(s, cat("Banka"), 15, 42,
+      (child, parent) => Option.when(child == "Banka" && parent == "Ulke")(cat("Ulke")))
       .orderBy("Id")
   }
 

@@ -2,8 +2,9 @@ package graft.queries
 
 import graft.streaming.EventStream
 import graft.tables.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.Memos
 
 /** Streaming operators on the graded surface: each query executes a REAL
@@ -1474,7 +1475,7 @@ object StreamOps {
     * visible and a redelivery re-stages from scratch (the earlier shape
     * appended both sides to shared dirs and marked afterwards; a crash
     * between the appends-write and the marker duplicated every U/I row
-    * on redelivery). O(|batch|) files per commit; readers glob the
+    * on redelivery). O(|batch|) files per commit; readers list the
     * committed dirs ([[cdcTombstones]]/[[cdcAppends]]).
     * Package-visible so CdcIngestSpec can replay a committed batch. */
   private[queries] def applyCdcBatch(s: SparkSession, root: java.nio.file.Path,
@@ -1491,22 +1492,27 @@ object StreamOps {
     }
   }
 
-  /** Union of every committed batch's tombstone keys. The explicit
-    * schema keeps an all-empty side readable (a 0-row batch write may
-    * land no parquet footers to infer from). */
+  /** Union of every committed batch's tombstone keys. */
   private[queries] def cdcTombstones(s: SparkSession,
       root: java.nio.file.Path): DataFrame =
-    s.read.schema(new org.apache.spark.sql.types.StructType()
-        .add("k", org.apache.spark.sql.types.LongType))
-      .parquet(s"$root/cdc_batch_*/tombs")
+    cdcLog(s, root, "tombs", new StructType().add("k", LongType))
 
   /** Union of every committed batch's append rows. */
   private[queries] def cdcAppends(s: SparkSession,
       root: java.nio.file.Path): DataFrame =
-    s.read.schema(new org.apache.spark.sql.types.StructType()
-        .add("k", org.apache.spark.sql.types.LongType)
-        .add("p", Tables.Dec))
-      .parquet(s"$root/cdc_batch_*/apnds")
+    cdcLog(s, root, "apnds", new StructType().add("k", LongType).add("p", Tables.Dec))
+
+  /** Subdir `sub` of every committed batch, read as explicit paths (Spark
+    * stats a lone glob path literally and logs a FileNotFoundException
+    * stack trace). The explicit schema keeps an all-empty side readable (a
+    * 0-row batch write may land no parquet footers to infer from). */
+  private def cdcLog(s: SparkSession, root: java.nio.file.Path, sub: String,
+      schema: StructType): DataFrame = {
+    val dirs = root.toFile.list().filter(_.startsWith("cdc_batch_")).sorted
+      .map(d => root.resolve(d).resolve(sub).toString)
+    if (dirs.isEmpty) s.createDataFrame(java.util.List.of[Row](), schema)
+    else s.read.schema(schema).parquet(dirs.toSeq: _*)
+  }
 
   /** Restart-from-checkpoint sessionization: the s01 plan killed
     * mid-stream and recovered. The fixture is split in event time at its

@@ -20,7 +20,7 @@ class FullCatalogSpec extends AnyFunSuite {
     assert(failed.isEmpty, s"failed tables: ${failed.map(r => r.table + ":" + r.error).mkString("; ")}")
 
     // FK integrity across waves for FKs whose parent was generated:
-    // child values must come from the parent sample (or be NULL)
+    // child values must be parent keys (or NULL)
     val cariHareket = frames("CariHareket")
     val cariHesap = frames("CariHesap")
     val fk = cat("CariHareket").fks.find(_.refTable == "CariHesap").get

@@ -1,5 +1,9 @@
 package graft.queries
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * redelivered micro-batch, commits are order-free (the read formula
   * reconstructs the same snapshot for any batch split), and the MoR
   * upsert decomposition (tombstone + append) is correct per op type.
+  * Reading the log logs no FileNotFoundException.
   */
 class CdcIngestSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.TestSpark.session
@@ -73,5 +78,55 @@ class CdcIngestSpec extends AnyFunSuite {
       assert(logRows() == (4L, 3L),
         s"stale staged rows leaked into the log: ${logRows()}")
     } finally StreamOps.rmrf(root)
+  }
+
+  test("with no committed batch the CDC log reads empty, in its schema") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cdc_empty")
+    try {
+      val tombs = StreamOps.cdcTombstones(spark, root)
+      val apnds = StreamOps.cdcAppends(spark, root)
+      assert(tombs.count() == 0 && apnds.count() == 0)
+      assert(tombs.columns.toSeq == Seq("k") && apnds.columns.toSeq == Seq("k", "p"))
+    } finally StreamOps.rmrf(root)
+  }
+
+  test("reading the CDC log logs no FileNotFoundException") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cdc_log")
+    try {
+      StreamOps.applyCdcBatch(spark, root, mkBatch(Seq(("D", 2L, null))), 0L)
+      StreamOps.applyCdcBatch(spark, root, mkBatch(Seq(("I", 7L, dec(1.50)))), 1L)
+      val logged = logEventsDuring {
+        assert(StreamOps.cdcTombstones(spark, root).count() == 1)
+        assert(StreamOps.cdcAppends(spark, root).count() == 1)
+      }
+      def fileNotFound(e: LogEvent): Boolean =
+        Iterator.iterate(e.getThrown)(_.getCause).takeWhile(_ != null)
+          .exists(_.isInstanceOf[java.io.FileNotFoundException]) ||
+          e.getMessage.getFormattedMessage.contains("FileNotFoundException")
+      val bad = logged.filter(fileNotFound)
+      assert(bad.isEmpty, bad.map(_.getMessage.getFormattedMessage).mkString("; "))
+    } finally StreamOps.rmrf(root)
+  }
+
+  /** Every log4j event the root logger passes while `body` runs. */
+  private def logEventsDuring(body: => Unit): Seq[LogEvent] = {
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]
+    val appender = new AbstractAppender("cdc-log-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(e.toImmutable)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, null, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    events.asScala.toSeq
   }
 }
