@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.state.StateStore
 
 /** Shared SparkSession + teardown for the library's entry points
   * (Verify, Bench, TimeQ, Dump): one place for the load-bearing session
@@ -62,7 +63,18 @@ object Harness {
       // temp dirs and persisted plans leak for the JVM's lifetime;
       // every session memo registers with Memos, so one clear reaches all
       Memos.clearAll()
-      spark.stop()
+      stop(spark)
     }
+  }
+
+  /** Stop `spark` after unloading this JVM's state store providers.
+    * Spark's state store maintenance thread outlives the session: with
+    * providers still loaded it keeps calling the stopped session's
+    * coordinator and logs an `Error doing maintenance` stack trace for
+    * every loaded provider on each maintenance pass. The providers are
+    * JVM-wide, so no stream may be running in another session. */
+  def stop(spark: SparkSession): Unit = {
+    StateStore.stop()
+    spark.stop()
   }
 }

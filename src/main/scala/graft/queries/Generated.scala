@@ -729,7 +729,7 @@ object Generated {
         .localCheckpoint() // pin BEFORE the temp JSONL is deleted
     } finally {
       // the frame is pinned, so the source file can go now
-      StreamOps.rmrf(dir)
+      graft.streaming.Replay.rmrf(dir)
     }
   }
 

@@ -7,7 +7,7 @@ package graft.queries
   * pipeline drifts from the real one), capturing each micro-batch's
   * stateOperators: operator name, rows in state, state memory, store
   * instance count. The table is what a volume-derived state-partition
-  * setting would be derived FROM; EventStream.StatePartitions (= 8)
+  * setting would be derived FROM; Replay.StatePartitions (= 8)
   * is the deliberate harness-wide value this evidence adjudicates.
   *
   * Usage: runMain graft.queries.StateProbe [sfDir] */

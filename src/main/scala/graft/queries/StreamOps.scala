@@ -1,15 +1,18 @@
 package graft.queries
 
-import graft.streaming.EventStream
+import graft.streaming.{DocStream, EventStream, Replay}
+import graft.streaming.Replay.{EachBatch, Memory, Parquet, rmrf}
 import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StructType}
 import graft.Memos
 
 /** Streaming operators on the graded surface: each query executes a REAL
-  * Structured Streaming job (parquet source → stateful/windowed plan →
-  * memory sink, drained synchronously) and returns its result table.
+  * Structured Streaming job (a parquet replay source → stateful/windowed
+  * plan → sink, drained synchronously by [[Replay.drain]]) and returns
+  * its result table.
   * The oracles state the same semantics in batch SQL — closed sessions
   * are exactly the batch sessions minus each user's final (still-open)
   * one, and finalized windows are plain tumbling buckets — so the
@@ -191,26 +194,21 @@ object StreamOps {
     * Scale: state per shard is two longs — thousands of shards cost
     * kilobytes; the per-batch sort is per shard per micro-batch (a
     * day's arrivals), never the corpus. */
-  def streamSequencePacking(s: SparkSession, d: String): DataFrame = {
-    import graft.streaming.DocStream
-    val (rows, nBatches, scratch) = DocStream.runDocOnce(
-      s, idSlicedDocStreamSource(s, d), "graft_stream_pack") { srcDf =>
-      import s.implicits._
-      srcDf.select(col("doc_id"),
-          TextOps.saltedBucket(col("doc_id"), ":shard", TextOps.NumShards.toLong)
-            .as("shard"),
-          (size(split(TextOps.norm(col("text")), " ")) + 1).cast("long").as("n_tok"))
-        .as[DocStream.PackIn]
-        .groupByKey(_.shard)
-        .flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
-          DocStream.packFn(TextOps.PackCtx))
-        .toDF()
-    }
-    try {
-      // a single-batch drain would never exercise the carried state
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+  def streamSequencePacking(s: SparkSession, d: String): DataFrame =
+    Replay.scratch("graft_stream_pack") { dir =>
+      val rows = docsToParquet(s, idSlicedDocStreamSource(s, d), dir) { srcDf =>
+        import s.implicits._
+        srcDf.select(col("doc_id"),
+            TextOps.saltedBucket(col("doc_id"), ":shard", TextOps.NumShards.toLong)
+              .as("shard"),
+            (size(split(TextOps.norm(col("text")), " ")) + 1).cast("long").as("n_tok"))
+          .as[DocStream.PackIn]
+          .groupByKey(_.shard)
+          .flatMapGroupsWithState(OutputMode.Append,
+            org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
+            DocStream.packFn(TextOps.PackCtx))
+          .toDF()
+      }
       val totals = rows.groupBy("shard")
         .agg(max("cum_after").as("shard_total"))
       rows.groupBy("shard", "seq_id")
@@ -222,9 +220,15 @@ object StreamOps {
             col("shard_total") - col("seq_id") * TextOps.PackCtx))
         .select("shard", "seq_id", "n_docs_started", "n_straddlers", "fill_tokens")
         .orderBy("shard", "seq_id")
-        .localCheckpoint() // pin BEFORE the sink scratch dir is deleted
-    } finally rmrf(java.nio.file.Paths.get(scratch))
-  }
+    }
+
+  /** Drain `plan` over a documents replay, one file per micro-batch,
+    * into a parquet sink under `dir` with its checkpoint beside it; the
+    * sink's rows. */
+  private def docsToParquet(s: SparkSession, sourceDir: String, dir: java.nio.file.Path)(
+      plan: DataFrame => DataFrame): DataFrame =
+    Replay.drain(s, sourceDir, DocStream.docSchema, Parquet(dir.resolve("out").toString),
+      checkpoint = Some(dir.resolve("cp").toString))(plan).out
 
   /** A TIME-SLICED 4-file snapshot of the events table: file i holds
     * the i-th quarter of the event-time range, and file mtimes ascend
@@ -304,14 +308,15 @@ object StreamOps {
     * losing a backfill is the classic streaming correctness bug, and
     * this query makes the loss an observable, graded number. */
   def streamLateAccounting(s: SparkSession, d: String): DataFrame = {
-    val (t, dropped) = EventStream.runAppendWithProgress(s, ev =>
+    val r = Replay.drain(s, lateSlicedStreamSource(s, d), EventStream.schema,
+      Memory("graft_stream_late_acct")) { ev =>
       ev.withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(count(lit(1)).as("n"))
-        .select(unix_micros(col("w.start")).as("w_start_us"), col("n")),
-      lateSlicedStreamSource(s, d), "graft_stream_late_acct")
-    lastLateDrop = Some(dropped)
-    t.orderBy("w_start_us")
+        .select(unix_micros(col("w.start")).as("w_start_us"), col("n"))
+    }
+    lastLateDrop = Some(r.droppedByWatermark)
+    r.out.orderBy("w_start_us")
   }
 
   /** A deliberately at-least-once copy of the fixture: every event
@@ -325,27 +330,20 @@ object StreamOps {
       ev.write.mode("append").parquet(dir.toString)
     }
 
-  /** Recursive delete of a scratch dir (snapshot sources, sink dirs). */
-  private[queries] def rmrf(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p)) {
-      val st = java.nio.file.Files.list(p)
-      try st.forEach(rmrf(_)) finally st.close()
-    }
-    java.nio.file.Files.deleteIfExists(p)
-  }
-
   /** Stateful sessionization through flatMapGroupsWithState; emits the
     * closed sessions (open per-user tails stay in state). */
   def streamSessions(s: SparkSession, d: String): DataFrame =
-    EventStream.runSessionsOnce(s, streamSource(s, d), "graft_stream_sessions")
-      .select("user_id", "sess_id", "n_events", "start_us", "end_us", "sum_value")
+    Replay.drain(s, streamSource(s, d), EventStream.schema,
+        Memory("graft_stream_sessions"), oneFilePerBatch = false)(EventStream.sessionize)
+      .out.select("user_id", "sess_id", "n_events", "start_us", "end_us", "sum_value")
       .orderBy("user_id", "sess_id")
 
   /** Watermarked tumbling windows, drained in Complete mode. */
   def streamTumbling(s: SparkSession, d: String): DataFrame =
-    EventStream.runOnce(s, EventStream.tumblingCounts, streamSource(s, d),
-        "graft_stream_tumbling")
-      .orderBy("w_start_epoch", "event_type")
+    Replay.drain(s, streamSource(s, d), EventStream.schema,
+        Memory("graft_stream_tumbling"), OutputMode.Complete, oneFilePerBatch = false)(
+        EventStream.tumblingCounts)
+      .out.orderBy("w_start_epoch", "event_type")
 
   /** Watermarked streaming dedup: the at-least-once (doubled) stream is
     * collapsed back to exactly-once by stateful dropDuplicates keyed on
@@ -356,11 +354,10 @@ object StreamOps {
     * duplicate was dropped (they equal the original fixture's counts —
     * the oracle — not 2×). */
   def streamDedup(s: SparkSession, d: String): DataFrame =
-    EventStream.runOnce(s,
-        ev => ev.withWatermark("ts", "10 minutes").dropDuplicates("event_id", "ts"),
-        dupStreamSource(s, d), "graft_stream_dedup",
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      .groupBy("event_type").agg(count(lit(1)).as("n"))
+    Replay.drain(s, dupStreamSource(s, d), EventStream.schema,
+        Memory("graft_stream_dedup"), oneFilePerBatch = false)(
+        _.withWatermark("ts", "10 minutes").dropDuplicates("event_id", "ts"))
+      .out.groupBy("event_type").agg(count(lit(1)).as("n"))
       .orderBy("event_type")
 
   /** Stream-static join: the unbounded event stream enriched against a
@@ -370,15 +367,15 @@ object StreamOps {
     * the dimension broadcasts once per micro-batch and the stream never
     * shuffles before the keyed aggregation. */
   def streamStaticJoin(s: SparkSession, d: String): DataFrame =
-    EventStream.runOnce(s,
-      ev => ev.join(
+    Replay.drain(s, streamSource(s, d), EventStream.schema,
+        Memory("graft_stream_static"), OutputMode.Complete, oneFilePerBatch = false) {
+      _.join(
           broadcast(Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"))),
           col("user_id") === col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"),
-          Tables.asDbl(sum(Tables.dec("value"))).as("sum_value")),
-      streamSource(s, d), "graft_stream_static")
-      .orderBy("c_mktsegment")
+          Tables.asDbl(sum(Tables.dec("value"))).as("sum_value"))
+    }.out.orderBy("c_mktsegment")
 
   /** s18 — the SCD2 temporal dimension (q44's shape, keyed by real
     * validity TIMESTAMPS) as one broadcastable frame: customers whose
@@ -420,13 +417,13 @@ object StreamOps {
     * late-arriving events STILL enrich correctly — event time, not
     * arrival time, selects the version. */
   def streamScd2AsOf(s: SparkSession, d: String): DataFrame =
-    EventStream.runOnce(s, ev =>
+    Replay.drain(s, streamSource(s, d), EventStream.schema,
+        Memory("graft_stream_scd2"), OutputMode.Complete, oneFilePerBatch = false) { ev =>
       asOfEnrich(scd2TimeDim(s, d))(ev)
         .groupBy("segment")
         .agg(count(lit(1)).as("n"),
-          Tables.asDbl(sum(Tables.dec("value"))).as("sum_value")),
-      streamSource(s, d), "graft_stream_scd2")
-      .orderBy("segment")
+          Tables.asDbl(sum(Tables.dec("value"))).as("sum_value"))
+    }.out.orderBy("segment")
 
   /** s19 — streaming bitmap-distinct maintenance, deliberately fed the
     * AT-LEAST-ONCE (doubled) replay source: k06's bitmap-word
@@ -443,8 +440,9 @@ object StreamOps {
     * space. */
   def streamBitmapDistinct(s: SparkSession, d: String): DataFrame =
     SketchOps.popcountDistinct(
-      EventStream.runOnce(s, ev => SketchOps.bitmapWords(ev),
-        dupStreamSource(s, d), "graft_stream_bitmap"))
+      Replay.drain(s, dupStreamSource(s, d), EventStream.schema,
+        Memory("graft_stream_bitmap"), OutputMode.Complete, oneFilePerBatch = false)(
+        SketchOps.bitmapWords).out)
 
   /** s24 — streaming HLL distinct maintenance fed the DOUBLED
     * at-least-once replay: k10's register sketch maintained in-stream
@@ -459,9 +457,10 @@ object StreamOps {
     * sketch must land on the exactly-once batch estimate bit for bit. */
   def streamHllDistinct(s: SparkSession, d: String): DataFrame =
     SketchOps.hllEstimate(s, Tables.events(s, d),
-      EventStream.runOnce(s, ev => SketchOps.hllRho(ev)
-          .groupBy("grp", "idx").agg(max("rho").as("reg")),
-        dupStreamSource(s, d), "graft_stream_hll")
+      Replay.drain(s, dupStreamSource(s, d), EventStream.schema,
+          Memory("graft_stream_hll"), OutputMode.Complete, oneFilePerBatch = false) {
+        ev => SketchOps.hllRho(ev).groupBy("grp", "idx").agg(max("rho").as("reg"))
+      }.out
         // pin: the estimator references the register frame twice, and two
         // readings of the same memory-sink view self-conflict at resolve
         .localCheckpoint())
@@ -479,12 +478,12 @@ object StreamOps {
     * reading the continuously-maintained daily frame. */
   def streamCusumDrift(s: SparkSession, d: String): DataFrame =
     EventOps.cusumOn( // cusumOn already orders by event_type
-      EventStream.runOnce(s, ev => ev
-          .withColumn("day", expr("unix_micros(ts) div 86400000000"))
+      Replay.drain(s, streamSource(s, d), EventStream.schema,
+          Memory("graft_stream_cusum"), OutputMode.Complete, oneFilePerBatch = false) {
+        _.withColumn("day", expr("unix_micros(ts) div 86400000000"))
           .withColumn("cents", (Tables.dec(col("value")) * 100).cast("long"))
-          .groupBy("event_type", "day").agg(sum("cents").as("x")),
-        streamSource(s, d), "graft_stream_cusum")
-        .localCheckpoint()) // pin the drained sink before the fold re-reads it
+          .groupBy("event_type", "day").agg(sum("cents").as("x"))
+      }.out.localCheckpoint()) // pin the drained sink before the fold re-reads it
 
   /** Stream-stream self-join with an event-time interval: each click
     * joined to the same user's purchases within the following 30 minutes
@@ -496,7 +495,8 @@ object StreamOps {
     * stream-stream joins support); the per-user aggregation over the
     * drained sink then summarizes them, like s03's post-drain check. */
   def streamStreamJoin(s: SparkSession, d: String): DataFrame =
-    EventStream.runOnce(s, ev => {
+    Replay.drain(s, streamSource(s, d), EventStream.schema,
+        Memory("graft_stream_ss"), oneFilePerBatch = false) { ev =>
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("ts").as("c_ts"), col("event_id").as("c_id"))
         .withWatermark("c_ts", "30 minutes")
@@ -508,8 +508,7 @@ object StreamOps {
         col("user_id") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("interval 30 minutes"))
-    }, streamSource(s, d), "graft_stream_ss",
-      org.apache.spark.sql.streaming.OutputMode.Append)
+    }.out
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_pairs"), countDistinct(col("p_id")).as("n_purchases"))
       .orderBy("user_id")
@@ -532,7 +531,8 @@ object StreamOps {
     * per key; the watermark is what EVICTS it — an outer join without
     * the time bound would hold every unmatched click forever. */
   def streamLeftOuterJoin(s: SparkSession, d: String): DataFrame = {
-    val (raw, _) = EventStream.runAppendWithProgress(s, ev => {
+    val raw = Replay.drain(s, timeSlicedStreamSource(s, d), EventStream.schema,
+        Memory("graft_stream_lo")) { ev =>
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("ts").as("c_ts"), col("event_id").as("c_id"))
         .withWatermark("c_ts", "30 minutes")
@@ -545,7 +545,7 @@ object StreamOps {
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("interval 30 minutes"),
         "left_outer")
-    }, timeSlicedStreamSource(s, d), "graft_stream_lo")
+    }.out
     // the GLOBAL watermark is the MIN over both streams' watermarks
     // (each side tracks its own max event time − 30 min), so the
     // provably-final region derives from the EARLIER of the two side
@@ -580,13 +580,14 @@ object StreamOps {
     * the watermark evicts closed ones; sums stay in exact decimal
     * before the final double cast (s01's discipline). */
   def streamSessionWindow(s: SparkSession, d: String): DataFrame =
-    EventStream.runOnce(s, ev =>
-      ev.withWatermark("ts", "30 minutes")
+    Replay.drain(s, streamSource(s, d), EventStream.schema,
+        Memory("graft_stream_sesswin"), OutputMode.Complete, oneFilePerBatch = false) {
+      _.withWatermark("ts", "30 minutes")
         .groupBy(col("user_id"),
           session_window(col("ts"), "30 minutes").as("w"))
         .agg(count(lit(1)).as("n_events"),
-          Tables.asDbl(sum(Tables.dec("value"))).as("sum_value")),
-      streamSource(s, d), "graft_stream_sesswin")
+          Tables.asDbl(sum(Tables.dec("value"))).as("sum_value"))
+    }.out
       .select(col("user_id"),
         unix_micros(col("w.start")).as("start_us"),
         (unix_micros(col("w.end")) - lit(EventStream.GapUs)).as("end_us"),
@@ -607,19 +608,12 @@ object StreamOps {
     * and per-arrival comparisons) proportional to genuine near-dup
     * density — the 16-bit predecessor saturated its 32/32/64 buckets
     * and compared each arrival against O(n/32) prior docs. */
-  def streamNearDup(s: SparkSession, d: String): DataFrame = {
-    val (pairs, nBatches, scratch) = graft.streaming.DocStream.runNearDupOnce(
-      s, docStreamSource(s, d), "graft_stream_neardup")
-    try {
-      // the incremental claim is asserted, not assumed: a single-batch
-      // drain would never exercise the state-vs-arrivals comparison
-      // path (inside the try so a failure still reclaims the scratch)
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-      pairs.select("a_id", "b_id", "hamming")
+  def streamNearDup(s: SparkSession, d: String): DataFrame =
+    Replay.scratch("graft_stream_neardup") { dir =>
+      docsToParquet(s, docStreamSource(s, d), dir)(DocStream.nearDups)
+        .select("a_id", "b_id", "hamming")
         .orderBy("a_id", "b_id")
-        .localCheckpoint() // pin BEFORE the sink scratch dir is deleted
-    } finally rmrf(java.nio.file.Paths.get(scratch))
-  }
+    }
 
   /** Streaming benchmark decontamination — t19 run the way a
     * continuously-ingesting pipeline runs it: each micro-batch of
@@ -639,24 +633,21 @@ object StreamOps {
     val bench = TextOps.wordGramIds(s, d, 8)
       .filter(col("doc_id") < 50)
       .select(col("gid"), col("doc_id").as("b_id"))
-    val (matches, nBatches, scratch) = graft.streaming.DocStream.runDocOnce(
-      s, docStreamSource(s, d), "graft_stream_decontam") { src =>
+    Replay.scratch("graft_stream_decontam") { dir =>
+      docsToParquet(s, docStreamSource(s, d), dir) { src =>
         TextOps.explodeGramIds(src.filter(col("doc_id") >= 50), 8)
           .join(broadcast(bench), "gid")
           .select(col("doc_id"), col("gid"), col("b_id"))
       }
-    try {
-      // per-doc grams are NOT pre-deduplicated in the stream (a
-      // stateful distinct would need a watermark for nothing): the
-      // countDistinct aggregates collapse repeats, so the result
-      // still equals t19's distinct-gram join exactly
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-      matches.groupBy("doc_id")
+        // per-doc grams are NOT pre-deduplicated in the stream (a
+        // stateful distinct would need a watermark for nothing): the
+        // countDistinct aggregates collapse repeats, so the result
+        // still equals t19's distinct-gram join exactly
+        .groupBy("doc_id")
         .agg(countDistinct(col("gid")).as("n_hits"),
           countDistinct(col("b_id")).as("n_bench_docs"))
         .orderBy("doc_id")
-        .localCheckpoint() // pin BEFORE the sink scratch dir is deleted
-    } finally rmrf(java.nio.file.Paths.get(scratch))
+    }
   }
 
   /** In-stream quality gate — t42's Gopher stop-word rule applied at
@@ -671,16 +662,13 @@ object StreamOps {
     * tops out at one distinct check word — t42 reports the real flag). */
   def streamQualityGate(s: SparkSession, d: String): DataFrame = {
     val gopherArr = array(TextOps.GopherWords.map(lit): _*)
-    val (flags, nBatches, scratch) = graft.streaming.DocStream.runDocOnce(
-      s, docStreamSource(s, d), "graft_stream_qgate") { src =>
-        src.select(col("doc_id"), col("source"),
+    Replay.scratch("graft_stream_qgate") { dir =>
+      docsToParquet(s, docStreamSource(s, d), dir) {
+        _.select(col("doc_id"), col("source"),
           size(array_intersect(
             array_distinct(split(TextOps.norm(col("text")), " ")), gopherArr))
             .as("n_gopher"))
       }
-    try {
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-      flags
         .groupBy("source")
         .agg(
           sum(when(col("n_gopher") >= 1, 1L).otherwise(0L)).as("n_admitted"),
@@ -689,8 +677,7 @@ object StreamOps {
           round(col("n_admitted").cast("double") /
             (col("n_admitted") + col("n_rejected")).cast("double"), 6))
         .orderBy("source")
-        .localCheckpoint()
-    } finally rmrf(java.nio.file.Paths.get(scratch))
+    }
   }
 
   /** Streaming CDC chunk census — m06's storage-dedup view computed AT
@@ -709,8 +696,8 @@ object StreamOps {
   def streamChunkCensus(s: SparkSession, d: String): DataFrame = {
     import graft.multimodal.Multimodal
     import s.implicits._
-    val (chunks, nBatches, scratch) = graft.streaming.DocStream.runDocOnce(
-      s, docStreamSource(s, d), "graft_stream_chunk") { src =>
+    Replay.scratch("graft_stream_chunk") { dir =>
+      docsToParquet(s, docStreamSource(s, d), dir) { src =>
         Multimodal.chunkMedia(src.select(
             col("doc_id").as("media_id"),
             when(pmod(col("doc_id"), lit(3)) === 0, "image")
@@ -721,9 +708,7 @@ object StreamOps {
           .as[Multimodal.MediaRow]).toDF()
           .select("kind", "chunk_len", "chunk_md5")
       }
-    try {
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
-      chunks.groupBy("kind", "chunk_md5", "chunk_len")
+        .groupBy("kind", "chunk_md5", "chunk_len")
         .agg(count(lit(1)).as("n_copies"))
         .groupBy("kind")
         .agg(sum(col("n_copies")).as("n_chunks"),
@@ -735,8 +720,7 @@ object StreamOps {
           round(col("unique_bytes").cast("double") /
             col("sum_bytes").cast("double"), 6).as("dedup_ratio"))
         .orderBy("kind")
-        .localCheckpoint()
-    } finally rmrf(java.nio.file.Paths.get(scratch))
+    }
   }
 
   /** Streaming semantic decontamination — v16 run AT INGEST: the
@@ -755,21 +739,16 @@ object StreamOps {
     // the frozen suite: localCheckpoint so four micro-batches read a
     // materialized 30-row frame, not four re-derivations
     val bench = VectorOps.benchVectors(s, d).localCheckpoint()
-    val scratch = java.nio.file.Files.createTempDirectory("graft_stream_sem")
-    try {
-      val partials = scratch.resolve("scores").toString
-      val nBatches = graft.streaming.DocStream.runSourceForeachBatch(
-        s, embStreamSource(s, d), graft.streaming.DocStream.embSchema,
-        (batch, _) =>
-          VectorOps.semanticScoreAgainst(
-            VectorOps.withVecNorm(batch).filter(col("vec_id") % 17 =!= 0), bench)
-            .write.mode("append").parquet(partials))
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+    Replay.scratch("graft_stream_sem") { dir =>
+      val partials = dir.resolve("scores").toString
+      Replay.drain(s, embStreamSource(s, d), DocStream.embSchema, EachBatch((batch, _) =>
+        VectorOps.semanticScoreAgainst(
+          VectorOps.withVecNorm(batch).filter(col("vec_id") % 17 =!= 0), bench)
+          .write.mode("append").parquet(partials)))(identity)
       s.read.parquet(partials)
         .select("vec_id", "max_cos", "n_hits", "contaminated")
         .orderBy("vec_id")
-        .localCheckpoint() // pin before the scratch dir is deleted
-    } finally rmrf(scratch)
+    }
   }
 
   /** Streaming gram-index maintenance — the EXACT-index twin of s12's
@@ -784,23 +763,18 @@ object StreamOps {
     * (one row per (doc, gram), no cross-doc aggregation). Graded as the
     * per-doc index summary (distinct-gram count + gid range) against
     * the batch gram chain's oracle. */
-  def streamIndexMaintenance(s: SparkSession, d: String): DataFrame = {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_stream_gidx")
-    try {
-      val partials = scratch.resolve("index").toString
-      val nBatches = graft.streaming.DocStream.runDocForeachBatch(
-        s, docStreamSource(s, d), (batch, _) =>
-          TextOps.explodeGramIds(batch, 8).distinct()
-            .write.mode("append").parquet(partials))
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+  def streamIndexMaintenance(s: SparkSession, d: String): DataFrame =
+    Replay.scratch("graft_stream_gidx") { dir =>
+      val partials = dir.resolve("index").toString
+      Replay.drain(s, docStreamSource(s, d), DocStream.docSchema, EachBatch((batch, _) =>
+        TextOps.explodeGramIds(batch, 8).distinct()
+          .write.mode("append").parquet(partials)))(identity)
       s.read.parquet(partials)
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_grams"),
           min(col("gid")).as("min_gid"), max(col("gid")).as("max_gid"))
         .orderBy("doc_id")
-        .localCheckpoint() // pin before the scratch dir is deleted
-    } finally rmrf(scratch)
-  }
+    }
 
   /** Streaming per-source quota — t56's domain cap maintained as
     * bounded state over the arriving document stream: each source's
@@ -815,19 +789,15 @@ object StreamOps {
     * State: K (id, chars) pairs per source — bounded by construction;
     * the last-snapshot pick is a max(seq) window over the
     * |batches|×|sources|×K drained rows, metadata scale. */
-  def streamSourceQuota(s: SparkSession, d: String): DataFrame = {
-    val (rows, nBatches, scratch) = graft.streaming.DocStream.runSourceQuotaOnce(
-      s, docStreamSource(s, d), TextOps.SourceCap, "graft_stream_quota")
-    try {
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+  def streamSourceQuota(s: SparkSession, d: String): DataFrame =
+    Replay.scratch("graft_stream_quota") { dir =>
       val w = org.apache.spark.sql.expressions.Window.partitionBy("source")
-      rows.withColumn("mx", max(col("seq")).over(w))
+      docsToParquet(s, docStreamSource(s, d), dir)(DocStream.sourceQuota(TextOps.SourceCap))
+        .withColumn("mx", max(col("seq")).over(w))
         .filter(col("seq") === col("mx"))
         .select("source", "rk", "doc_id", "n_chars")
         .orderBy("source", "rk")
-        .localCheckpoint() // pin BEFORE the sink scratch dir is deleted
-    } finally rmrf(java.nio.file.Paths.get(scratch))
-  }
+    }
 
   /** Streaming last-touch attribution — e19's stateful twin, and the
     * one streaming query whose state must CARRY ACROSS MICRO-BATCHES in
@@ -840,16 +810,13 @@ object StreamOps {
     * oracle exactly — window-carried batch semantics ≡ state-carried
     * streaming semantics. State is |users|-bounded (one small case
     * class each; production adds the semantically-free 7-day TTL). */
-  def streamAttribution(s: SparkSession, d: String): DataFrame = {
-    val (rows, nBatches) = EventStream.runAttributionOnce(
-      s, timeSlicedStreamSource(s, d), "graft_stream_attrib")
-    require(nBatches >= 4,
-      s"expected the 4 time-sliced micro-batches to replay, got $nBatches")
-    rows.groupBy("channel")
+  def streamAttribution(s: SparkSession, d: String): DataFrame =
+    Replay.drain(s, timeSlicedStreamSource(s, d), EventStream.schema,
+        Memory("graft_stream_attrib"))(EventStream.attribute)
+      .out.groupBy("channel")
       .agg(count(lit(1)).as("n_purchases"),
         Tables.asDbl(sum(Tables.dec(col("value")))).as("attributed_value"))
       .orderBy("channel")
-  }
 
   /** Streaming retrieval scoring — t48's TF-IDF scorer run AT INGEST:
     * the idf model trains ONCE batch-side from the corpus snapshot (the
@@ -864,20 +831,16 @@ object StreamOps {
     * reindex-from-snapshot scores. */
   def streamRetrievalScore(s: SparkSession, d: String): DataFrame = {
     val idf = TextOps.tfidfIdf(s, d).localCheckpoint()
-    val scratch = java.nio.file.Files.createTempDirectory("graft_stream_retr")
-    try {
-      val partials = scratch.resolve("scores").toString
-      val nBatches = graft.streaming.DocStream.runDocForeachBatch(
-        s, docStreamSource(s, d), (batch, _) =>
-          TextOps.tfidfScore(batch, idf)
-            .write.mode("append").parquet(partials))
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+    Replay.scratch("graft_stream_retr") { dir =>
+      val partials = dir.resolve("scores").toString
+      Replay.drain(s, docStreamSource(s, d), DocStream.docSchema, EachBatch((batch, _) =>
+        TextOps.tfidfScore(batch, idf)
+          .write.mode("append").parquet(partials)))(identity)
       s.read.parquet(partials)
         .select(col("doc_id"), col("n_terms"),
           round(col("scoreq").cast("double") / 1e6, 6).as("score"))
         .orderBy("doc_id")
-        .localCheckpoint() // pin before the scratch dir is deleted
-    } finally rmrf(scratch)
+    }
   }
 
   /** Streaming sketch maintenance — t46's mergeability property run
@@ -889,26 +852,21 @@ object StreamOps {
     * can be maintained incrementally at ingest — no reprocessing, no
     * distinct-gram state, state per source = 16 longs per batch row.
     * SketchMergeSpec proves the algebra; this proves the pipeline. */
-  def streamSketchMaintenance(s: SparkSession, d: String): DataFrame = {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_stream_sketch")
-    try {
-      val partials = scratch.resolve("partials").toString
-      val nBatches = graft.streaming.DocStream.runDocForeachBatch(
-        s, docStreamSource(s, d), (batch, id) => {
-          val sg = TextOps.explodeGramIds(batch, 8)
-            .join(batch.select("doc_id", "source"), "doc_id")
-            .select("source", "gid")
-          TextOps.gramSketch(sg).withColumn("batch_id", lit(id))
-            .write.mode("append").parquet(partials)
-        })
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+  def streamSketchMaintenance(s: SparkSession, d: String): DataFrame =
+    Replay.scratch("graft_stream_sketch") { dir =>
+      val partials = dir.resolve("partials").toString
+      Replay.drain(s, docStreamSource(s, d), DocStream.docSchema, EachBatch { (batch, id) =>
+        val sg = TextOps.explodeGramIds(batch, 8)
+          .join(batch.select("doc_id", "source"), "doc_id")
+          .select("source", "gid")
+        TextOps.gramSketch(sg).withColumn("batch_id", lit(id))
+          .write.mode("append").parquet(partials)
+      })(identity)
       val mins = (0 until TextOps.NumHashes).map(j => min(col(s"mh$j")).as(s"mh$j"))
       s.read.parquet(partials)
         .groupBy("source").agg(mins.head, mins.tail: _*)
         .orderBy("source")
-        .localCheckpoint() // pin before the scratch dir is deleted
-    } finally rmrf(scratch)
-  }
+    }
 
   /** Streaming ETL into a LIVE relational database — the reference's
     * flagship sink (JDBC bulk append) fed by a stream: each micro-batch
@@ -930,12 +888,9 @@ object StreamOps {
       JdbcSink.execute(target, Seq(
         """CREATE TABLE "events_sink" ("event_id" BIGINT, "event_type" VARCHAR(50), "value" DOUBLE)"""))
         .head.foreach(e => sys.error(s"create events_sink failed: $e"))
-      val nBatches = EventStream.runForeachBatch(s, multiFileStreamSource(s, d), (batch, _) =>
+      Replay.drain(s, multiFileStreamSource(s, d), EventStream.schema, EachBatch((batch, _) =>
         batch.select(col("event_id"), col("event_type"), col("value"))
-          .write.mode("append").jdbc(url, "\"events_sink\"", JdbcSink.props(target)))
-      // the multi-batch claim is asserted, not assumed — a single-batch
-      // drain would prove nothing about per-batch append boundaries
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+          .write.mode("append").jdbc(url, "\"events_sink\"", JdbcSink.props(target))))(identity)
       s.read.jdbc(url, "\"events_sink\"", JdbcSink.props(target))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), Tables.asDbl(sum(Tables.dec("value"))).as("sum_value"))
@@ -960,20 +915,16 @@ object StreamOps {
     * At 100 TB/day this is the materialized-view ingest loop: refresh
     * cost |batch| + |view| per batch, snapshot never rescanned, a retry
     * safely refused by the marker. */
-  def streamViewMaintenance(s: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_view_maint")
-    try {
-      val nBatches = EventStream.runForeachBatch(s, multiFileStreamSource(s, d),
-        EventStream.schema, (batch, id) => applyViewDelta(s, root, batch, id),
-        checkpointDir = Some(root.resolve("cp").toString))
-      require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+  def streamViewMaintenance(s: SparkSession, d: String): DataFrame =
+    Replay.scratch("graft_view_maint") { root =>
+      Replay.drain(s, multiFileStreamSource(s, d), EventStream.schema,
+        EachBatch((batch, id) => applyViewDelta(s, root, batch, id)),
+        checkpoint = Some(root.resolve("cp").toString))(identity)
       s.read.parquet(root.resolve("view").toString)
         .orderBy(col("sum_value").desc, col("user_id").asc).limit(10)
         .select(col("user_id"), col("n_events"),
           Tables.asDbl(col("sum_value")).as("sum_value"))
-        .localCheckpoint() // materialize before the scratch dir dies
-    } finally rmrf(root)
-  }
+    }
 
   /** One exactly-once view refresh: skip if this batch's marker exists
     * (the g15 refusal), else merge the batch's partial aggregate into
@@ -1033,9 +984,8 @@ object StreamOps {
     * At 100 TB this is the lakehouse CDC ingest loop: commit cost
     * O(|delta|), replay-safe under driver restart, compaction deferred
     * to q57/q59's schedule. */
-  def streamCdcIngest(s: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_cdc")
-    try {
+  def streamCdcIngest(s: SparkSession, d: String): DataFrame =
+    Replay.scratch("graft_stream_cdc") { root =>
       val cur = Tables.orders(s, d)
         .select(col("o_orderkey").as("k"), Tables.dec(col("o_totalprice")).as("p"))
       val baseDir = root.resolve("base")
@@ -1051,10 +1001,9 @@ object StreamOps {
           .select(lit("I").as("op"), (-col("k")).as("k"), col("p")))
       val srcDir = root.resolve("src").toString
       feed.repartition(4).write.parquet(srcDir) // ≥2 files → ≥2 micro-batches
-      val nBatches = EventStream.runForeachBatch(s, srcDir, feed.schema,
-        (batch, id) => applyCdcBatch(s, root, batch, id),
-        checkpointDir = Some(root.resolve("cp").toString))
-      require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
+      Replay.drain(s, srcDir, feed.schema,
+        EachBatch((batch, id) => applyCdcBatch(s, root, batch, id)),
+        checkpoint = Some(root.resolve("cp").toString))(identity)
       val base = s.read.parquet(baseDir.toString)
       val ingested = base
         .join(cdcTombstones(s, root), Seq("k"), "left_anti")
@@ -1067,9 +1016,7 @@ object StreamOps {
             col("min_key"), col("max_key"))
       census(1, base).unionByName(census(2, ingested))
         .orderBy("version")
-        .localCheckpoint() // materialize before the scratch dir dies
-    } finally rmrf(root)
-  }
+    }
 
   /** s27 — the compaction TRIGGER's accounting maintained IN-STREAM:
     * q59's read-amplification decision (orders row) with its three
@@ -1082,19 +1029,16 @@ object StreamOps {
     * the final emission equals the batch scan exactly — graded against
     * q59's orders accounting restated over raw parquet, threshold and
     * decision bit included (exact integer arithmetic throughout). */
-  def streamCompactionTrigger(s: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_ct")
-    try {
+  def streamCompactionTrigger(s: SparkSession, d: String): DataFrame =
+    Replay.scratch("graft_stream_ct") { root =>
       val keys = Tables.orders(s, d).select(col("o_orderkey").as("k"))
       val srcDir = root.resolve("src").toString
       keys.repartition(4).write.parquet(srcDir) // ≥2 files → ≥2 batches
-      val (acct, nBatches) = EventStream.runCompleteAgg(s, srcDir, keys.schema,
-        df => df.agg(count(lit(1)).as("base_rows"),
+      Replay.drain(s, srcDir, keys.schema, Memory("graft_s27_acct"), OutputMode.Complete) {
+        _.agg(count(lit(1)).as("base_rows"),
           sum(when(pmod(col("k"), lit(101)) === 0, 1L).otherwise(0L)).as("tomb_rows"),
-          sum(when(pmod(col("k"), lit(103)) === 0, 1L).otherwise(0L)).as("apnd_rows")),
-        "graft_s27_acct")
-      require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
-      acct
+          sum(when(pmod(col("k"), lit(103)) === 0, 1L).otherwise(0L)).as("apnd_rows"))
+      }.out
         .withColumn("amp_permille",
           expr("(tomb_rows + apnd_rows) * 1000 div base_rows"))
         .withColumn("compact",
@@ -1102,9 +1046,7 @@ object StreamOps {
             graft.operators.MergeOnRead.AmpThresholdPermille).cast("int"))
         .select(lit("orders").as("tbl"), col("base_rows"), col("tomb_rows"),
           col("apnd_rows"), col("amp_permille"), col("compact"))
-        .localCheckpoint() // pin before the scratch dir dies
-    } finally rmrf(root)
-  }
+    }
 
   /** s28 — streaming HISTOGRAM-QUANTILE maintenance: k04's
     * per-(priority, bin) price histogram carried as a Complete-mode
@@ -1118,21 +1060,17 @@ object StreamOps {
     * one |bins|-row window pass away. Shares k04's oracle verbatim —
     * incremental maintenance must land on the batch histogram bit for
     * bit. */
-  def streamHistQuantiles(s: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_hq")
-    try {
+  def streamHistQuantiles(s: SparkSession, d: String): DataFrame =
+    Replay.scratch("graft_stream_hq") { root =>
       val src = Tables.orders(s, d).select("o_orderpriority", "o_totalprice")
       val srcDir = root.resolve("src").toString
       src.repartition(4).write.parquet(srcDir) // ≥2 files → ≥2 batches
-      val (hist, nBatches) = EventStream.runCompleteAgg(s, srcDir, src.schema,
-        df => SketchOps.ordersHist(df), "graft_s28_hist")
-      require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
+      val hist = Replay.drain(s, srcDir, src.schema, Memory("graft_s28_hist"),
+        OutputMode.Complete)(SketchOps.ordersHist).out
       // localCheckpoint before the readout multi-references the
-      // memory-sink table (the self-conflict resolve trap) AND before
-      // the scratch dir dies
+      // memory-sink table (the self-conflict resolve trap)
       SketchOps.histQuantileRead(hist.localCheckpoint())
-    } finally rmrf(root)
-  }
+    }
 
   /** s29 — the GRAPH ARTIFACT maintained at INGEST: the p-family's
     * bipartite trading-pair index (ArtifactStore's `bipartite`, the
@@ -1171,10 +1109,8 @@ object StreamOps {
       val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
       val srcDir = liPairStreamSource(s, d) // shared replay source (s31 too)
       val ordersStatic = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-      val (e, nBatches) = EventStream.runAppend(s, srcDir, li.schema,
-        edgeMaintPlan(ordersStatic), "graft_s29_edges")
-      require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
-      e
+      Replay.drain(s, srcDir, li.schema, Memory("graft_s29_edges"))(
+        edgeMaintPlan(ordersStatic)).out
     }.localCheckpoint() // multi-referenced below
     val deg = edges.select(col("cn").as("n")).unionByName(edges.select(col("sn").as("n")))
       .groupBy("n").agg(count(lit(1)).as("dg"))
@@ -1190,7 +1126,7 @@ object StreamOps {
     * [[edgeMaintPlan]], [[streamEdgeMaintenance]]);
     * EdgeMaintStreamSpec's tag-lock recomputes it, so a derivation edit
     * without a bump is a test failure, never a stale artifact. */
-  private[graft] val EdgeMaintFoldTag = "emf-24942935"
+  private[graft] val EdgeMaintFoldTag = "emf-5445e687"
 
   /** s31 — INCREMENTAL connected components maintained as trades
     * arrive: s29 keeps the edge artifact fresh at ingest; this keeps the
@@ -1236,23 +1172,21 @@ object StreamOps {
       import s.implicits._
       var pairsAcc = Seq.empty[(Long, Long)].toDF("cn", "sn").localCheckpoint()
       var labels = Seq.empty[(Long, Long)].toDF("node", "lbl").localCheckpoint()
-      val nBatches = graft.streaming.DocStream.runSourceForeachBatch(
-        s, srcDir, li.schema, (batch, _) => {
-          // first-seen dedup against the accumulated index (s29's
-          // bounded-state argument, expressed as one keyed anti-join)
-          val newPairs = batch.join(ordersStatic,
-              col("l_orderkey") === col("o_orderkey"))
-            .select((col("o_custkey") * 2).as("cn"),
-              (col("l_suppkey") * 2 + 1).as("sn"))
-            .distinct()
-            .join(pairsAcc, Seq("cn", "sn"), "left_anti")
-            .localCheckpoint()
-          if (newPairs.limit(1).count() > 0) {
-            val (l2, p2) = incCcFold(labels, pairsAcc, newPairs)
-            labels = l2; pairsAcc = p2
-          }
-        })
-      require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
+      Replay.drain(s, srcDir, li.schema, EachBatch { (batch, _) =>
+        // first-seen dedup against the accumulated index (s29's
+        // bounded-state argument, expressed as one keyed anti-join)
+        val newPairs = batch.join(ordersStatic,
+            col("l_orderkey") === col("o_orderkey"))
+          .select((col("o_custkey") * 2).as("cn"),
+            (col("l_suppkey") * 2 + 1).as("sn"))
+          .distinct()
+          .join(pairsAcc, Seq("cn", "sn"), "left_anti")
+          .localCheckpoint()
+        if (newPairs.limit(1).count() > 0) {
+          val (l2, p2) = incCcFold(labels, pairsAcc, newPairs)
+          labels = l2; pairsAcc = p2
+        }
+      })(identity)
       labels
     }
       .groupBy(col("lbl").as("component"))
@@ -1302,16 +1236,14 @@ object StreamOps {
         import s.implicits._
         val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
         var capped = Seq.empty[(Long, Long)].toDF("c", "nb").localCheckpoint()
-        val nBatches = graft.streaming.DocStream.runSourceForeachBatch(
-          s, okSlicedLiPartSource(s, d), li.schema, (batch, _) => {
-            val b = batch.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-            val pairs = b.join(b.withColumnRenamed("pk", "pk2"), "ok")
-              .filter(col("pk") < col("pk2"))
-              .select(col("pk").as("a"), col("pk2").as("b"))
-              .distinct()
-            capped = GraphOps.cappedMergeFold(capped, pairs)
-          })
-        require(nBatches >= 2, s"expected a multi-micro-batch ingest, got $nBatches")
+        Replay.drain(s, okSlicedLiPartSource(s, d), li.schema, EachBatch { (batch, _) =>
+          val b = batch.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+          val pairs = b.join(b.withColumnRenamed("pk", "pk2"), "ok")
+            .filter(col("pk") < col("pk2"))
+            .select(col("pk").as("a"), col("pk2").as("b"))
+            .distinct()
+          capped = GraphOps.cappedMergeFold(capped, pairs)
+        })(identity)
         capped
       }.localCheckpoint()
     }
@@ -1351,12 +1283,10 @@ object StreamOps {
     var acc = Seq.empty[(Long, Long, Long, Long)]
       .toDF("pred_keep", "actual_keep", "n_docs", "n_tokens")
       .localCheckpoint()
-    val nBatches = graft.streaming.DocStream.runDocForeachBatch(
-      s, docStreamSource(s, d), (batch, _) => {
-        val part = TextOps.t63CensusOf(TextOps.t62FeaturesOf(batch), w)
-        acc = acc.unionByName(part).localCheckpoint() // per-batch lineage cut
-      })
-    require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+    Replay.drain(s, docStreamSource(s, d), DocStream.docSchema, EachBatch { (batch, _) =>
+      val part = TextOps.t63CensusOf(TextOps.t62FeaturesOf(batch), w)
+      acc = acc.unionByName(part).localCheckpoint() // per-batch lineage cut
+    })(identity)
     acc.groupBy("pred_keep", "actual_keep")
       .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"))
       .orderBy("pred_keep", "actual_keep")
@@ -1384,17 +1314,15 @@ object StreamOps {
       .toDF("source", "n_docs", "n_words", "n_tokens",
         "doc_tok_checksum", "max_doc_tokens")
       .localCheckpoint()
-    val nBatches = graft.streaming.DocStream.runDocForeachBatch(
-      s, docStreamSource(s, d), (batch, _) => {
-        val part = TextOps.bpeEncodeOn(batch, merges)
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_docs"), sum("n_words").as("n_words"),
-            sum("n_tok").as("n_tokens"),
-            sum(col("doc_id") * col("n_tok")).as("doc_tok_checksum"),
-            max("n_tok").as("max_doc_tokens"))
-        acc = acc.unionByName(part).localCheckpoint() // per-batch lineage cut
-      })
-    require(nBatches >= 2, s"expected a multi-micro-batch replay, got $nBatches")
+    Replay.drain(s, docStreamSource(s, d), DocStream.docSchema, EachBatch { (batch, _) =>
+      val part = TextOps.bpeEncodeOn(batch, merges)
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"), sum("n_words").as("n_words"),
+          sum("n_tok").as("n_tokens"),
+          sum(col("doc_id") * col("n_tok")).as("doc_tok_checksum"),
+          max("n_tok").as("max_doc_tokens"))
+      acc = acc.unionByName(part).localCheckpoint() // per-batch lineage cut
+    })(identity)
     acc.groupBy("source")
       .agg(sum("n_docs").as("n_docs"), sum("n_words").as("n_words"),
         sum("n_tokens").as("n_tokens"),
@@ -1415,7 +1343,7 @@ object StreamOps {
     * changes without this constant being bumped to the value the
     * failing test prints — a derivation edit can no longer silently
     * reuse the old artifact. */
-  private[graft] val IncCcFoldTag = "ccf-7b486da8"
+  private[graft] val IncCcFoldTag = "ccf-2334f1e1"
 
   /** One incremental fold: new first-seen pairs join the accumulated
     * set, arrivals register under their own label, and the min-label
@@ -1524,9 +1452,8 @@ object StreamOps {
     * checkpoint would restart sess_ids at 1 and double-emit) — so
     * matching s01's closed-session oracle IS the state-recovery proof.
     * The result is checkpointed and the scratch dirs deleted eagerly. */
-  def streamRestartSessions(s: SparkSession, d: String): DataFrame = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_stream_rs")
-    try {
+  def streamRestartSessions(s: SparkSession, d: String): DataFrame =
+    Replay.scratch("graft_stream_rs") { stage =>
       val src = stage.resolve("src").toString
       val ev = Tables.events(s, d)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -1546,18 +1473,22 @@ object StreamOps {
       val midUs = (pick.getLong(0) + pick.getLong(1)) / 2 max (pick.getLong(0) + 1)
       ev.filter(unix_micros(col("ts")) < midUs)
         .coalesce(1).write.mode("overwrite").parquet(src)
-      val (out, b1, b2) = EventStream.runSessionsWithRestart(s, src,
-        stage.resolve("ckpt").toString, stage.resolve("out").toString,
-        () => ev.filter(unix_micros(col("ts")) >= midUs)
-          .coalesce(1).write.mode("append").parquet(src))
+      // the crash: run 1 drains phase 1 and stops; the second half
+      // lands; run 2 restarts the identical plan from the same checkpoint
+      def run() = Replay.drain(s, src, EventStream.schema,
+        Parquet(stage.resolve("out").toString),
+        checkpoint = Some(stage.resolve("ckpt").toString),
+        oneFilePerBatch = false)(EventStream.sessionize)
+      val b1 = run().batches
+      ev.filter(unix_micros(col("ts")) >= midUs)
+        .coalesce(1).write.mode("append").parquet(src)
+      val r2 = run()
       // both runs must have processed real batches, or the "restart"
       // proved nothing (phase 2 carries the whole second half)
-      require(b1 >= 1 && b2 >= 1, s"expected work in both runs, got $b1/$b2")
-      out.select("user_id", "sess_id", "n_events", "start_us", "end_us", "sum_value")
+      require(b1 >= 1 && r2.batches >= 1, s"expected work in both runs, got $b1/${r2.batches}")
+      r2.out.select("user_id", "sess_id", "n_events", "start_us", "end_us", "sum_value")
         .orderBy("user_id", "sess_id")
-        .localCheckpoint() // materialize before the scratch dirs vanish
-    } finally rmrf(stage)
-  }
+    }
 
   private val D = "DECIMAL(18,2)"
 

@@ -771,7 +771,7 @@ object VectorOps {
         .orderBy("phase", "q_id", "rk")
         .localCheckpoint(), // pin before the scratch segment is deleted
         audit)
-    } finally StreamOps.rmrf(root)
+    } finally graft.streaming.Replay.rmrf(root)
   }
 
   /** v37 — the IVF PROBE-COUNT recall curve, the tuning knob v08 fixes

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -23,7 +23,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * one band bucket — the same Σ|bucket|² bound that makes batch LSH
   * tractable governs the comparisons here, and the bucket lists ARE
   * the index (a production deployment would TTL or tier them to a
-  * store; the fixture run keeps them in the state store). */
+  * store; the fixture run keeps them in the state store).
+  *
+  * This object holds the document-stream plans and their state
+  * functions only; [[Replay.drain]] runs them. */
 object DocStream {
 
   /** Schema of the documents table (TESTDATA.md). */
@@ -155,15 +158,6 @@ object DocStream {
   final case class QuotaRow(source: String, seq: Long, rk: Int,
       doc_id: Long, n_chars: Long)
 
-  /** Per-source quota maintenance (t56's domain cap as streaming
-    * state): merge the batch's arrivals into the K-best set under
-    * (n_chars DESC, doc_id ASC) and re-emit the set, tagged, ONLY when
-    * it changed. The set-merge is ORDER-INDEPENDENT — K-best of a union
-    * is K-best of K-bests in any grouping/order (the KMV mergeability
-    * argument) — so the final snapshot equals the batch cap's admitted
-    * set under ANY micro-batch split; arrival order shifts WHICH
-    * intermediate snapshots exist, never the last one. State is K
-    * (id, chars) pairs per source — bounded by construction. */
   /** s30's per-shard packing input/output/state (see StreamOps for the
     * plan that feeds it). */
   final case class PackIn(doc_id: Long, shard: Long, n_tok: Long)
@@ -196,6 +190,15 @@ object DocStream {
     out.iterator
   }
 
+  /** Per-source quota maintenance (t56's domain cap as streaming
+    * state): merge the batch's arrivals into the K-best set under
+    * (n_chars DESC, doc_id ASC) and re-emit the set, tagged, ONLY when
+    * it changed. The set-merge is ORDER-INDEPENDENT — K-best of a union
+    * is K-best of K-bests in any grouping/order (the KMV mergeability
+    * argument) — so the final snapshot equals the batch cap's admitted
+    * set under ANY micro-batch split; arrival order shifts WHICH
+    * intermediate snapshots exist, never the last one. State is K
+    * (id, chars) pairs per source — bounded by construction. */
   def sourceQuotaFn(k: Int)(source: String, rows: Iterator[QuotaIn],
       state: GroupState[QuotaState]): Iterator[QuotaRow] = {
     val st = state.getOption.getOrElse(QuotaState(0L, Vector.empty, Vector.empty))
@@ -214,96 +217,34 @@ object DocStream {
     }
   }
 
-  /** Drain a multi-file document snapshot through a foreachBatch sink
-    * (one micro-batch per file) — the runner for per-batch side effects
-    * (s12's partial-sketch emission). Returns the micro-batch count
-    * from lastProgress.batchId (recentProgress is bounded). */
-  def runDocForeachBatch(spark: SparkSession, sourceDir: String,
-      sink: (DataFrame, Long) => Unit): Long =
-    runSourceForeachBatch(spark, sourceDir, docSchema, sink)
+  /** s22's plan: the per-source quota state over a raw `documents`
+    * source; emits each changed admitted-set snapshot, tagged. */
+  def sourceQuota(k: Int)(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select(col("source"), col("doc_id"), col("n_chars")).as[QuotaIn]
+      .groupByKey(_.source)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        sourceQuotaFn(k))
+      .toDF()
+  }
 
-  /** Schema-generic foreachBatch drain (one micro-batch per file) — the
-    * runner any modality's snapshot stream shares (documents for
-    * s12/s14, embeddings for s15). */
-  def runSourceForeachBatch(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      sink: (DataFrame, Long) => Unit): Long =
-    EventStream.withStatePartitions(spark) {
-      val src = spark.readStream.schema(schema).format("parquet")
-        .option("path", sourceDir).option("maxFilesPerTrigger", "1").load()
-      val q = src.writeStream.foreachBatch(sink).start()
-      try q.processAllAvailable() finally q.stop()
-      Option(q.lastProgress).map(_.batchId + 1).getOrElse(0L)
-    }
-
-  /** Drain a multi-file document snapshot through an arbitrary
-    * STATELESS streaming plan (one micro-batch per file) into an
-    * exactly-once parquet file sink — the generic runner behind the
-    * document-stream queries that need no custom state (s09's
-    * stream-static decontamination join). Returns (result, micro-batch
-    * count, scratch root); the CALLER owns the scratch dir and deletes
-    * it once the frame is materialized. */
-  def runDocOnce(spark: SparkSession, sourceDir: String, name: String)(
-      plan: DataFrame => DataFrame): (DataFrame, Long, String) =
-    EventStream.withStatePartitions(spark) {
-      val root = java.nio.file.Files.createTempDirectory(name).toString
-      val src = spark.readStream.schema(docSchema).format("parquet")
-        .option("path", sourceDir).option("maxFilesPerTrigger", "1").load()
-      val planned = plan(src)
-      val q = planned.writeStream.outputMode("append").format("parquet")
-        .option("path", s"$root/out")
-        .option("checkpointLocation", s"$root/cp")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // batch count from lastProgress.batchId (0-based), not
-      // recentProgress.length: recentProgress retains only the trailing
-      // spark.sql.streaming.numRecentProgressUpdates entries (default
-      // 100), so a snapshot with more files would silently undercount
-      val nBatches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(0L)
-      // read back with the PLAN's schema: a drain that emitted zero rows
-      // leaves only _spark_metadata behind, and schema inference would
-      // throw where an empty frame is the correct answer (e.g. s09 on a
-      // clean corpus — batch t19 returns empty there too)
-      (spark.read.schema(planned.schema).parquet(s"$root/out"), nBatches, root)
-    }
-
-  /** Drain the document snapshot through the per-source quota state
-    * (one micro-batch per file) into an exactly-once parquet sink.
-    * Returns (snapshot rows, micro-batch count, scratch root) — the
-    * CALLER owns the scratch dir. */
-  def runSourceQuotaOnce(spark: SparkSession, sourceDir: String, k: Int,
-      name: String): (DataFrame, Long, String) =
-    runDocOnce(spark, sourceDir, name) { srcDf =>
-      import spark.implicits._
-      srcDf.select(col("source"), col("doc_id"), col("n_chars")).as[QuotaIn]
-        .groupByKey(_.source)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-          sourceQuotaFn(k))
-        .toDF()
-    }
-
-  /** Drain a multi-file document snapshot through the stateful band
-    * index (one micro-batch per file) into an exactly-once parquet FILE
-    * sink (the pair set is ~2M rows at sf0.1 — a driver-side memory
-    * sink serializes that through one thread; the file sink writes it
-    * partition-parallel, and is also where a production index lands).
-    * Returns (pairs, micro-batch count, scratch root) — the CALLER owns
-    * the scratch dir and deletes it once the frame is materialized.
-    * Each pair arrives exactly once (lowest-shared-band claiming). */
-  def runNearDupOnce(spark: SparkSession, sourceDir: String,
-      name: String): (DataFrame, Long, String) =
-    runDocOnce(spark, sourceDir, name) { srcDf =>
-      import spark.implicits._
-      val src = srcDf.select(col("doc_id"), col("text")).as[(Long, String)]
-      val banded = src.flatMap { case (docId, text) =>
+  /** s08's plan: the stateful band index over a raw `documents`
+    * source. Each pair arrives exactly once (lowest-shared-band
+    * claiming); the pair set is ~2M rows at sf0.1, so it drains into a
+    * parquet FILE sink, which writes partition-parallel where a
+    * driver-side memory sink serializes through one thread. */
+  def nearDups(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    val banded = docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .flatMap { case (docId, text) =>
         simhash60(text) match { // empty-normalization docs: t04's domain
           case None => Iterator.empty
           case Some(h) =>
             (0 until Bands).iterator.map(k => BandDoc(k, bandVal(h, k), docId, h))
         }
       }
-      banded.groupByKey(bd => (bd.band, bd.bval))
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(nearDupFn)
-        .toDF()
-    }
+    banded.groupByKey(bd => (bd.band, bd.bval))
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(nearDupFn)
+      .toDF()
+  }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -10,9 +10,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * The reference is a one-shot batch pipeline (SURVEY.md §2.9 — no
   * streaming anywhere); this module is the capability-matrix extension:
   * the same event semantics as graft.queries.EventOps, expressed as
-  * continuous queries. Batch/stream parity is the design invariant —
-  * EventOpsStreamSpec replays the fixture through these plans with a
-  * memory sink and compares against the batch twins.
+  * continuous plans. It holds plans only — [[Replay.drain]] runs them.
+  * Batch/stream parity is the design invariant — EventStreamSpec
+  * replays the fixture through these plans into a memory sink and
+  * compares against the batch twins.
   *
   * Scale notes: watermark + windowed aggregation is incremental
   * (state = open windows only); sessionization keeps one small state
@@ -78,138 +79,22 @@ object EventStream {
     out.iterator
   }
 
-  /** Streaming sessionization over a typed event stream. */
-  def sessionize(events: Dataset[Ev]): Dataset[SessionOut] = {
+  /** The typed event rows of a raw `events` source. */
+  private def typed(events: DataFrame): Dataset[Ev] = {
     import events.sparkSession.implicits._
-    events
+    events.select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
+  }
+
+  /** Streaming sessionization of a raw `events` source (Append mode —
+    * flatMapGroupsWithState emits closed sessions; each user's open
+    * session stays in state). */
+  def sessionize(events: DataFrame): DataFrame = {
+    import events.sparkSession.implicits._
+    typed(events)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(sessionizeFn)
+      .toDF()
   }
-
-  /** State-store partition count for the streaming harness. A stateful
-    * operator instantiates one state store per shuffle partition, and
-    * every micro-batch pays a commit (delta file + snapshot bookkeeping)
-    * per store — stream-stream joins pay FOUR stores per partition. The
-    * fixture's keyed-state cardinality (hundreds of users / windows) is
-    * nowhere near the batch shuffle default, so 8 stores cut the fixed
-    * commit cost ~4× with zero semantic effect. On a real cluster this
-    * knob tracks keyed-state cardinality and executor count — it is a
-    * deliberate, per-deployment setting, never the batch default. */
-  val StatePartitions = 8
-
-  private[streaming] def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, StatePartitions.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Drive a batch of files through a streaming plan synchronously
-    * (memory sink), returning the collected result — the local test
-    * harness for stream/batch parity.
-    *
-    * Windowed aggregations use Complete mode here: in Append mode a
-    * window only emits once the watermark passes it, which never happens
-    * within a single replayed batch. */
-  def runOnce(spark: SparkSession, plan: DataFrame => DataFrame,
-      sourceDir: String, name: String,
-      mode: OutputMode = OutputMode.Complete): DataFrame =
-    withStatePartitions(spark) {
-      val src = spark.readStream.schema(schema).format("parquet")
-        .option("path", sourceDir).load()
-      val q = plan(src).writeStream.outputMode(mode)
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      spark.table(name)
-    }
-
-  /** Append-mode drive with one micro-batch per source file and the
-    * state-store progress surfaced: returns the drained sink table and
-    * the TOTAL rows the watermark dropped — the accounting every
-    * production stream monitors (silently-lost late data is the classic
-    * streaming correctness bug; s21 makes the loss a graded number). */
-  def runAppendWithProgress(spark: SparkSession, plan: DataFrame => DataFrame,
-      sourceDir: String, name: String): (DataFrame, Long) =
-    withStatePartitions(spark) {
-      val src = spark.readStream.schema(schema).format("parquet")
-        .option("path", sourceDir).option("maxFilesPerTrigger", "1").load()
-      val q = plan(src).writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      val dropped = q.recentProgress
-        .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-        .map(_.numRowsDroppedByWatermark).sum
-      (spark.table(name), dropped)
-    }
-
-  /** Drive the stream into an arbitrary per-micro-batch sink
-    * (`foreachBatch`) — the shape every external-system sink uses
-    * (JDBC, key-value stores, custom formats): the batch is a normal
-    * DataFrame, written with the normal batch writer, once per
-    * micro-batch. maxFilesPerTrigger=1 forces one micro-batch PER
-    * SOURCE FILE, so a multi-file source makes the per-batch append
-    * path execute repeatedly — a single-batch drain would prove nothing
-    * about batch boundaries. Returns the number of micro-batches run so
-    * callers can ASSERT the multi-batch claim instead of trusting it. */
-  def runForeachBatch(spark: SparkSession, sourceDir: String,
-      sink: (DataFrame, Long) => Unit): Long =
-    runForeachBatch(spark, sourceDir, schema, sink)
-
-  /** Schema-generic Complete-mode drain with one micro-batch per source
-    * file: the streaming AGGREGATION posture (state carries the partial
-    * aggregate across batches; each emission overwrites the memory
-    * sink, so the drained table is the final accounting). Returns the
-    * table and the micro-batch count so callers can assert the
-    * multi-batch claim. */
-  def runCompleteAgg(spark: SparkSession, sourceDir: String,
-      srcSchema: org.apache.spark.sql.types.StructType,
-      plan: DataFrame => DataFrame, name: String): (DataFrame, Long) =
-    drainToMemory(spark, sourceDir, srcSchema, plan, name, OutputMode.Complete)
-
-  /** Schema-generic Append-mode drain with one micro-batch per source
-    * file: the stateful-operator posture whose sink receives each row
-    * at its FIRST emission exactly once (s29's first-seen edge dedup).
-    * Returns the drained table and the micro-batch count so callers can
-    * assert the multi-batch claim. */
-  def runAppend(spark: SparkSession, sourceDir: String,
-      srcSchema: org.apache.spark.sql.types.StructType,
-      plan: DataFrame => DataFrame, name: String): (DataFrame, Long) =
-    drainToMemory(spark, sourceDir, srcSchema, plan, name, OutputMode.Append)
-
-  /** One drain body for both output modes — the source/start/drain/stop
-    * plumbing must not drift between the Complete and Append postures. */
-  private def drainToMemory(spark: SparkSession, sourceDir: String,
-      srcSchema: org.apache.spark.sql.types.StructType,
-      plan: DataFrame => DataFrame, name: String,
-      mode: OutputMode): (DataFrame, Long) =
-    withStatePartitions(spark) {
-      val src = spark.readStream.schema(srcSchema).format("parquet")
-        .option("path", sourceDir).option("maxFilesPerTrigger", "1").load()
-      val q = plan(src).writeStream.outputMode(mode)
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      (spark.table(name), q.recentProgress.map(_.batchId).distinct.length.toLong)
-    }
-
-  /** Schema-generic twin: drives a non-events source (s26's CDC change
-    * feed) through the same one-file-per-micro-batch foreachBatch loop.
-    * `checkpointDir` pins the batch-id ↔ source-file mapping: an
-    * id-keyed sink ledger (s20/s26) is only sound when a restarted
-    * query reuses the ids it already committed, so those callers pass a
-    * checkpoint co-located with the sink — the production posture. */
-  def runForeachBatch(spark: SparkSession, sourceDir: String,
-      srcSchema: org.apache.spark.sql.types.StructType,
-      sink: (DataFrame, Long) => Unit,
-      checkpointDir: Option[String] = None): Long =
-    withStatePartitions(spark) {
-      val src = spark.readStream.schema(srcSchema).format("parquet")
-        .option("path", sourceDir).option("maxFilesPerTrigger", "1").load()
-      val writer = src.writeStream.foreachBatch(sink)
-      checkpointDir.foreach(writer.option("checkpointLocation", _))
-      val q = writer.start()
-      try { q.processAllAvailable() } finally q.stop()
-      q.recentProgress.map(_.batchId).distinct.length.toLong
-    }
 
   // --- stateful last-touch attribution (e19's streaming twin) -----------
 
@@ -246,77 +131,14 @@ object EventStream {
     out.iterator
   }
 
-  /** Streaming attribution over a typed event stream. */
-  def attribute(events: Dataset[Ev]): Dataset[AttribOut] = {
+  /** Streaming attribution of a raw `events` source: the per-purchase
+    * log. Replayed one time slice per micro-batch, so state carries
+    * across real batch boundaries. */
+  def attribute(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    events
+    typed(events)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(attributeFn)
+      .toDF()
   }
-
-  /** Drain a (time-sliced) source through the attribution state machine
-    * one file per micro-batch; returns the per-purchase log plus how
-    * many NON-EMPTY micro-batches ran, so callers can assert the state
-    * actually carried across real batch boundaries. */
-  def runAttributionOnce(spark: SparkSession, sourceDir: String,
-      name: String): (DataFrame, Long) =
-    withStatePartitions(spark) {
-      import spark.implicits._
-      val src = spark.readStream.schema(schema).format("parquet")
-        .option("path", sourceDir).option("maxFilesPerTrigger", "1").load()
-        .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
-      val q = attribute(src).toDF().writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      (spark.table(name), q.recentProgress.count(_.numInputRows > 0).toLong)
-    }
-
-  /** Same harness for the typed stateful sessionization (Append mode —
-    * flatMapGroupsWithState emits closed sessions; each user's open
-    * session stays in state). */
-  def runSessionsOnce(spark: SparkSession, sourceDir: String, name: String): DataFrame =
-    withStatePartitions(spark) {
-      import spark.implicits._
-      val src = spark.readStream.schema(schema).format("parquet")
-        .option("path", sourceDir).load()
-        .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
-      val q = sessionize(src).toDF().writeStream.outputMode(OutputMode.Append)
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      spark.table(name)
-    }
-
-  /** Kill-and-restart harness: the fault-tolerance property every
-    * production stream depends on, exercised for real. Drives the files
-    * already in `sourceDir` through the stateful session plan with a
-    * DURABLE checkpoint and an exactly-once file sink, STOPS the query
-    * (the crash), lets `addPhase2` drop more files into the source, and
-    * restarts the identical plan from the same checkpoint — Spark
-    * recovers the source offsets, the watermark, and every user's open
-    * session from the state store, so sessions spanning the kill
-    * boundary are stitched, not restarted. Returns the accumulated
-    * file-sink output (both runs' commits) plus the per-run batch
-    * counts so callers can assert both runs actually processed data. */
-  def runSessionsWithRestart(spark: SparkSession, sourceDir: String,
-      checkpointDir: String, outDir: String,
-      addPhase2: () => Unit): (DataFrame, Long, Long) =
-    withStatePartitions(spark) {
-      import spark.implicits._
-      def start() = {
-        val src = spark.readStream.schema(schema).format("parquet")
-          .option("path", sourceDir).load()
-          .select("event_id", "ts", "user_id", "event_type", "value").as[Ev]
-        sessionize(src).toDF().writeStream.outputMode(OutputMode.Append)
-          .option("checkpointLocation", checkpointDir)
-          .format("parquet").option("path", outDir).start()
-      }
-      val q1 = start()
-      try q1.processAllAvailable() finally q1.stop()
-      val b1 = q1.recentProgress.map(_.batchId).distinct.length.toLong
-      addPhase2()
-      val q2 = start()
-      try q2.processAllAvailable() finally q2.stop()
-      val b2 = q2.recentProgress.map(_.batchId).distinct.length.toLong
-      (spark.read.parquet(outDir), b1, b2)
-    }
 }

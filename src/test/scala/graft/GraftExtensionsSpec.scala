@@ -10,7 +10,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
 
   test("dot_d is injected and codegen-evaluates from SQL") {
     // a dedicated session: extensions bind at session construction
-    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.getActiveSession.foreach(Harness.stop)
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
@@ -33,7 +33,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("nibble_counts is injected, counts both nibbles, rejects non-binary") {
-    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.getActiveSession.foreach(Harness.stop)
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
@@ -55,7 +55,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("bloom_agg/bloom_contains are injected and round-trip from SQL") {
-    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.getActiveSession.foreach(Harness.stop)
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
@@ -77,7 +77,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("marker_counts is injected, counts non-overlapping, rejects bad types") {
-    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.getActiveSession.foreach(Harness.stop)
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
@@ -101,7 +101,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("ASOF JOIN SQL syntax lowers to the native as-of operator (q60's semantics)") {
-    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.getActiveSession.foreach(Harness.stop)
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")

@@ -38,7 +38,7 @@ class MemoSpec extends AnyFunSuite {
 
     val dir2 = queries.StreamOps.streamSource(s1, d)
     assert(dir2 != dir1 && Files.isDirectory(Paths.get(dir2)))
-    s1.stop()
+    Harness.stop(s1)
     val s2 = TestSpark.session
     assert(s2 ne s1, "a stopped default session must not be recycled")
     val dir3 = queries.StreamOps.streamSource(s2, d)

@@ -168,8 +168,8 @@ class AsOfSpec extends AnyFunSuite {
     // getOrCreate would silently return the ACTIVE or DEFAULT session
     // (where earlier tests' register() already added the strategy —
     // vacuous). getActiveSession is thread-local, so stop BOTH.
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.getDefaultSession.foreach(_.stop())
+    SparkSession.getActiveSession.foreach(graft.Harness.stop)
+    SparkSession.getDefaultSession.foreach(graft.Harness.stop)
     val s2 = SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")

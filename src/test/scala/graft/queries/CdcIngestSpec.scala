@@ -77,7 +77,7 @@ class CdcIngestSpec extends AnyFunSuite {
         "the stage dir is consumed by the commit rename")
       assert(logRows() == (4L, 3L),
         s"stale staged rows leaked into the log: ${logRows()}")
-    } finally StreamOps.rmrf(root)
+    } finally graft.streaming.Replay.rmrf(root)
   }
 
   test("with no committed batch the CDC log reads empty, in its schema") {
@@ -87,7 +87,7 @@ class CdcIngestSpec extends AnyFunSuite {
       val apnds = StreamOps.cdcAppends(spark, root)
       assert(tombs.count() == 0 && apnds.count() == 0)
       assert(tombs.columns.toSeq == Seq("k") && apnds.columns.toSeq == Seq("k", "p"))
-    } finally StreamOps.rmrf(root)
+    } finally graft.streaming.Replay.rmrf(root)
   }
 
   test("reading the CDC log logs no FileNotFoundException") {
@@ -105,7 +105,7 @@ class CdcIngestSpec extends AnyFunSuite {
           e.getMessage.getFormattedMessage.contains("FileNotFoundException")
       val bad = logged.filter(fileNotFound)
       assert(bad.isEmpty, bad.map(_.getMessage.getFormattedMessage).mkString("; "))
-    } finally StreamOps.rmrf(root)
+    } finally graft.streaming.Replay.rmrf(root)
   }
 
   /** Every log4j event the root logger passes while `body` runs. */

@@ -71,6 +71,6 @@ class ChunkingSpec extends AnyFunSuite {
       assert(out(1L) == (250L, 3L, 3L, 3L), out.toString)
       assert(out(2L) == (250L, 3L, 3L, 3L), "duplicate doc shares all 3 chunks")
       assert(out(3L)._4 == 0L, "unique content shares nothing")
-    } finally StreamOps.rmrf(root)
+    } finally graft.streaming.Replay.rmrf(root)
   }
 }

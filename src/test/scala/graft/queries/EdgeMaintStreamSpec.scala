@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.streaming.Replay
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,15 +26,15 @@ class EdgeMaintStreamSpec extends AnyFunSuite {
       lines.write.mode("append").parquet(src)       // redelivery (dup file)
       val ordersStatic = Seq((1L, 100L), (2L, 200L))
         .toDF("o_orderkey", "o_custkey")
-      val (edges, nBatches) = graft.streaming.EventStream.runAppend(
-        spark, src, lines.schema,
-        StreamOps.edgeMaintPlan(ordersStatic), "graft_em_spec_edges")
+      val r = Replay.drain(spark, src, lines.schema, Replay.Memory("graft_em_spec_edges"))(
+        StreamOps.edgeMaintPlan(ordersStatic))
+      val (edges, nBatches) = (r.out, r.batches)
       assert(nBatches >= 2, s"redelivery must arrive in its own micro-batch: $nBatches")
       val got = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       val expected = Seq((200L, 21L), (400L, 21L), (400L, 23L))
       assert(got.sorted == expected.sorted,
         s"sink must hold each edge EXACTLY once (8 rows delivered): $got")
-    } finally StreamOps.rmrf(root)
+    } finally Replay.rmrf(root)
   }
   test("artifact fold-shape tag is locked to the fold's source (the s31 rule)") {
     // the persisted edge set must be invalidated when the fold or the

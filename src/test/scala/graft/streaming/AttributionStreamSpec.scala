@@ -57,8 +57,9 @@ class AttributionStreamSpec extends AnyFunSuite {
           java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 2000L))
         rmrf(sub)
       }
-      val (rows, nBatches) = EventStream.runAttributionOnce(
-        spark, dir.toString, "graft_attr_spec")
+      val r = Replay.drain(spark, dir.toString, EventStream.schema,
+        Replay.Memory("graft_attr_spec"))(EventStream.attribute)
+      val (rows, nBatches) = (r.out, r.batches)
       assert(nBatches == 2, s"both slices must replay as their own micro-batch: $nBatches")
       val got = rows.select("user_id", "event_id", "channel", "value")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3))).toSet

@@ -21,11 +21,19 @@ class DocStreamSpec extends AnyFunSuite {
     d
   }
 
-  private def pairSet(dir: String, name: String): (Set[(Long, Long, Int)], Long) = {
-    val (df, n, scratch) = DocStream.runNearDupOnce(spark, dir, name)
-    val rows =
-      try df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
+  /** The near-dup pairs of a replay of `dir`, one file per micro-batch
+    * or all of it in one, and the replay's batch count. */
+  private def pairSet(dir: String, name: String,
+      oneFilePerBatch: Boolean): (Set[(Long, Long, Int)], Long) = {
+    var n = 0L
+    val rows = Replay.scratch(name) { scratch =>
+      val r = Replay.drain(spark, dir, DocStream.docSchema,
+        Replay.Parquet(scratch.resolve("out").toString),
+        checkpoint = Some(scratch.resolve("cp").toString),
+        oneFilePerBatch = oneFilePerBatch)(DocStream.nearDups)
+      n = r.batches
+      r.out
+    }.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val set = rows.toSet
     // lowest-shared-band claiming: every pair must arrive EXACTLY once
     assert(rows.length == set.size,
@@ -34,8 +42,8 @@ class DocStreamSpec extends AnyFunSuite {
   }
 
   test("pair set is identical under 1-batch and 4-batch arrival splits") {
-    val (single, n1) = pairSet(snapshot(1), "docstream_single")
-    val (multi, nN) = pairSet(snapshot(4), "docstream_multi")
+    val (single, n1) = pairSet(snapshot(1), "docstream_single", oneFilePerBatch = false)
+    val (multi, nN) = pairSet(snapshot(4), "docstream_multi", oneFilePerBatch = true)
     assert(n1 == 1L, s"1-file snapshot must drain in one micro-batch, got $n1")
     assert(nN >= 2L, s"4-file snapshot must drain in ≥2 micro-batches, got $nN")
     assert(single.nonEmpty, "fixture must produce near-dup pairs")

@@ -4,6 +4,7 @@ import graft.queries.EventOps
 import graft.tables.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stream/batch parity: the streaming plans replayed over the fixture
@@ -23,9 +24,15 @@ class EventStreamSpec extends AnyFunSuite {
     d
   }
 
+  /** The whole source drained as one batch through the session plan. */
+  private def sessionsOf(dir: String, name: String) =
+    Replay.drain(spark, dir, EventStream.schema, Replay.Memory(name),
+      oneFilePerBatch = false)(EventStream.sessionize).out
+
   test("tumbling 5-min counts: stream == batch") {
-    val streamed = EventStream.runOnce(spark, EventStream.tumblingCounts, srcDir, "tumb")
-      .select("w_start_epoch", "event_type", "n")
+    val streamed = Replay.drain(spark, srcDir, EventStream.schema, Replay.Memory("tumb"),
+        OutputMode.Complete, oneFilePerBatch = false)(EventStream.tumblingCounts)
+      .out.select("w_start_epoch", "event_type", "n")
       .orderBy("w_start_epoch", "event_type").collect().map(_.toSeq)
     val batch = EventOps.tumbling5min(spark, sfDir).collect().map(_.toSeq)
     assert(streamed.toSeq == batch.toSeq)
@@ -43,7 +50,7 @@ class EventStreamSpec extends AnyFunSuite {
     val src = spark.readStream.schema(EventStream.schema).format("parquet")
       .option("path", d4).option("maxFilesPerTrigger", "1").load()
     val q = EventStream.tumblingCounts(src).writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete)
+      .outputMode(OutputMode.Complete)
       .format("memory").queryName("tumb_mb").start()
     try q.processAllAvailable() finally q.stop()
     assert(q.recentProgress.map(_.batchId).max >= 3, "must replay as several micro-batches")
@@ -73,25 +80,31 @@ class EventStreamSpec extends AnyFunSuite {
     val midUs = (pick.getLong(0) + pick.getLong(1)) / 2 max (pick.getLong(0) + 1)
     ev.filter(unix_micros(col("ts")) < midUs)
       .coalesce(1).write.mode("overwrite").parquet(src)
-    val (out, b1, b2) = EventStream.runSessionsWithRestart(spark, src,
-      stage.resolve("ckpt").toString, stage.resolve("out").toString,
-      () => ev.filter(unix_micros(col("ts")) >= midUs)
-        .coalesce(1).write.mode("append").parquet(src))
+    // two drains sharing one checkpoint: the stop between them is the crash
+    def run() = Replay.drain(spark, src, EventStream.schema,
+      Replay.Parquet(stage.resolve("out").toString),
+      checkpoint = Some(stage.resolve("ckpt").toString),
+      oneFilePerBatch = false)(EventStream.sessionize)
+    val b1 = run().batches
+    ev.filter(unix_micros(col("ts")) >= midUs)
+      .coalesce(1).write.mode("append").parquet(src)
+    val r2 = run()
+    val b2 = r2.batches
     assert(b1 >= 1 && b2 >= 1, s"both runs must process batches, got $b1/$b2")
-    val sessions = out.select("user_id", "sess_id", "n_events", "start_us", "end_us", "sum_value")
+    val sessions = r2.out.select("user_id", "sess_id", "n_events", "start_us", "end_us", "sum_value")
       .collect()
     val spanning = sessions.count(r => r.getLong(3) < midUs && r.getLong(4) >= midUs)
     assert(spanning > 0,
       "no session spans the kill boundary — the restart recovered nothing worth testing")
     // and the stitched total equals the uninterrupted run (same plan, one query)
-    val uninterrupted = EventStream.runSessionsOnce(spark, srcDir, "sess_unint")
+    val uninterrupted = sessionsOf(srcDir, "sess_unint")
       .select("user_id", "sess_id", "n_events", "start_us", "end_us", "sum_value")
       .collect().map(_.toSeq).toSet
     assert(sessions.map(_.toSeq).toSet == uninterrupted)
   }
 
   test("stateful sessionization: closed stream sessions == batch sessions") {
-    val streamed = EventStream.runSessionsOnce(spark, srcDir, "sess")
+    val streamed = sessionsOf(srcDir, "sess")
       .select(col("user_id"), col("sess_id"), col("n_events"), col("sum_value"))
       .collect().map(_.toSeq).toSet
     // batch twin, excluding each user's final (still-open) session

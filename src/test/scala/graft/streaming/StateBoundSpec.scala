@@ -39,7 +39,7 @@ class StateBoundSpec extends AnyFunSuite {
         .coalesce(1).write.mode("append").parquet(dir)
       Thread.sleep(30) // distinct mtimes → deterministic replay order
     }
-    val progresses = EventStream.withStatePartitions(spark) {
+    val progresses = Replay.withStatePartitions(spark) {
       val src = spark.readStream.schema(EventStream.schema).format("parquet")
         .option("path", dir).option("maxFilesPerTrigger", "1").load()
       // Append mode: a window emits (and its state row is EVICTED) once
