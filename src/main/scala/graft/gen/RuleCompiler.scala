@@ -2,7 +2,8 @@ package graft.gen
 
 import graft.rules.Rule
 import graft.rules.Rule._
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,6 +17,17 @@ import org.apache.spark.sql.types._
   * never on the partition or task). The reference is deliberately
   * nondeterministic here (run_engine.py:51,191,194); reproducibility is
   * our semantic upgrade, value distributions are preserved.
+  *
+  * Prefix fold: Spark's `xxhash64` hashes its children left to right, each
+  * child's hash seeding the next, so the hash above equals
+  * `XXH64.hashLong(id, prefix)` with `prefix = xxhash64(seed, table,
+  * column, salt)`. The prefix is computed once per column and salt at
+  * plan-build time ([[Kernels.prefix]]), and each primitive below (`draw`,
+  * `u`, `randLong`, `pick`, `digits`, `uuid4`) is one [[Kernel]]
+  * expression whose generated code is a single call into [[Kernels]] — the
+  * exact values of the Catalyst composition it stands for, without
+  * re-hashing four constants per row or inlining that composition once
+  * per column. Composite rules below still compose built-in functions.
   *
   * Scale: generation is embarrassingly parallel — `spark.range`
   * partitions the id space, every column is a codegen'd expression, no
@@ -33,25 +45,27 @@ object RuleCompiler {
   final case class Ctx(seed: Long, table: String, colName: String,
       field: StructField, id: Column)
 
-  // --- deterministic uniform primitives ---------------------------------
+  // --- deterministic uniform primitives (one Kernel each) ---------------
 
-  private def h(c: Ctx, salt: Int): Column =
-    xxhash64(lit(c.seed), lit(c.table), lit(c.colName), lit(salt), c.id)
+  private def kernel(c: Ctx)(k: Expression => Expression): Column =
+    GraftSqlBridge.column(k(GraftSqlBridge.expression(c.id)))
 
-  private val M = 1000000007L
+  private def prefix(c: Ctx, salt: Int): Long = Kernels.prefix(c.seed, c.table, c.colName, salt)
+
+  /** `pmod(xxhash64(seed, table, column, salt, id), n)`: uniform long in [0, n) */
+  private def draw(c: Ctx, salt: Int, n: Long): Column = kernel(c)(Draw(_, prefix(c, salt), n))
+
   /** uniform double in [0,1) */
-  private def u(c: Ctx, salt: Int): Column =
-    pmod(h(c, salt), lit(M)).cast(DoubleType) / lit(M.toDouble)
+  private def u(c: Ctx, salt: Int): Column = kernel(c)(Uniform(_, prefix(c, salt)))
 
   private def randLong(c: Ctx, salt: Int, lo: Long, hi: Long): Column =
-    (floor(u(c, salt) * lit((hi - lo + 1).toDouble)) + lit(lo)).cast(LongType)
+    kernel(c)(RandLong(_, prefix(c, salt), (hi - lo + 1).toDouble, lo))
 
   private def pick(c: Ctx, salt: Int, lex: Seq[String]): Column =
-    element_at(array(lex.map(lit): _*), (pmod(h(c, salt), lit(lex.size.toLong)) + 1).cast(IntegerType))
+    kernel(c)(Pick(_, prefix(c, salt), lex))
 
   /** n random digits as a zero-padded string. */
-  private def digits(c: Ctx, salt: Int, n: Int): Column =
-    lpad(pmod(h(c, salt), lit(math.pow(10, n).toLong)).cast(StringType), n, "0")
+  private def digits(c: Ctx, salt: Int, n: Int): Column = kernel(c)(Digits(_, prefix(c, salt), n))
 
   private def asciiFold(col: Column): Column =
     translate(lower(col), "çğıöşü", "cgiosu")
@@ -78,15 +92,9 @@ object RuleCompiler {
 
   // --- composite generators ---------------------------------------------
 
-  /** md5-derived UUID-v4-format string (deterministic `uuid4`;
-    * SURVEY.md §7.3 decision: built-in composition, no custom Expression). */
-  def uuid4(c: Ctx): Column = {
-    val m = md5(concat_ws("|", lit(c.seed), lit(c.table), lit(c.colName), c.id))
-    concat(
-      substring(m, 1, 8), lit("-"), substring(m, 9, 4), lit("-4"),
-      substring(m, 14, 3), lit("-"), substring(m, 17, 4), lit("-"),
-      substring(m, 21, 12))
-  }
+  /** md5-derived UUID-v4-format string (deterministic `uuid4`): the md5
+    * of `concat_ws("|", seed, table, column, id)`, see [[Kernels.uuid]]. */
+  def uuid4(c: Ctx): Column = kernel(c)(Uuid(_, s"${c.seed}|${c.table}|${c.colName}|"))
 
   private def sentence(c: Ctx, nWords: Int): Column = {
     val ws = (0 until nWords).map(i => pick(c, 100 + i, Lexicons.Words))
@@ -114,7 +122,7 @@ object RuleCompiler {
 
   /** The parent id an FK column of `c` draws from: uniform over the
     * parent's first `n` ids. */
-  def keyIndex(c: Ctx, n: Long): Column = pmod(h(c, 7), lit(n))
+  def keyIndex(c: Ctx, n: Long): Column = draw(c, 7, n)
 
   /** Compile `rule` for the column described by `c`. Returns the raw
     * generated value; Generator applies coercion/truncation/final cast.
@@ -138,11 +146,11 @@ object RuleCompiler {
       if (cols.size == 1) cols.head else concat(cols: _*)
     case Sentence(n) => sentence(c, n)
     case Word => word(c)
-    case BooleanRule => (pmod(h(c, 2), lit(2L)) === 1)
+    case BooleanRule => draw(c, 2, 2) === 1
     case Email => concat(
       asciiFold(pick(c, 10, Lexicons.FirstNames)), lit("."),
       asciiFold(pick(c, 11, Lexicons.LastNames)),
-      pmod(h(c, 12), lit(100L)).cast(StringType), lit("@example.com"))
+      draw(c, 12, 100).cast(StringType), lit("@example.com"))
     case Iban => trIbanUdf(concat(digits(c, 13, 5), lit("0"), digits(c, 14, 16)))
     case PhoneNumber => concat(lit("05"), randLong(c, 15, 300000000L, 599999999L).cast(StringType))
     case Address => concat(
@@ -175,7 +183,7 @@ object RuleCompiler {
     * not reproduce, since our schema is typed). */
   private def typeDefaultValue(c: Ctx, sqlType: String, precision: Int,
       scale: Int, length: Int): Column = sqlType match {
-    case "bit" => (pmod(h(c, 2), lit(2L)) === 1)
+    case "bit" => draw(c, 2, 2) === 1
     case "tinyint" => randLong(c, 2, 0, 255)
     case "smallint" => randLong(c, 2, 0, 32000)
     case "int" | "bigint" => randLong(c, 2, 0, 100000)

@@ -1,14 +1,24 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The one `private[sql]` doorway the engine needs: constructing a
-  * Dataset from a custom LogicalPlan (graft.plans.AsOfJoin). Spark
-  * deliberately keeps `Dataset.ofRows` internal; extension libraries
-  * that ship their own plan nodes conventionally host a small bridge in
-  * this package (the same technique Spark-native connector/lakehouse
-  * projects use). Nothing else of the internal surface is exposed. */
+  * Dataset from a custom LogicalPlan (graft.plans.AsOfJoin), and moving
+  * between a Column and the Catalyst Expression under it (graft.gen's
+  * generation kernels wrap a Column's expression in their own). Spark
+  * deliberately keeps `Dataset.ofRows` and the Column/Expression
+  * conversions internal; extension libraries that ship their own plan
+  * nodes or expressions conventionally host a small bridge in this
+  * package (the same technique Spark-native connector/lakehouse projects
+  * use). Beyond these and the session hooks below (name resolver,
+  * experimental strategies and optimizations), nothing else of the
+  * internal surface is exposed. */
 object GraftSqlBridge {
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
 

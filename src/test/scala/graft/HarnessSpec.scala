@@ -32,8 +32,7 @@ class HarnessSpec extends AnyFunSuite {
   test("a stopped Harness session leaves no state store loaded and no maintenance running") {
     SparkSession.getActiveSession.foreach(Harness.stop)
     SparkSession.getDefaultSession.foreach(Harness.stop)
-    val dir = java.nio.file.Files.createTempDirectory("graft_harness_state")
-    try {
+    graft.TempDirs.withTempDir("graft_harness_state") { dir =>
       Harness.withSession("2") { spark =>
         import spark.implicits._
         Seq((1L, 10L), (1L, 10L)).toDF("k", "sec").coalesce(1)
@@ -50,6 +49,6 @@ class HarnessSpec extends AnyFunSuite {
       }
       assert(loadedProviders.isEmpty, s"still loaded: ${loadedProviders.keys}")
       assert(!StateStore.isMaintenanceRunning)
-    } finally Replay.rmrf(dir)
+    }
   }
 }

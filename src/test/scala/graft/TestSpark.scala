@@ -11,11 +11,15 @@ import org.apache.spark.sql.SparkSession
   * shared builder makes the canonical config a fact instead of a race.
   */
 object TestSpark {
-  /** One warehouse dir per JVM: createTempDirectory inside the builder
-    * ran on EVERY session call (leaking an empty dir each time and
-    * triggering ignored-static-conf warnings once a session exists). */
-  private val warehouseDir: String =
-    java.nio.file.Files.createTempDirectory("graft_wh").toString
+  /** One warehouse dir per JVM, deleted when the JVM exits: a temp dir
+    * made inside the builder ran on EVERY session call (leaking an empty
+    * dir each time and triggering ignored-static-conf warnings once a
+    * session exists). */
+  private val warehouseDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh")
+    sys.addShutdownHook(graft.streaming.Replay.rmrf(dir))
+    dir.toString
+  }
 
   /** A def, not a lazy val: GraftExtensionsSpec legitimately stops the
     * default session to bind its extensions session, and getOrCreate

@@ -21,8 +21,8 @@ class GenerationDigestSpec extends AnyFunSuite {
   import GenerationDigestSpec._
   lazy val spark = graft.TestSpark.session
 
-  private lazy val at15 = pipelineFrames(15)
-  private lazy val at1500 = pipelineFrames(1500)
+  private lazy val at15 = pipelineFrames(spark, 15)
+  private lazy val at1500 = pipelineFrames(spark, 1500)
 
   test("pipeline digests at 15 rows equal the pinned ones") {
     assert(at15.map { case (t, df) => t -> digest(df) } == Pinned15)
@@ -72,13 +72,6 @@ class GenerationDigestSpec extends AnyFunSuite {
     assert(values("CycB", "CycAId").toSet.intersect(keys("CycA", "Id")).isEmpty)
     assert(values("Node", "ParentId").forall(v => (1 to 10).contains(v)))
     assert(values("Detail", "LogRootLogId").forall(_ != null))
-  }
-
-  private def pipelineFrames(rows: Long): Map[String, DataFrame] = {
-    val frames = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-    val results = GeneratePipeline.run(spark, catalog, rows, 7, (t, df) => frames(t) = df)
-    assert(results.forall(_.ok), results.toString)
-    frames.toMap
   }
 }
 
@@ -202,6 +195,14 @@ object GenerationDigestSpec {
   ).mkString
 
   def catalog: Catalog = DdlParser.parse(Ddl)
+
+  /** The inline catalog's frames as `GeneratePipeline.run` sinks them. */
+  def pipelineFrames(spark: SparkSession, rows: Long): Map[String, DataFrame] = {
+    val frames = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    val results = GeneratePipeline.run(spark, catalog, rows, 7, (t, df) => frames(t) = df)
+    assert(results.forall(_.ok), results.toString)
+    frames.toMap
+  }
 
   /** `RuleCompiler.typeDefaultValue`'s sqlType branches reachable from a
     * generated column (datetimeoffset is outside the safe types; the

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Generator semantics: determinism, constraint satisfaction, FK
   * consistency, reference dispatch behavior (SURVEY.md §5 test plan). */
-class GeneratorSpec extends AnyFunSuite {
+class GeneratorSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   lazy val cat: Catalog = DdlParser.parseFile("/root/reference/script.sql")
@@ -123,7 +123,7 @@ class GeneratorSpec extends AnyFunSuite {
         k -> v.copy(fks = v.fks.filter(f => sub(f.refTable)))
       },
       cat.order.filter(sub))
-    val out = java.nio.file.Files.createTempDirectory("genslice").toString
+    val out = tempDir("genslice").toString
     val results = GeneratePipeline.runToParquet(spark, subCat, out, rowCount = 15, seed = 42)
     assert(results.forall(_.ok), results.filterNot(_.ok).mkString(";"))
     val ulke = spark.read.parquet(s"$out/Ulke.parquet")

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * far closer than an unrelated payload (the edit-robustness CDC
   * features buy — a positional hash loses this to sample shift).
   */
-class ChunkSimhashSpec extends AnyFunSuite {
+class ChunkSimhashSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   // aperiodic deterministic payload: letters a-o (no byte ≡ 0 mod 16, so
@@ -24,7 +24,7 @@ class ChunkSimhashSpec extends AnyFunSuite {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_cs")
+    val d = tempDir("graft_cs")
       .toFile.getAbsolutePath
     val base = block(1, 1600) // 100 chunks of 16 bytes
     // doc 2 = exact dup of 1; doc 3 = one char changed inside ONE chunk;

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-class MultimodalSpec extends AnyFunSuite {
+class MultimodalSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
   import Multimodal._
 
@@ -66,7 +66,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("payload entropy: degenerate payload scores 0, two equal nibbles score ln 2") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_entropy")
+    val dir = tempDir("graft_entropy")
       .toFile.getAbsolutePath
     Seq(
       // bytes 0x11×4 → hex "11111111": one nibble → H = 0
@@ -97,7 +97,7 @@ class MultimodalSpec extends AnyFunSuite {
     //   train 101: "benigncleandifferent0"(21)     — clean, no shared chunk
     //   train 102: "xy0"(3) + "longuniquetail"(14) — shares ONLY the
     //              3-byte chunk, below MinEvidenceLen(8) on BOTH sides
-    val dir = java.nio.file.Files.createTempDirectory("graft_m13leak")
+    val dir = tempDir("graft_m13leak")
       .toFile.getAbsolutePath
     Seq(
       (10L, "abcdefg0xy0"),
@@ -144,7 +144,7 @@ class MultimodalSpec extends AnyFunSuite {
     //     DISTINCT media gate), so doc 3 must be ABSENT too
     val F0 = "A" * 64; val F1 = "B" * 64
     def blk(c: Char) = c.toString * 64
-    val dir = java.nio.file.Files.createTempDirectory("graft_m14reuse")
+    val dir = tempDir("graft_m14reuse")
       .toFile.getAbsolutePath
     Seq(
       (0L, F0 + blk('c') + blk('d') + blk('e') + F1),

@@ -10,12 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * filter relies on (repeated-pattern text outscores unique-sequence
   * text trained on the same corpus).
   */
-class BigramLmSpec extends AnyFunSuite {
+class BigramLmSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   test("hand-computed smoothed log-probs on an enumerable corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bigram")
+    val dir = tempDir("graft_bigram")
       .toFile.getAbsolutePath
     // corpus: V = {a,b,x,y,z} (5 types)
     //   doc 0 "a b a b a b": c(a,b)=3 c(b,a)=2; contexts c(a)=3 c(b)=2
@@ -38,7 +38,7 @@ class BigramLmSpec extends AnyFunSuite {
 
   test("repeated-pattern text outscores a unique word sequence") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bigram2")
+    val dir = tempDir("graft_bigram2")
       .toFile.getAbsolutePath
     val fluent = Array.fill(20)("the cat sat").mkString(" ")
     val gibberish = (0 until 60).map(i => s"tok$i").mkString(" ")

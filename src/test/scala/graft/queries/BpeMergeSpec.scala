@@ -7,12 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * adjacent character pairs, ranked (count DESC, pair ASC) — the
   * classic BPE textbook corpus, checked position by position.
   */
-class BpeMergeSpec extends AnyFunSuite {
+class BpeMergeSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   test("hand-computed merge candidates on the textbook corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe")
+    val dir = tempDir("graft_bpe")
       .toFile.getAbsolutePath
     // vocab: low×3, lower×2, newest×1 →
     //   lo = 3+2 = 5, ow = 3+2 = 5, we = 2+1 = 3, er = 2,
@@ -97,7 +97,7 @@ class BpeMergeSpec extends AnyFunSuite {
 
   test("t66: fertility permilles hand-computed on the textbook corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fert")
+    val dir = tempDir("graft_fert")
       .toFile.getAbsolutePath
     // the t64 composition corpus: trained merges are (l o), (lo w),
     // (e r) — see the test below. Encodings: low = 1 token ×3,
@@ -123,7 +123,7 @@ class BpeMergeSpec extends AnyFunSuite {
 
   test("t64: encode applies the merges t57 actually trained (composition lock)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_enc")
+    val dir = tempDir("graft_bpe_enc")
       .toFile.getAbsolutePath
     // low×3 lower×2 newest×1 (the textbook corpus): r1 merges 'l o'(6),
     // r2 'lo w'(6), r3 'e r'? — whatever t57 picks, the encoder must

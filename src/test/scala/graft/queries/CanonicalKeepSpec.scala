@@ -17,12 +17,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * merge into one span, hits > 8 positions apart stay separate spans,
   * and benchmark docs themselves never surface.
   */
-class CanonicalKeepSpec extends AnyFunSuite {
+class CanonicalKeepSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_keep")
+    val dir = tempDir("graft_keep")
       .toFile.getAbsolutePath
     rows.map { case (id, tx) => (id, tx, "en", "fixture", tx.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")

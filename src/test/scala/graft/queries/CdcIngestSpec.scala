@@ -1,9 +1,6 @@
 package graft.queries
 
-import org.apache.logging.log4j.LogManager
-import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
+import org.apache.logging.log4j.core.LogEvent
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,8 +24,7 @@ class CdcIngestSpec extends AnyFunSuite {
     .setScale(2, java.math.RoundingMode.HALF_UP)
 
   test("replaying a committed CDC batch is refused; snapshot is batch-order-free") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cdc_spec")
-    try {
+    graft.TempDirs.withTempDir("graft_cdc_spec") { root =>
       import spark.implicits._
       // base: keys 1..6 priced 10.00·k
       val base = (1L to 6L).map(k => (k, dec(k * 10.0))).toDF("k", "p")
@@ -77,25 +73,23 @@ class CdcIngestSpec extends AnyFunSuite {
         "the stage dir is consumed by the commit rename")
       assert(logRows() == (4L, 3L),
         s"stale staged rows leaked into the log: ${logRows()}")
-    } finally graft.streaming.Replay.rmrf(root)
+    }
   }
 
   test("with no committed batch the CDC log reads empty, in its schema") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cdc_empty")
-    try {
+    graft.TempDirs.withTempDir("graft_cdc_empty") { root =>
       val tombs = StreamOps.cdcTombstones(spark, root)
       val apnds = StreamOps.cdcAppends(spark, root)
       assert(tombs.count() == 0 && apnds.count() == 0)
       assert(tombs.columns.toSeq == Seq("k") && apnds.columns.toSeq == Seq("k", "p"))
-    } finally graft.streaming.Replay.rmrf(root)
+    }
   }
 
   test("reading the CDC log logs no FileNotFoundException") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cdc_log")
-    try {
+    graft.TempDirs.withTempDir("graft_cdc_log") { root =>
       StreamOps.applyCdcBatch(spark, root, mkBatch(Seq(("D", 2L, null))), 0L)
       StreamOps.applyCdcBatch(spark, root, mkBatch(Seq(("I", 7L, dec(1.50)))), 1L)
-      val logged = logEventsDuring {
+      val logged = graft.LogCapture.during {
         assert(StreamOps.cdcTombstones(spark, root).count() == 1)
         assert(StreamOps.cdcAppends(spark, root).count() == 1)
       }
@@ -105,28 +99,6 @@ class CdcIngestSpec extends AnyFunSuite {
           e.getMessage.getFormattedMessage.contains("FileNotFoundException")
       val bad = logged.filter(fileNotFound)
       assert(bad.isEmpty, bad.map(_.getMessage.getFormattedMessage).mkString("; "))
-    } finally graft.streaming.Replay.rmrf(root)
-  }
-
-  /** Every log4j event the root logger passes while `body` runs. */
-  private def logEventsDuring(body: => Unit): Seq[LogEvent] = {
-    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]
-    val appender = new AbstractAppender("cdc-log-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = events.add(e.toImmutable)
     }
-    appender.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val root = ctx.getConfiguration.getRootLogger
-    root.addAppender(appender, null, null)
-    ctx.updateLoggers()
-    try body
-    finally {
-      root.removeAppender(appender.getName)
-      ctx.updateLoggers()
-      appender.stop()
-    }
-    import scala.jdk.CollectionConverters._
-    events.asScala.toSeq
   }
 }

@@ -61,8 +61,7 @@ class ChunkingSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     // run the graded body on a temp parquet dir so the REAL query path
     // (documents table reader) executes, not just the spec hook
-    val root = java.nio.file.Files.createTempDirectory("graft_chunk_spec")
-    try {
+    graft.TempDirs.withTempDir("graft_chunk_spec") { root =>
       docs.write.parquet(root.resolve("documents.parquet").toString)
       val out = TextOps.ragChunking(spark, root.toString)
         .collect().map(r => r.getLong(0) ->
@@ -71,6 +70,6 @@ class ChunkingSpec extends AnyFunSuite {
       assert(out(1L) == (250L, 3L, 3L, 3L), out.toString)
       assert(out(2L) == (250L, 3L, 3L, 3L), "duplicate doc shares all 3 chunks")
       assert(out(3L)._4 == 0L, "unique content shares nothing")
-    } finally graft.streaming.Replay.rmrf(root)
+    }
   }
 }

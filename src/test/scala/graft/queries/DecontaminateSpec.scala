@@ -8,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * pin the semantics across gram-id-width changes (32 → 60 bit in r5):
   * the hit set is a property of the grams, not of the id encoding.
   */
-class DecontaminateSpec extends AnyFunSuite {
+class DecontaminateSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   test("planted 8-gram overlap is the exact hit set; 7-gram near-miss never flags") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_decon")
+    val dir = tempDir("graft_decon")
       .toFile.getAbsolutePath
     val bench8 = "w1 w2 w3 w4 w5 w6 w7 w8"
     Seq(

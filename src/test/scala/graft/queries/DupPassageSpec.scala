@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * merely touches (gap = 8) merge, and positions separated further
   * (gap > 8) stay distinct extents.
   */
-class DupPassageSpec extends AnyFunSuite {
+class DupPassageSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   private val s8 = (1 to 8).map(i => s"s$i").mkString(" ")
@@ -17,7 +17,7 @@ class DupPassageSpec extends AnyFunSuite {
 
   test("planted passages produce exact extents: overlap merges, gap>8 splits, gap=8 merges") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dup_ext")
+    val dir = tempDir("graft_dup_ext")
       .toFile.getAbsolutePath
     Seq(
       // 9 shared tokens (s1..s9) → two OVERLAPPING duplicated grams →

@@ -14,8 +14,7 @@ class EdgeMaintStreamSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   test("doubled delivery and repeat pairs emit each edge exactly once") {
-    val root = java.nio.file.Files.createTempDirectory("graft_em_spec")
-    try {
+    graft.TempDirs.withTempDir("graft_em_spec") { root =>
       import spark.implicits._
       // order 1 (cust 100) trades supp 10 twice (two lines); order 2
       // (cust 200) trades supps 10 and 11 → 3 distinct edges
@@ -34,7 +33,7 @@ class EdgeMaintStreamSpec extends AnyFunSuite {
       val expected = Seq((200L, 21L), (400L, 21L), (400L, 23L))
       assert(got.sorted == expected.sorted,
         s"sink must hold each edge EXACTLY once (8 rows delivered): $got")
-    } finally Replay.rmrf(root)
+    }
   }
   test("artifact fold-shape tag is locked to the fold's source (the s31 rule)") {
     // the persisted edge set must be invalidated when the fold or the

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * its decontamination consumers from the parquet artifact instead of
   * re-tokenizing the corpus, with query results unchanged — the round-6
   * brief's "persisted table reused across decontamination runs". */
-class GramArtifactSpec extends AnyFunSuite {
+class GramArtifactSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.TestSpark.session
   val d = "/root/testdata/sf0.001"
 
@@ -54,7 +54,7 @@ class GramArtifactSpec extends AnyFunSuite {
   }
 
   test("a regenerated fixture changes the artifact key (no stale serve)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fix").toString
+    val tmp = tempDir("graft_fix").toString
     val f = java.nio.file.Paths.get(tmp, "documents.parquet")
     java.nio.file.Files.writeString(f, "fake")
     val k1 = ArtifactStore.key(tmp, "documents.parquet")

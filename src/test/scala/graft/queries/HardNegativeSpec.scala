@@ -9,12 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * vector falls below the floor. Cell routing is exercised for real:
   * the planted centroids force the anchor's probe cells to {own, 1}
   * and the interesting candidates all live in the anchor's own cell. */
-class HardNegativeSpec extends AnyFunSuite {
+class HardNegativeSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.TestSpark.session
 
   test("v42: dup-gate excludes, floor excludes, band mines in cos order with census") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hn")
+    val dir = tempDir("graft_hn")
       .toFile.getAbsolutePath
     def vec(x: Double, y: Double) = Array(x.toFloat, y.toFloat)
     // anchor 0 = (1,0); centroids 1..15 share a far direction (0,-1) so

@@ -10,12 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * makes k-center seeding beat take-first-k — and ties must break by
   * vec_id deterministically.
   */
-class KcenterSpec extends AnyFunSuite {
+class KcenterSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   test("farthest-first covers each orthogonal cluster once, ties by vec_id") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_kc")
+    val d = tempDir("graft_kc")
       .toFile.getAbsolutePath
     // vec 2j and 2j+1 both point along axis j (the +1 twin scaled, same
     // direction → cosine 1 to its sibling, 0 to every other axis)

@@ -9,12 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * share — gram counting is DISTINCT per doc (presence, not
   * multiplicity), inherited from the shared gram index.
   */
-class NoveltySpec extends AnyFunSuite {
+class NoveltySpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   test("planted duplicate scores 0, fresh text 1, one shared gram the exact share") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_novel")
+    val dir = tempDir("graft_novel")
       .toFile.getAbsolutePath
     val old9 = "w1 w2 w3 w4 w5 w6 w7 w8 w9" // 2 distinct 8-grams
     Seq(

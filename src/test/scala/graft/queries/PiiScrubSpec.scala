@@ -10,12 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * counts must reflect every planted instance, including PII embedded
   * mid-text rather than in the appended contact line.
   */
-class PiiScrubSpec extends AnyFunSuite {
+class PiiScrubSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   test("no pattern survives scrubbing; mid-text PII is counted and removed") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pii")
+    val dir = tempDir("graft_pii")
       .toFile.getAbsolutePath
     Seq(
       // PII already inside the document body, not just the planted line

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * placement is controlled exactly: all-alpha text → ratio 1 → clamped
   * bucket 9; all-digit text → ratio 0 → bucket 0.
   */
-class PsiDriftSpec extends AnyFunSuite {
+class PsiDriftSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   private def write(dir: String, docs: Seq[(Long, String, String)]): Unit = {
@@ -21,7 +21,7 @@ class PsiDriftSpec extends AnyFunSuite {
   }
 
   test("a source matching the corpus mix scores exactly zero") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_psi0")
+    val dir = tempDir("graft_psi0")
       .toFile.getAbsolutePath
     // both sources: 2 docs in bucket 9, 2 in bucket 0 → p = q per cell
     write(dir, Seq(
@@ -36,7 +36,7 @@ class PsiDriftSpec extends AnyFunSuite {
   }
 
   test("a symmetric 3:1 / 1:3 skew scores the hand-computed PSI") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_psi1")
+    val dir = tempDir("graft_psi1")
       .toFile.getAbsolutePath
     // srcA: 3×bucket9 + 1×bucket0; srcB mirrored. Per source:
     //   b9 cell: p−q = 1/4, ln(p/q) = ln(3/2) → lnq = 405465

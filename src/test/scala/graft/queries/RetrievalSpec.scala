@@ -9,14 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * BM25's length normalization — the one thing it adds over TF-IDF —
   * ranks the shorter of two docs with identical term profiles higher.
   */
-class RetrievalSpec extends AnyFunSuite {
+class RetrievalSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   // probe terms are (spark, query, dup); fixture df: spark 4/4 (idf 0),
   // query 2/4, dup 1/4 (the rare term)
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_retr")
+    val d = tempDir("graft_retr")
       .toFile.getAbsolutePath
     Seq(
       (1L, "spark query alpha"),

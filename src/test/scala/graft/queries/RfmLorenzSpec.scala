@@ -9,14 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * co-bucketed users share one total). Ten users with values 10·1..10·10
   * make every expected number readable by eye.
   */
-class RfmLorenzSpec extends AnyFunSuite {
+class RfmLorenzSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   // user u (1..10) has u events on day u-1 (so recency = 10-u ... 0) and
   // total value u*10 (u events of value 10)
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_rfm")
+    val d = tempDir("graft_rfm")
       .toFile.getAbsolutePath
     val rows = for {
       u <- 1 to 10

@@ -8,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * n_hits counts benchmark matches at ≥ 0.4 individually. Basis
   * vectors make every cosine enumerable by hand.
   */
-class SemanticDecontamSpec extends AnyFunSuite {
+class SemanticDecontamSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   test("planted duplicate flags at 1.0; orthogonal never flags; hits count per benchmark item") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_semdecon")
+    val dir = tempDir("graft_semdecon")
       .toFile.getAbsolutePath
     // benchmark side = vec_id ≡ 0 (mod 17): ids 0 and 17
     Seq(

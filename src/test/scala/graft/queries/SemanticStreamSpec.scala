@@ -10,12 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * the hand-known answer and against the batch operator on the same
   * fixture (the StreamDecontamSpec pattern for the vector modality).
   */
-class SemanticStreamSpec extends AnyFunSuite {
+class SemanticStreamSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   test("streamed semantic scores equal batch v16 on a planted corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_semstream")
+    val dir = tempDir("graft_semstream")
       .toFile.getAbsolutePath
     val rows = Seq(
       (0L, Array(1.0f, 0.0f), 0),   // benchmark (0 mod 17)

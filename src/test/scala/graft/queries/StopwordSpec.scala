@@ -8,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * stop-word counter hits the 25-word function list with multiplicity,
   * and punctuation-normalized forms still match ("The," → "the").
   */
-class StopwordSpec extends AnyFunSuite {
+class StopwordSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   test("distinct-check-word rule, multiplicity counting, normalization") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stop")
+    val dir = tempDir("graft_stop")
       .toFile.getAbsolutePath
     Seq(
       // no function words at all → fail

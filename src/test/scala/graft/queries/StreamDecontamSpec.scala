@@ -9,12 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * replayed through the stream, asserted both against the hand-known
   * answer and against the batch operator on the same fixture.
   */
-class StreamDecontamSpec extends AnyFunSuite {
+class StreamDecontamSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   test("streamed hit set equals the batch operator's on a planted corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdecon")
+    val dir = tempDir("graft_sdecon")
       .toFile.getAbsolutePath
     val bench8 = "w1 w2 w3 w4 w5 w6 w7 w8"
     val docs = Seq(

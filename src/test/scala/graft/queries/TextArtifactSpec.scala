@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the value to paste), and (b) the serving contract: after the session
   * memo is cleared, a re-invocation is served from the persisted
   * artifact with byte-identical rows. */
-class TextArtifactSpec extends AnyFunSuite {
+class TextArtifactSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.TestSpark.session
   val d = "/root/testdata/sf0.001"
   val src = "src/main/scala/graft/queries/TextOps.scala"
@@ -140,7 +140,7 @@ class TextArtifactSpec extends AnyFunSuite {
     val A = "the quick brown fox jumps over the lazy dog again and again tonight"
     val B = "completely different delta payload about streaming ingestion of text"
     val C = "a corpus only duplicate that the incremental pass must never re emit"
-    val dir = java.nio.file.Files.createTempDirectory("graft_t67plant")
+    val dir = tempDir("graft_t67plant")
       .toFile.getAbsolutePath
     Seq(
       (3L, A, "en", "fx"), (7L, A, "en", "fx"),
@@ -268,7 +268,7 @@ class TextArtifactSpec extends AnyFunSuite {
     val A = "the quick brown fox jumps over the lazy dog again and again tonight"
     val B = "completely different delta payload about streaming ingestion of text"
     val C = "a tombstoned corpus document whose duplicate match must stop serving"
-    val dir = java.nio.file.Files.createTempDirectory("graft_t72plant")
+    val dir = tempDir("graft_t72plant")
       .toFile.getAbsolutePath
     Seq(
       (3L, A, "en", "fx"), (7L, A, "en", "fx"),

@@ -18,8 +18,7 @@ class ViewMaintenanceSpec extends AnyFunSuite {
   }
 
   test("replaying a committed batch leaves the view byte-identical") {
-    val root = java.nio.file.Files.createTempDirectory("graft_vm_spec")
-    try {
+    graft.TempDirs.withTempDir("graft_vm_spec") { root =>
       val b0 = mkBatch(Seq((1L, 10.0), (2L, 5.5)))
       val b1 = mkBatch(Seq((1L, 2.25), (3L, 7.0)))
       StreamOps.applyViewDelta(spark, root, b0, 0L)
@@ -36,15 +35,6 @@ class ViewMaintenanceSpec extends AnyFunSuite {
       // a NEW batch still lands after the refusal
       StreamOps.applyViewDelta(spark, root, mkBatch(Seq((2L, 1.0))), 2L)
       assert(snap() == Seq((1L, 2L, 12.25), (2L, 2L, 6.5), (3L, 1L, 7.0)))
-    } finally {
-      def rm(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p)) {
-          val st = java.nio.file.Files.list(p)
-          try st.forEach(rm(_)) finally st.close()
-        }
-        java.nio.file.Files.deleteIfExists(p); ()
-      }
-      rm(root)
     }
   }
 }

@@ -7,19 +7,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * artifact dirs across fixture regenerations; gc must delete exactly
   * the keys whose source no longer reproduces its digest — and nothing
   * it can't prove stale. */
-class ArtifactGcSpec extends AnyFunSuite {
+class ArtifactGcSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.TestSpark.session
 
   test("gc drops keys of changed/deleted fixtures, keeps current + unknown keys") {
     import spark.implicits._
-    val fix = Files.createTempDirectory("gcfix").toString
+    val fix = tempDir("gcfix").toString
     val data = Paths.get(fix, "t.parquet")
     Seq(1L, 2L).toDF("x").write.parquet(data.toString)
     // isolated root (round-18 advice, the GcTagSpec fix applied here
     // too): planted kinds and temp-fixture digests stay out of the
     // real shared store and its _registry.tsv; TestFs deletes the root
-    // (and fix) even on assertion failure
-    TestFs.withTempRoot("gcroot", Paths.get(fix)) { _ =>
+    // and the suite deletes fix, even on assertion failure
+    TestFs.withTempRoot("gcroot") { _ =>
 
     // build an artifact keyed on the fixture's current state
     val k1 = ArtifactStore.key(fix, "t.parquet")
@@ -58,7 +58,7 @@ class ArtifactGcSpec extends AnyFunSuite {
     assert(Files.exists(dir2), "regenerated fixture's artifact survives")
 
     // deleted fixture → its key is stale too
-    TestFs.rmrf(Paths.get(fix))
+    graft.streaming.Replay.rmrf(Paths.get(fix))
     ArtifactStore.gc()
     assert(!Files.exists(dir2), "a deleted fixture's artifact is collected")
     }
@@ -66,10 +66,10 @@ class ArtifactGcSpec extends AnyFunSuite {
 
   test("gc deletes retired kind dirs even when their digests still reproduce") {
     import spark.implicits._
-    val fix = Files.createTempDirectory("gcretired").toString
+    val fix = tempDir("gcretired").toString
     val data = Paths.get(fix, "t.parquet")
     Seq(1L).toDF("x").write.parquet(data.toString)
-    TestFs.withTempRoot("gcroot2", Paths.get(fix)) { _ =>
+    TestFs.withTempRoot("gcroot2") { _ =>
       // a renamed-away kind: its digest still reproduces (fixture
       // unchanged), so the stale-key check alone would keep it forever
       val k = ArtifactStore.key(fix, "t.parquet")

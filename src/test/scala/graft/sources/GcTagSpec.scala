@@ -11,19 +11,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * sibling and asserts exactly it is reaped, and (b) statically scans
   * every tagged loadOrBuild call site so a NEW tagged kind that forgets
   * its currentTags entry is a test failure, not a new slow leak. */
-class GcTagSpec extends AnyFunSuite {
+class GcTagSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark = graft.TestSpark.session
 
   test("gc reaps a superseded-tag sibling, keeps the current tag and untagged kinds") {
     import spark.implicits._
-    val fix = Files.createTempDirectory("gctagfix").toString
+    val fix = tempDir("gctagfix").toString
     val data = Paths.get(fix, "t.parquet")
     Seq(1L, 2L).toDF("x").write.parquet(data.toString)
     // isolated artifact root (round-18 advice): planted kinds and the
     // temp-fixture digests this test registers must never touch the
     // real shared store or append dead lines to its _registry.tsv;
-    // TestFs deletes the root (and fix) even on assertion failure
-    TestFs.withTempRoot("gctagroot", Paths.get(fix)) { _ =>
+    // TestFs deletes the root and the suite deletes fix, even on
+    // assertion failure
+    TestFs.withTempRoot("gctagroot") { _ =>
     val dg = ArtifactStore.key(fix, "t.parquet")
 
     // current-tag artifact + a planted stale-tag sibling (same digest,

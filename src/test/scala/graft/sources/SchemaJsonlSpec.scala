@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** S3/J4/K3: JSONL schema source → rule inference → JSON config sink
   * (the generate_config_v2 pipeline, SURVEY.md §3.3). */
-class SchemaJsonlSpec extends AnyFunSuite {
+class SchemaJsonlSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   lazy val fixture: String = {
-    val p = java.nio.file.Files.createTempDirectory("jsonl").resolve("schema.jsonl")
+    val p = tempDir("jsonl").resolve("schema.jsonl")
     java.nio.file.Files.writeString(p,
       """{"table_name":"Banka","columns":[{"column_name":"Ad","description_tr":"banka ad bilgisi","data_type":"nvarchar"},{"column_name":"UlkeNumKod","description_tr":"","data_type":"nvarchar"},{"column_name":"Tutar","description_tr":"fatura tutar alanı","data_type":"numeric"}],"foreign_keys":[{"column":"UlkeNumKod","references":"Ulke.NumKod"}]}
         |{"table_name":"Musteri","columns":[{"column_name":"Telefon","description_tr":"","data_type":"nvarchar"},{"column_name":"AktifMi","description_tr":"","data_type":"bit"}],"foreign_keys":[]}
@@ -45,7 +45,7 @@ class SchemaJsonlSpec extends AnyFunSuite {
 
   test("config sink round-trips through the Rule DSL (K3)") {
     val cfg = SchemaJsonl.inferConfig(spark, fixture)
-    val out = java.nio.file.Files.createTempDirectory("cfg").resolve("rules.json").toString
+    val out = tempDir("cfg").resolve("rules.json").toString
     SchemaJsonl.saveConfig(out, cfg)
     val back = graft.rules.RulesConfig.load(spark, out)
     assert(back == cfg)

@@ -1,28 +1,13 @@
 package graft.sources
 
-import java.nio.file.{Files, Path}
-
-/** Shared test-filesystem helpers for the gc specs (round-19 review:
+/** Shared test-filesystem helper for the gc specs (round-19 review:
   * the recursive temp-dir delete was re-implemented four ways across
   * ArtifactGcSpec/GcTagSpec, and none ran in a finally — a failing
   * assert leaked the planted roots). */
 private[sources] object TestFs {
-  def rmrf(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val st = Files.list(p)
-      try st.forEach(rmrf(_)) finally st.close()
-    }
-    Files.deleteIfExists(p); ()
-  }
-
   /** Run `body` against an isolated ArtifactStore root, deleting the
-    * root (and any extra temp paths) even when an assertion throws. */
-  def withTempRoot[T](prefix: String, alsoDelete: Path*)(body: String => T): T = {
-    val root = Files.createTempDirectory(prefix)
-    try ArtifactStore.withRootForTest(root.toString)(body(root.toString))
-    finally {
-      rmrf(root)
-      alsoDelete.foreach(rmrf)
-    }
-  }
+    * root even when an assertion throws. */
+  def withTempRoot[T](prefix: String)(body: String => T): T =
+    graft.TempDirs.withTempDir(prefix)(root =>
+      ArtifactStore.withRootForTest(root.toString)(body(root.toString)))
 }

@@ -15,14 +15,6 @@ class AttributionStreamSpec extends AnyFunSuite {
 
   private val DayUs = 86400000000L
 
-  private def rmrf(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p)) {
-      val st = java.nio.file.Files.list(p)
-      try st.forEach(rmrf(_)) finally st.close()
-    }
-    java.nio.file.Files.deleteIfExists(p); ()
-  }
-
   private def ts(us: Long): Timestamp = {
     val t = new Timestamp(us / 1000000L * 1000L)
     t.setNanos(((us % 1000000L) * 1000L).toInt)
@@ -31,8 +23,7 @@ class AttributionStreamSpec extends AnyFunSuite {
 
   test("cross-slice carry, lookback expiry, no-touch, and same-µs ties") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr_spec")
-    try {
+    graft.TempDirs.withTempDir("graft_attr_spec") { dir =>
       // slice 0 (early event time): the touches
       val slice0 = Seq(
         (1L, ts(0L), 1L, "click", 0.0, "{}"),            // u1 touch
@@ -55,7 +46,7 @@ class AttributionStreamSpec extends AnyFunSuite {
         java.nio.file.Files.move(part, dst)
         java.nio.file.Files.setLastModifiedTime(dst,
           java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 2000L))
-        rmrf(sub)
+        Replay.rmrf(sub)
       }
       val r = Replay.drain(spark, dir.toString, EventStream.schema,
         Replay.Memory("graft_attr_spec"))(EventStream.attribute)
@@ -69,6 +60,6 @@ class AttributionStreamSpec extends AnyFunSuite {
         (3L, 12L, "direct", 2.0),  // never touched
         (4L, 6L, "signup", 7.0)    // same-µs tie resolves by event_id like the batch window
       ), s"got $got")
-    } finally rmrf(dir)
+    }
   }
 }

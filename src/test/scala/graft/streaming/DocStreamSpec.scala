@@ -7,13 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The property s08's oracle check rests on: the streaming band index
   * emits the SAME pair set under any micro-batch split of the corpus —
   * arrival order moves WHEN a pair emits, never WHETHER. */
-class DocStreamSpec extends AnyFunSuite {
+class DocStreamSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   val sfDir = "/root/testdata/sf0.001"
 
   private def snapshot(nFiles: Int): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"docstream$nFiles").toString
+    val d = tempDir(s"docstream$nFiles").toString
     Tables.documents(spark, sfDir)
       .select("doc_id", "text", "lang", "source", "n_chars")
       .repartition(nFiles)

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Stream/batch parity: the streaming plans replayed over the fixture
   * must agree with their batch twins in graft.queries.EventOps. */
-class EventStreamSpec extends AnyFunSuite {
+class EventStreamSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   val sfDir = "/root/testdata/sf0.001"
@@ -17,7 +17,7 @@ class EventStreamSpec extends AnyFunSuite {
   /** Stream source dir: fixture events re-written with µs timestamps
     * (the raw fixture is TIMESTAMP(NANOS), unreadable as a stream). */
   lazy val srcDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("evstream").toString
+    val d = tempDir("evstream").toString
     Tables.events(spark, sfDir)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(d)
@@ -43,7 +43,7 @@ class EventStreamSpec extends AnyFunSuite {
     // windowed aggregation accumulates state across batches (Complete
     // mode keeps all windows), so the final table must equal the batch
     // twin no matter how the rows were sliced into batches
-    val d4 = java.nio.file.Files.createTempDirectory("evstream4").toString
+    val d4 = tempDir("evstream4").toString
     Tables.events(spark, sfDir)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .repartition(4).write.mode("overwrite").parquet(d4)
@@ -65,7 +65,7 @@ class EventStreamSpec extends AnyFunSuite {
     // property that makes it non-vacuous: at least one emitted session
     // STARTS before the kill point and ENDS at/after it — its state
     // crossed the stop/restart and was recovered from the checkpoint
-    val stage = java.nio.file.Files.createTempDirectory("evstream_rs")
+    val stage = tempDir("evstream_rs")
     val src = stage.resolve("src").toString
     val ev = Tables.events(spark, sfDir)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")

@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * every batch) and drained with maxFilesPerTrigger=1 in Append mode.
   * The per-batch state-store metrics come from the query's own progress
   * records — numRowsTotal per batch IS the state bound. */
-class StateBoundSpec extends AnyFunSuite {
+class StateBoundSpec extends AnyFunSuite with graft.TempDirs {
   lazy val spark: SparkSession = graft.TestSpark.session
 
   val sfDir = "/root/testdata/sf0.001"
@@ -32,7 +32,7 @@ class StateBoundSpec extends AnyFunSuite {
     val width = (tsMax - tsMin) / NSlices + 1
     // one file per time slice, written oldest-first so the file source's
     // modification-time order replays event time monotonically
-    val dir = java.nio.file.Files.createTempDirectory("statebound").toString
+    val dir = tempDir("statebound").toString
     (0 until NSlices).foreach { i =>
       ev.filter(unix_micros(col("ts")).between(tsMin + i * width,
           tsMin + (i + 1) * width - 1))
